@@ -27,4 +27,8 @@ from cam_etl_spark.functions.text import (  # noqa: F401
     tokens,
     word_shingles,
 )
-from cam_etl_spark.functions.vectors import cosine_similarity, dot, l2_norm  # noqa: F401
+from cam_etl_spark.functions.vectors import (  # noqa: F401
+    cosine_from_norms_sql,
+    dot_sql,
+    l2_norm_sql,
+)

@@ -62,19 +62,6 @@ def parse_wkt_point(wkt: Column) -> tuple[Column, Column]:
     )
 
 
-def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
-    """Morton / Z-order interleaved key from two non-negative grid indices
-    — the clustering key for writing spatial data so 2-D-close rows land in
-    the same files (range scans prune; the Delta/Iceberg OPTIMIZE ZORDER
-    idea as a plain expression). bits per dimension ≤ 30."""
-    acc = F.lit(0).cast("long")
-    for i in range(bits):
-        bx = F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1))
-        by = F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1))
-        acc = acc.bitwiseOR(F.shiftleft(bx, 2 * i)).bitwiseOR(F.shiftleft(by, 2 * i + 1))
-    return acc
-
-
 def parse_wkt_linestring(wkt: Column) -> Column:
     """LINESTRING WKT → array<struct<x double, y double>> vertex list
     (null for non-LINESTRING/malformed input — try_cast, so a garbage

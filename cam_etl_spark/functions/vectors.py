@@ -1,45 +1,24 @@
 """Vector math over ``array<float>`` embedding columns — JVM-side via
-``F.zip_with`` / ``F.aggregate`` (no Python in the hot path). Used by the
+``zip_with`` / ``aggregate`` (no Python in the hot path). Used by the
 similarity-search operators.
+
+The dot product, L2 norm and cosine are SQL text over column names,
+parsed in the caller's one ``selectExpr``/``F.expr`` call: the same
+expressions as Column/lambda chains cost ~15-30 py4j round-trips each,
+and query BUILD time is on the bench's timed path. Every fold is a
+sequential left-to-right ``aggregate`` seeded with the double ``0.0D``,
+each element CAST to DOUBLE before it is multiplied — the operation
+order the DuckDB oracles and ``mmr_select``'s driver-side greedy loop
+replay. The cosine of two vectors is
+``cosine_from_norms_sql(a, b, l2_norm_sql(a), l2_norm_sql(b))``; passing
+projected norm columns instead computes each norm once per row rather
+than once per pair, with identical doubles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``cosine_similarity`` with both L2 norms precomputed as columns.
-    Same expressions in the same order — identical doubles — but a side
-    that meets k partners in a join pays its norm fold once per ROW
-    instead of once per PAIR (the norm is 1/3 of the per-pair HOF work)."""
-    denom = na * nb
-    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-# --- SQL-text twins -------------------------------------------------------
-# The Column builders above cost ~15-30 py4j round-trips each (zip_with/
-# aggregate lambdas are built element-wise); query BUILD time is on the
-# bench's timed path and pure py4j is its low-noise component. These
-# return the SAME expression trees as SQL text parsed in the caller's one
-# selectExpr/expr call: `0.0D` is the double literal F.lit(0.0) builds,
-# the CASTs and operator order match exactly, so the computed doubles are
-# bit-identical. Use them where the inputs are plain SQL fragments.
 
 
 def dot_sql(a: str, b: str) -> str:
@@ -58,8 +37,7 @@ def l2_norm_sql(a: str) -> str:
 
 
 def cosine_from_norms_sql(a: str, b: str, na: str, nb: str) -> str:
-    # F.when(denom == 0, 0.0).otherwise(dot/denom): the int literal 0 and
-    # the CASE shape match the Column form after analysis
+    # zero-norm guard: a zero vector has cosine 0.0, never NaN
     return (
         f"CASE WHEN ({na}) * ({nb}) = 0 THEN 0.0D "
         f"ELSE {dot_sql(a, b)} / (({na}) * ({nb})) END"

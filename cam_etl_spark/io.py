@@ -137,7 +137,8 @@ def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     a 3-row result frame costs seconds once a sort's range-sampling +
     shuffle fan it across default parallelism (measured: mmr_select's
     3-row ORDER BY executed 64 Python-worker tasks, ~1.2 s per noop run).
-    A VALUES literal plans as LocalRelation — pure JVM, no workers.
+    A VALUES literal plans as LocalRelation — pure JVM, no workers; an
+    empty ``rows`` keeps the schema and plans the same way.
 
     Value fidelity: ints are exact (bool and non-integral values are
     rejected, matching createDataFrame's fail-fast — int(v) would
@@ -155,8 +156,10 @@ def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 
     cols = [c.strip().rsplit(" ", 1) for c in schema.split(",")]
     types = [t.strip().lower() for _, t in cols]
-    if not rows:
-        return spark.createDataFrame([], schema)
+    # VALUES needs a row: the empty frame is one typed NULL row filtered
+    # out, which still plans as an (empty) LocalRelation
+    where = "" if rows else " WHERE false"
+    rows = rows or [(None,) * len(cols)]
 
     def intlit(v) -> int:
         if isinstance(v, bool):
@@ -212,7 +215,7 @@ def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
         "(" + ", ".join(lit(v, t) for v, t in zip(r, types)) + ")" for r in rows
     )
     names = ", ".join(n.strip() for n, _ in cols)
-    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names})")
+    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names}){where}")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cam_etl_spark.functions.ids import portable_hash60
-from cam_etl_spark.functions.vectors import cosine_similarity
+from cam_etl_spark.functions.vectors import cosine_from_norms_sql, l2_norm_sql
 from cam_etl_spark.functions.text import (
     doc_fingerprint,
     hashed_shingles_from_tokens,
@@ -737,7 +737,11 @@ def semantic_dedup(
     dropped = (
         a.join(b, "centroid_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_similarity(F.col("vec_a"), F.col("vec_b")) >= threshold)
+        .filter(
+            F.expr(cosine_from_norms_sql(
+                "vec_a", "vec_b", l2_norm_sql("vec_a"), l2_norm_sql("vec_b")
+            )) >= threshold
+        )
         .select(F.col("id_b").alias("drop_id"))
         .distinct()
     )

@@ -17,9 +17,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cam_etl_spark.functions.vectors import (
-    cosine_from_norms,
-    cosine_similarity,
-    l2_norm,
+    cosine_from_norms_sql,
+    l2_norm_sql,
 )
 
 
@@ -61,12 +60,8 @@ def knn_brute_cosine(
     # compute things twice"): each corpus row meets every query in the
     # nested-loop join, so the interpreted L2 fold ran |queries| times
     # per row; projecting it below the join runs it once per row (and
-    # once per query on the broadcast side). cosine_from_norms replays
-    # the identical arithmetic.
-    # Projections and the cosine as SQL text (identical trees, ~10x fewer
-    # py4j round-trips per build — see functions/vectors.py *_sql twins).
-    from cam_etl_spark.functions.vectors import cosine_from_norms_sql, l2_norm_sql
-
+    # once per query on the broadcast side); the cosine reads the
+    # projected norms.
     q = queries.selectExpr(
         f"{id_col} AS query_id",
         f"{vec_col} AS q_vec",
@@ -140,13 +135,12 @@ def knn_lsh_cosine(
     with n_planes."""
     # Norms projected once per row before the band explode (each vector
     # appears n_bands times in the bucket index and meets every bucket
-    # partner) — identical arithmetic via cosine_from_norms, so the
-    # rounded cosines cannot move.
+    # partner).
     c = _banded(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            l2_norm(F.col(vec_col)).alias("c_nrm"),
+        corpus.selectExpr(
+            f"{id_col} AS neighbor_id",
+            f"{vec_col} AS c_vec",
+            f"{l2_norm_sql(vec_col)} AS c_nrm",
         ),
         "neighbor_id",
         "c_vec",
@@ -155,10 +149,10 @@ def knn_lsh_cosine(
         n_bands,
     )
     q = _banded(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            l2_norm(F.col(vec_col)).alias("q_nrm"),
+        queries.selectExpr(
+            f"{id_col} AS query_id",
+            f"{vec_col} AS q_vec",
+            f"{l2_norm_sql(vec_col)} AS q_nrm",
         ),
         "query_id",
         "q_vec",
@@ -172,10 +166,7 @@ def knn_lsh_cosine(
         .select("query_id", "neighbor_id", "q_vec", "c_vec", "q_nrm", "c_nrm")
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn(
-            "cosine",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
-            ),
+            "cosine", F.expr(cosine_from_norms_sql("q_vec", "c_vec", "q_nrm", "c_nrm"))
         )
     )
     return _rank_topk(scored, k)
@@ -200,21 +191,19 @@ def ivf_assign(
     # ranked with a Window.partitionBy(id), i.e. it SHUFFLED the corpus
     # (×16) for every assignment — an Exchange the before-plan of
     # ann_ivf_topk shows twice (corpus + query side). Ordering contract
-    # identical: round(sim, 6) desc, centroid_id asc (cosine_similarity
-    # never yields NaN — zero norms map to 0.0 — so the comparator is a
-    # total order exactly like the window's).
+    # identical: round(sim, 6) desc, centroid_id asc (the cosine never
+    # yields NaN — zero norms map to 0.0 — so the comparator is a total
+    # order exactly like the window's).
     # Each vector is scored against every centroid, so its own L2 fold
     # ran n_centroids times (and each centroid's once per corpus row);
     # both norms are hoisted — the vector's into a projected column, the
     # centroid's into the broadcast struct — with identical arithmetic
-    # (cosine_from_norms), so the rounded sims are unchanged.
-    # Whole chain as SQL text (functions/vectors.py *_sql twins): the
-    # Column/lambda form of score+sort+slice+explode cost ~200 py4j
+    # (cosine_from_norms_sql), so the rounded sims are unchanged.
+    # Whole chain as SQL text (functions/vectors.py): the Column/lambda
+    # form of score+sort+slice+explode cost ~200 py4j
     # round-trips per call (ivf_assign is built 2-4x per query) — the
     # parsed tree is identical (same functions, same literal types, same
     # comparator CASE), so the rounded sims and the ordering cannot move.
-    from cam_etl_spark.functions.vectors import cosine_from_norms_sql, l2_norm_sql
-
     carr = centroids.agg(
         F.expr(
             "collect_list(struct(centroid_id, centroid_vec, "
@@ -315,9 +304,7 @@ def knn_ivf_cosine(
     # at most once — the dropDuplicates this carried was a second full
     # exchange of the candidate table for provably absent duplicates.
     # Norms below the list join (once per assigned row, not per
-    # candidate pair); identical arithmetic via cosine_from_norms.
-    from cam_etl_spark.functions.vectors import cosine_from_norms_sql, l2_norm_sql
-
+    # candidate pair); identical arithmetic via cosine_from_norms_sql.
     scored = (
         c_assigned.selectExpr("*", f"{l2_norm_sql('c_vec')} AS c_nrm")
         .join(
@@ -410,11 +397,11 @@ def knn_ivf_probe_bucketed(
       (tests/test_sources.py pins that plan through this function).
 
     Semantics identical to knn_ivf_cosine at equal draw/n_probe."""
-    corpus = spark.table(table).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+    corpus = spark.table(table).selectExpr(
+        f"{id_col} AS neighbor_id",
+        f"{vec_col} AS c_vec",
         "centroid_id",
-        l2_norm(F.col(vec_col)).alias("c_nrm"),
+        f"{l2_norm_sql(vec_col)} AS c_nrm",
     )
     if assigned_probes is None:
         if queries is None or centroids is None:
@@ -422,7 +409,7 @@ def knn_ivf_probe_bucketed(
                 "knn_ivf_probe_bucketed: pass queries+centroids, or assigned_probes"
             )
         assigned_probes = assign_probes(queries, centroids, n_probe, id_col, vec_col)
-    assigned_probes = assigned_probes.withColumn("q_nrm", l2_norm(F.col("q_vec")))
+    assigned_probes = assigned_probes.withColumn("q_nrm", F.expr(l2_norm_sql("q_vec")))
     probe_side = F.broadcast(assigned_probes) if broadcast_probes else assigned_probes
     joined = (
         corpus.hint("merge").join(probe_side, "centroid_id")
@@ -434,15 +421,11 @@ def knn_ivf_probe_bucketed(
     # probe assignments are distinct per query, so (query, neighbor) pairs
     # are unique by construction — no dropDuplicates exchange.
     # Same norm hoist as knn_ivf_cosine: both norms are projected on the
-    # join inputs (once per stored/probe row), not per candidate pair;
-    # cosine_from_norms replays the identical arithmetic.
+    # join inputs (once per stored/probe row), not per candidate pair.
     scored = (
         joined.filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
-            "cosine",
-            cosine_from_norms(
-                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
-            ),
+            "cosine", F.expr(cosine_from_norms_sql("q_vec", "c_vec", "q_nrm", "c_nrm"))
         )
     )
     return _rank_topk(scored, k)
@@ -980,12 +963,12 @@ def kmeans_lloyd(
         unpersist_checkpoint(prev_cents)
 
     final = ivf_assign(vectors, cents, id_col, vec_col)
+    cos = cosine_from_norms_sql(
+        vec_col, "centroid_vec", l2_norm_sql(vec_col), l2_norm_sql("centroid_vec")
+    )
     return (
         final.join(cents, "centroid_id")
-        .select(
-            "centroid_id",
-            cosine_similarity(F.col(vec_col), F.col("centroid_vec")).alias("cs"),
-        )
+        .selectExpr("centroid_id", f"{cos} AS cs")
         .groupBy("centroid_id")
         .agg(
             F.count("*").alias("n_members"),
@@ -1020,10 +1003,10 @@ def mmr_select(
     if k < 1 or pool < k:
         raise ValueError("mmr_select: need k >= 1 and pool >= k")
     # The single query vector is collected (1 row, bounded by contract —
-    # same boundedness class as the pool collect below) and inlined as an
-    # ARRAY<DOUBLE> literal: the former broadcast crossJoin spent ~0.25 s
-    # of fixed BroadcastExchange+BNLJ machinery per run to attach one
-    # constant row. float->double widening is exact and the fold already
+    # same boundedness class as the pool collect below) and projected as
+    # an ARRAY<DOUBLE> literal column: the former broadcast crossJoin
+    # spent ~0.25 s of fixed BroadcastExchange+BNLJ machinery per run to
+    # attach one constant row. float->double widening is exact and the fold already
     # cast elementwise to double, so every cosine is bit-identical.
     qrow = query_vec.select(F.col(vec_col).alias("q_vec")).limit(1).collect()
     # ONE corpus job: relevance scan + TakeOrdered(pool). The greedy MMR
@@ -1032,18 +1015,22 @@ def mmr_select(
     # same boundedness class as the per-step 1-row collect this replaces,
     # which cost k extra jobs plus per-step broadcast/aggregate plans.
     # Float contract preserved exactly: pairwise cosines re-derive the
-    # JVM's left-to-right fold (functions/vectors dot/l2_norm are
+    # JVM's left-to-right fold (functions/vectors dot_sql/l2_norm_sql are
     # sequential aggregates — identical IEEE-754 op order), and rounding
     # replays java.math.BigDecimal(value).setScale(6, HALF_UP) via
     # decimal.Decimal on the exact binary double — bit-equal to F.round.
     if qrow:
-        q_lit = F.lit([float(x) for x in qrow[0]["q_vec"]])
+        q_lit = F.lit([float(x) for x in qrow[0]["q_vec"]]).alias("q_vec")
+        cos = cosine_from_norms_sql(
+            "c_vec", "q_vec", l2_norm_sql("c_vec"), l2_norm_sql("q_vec")
+        )
         rows = (
-            corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("c_vec"))
-            .select(
-                "cid", "c_vec",
-                F.round(cosine_similarity(F.col("c_vec"), q_lit), 6).alias("rel"),
+            corpus.select(
+                F.col(id_col).alias("cid"),
+                F.col(vec_col).alias("c_vec"),
+                q_lit,
             )
+            .selectExpr("cid", "c_vec", f"round({cos}, 6) AS rel")
             .orderBy(F.desc("rel"), F.asc("cid"))
             .limit(pool)
             .collect()

@@ -164,30 +164,20 @@ _DISPLAY_LABEL_SQL = (
 )
 
 
-def _display_label() -> F.Column:
-    return F.expr(_DISPLAY_LABEL_SQL)
-
-
-def address_quads(
-    spark: SparkSession, sf_dir: str, dedup: bool = True
-) -> DataFrame:
-    """Joined rows → conditionally-emitted quads (T1): type, identifier,
-    status concept (F17 map), parcel/road links, null-guarded unit part
-    (P7), label (F18). Globally deduped (U2) unless the caller composes
-    this graph into a larger union that dedups once at the end
-    (etl_end_to_end_counts) — a second identical shuffle of the same
-    quads buys nothing."""
-    j = _joined(spark, sf_dir)
-    # quad_sql/fan_out_sql: the whole 7-template fan-out parses as ONE
-    # expression (see quads.quad_sql) — same templates, same null guards.
+def _address_fanout(joined: DataFrame) -> DataFrame:
+    """The address quad templates over a joined frame (``_joined``'s
+    columns; batch or streaming): type, identifier, status concept (F17
+    map), parcel/road links, null-guarded unit part (P7), label (F18).
+    The whole 7-template fan-out parses as ONE expression (see
+    quads.quad_sql)."""
     subj = "format_string('https://example.org/address/%s', addr_id)"
     status_map = (
         "map("
         + ", ".join(f"'{k}', '{v}'" for k, v in STATUS_IRIS.items())
         + ")[addr_status_code]"
     )
-    quads = fan_out_sql(
-        j,
+    return fan_out_sql(
+        joined,
         quad_sql(subj, RDF_TYPE, f"'{SDO}PostalAddress'", "iri", graph=ADDR_GRAPH),
         quad_sql(subj, SDO + "identifier", "addr_id", "literal",
                  object_datatype="https://example.org/datatype/address-pid",
@@ -204,6 +194,16 @@ def address_quads(
         quad_sql(subj, "http://www.w3.org/2000/01/rdf-schema#label",
                  _DISPLAY_LABEL_SQL, "literal", graph=ADDR_GRAPH),
     )
+
+
+def address_quads(
+    spark: SparkSession, sf_dir: str, dedup: bool = True
+) -> DataFrame:
+    """Joined rows → conditionally-emitted quads (T1, ``_address_fanout``).
+    Globally deduped (U2) unless the caller composes this graph into a
+    larger union that dedups once at the end (etl_end_to_end_counts) — a
+    second identical shuffle of the same quads buys nothing."""
+    quads = _address_fanout(_joined(spark, sf_dir))
     return dedup_quads(quads) if dedup else quads
 
 

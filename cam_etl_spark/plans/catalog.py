@@ -91,6 +91,19 @@ def widen_table(spark, sf_dir, name, *cols):
     return hit
 
 
+# Deterministic synthetic geometry: QLD-ish lon/lat derived from an integer
+# key expression, so the spatial operators have an exact SQL oracle. One
+# SQL text serves the Spark builders and their DuckDB oracles. The divisor
+# is a DOUBLE in both dialects: a bare ``100.0`` is a DECIMAL literal in
+# Spark SQL, while DuckDB divides in DOUBLE either way.
+def lon_sql(k: str) -> str:
+    return f"(138 + (({k}) * 37) % 1600 / CAST(100 AS DOUBLE))"
+
+
+def lat_sql(k: str) -> str:
+    return f"(-29 + (({k}) * 53) % 1900 / CAST(100 AS DOUBLE))"
+
+
 # ---------------------------------------------------------------------------
 # Projection / filter / predicates (SURVEY §2.2)
 # ---------------------------------------------------------------------------

@@ -11,7 +11,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from cam_etl_spark.plans.catalog import register, t, widen, widen_table
+from cam_etl_spark.plans.catalog import (
+    lat_sql,
+    lon_sql,
+    register,
+    t,
+    widen,
+    widen_table,
+)
 
 #: ISO 11172-3 Table 3-B.3 half-prototype numerators (x 65536) as a
 #: SQL list literal — shared VERBATIM by every oracle that replays the
@@ -51,19 +58,6 @@ _TABLE_3B3_SQL = """([0,-1,-1,-1,-1,-1,-1,-2,-2,-2,
                 ])"""
 
 
-# Deterministic synthetic geometry: QLD-ish lon/lat derived from keys.
-_LON = "(138 + (({k}) * 37) % 1600 / 100.0)"
-_LAT = "(-29 + (({k}) * 53) % 1900 / 100.0)"
-
-
-def _lon(col):
-    return F.lit(138) + (col * 37 % 1600) / 100.0
-
-
-def _lat(col):
-    return F.lit(-29) + (col * 53 % 1900) / 100.0
-
-
 # ---------------------------------------------------------------------------
 # Spatial joins (SURVEY J9, J10/W2, F15)
 # ---------------------------------------------------------------------------
@@ -73,12 +67,12 @@ def _lat(col):
     "j10_knn_nearest",
     f"""
     WITH pts AS (SELECT c_custkey AS query_id,
-                        {_LON.format(k='c_custkey')} AS qx,
-                        {_LAT.format(k='c_custkey')} AS qy
+                        {lon_sql('c_custkey')} AS qx,
+                        {lat_sql('c_custkey')} AS qy
                  FROM customer WHERE c_custkey % 10 = 0),
          tgt AS (SELECT s_suppkey AS target_id,
-                        {_LON.format(k='s_suppkey * 7 + 3')} AS tx,
-                        {_LAT.format(k='s_suppkey * 11 + 5')} AS ty
+                        {lon_sql('s_suppkey * 7 + 3')} AS tx,
+                        {lat_sql('s_suppkey * 11 + 5')} AS ty
                  FROM supplier)
     SELECT query_id, target_id, round(distance, 6) AS distance FROM (
       SELECT p.query_id, t.target_id,
@@ -106,13 +100,13 @@ def j10_knn_nearest(spark, sf_dir):
     s = t(spark, sf_dir, "supplier")
     pts = c.select(
         F.col("c_custkey").alias("query_id"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     )
     tgt = s.select(
         F.col("s_suppkey").alias("target_id"),
-        _lon(F.col("s_suppkey") * 7 + 3).alias("x"),
-        _lat(F.col("s_suppkey") * 11 + 5).alias("y"),
+        F.expr(lon_sql("s_suppkey * 7 + 3")).alias("x"),
+        F.expr(lat_sql("s_suppkey * 11 + 5")).alias("y"),
     )
     out = knn_join_exact(pts, tgt, tiers=(1.0, 8.0, 64.0))
     return out.select("query_id", "target_id", F.round("distance", 6).alias("distance"))
@@ -122,12 +116,12 @@ def j10_knn_nearest(spark, sf_dir):
     "j10_knn_candidates_filtered",
     f"""
     WITH pts AS (SELECT c_custkey AS query_id, c_nationkey AS qnation,
-                        {_LON.format(k='c_custkey')} AS qx,
-                        {_LAT.format(k='c_custkey')} AS qy
+                        {lon_sql('c_custkey')} AS qx,
+                        {lat_sql('c_custkey')} AS qy
                  FROM customer WHERE c_custkey % 10 = 0),
          tgt AS (SELECT s_suppkey AS target_id, s_nationkey AS tnation,
-                        {_LON.format(k='s_suppkey * 7 + 3')} AS tx,
-                        {_LAT.format(k='s_suppkey * 11 + 5')} AS ty
+                        {lon_sql('s_suppkey * 7 + 3')} AS tx,
+                        {lat_sql('s_suppkey * 11 + 5')} AS ty
                  FROM supplier),
          ranked AS (
            SELECT p.query_id, t.target_id, qnation, tnation,
@@ -157,14 +151,14 @@ def j10_knn_candidates_filtered(spark, sf_dir):
     pts = c.select(
         F.col("c_custkey").alias("query_id"),
         F.col("c_nationkey").alias("qnation"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     )
     tgt = s.select(
         F.col("s_suppkey").alias("target_id"),
         F.col("s_nationkey").alias("tnation"),
-        _lon(F.col("s_suppkey") * 7 + 3).alias("x"),
-        _lat(F.col("s_suppkey") * 11 + 5).alias("y"),
+        F.expr(lon_sql("s_suppkey * 7 + 3")).alias("x"),
+        F.expr(lat_sql("s_suppkey * 11 + 5")).alias("y"),
     )
     out = knn_join(
         pts,
@@ -181,8 +175,8 @@ def j10_knn_candidates_filtered(spark, sf_dir):
     "j9_point_in_polygon",
     f"""
     WITH pts AS (SELECT c_custkey AS custkey,
-                        {_LON.format(k='c_custkey')} AS x,
-                        {_LAT.format(k='c_custkey')} AS y
+                        {lon_sql('c_custkey')} AS x,
+                        {lat_sql('c_custkey')} AS y
                  FROM customer),
          rects AS (SELECT r_regionkey AS zone_id,
                           138 + r_regionkey * 3.2 AS xmin,
@@ -205,8 +199,8 @@ def j9_point_in_polygon(spark, sf_dir):
     r = t(spark, sf_dir, "region")
     pts = c.select(
         F.col("c_custkey").alias("custkey"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     )
     rects = r.select(
         F.col("r_regionkey").alias("zone_id"),
@@ -222,8 +216,8 @@ def j9_point_in_polygon(spark, sf_dir):
     "j9_point_in_polygon_grid",
     f"""
     WITH pts AS (SELECT c_custkey AS custkey,
-                        {_LON.format(k='c_custkey')} AS x,
-                        {_LAT.format(k='c_custkey')} AS y
+                        {lon_sql('c_custkey')} AS x,
+                        {lat_sql('c_custkey')} AS y
                  FROM customer),
          polys AS (SELECT n_nationkey AS poly_id,
                           138 + (n_nationkey * 61) % 1600 / 100.0 + 0.0037 AS cx,
@@ -259,8 +253,8 @@ def j9_point_in_polygon_grid(spark, sf_dir):
     n = t(spark, sf_dir, "nation")
     pts = c.select(
         F.col("c_custkey").alias("custkey"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     )
     k = F.col("n_nationkey")
     cx = F.lit(138) + (k * 61 % 1600) / 100.0 + 0.0037
@@ -330,6 +324,27 @@ def j12_hierarchy_roots(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _customer_quads(spark, sf_dir):
+    """The customer quad templates shared by t1_quad_fanout and
+    s7_nquads_sink_roundtrip (not deduped)."""
+    from cam_etl_spark.quads import fan_out_sql, quad_sql
+
+    subj = "format_string('https://example.org/customer/%s', c_custkey)"
+    g = "urn:example:graph:customers"
+    return fan_out_sql(
+        t(spark, sf_dir, "customer"),
+        quad_sql(subj, "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+                 "'https://schema.org/Person'", "iri", graph=g),
+        quad_sql(subj, "https://schema.org/name", "c_name", "literal", graph=g),
+        quad_sql(subj, "https://example.org/def/nation",
+                 "format_string('https://example.org/nation/%s', c_nationkey)",
+                 "iri", graph=g),
+        quad_sql(subj, "https://schema.org/creditScore",
+                 "CAST(round(c_acctbal, 2) AS STRING)", "literal", graph=g,
+                 cond="c_acctbal > 0"),
+    )
+
+
 @register(
     "t1_quad_fanout",
     """
@@ -365,40 +380,9 @@ def t1_quad_fanout(spark, sf_dir):
     (ref /root/reference/etl_lalf_address.py:254-690) as an array/explode
     columnar flatMap (SURVEY §2.8) — stays in whole-stage codegen, no Python.
     Null-guarded emission (P7): the acctbal quad only exists when > 0."""
-    from cam_etl_spark.quads import dedup_quads, fan_out, quad_struct
+    from cam_etl_spark.quads import dedup_quads
 
-    c = t(spark, sf_dir, "customer")
-    subj = F.format_string("https://example.org/customer/%s", F.col("c_custkey"))
-    g = "urn:example:graph:customers"
-    quads = fan_out(
-        c,
-        quad_struct(
-            subj,
-            "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-            F.lit("https://schema.org/Person"),
-            "iri",
-            graph=g,
-        ),
-        quad_struct(subj, "https://schema.org/name", F.col("c_name"), "literal", graph=g),
-        quad_struct(
-            subj,
-            "https://example.org/def/nation",
-            F.format_string("https://example.org/nation/%s", F.col("c_nationkey")),
-            "iri",
-            graph=g,
-        ),
-        F.when(
-            F.col("c_acctbal") > 0,
-            quad_struct(
-                subj,
-                "https://schema.org/creditScore",
-                F.round("c_acctbal", 2).cast("string"),
-                "literal",
-                graph=g,
-            ),
-        ),
-    )
-    quads = dedup_quads(quads)
+    quads = dedup_quads(_customer_quads(spark, sf_dir))
     return quads.groupBy("predicate").agg(
         F.count("*").alias("n_quads"), F.countDistinct("subject").alias("n_subjects")
     )
@@ -3094,29 +3078,21 @@ def s9_graph_partition_prune(spark, sf_dir):
     leak fails on rows, not just on performance."""
     import tempfile
 
-    from cam_etl_spark.quads import fan_out, quad_struct
+    from cam_etl_spark.quads import fan_out_sql, quad_sql
 
     c = t(spark, sf_dir, "customer")
     n = t(spark, sf_dir, "nation")
-    cq = fan_out(
+    cq = fan_out_sql(
         c,
-        quad_struct(
-            F.format_string("https://example.org/customer/%s", F.col("c_custkey")),
-            "https://schema.org/name",
-            F.col("c_name"),
-            "literal",
-            graph="urn:example:graph:customers",
-        ),
+        quad_sql("format_string('https://example.org/customer/%s', c_custkey)",
+                 "https://schema.org/name", "c_name", "literal",
+                 graph="urn:example:graph:customers"),
     )
-    nq = fan_out(
+    nq = fan_out_sql(
         n,
-        quad_struct(
-            F.format_string("https://example.org/nation/%s", F.col("n_nationkey")),
-            "https://schema.org/name",
-            F.col("n_name"),
-            "literal",
-            graph="urn:example:graph:nations",
-        ),
+        quad_sql("format_string('https://example.org/nation/%s', n_nationkey)",
+                 "https://schema.org/name", "n_name", "literal",
+                 graph="urn:example:graph:nations"),
     )
     work = tempfile.mkdtemp(prefix="s9prune_q_")
     cq.unionByName(nq).write.mode("overwrite").partitionBy("graph").parquet(work)
@@ -3151,38 +3127,20 @@ def s5_vocab_source_lookup(spark, sf_dir):
     import tempfile
 
     from cam_etl_spark.operators.vocab import lookup_concept
-    from cam_etl_spark.quads import fan_out, quad_struct, write_nquads
+    from cam_etl_spark.quads import fan_out_sql, quad_sql, write_nquads
     from cam_etl_spark.sources.vocab import skos_lookup_df
 
     p = t(spark, sf_dir, "part")
     scheme = "https://example.org/def/brand"
     brands = p.select("p_brand").distinct()
-    iri = F.concat(
-        F.lit(scheme + "/"), F.replace(F.lower("p_brand"), F.lit("#"), F.lit("-"))
-    )
-    vocab_quads = fan_out(
+    iri = f"concat('{scheme}/', replace(lower(p_brand), '#', '-'))"
+    skos = "http://www.w3.org/2004/02/skos/core#"
+    g = "urn:example:graph:vocabs"
+    vocab_quads = fan_out_sql(
         brands,
-        quad_struct(
-            iri,
-            "http://www.w3.org/2004/02/skos/core#prefLabel",
-            F.col("p_brand"),
-            "literal",
-            graph="urn:example:graph:vocabs",
-        ),
-        quad_struct(
-            iri,
-            "http://www.w3.org/2004/02/skos/core#altLabel",
-            F.lower("p_brand"),
-            "literal",
-            graph="urn:example:graph:vocabs",
-        ),
-        quad_struct(
-            iri,
-            "http://www.w3.org/2004/02/skos/core#inScheme",
-            F.lit(scheme),
-            "iri",
-            graph="urn:example:graph:vocabs",
-        ),
+        quad_sql(iri, skos + "prefLabel", "p_brand", "literal", graph=g),
+        quad_sql(iri, skos + "altLabel", "lower(p_brand)", "literal", graph=g),
+        quad_sql(iri, skos + "inScheme", f"'{scheme}'", "iri", graph=g),
     )
     work = tempfile.mkdtemp(prefix="s5vocab_q_")
     write_nquads(vocab_quads, work)
@@ -3235,39 +3193,9 @@ def s7_nquads_sink_roundtrip(spark, sf_dir):
     real data, including names with punctuation."""
     import tempfile
 
-    from cam_etl_spark.quads import fan_out, quad_struct, read_nquads, write_nquads
+    from cam_etl_spark.quads import read_nquads, write_nquads
 
-    c = t(spark, sf_dir, "customer")
-    subj = F.format_string("https://example.org/customer/%s", F.col("c_custkey"))
-    g = "urn:example:graph:customers"
-    quads = fan_out(
-        c,
-        quad_struct(
-            subj,
-            "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-            F.lit("https://schema.org/Person"),
-            "iri",
-            graph=g,
-        ),
-        quad_struct(subj, "https://schema.org/name", F.col("c_name"), "literal", graph=g),
-        quad_struct(
-            subj,
-            "https://example.org/def/nation",
-            F.format_string("https://example.org/nation/%s", F.col("c_nationkey")),
-            "iri",
-            graph=g,
-        ),
-        F.when(
-            F.col("c_acctbal") > 0,
-            quad_struct(
-                subj,
-                "https://schema.org/creditScore",
-                F.round("c_acctbal", 2).cast("string"),
-                "literal",
-                graph=g,
-            ),
-        ),
-    )
+    quads = _customer_quads(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="s7nq_q_")
     write_nquads(quads, work)
     back = read_nquads(spark, work)
@@ -4978,13 +4906,13 @@ _SEGDIST = """
     f"""
     WITH pts AS (
       SELECT c_custkey AS query_id,
-             {_LON.format(k='c_custkey')} AS px,
-             {_LAT.format(k='c_custkey')} AS py
+             {lon_sql('c_custkey')} AS px,
+             {lat_sql('c_custkey')} AS py
       FROM customer WHERE c_custkey % 10 = 0),
     roads AS (
       SELECT s_suppkey AS target_id,
-             {_LON.format(k='s_suppkey * 7 + 3')} AS ax,
-             {_LAT.format(k='s_suppkey * 11 + 5')} AS ay
+             {lon_sql('s_suppkey * 7 + 3')} AS ax,
+             {lat_sql('s_suppkey * 11 + 5')} AS ay
       FROM supplier),
     roads2 AS (
       SELECT target_id, ax, ay,
@@ -5031,11 +4959,12 @@ def j10_nearest_road_segment(spark, sf_dir):
     s = t(spark, sf_dir, "supplier")
     pts = c.select(
         F.col("c_custkey").alias("query_id"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     )
     k = F.col("s_suppkey")
-    ax, ay = _lon(k * 7 + 3), _lat(k * 11 + 5)
+    ax = F.expr(lon_sql("s_suppkey * 7 + 3"))
+    ay = F.expr(lat_sql("s_suppkey * 11 + 5"))
     bx = ax + ((k * 13) % 7) / 20.0 - 0.15
     by = ay + ((k * 17) % 7) / 20.0 - 0.15
     cx = bx + ((k * 19) % 7) / 20.0 - 0.15
@@ -5057,8 +4986,8 @@ def j10_nearest_road_segment(spark, sf_dir):
     f"""
     WITH geom AS (
       SELECT p_partkey AS poly_id,
-             {_LON.format(k='p_partkey * 3 + 1')} AS x0,
-             {_LAT.format(k='p_partkey * 5 + 2')} AS y0,
+             {lon_sql('p_partkey * 3 + 1')} AS x0,
+             {lat_sql('p_partkey * 5 + 2')} AS y0,
              ((p_partkey * 13) % 5 + 1) / 10.0 AS w,
              ((p_partkey * 7) % 5 + 1) / 10.0 AS h,
              ((p_partkey * 3) % 4) / 20.0 AS skew
@@ -5116,7 +5045,8 @@ def f16_polygon_metrics(spark, sf_dir):
 
     p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 20 == 0)
     k = F.col("p_partkey")
-    x0, y0 = _lon(k * 3 + 1), _lat(k * 5 + 2)
+    x0 = F.expr(lon_sql("p_partkey * 3 + 1"))
+    y0 = F.expr(lat_sql("p_partkey * 5 + 2"))
     w = ((k * 13) % 5 + 1) / 10.0
     h = ((k * 7) % 5 + 1) / 10.0
     skew = ((k * 3) % 4) / 20.0
@@ -6187,30 +6117,32 @@ def s15_nquads_datasource_sink(spark, sf_dir):
     import os
     import tempfile
 
-    from cam_etl_spark.quads import fan_out, quad_struct, read_nquads
+    from cam_etl_spark.quads import fan_out_sql, quad_sql, read_nquads
     from cam_etl_spark.sources.nquads_sink import register_nquads_sink
 
     if not register_nquads_sink(spark):  # pragma: no cover - pyspark < 4
         raise RuntimeError("nquads_sink needs the Spark 4 DataSource API")
     G = "urn:example:graph:nq-sink"
-    n = t(spark, sf_dir, "nation")
-    subj = F.format_string("https://example.org/nation/%s", F.col("n_nationkey"))
-    hostile = F.concat(F.col("n_name"), F.lit('\t"quoted\\path"\nline2'))
-    quads = fan_out(
+    # the hostile literal is projected as a Column, never spliced into SQL
+    # text, so its tab/quote/backslash/newline bytes reach the sink as-is
+    n = t(spark, sf_dir, "nation").withColumn(
+        "hostile", F.concat(F.col("n_name"), F.lit('\t"quoted\\path"\nline2'))
+    )
+    subj = "format_string('https://example.org/nation/%s', n_nationkey)"
+    quads = fan_out_sql(
         n,
-        quad_struct(subj, "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-                    F.lit("https://example.org/def/Nation"), "iri", graph=G),
-        quad_struct(subj, "http://www.w3.org/2000/01/rdf-schema#label",
-                    hostile, "literal", graph=G),
-        quad_struct(subj, "https://example.org/def/regionCode",
-                    F.col("n_regionkey").cast("string"), "literal",
-                    object_datatype="http://www.w3.org/2001/XMLSchema#integer",
-                    graph=G),
-        quad_struct(subj, "https://schema.org/name", F.lower("n_name"),
-                    "literal", object_lang="en", graph=G),
-        quad_struct(subj, "https://example.org/def/node",
-                    F.format_string("b%s", F.col("n_nationkey")), "bnode",
-                    graph=G),
+        quad_sql(subj, "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+                 "'https://example.org/def/Nation'", "iri", graph=G),
+        quad_sql(subj, "http://www.w3.org/2000/01/rdf-schema#label",
+                 "hostile", "literal", graph=G),
+        quad_sql(subj, "https://example.org/def/regionCode",
+                 "CAST(n_regionkey AS STRING)", "literal",
+                 object_datatype="http://www.w3.org/2001/XMLSchema#integer",
+                 graph=G),
+        quad_sql(subj, "https://schema.org/name", "lower(n_name)",
+                 "literal", object_lang="en", graph=G),
+        quad_sql(subj, "https://example.org/def/node",
+                 "format_string('b%s', n_nationkey)", "bnode", graph=G),
     )
     work = tempfile.mkdtemp(prefix="nqsink_q_")
     path = os.path.join(work, "out")
@@ -20577,8 +20509,8 @@ def s61_delta_variant_shredded(spark, sf_dir):
     "s62_geoparquet_scan",
     f"""
     WITH pts AS (SELECT c_custkey AS custkey,
-                        {_LON.format(k='c_custkey')} AS x,
-                        {_LAT.format(k='c_custkey')} AS y
+                        {lon_sql('c_custkey')} AS x,
+                        {lat_sql('c_custkey')} AS y
                  FROM customer),
          rects AS (SELECT r_regionkey AS zone_id,
                           138 + r_regionkey * 3.2 AS xmin,
@@ -20633,8 +20565,8 @@ def s62_geoparquet_scan(spark, sf_dir):
 
     pts = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"),
-        _lon(F.col("c_custkey")).alias("x"),
-        _lat(F.col("c_custkey")).alias("y"),
+        F.expr(lon_sql("c_custkey")).alias("x"),
+        F.expr(lat_sql("c_custkey")).alias("y"),
     ).repartition(3, F.col("custkey"))
 
     geo_json = geo_file_metadata_json(

@@ -9,19 +9,15 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from cam_etl_spark.plans.catalog import register, t, widen, widen_table
-from cam_etl_spark.plans.extensions import _lat, _lon
-from cam_etl_spark.quads import (
-    dedup_quads,
-    fan_out,
-    fan_out_sql,
-    quad_sql,
-    quad_struct,
+from cam_etl_spark.plans.catalog import (
+    lat_sql,
+    lon_sql,
+    register,
+    t,
+    widen,
+    widen_table,
 )
-
-# same deterministic synthetic lon/lat as plans.extensions, SQL form
-_LON_SQL = "(138 + (({k}) * 37) % 1600 / 100.0)"
-_LAT_SQL = "(-29 + (({k}) * 53) % 1900 / 100.0)"
+from cam_etl_spark.quads import dedup_quads, fan_out_sql, quad_sql
 
 _G = "urn:example:graph:customers"
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -38,9 +34,8 @@ def _customer_compound_quads(spark, sf_dir):
     (ref /root/reference/cam/compound_naming.py:7-35)."""
     c = t(spark, sf_dir, "customer")
     # quad_sql/fan_out_sql: the whole 8-template fan-out parses as ONE
-    # expression — the Column-chain quad_struct builder cost ~20 py4j
-    # round-trips per template (~160 for this builder, which several §3.3
-    # queries rebuild per run). Same fields, casts, and null guards.
+    # expression (one py4j round-trip; several §3.3 queries rebuild this
+    # graph per run).
     subj = "format_string('https://example.org/customer/%s', c_custkey)"
 
     def part(kind: str, value_sql: str):
@@ -248,16 +243,12 @@ def u2_quad_set_dedup(spark, sf_dir):
     (SURVEY U2). The nation-type quad here is emitted once per customer and
     must dedupe to one per nation."""
     c = t(spark, sf_dir, "customer")
-    nation_iri = F.format_string("https://example.org/nation/%s", F.col("c_nationkey"))
-    quads = fan_out(
+    nation_iri = "format_string('https://example.org/nation/%s', c_nationkey)"
+    quads = fan_out_sql(
         c,
-        quad_struct(nation_iri, _RDF_TYPE, F.lit("https://schema.org/Country"), "iri"),
-        quad_struct(
-            F.format_string("https://example.org/customer/%s", F.col("c_custkey")),
-            "https://example.org/def/nation",
-            nation_iri,
-            "iri",
-        ),
+        quad_sql(nation_iri, _RDF_TYPE, "'https://schema.org/Country'", "iri"),
+        quad_sql("format_string('https://example.org/customer/%s', c_custkey)",
+                 "https://example.org/def/nation", nation_iri, "iri"),
     )
     raw = quads.agg(F.count("*").alias("raw_quads"))
     distinct = dedup_quads(quads).agg(F.count("*").alias("distinct_quads"))
@@ -297,16 +288,17 @@ def t12_skos_vocab_fanout(spark, sf_dir):
     IRIs (F11, ref /root/reference/etl_qrt.py:36-45)."""
     from cam_etl_spark.functions.strings import slugify
 
-    r = t(spark, sf_dir, "region")
     scheme = "https://example.org/def/region"
-    concept = F.format_string("%s/%s", F.lit(scheme), slugify(F.col("r_name")))
+    r = t(spark, sf_dir, "region").withColumn(
+        "concept", F.format_string("%s/%s", F.lit(scheme), slugify(F.col("r_name")))
+    )
     skos = "http://www.w3.org/2004/02/skos/core#"
-    quads = fan_out(
+    quads = fan_out_sql(
         r,
-        quad_struct(F.lit(scheme), _RDF_TYPE, F.lit(skos + "ConceptScheme"), "iri"),
-        quad_struct(concept, _RDF_TYPE, F.lit(skos + "Concept"), "iri"),
-        quad_struct(concept, skos + "prefLabel", F.col("r_name"), "literal"),
-        quad_struct(concept, skos + "inScheme", F.lit(scheme), "iri"),
+        quad_sql(f"'{scheme}'", _RDF_TYPE, f"'{skos}ConceptScheme'", "iri"),
+        quad_sql("concept", _RDF_TYPE, f"'{skos}Concept'", "iri"),
+        quad_sql("concept", skos + "prefLabel", "r_name", "literal"),
+        quad_sql("concept", skos + "inScheme", f"'{scheme}'", "iri"),
     )
     return dedup_quads(quads).select("subject", "predicate", "object_value")
 
@@ -1054,24 +1046,21 @@ def t5_identifier_fanout(spark, sf_dir):
     CASE WHEN … NOT IN rewrite (P5, ref
     /root/reference/etl_lalf_parcel.py:131-140). Queries filter on
     datatype(?id) exactly like /root/reference/etl-queries.md:138-141."""
-    from cam_etl_spark.quads import fan_out, quad_struct
-
     p = t(spark, sf_dir, "part")
     lot_norm = F.when(
         (F.col("p_size") == 50) & ~F.col("p_brand").isin("Brand#51", "Brand#52"), F.lit(0)
     ).otherwise(F.col("p_size"))
     src = p.select("p_partkey", lot_norm.alias("lot_norm"), "p_brand", "p_type")
-    subj = F.format_string("https://example.org/object/%s", F.col("p_partkey"))
+    subj = "format_string('https://example.org/object/%s', p_partkey)"
     ident = "https://schema.org/identifier"
-    quads = fan_out(
+    quads = fan_out_sql(
         src,
-        quad_struct(subj, ident, F.col("lot_norm").cast("string"), "literal",
-                    object_datatype="https://example.org/datatype/lot"),
-        quad_struct(subj, ident, F.col("p_brand"), "literal",
-                    object_datatype="https://example.org/datatype/plan"),
-        quad_struct(subj, ident,
-                    F.format_string("%s/%s", F.col("lot_norm"), F.col("p_brand")),
-                    "literal", object_datatype="https://example.org/datatype/lotplan"),
+        quad_sql(subj, ident, "CAST(lot_norm AS STRING)", "literal",
+                 object_datatype="https://example.org/datatype/lot"),
+        quad_sql(subj, ident, "p_brand", "literal",
+                 object_datatype="https://example.org/datatype/plan"),
+        quad_sql(subj, ident, "format_string('%s/%s', lot_norm, p_brand)",
+                 "literal", object_datatype="https://example.org/datatype/lotplan"),
     )
     return quads.groupBy("object_datatype").agg(
         F.count("*").alias("n"), F.countDistinct("object_value").alias("n_distinct")
@@ -1083,8 +1072,8 @@ def t5_identifier_fanout(spark, sf_dir):
     f"""
     WITH src AS (
       SELECT s_suppkey,
-             {_LON_SQL.format(k='s_suppkey * 7 + 3')} AS lon,
-             {_LAT_SQL.format(k='s_suppkey * 11 + 5')} AS lat,
+             {lon_sql('s_suppkey * 7 + 3')} AS lon,
+             {lat_sql('s_suppkey * 11 + 5')} AS lat,
              s_nationkey, s_acctbal
       FROM supplier),
     quads AS (
@@ -1115,29 +1104,24 @@ def t6_geometry_fanout(spark, sf_dir):
     bags, each null-guarded (P7). WKT stays a plain string column — spatial
     ops consume it via the engine's spatial functions."""
     from cam_etl_spark.functions.spatial import wkt_point
-    from cam_etl_spark.quads import fan_out, quad_struct
 
     s = t(spark, sf_dir, "supplier")
     src = s.select(
         "s_suppkey",
-        _lon(F.col("s_suppkey") * 7 + 3).alias("lon"),
-        _lat(F.col("s_suppkey") * 11 + 5).alias("lat"),
+        F.expr(lon_sql("s_suppkey * 7 + 3")).alias("lon"),
+        F.expr(lat_sql("s_suppkey * 11 + 5")).alias("lat"),
         "s_nationkey",
         "s_acctbal",
-    )
-    subj = F.format_string("https://example.org/geo/%s", F.col("s_suppkey"))
+    ).withColumn("wkt", wkt_point(F.col("lon"), F.col("lat")))
+    subj = "format_string('https://example.org/geo/%s', s_suppkey)"
     addp = "https://schema.org/additionalProperty"
-    quads = fan_out(
+    quads = fan_out_sql(
         src,
-        quad_struct(subj, "http://www.opengis.net/ont/geosparql#asWKT",
-                    wkt_point(F.col("lon"), F.col("lat")), "literal",
-                    object_datatype="http://www.opengis.net/ont/geosparql#wktLiteral"),
-        quad_struct(subj, addp, F.format_string("nation=%s", F.col("s_nationkey")), "literal"),
-        F.when(
-            F.col("s_acctbal").isNotNull(),
-            quad_struct(subj, addp,
-                        F.format_string("acctbal=%s", F.round("s_acctbal", 2)), "literal"),
-        ),
+        quad_sql(subj, "http://www.opengis.net/ont/geosparql#asWKT", "wkt", "literal",
+                 object_datatype="http://www.opengis.net/ont/geosparql#wktLiteral"),
+        quad_sql(subj, addp, "format_string('nation=%s', s_nationkey)", "literal"),
+        quad_sql(subj, addp, "format_string('acctbal=%s', round(s_acctbal, 2))",
+                 "literal", cond="s_acctbal IS NOT NULL"),
     )
     return quads.select("subject", "predicate", "object_value", "object_datatype")
 
@@ -1608,12 +1592,12 @@ def validate_cardinality_shape(spark, sf_dir):
     from cam_etl_spark.operators.validate import RDF_TYPE, cardinality_violations
 
     c = t(spark, sf_dir, "customer")
-    subj = F.format_string("https://example.org/customer/%s", F.col("c_custkey"))
+    subj = "format_string('https://example.org/customer/%s', c_custkey)"
     label = "http://www.w3.org/2000/01/rdf-schema#label"
-    quads = fan_out(
+    quads = fan_out_sql(
         c,
-        quad_struct(subj, RDF_TYPE, F.lit("https://schema.org/Person"), "iri"),
-        F.when(F.col("c_acctbal") > 0, quad_struct(subj, label, F.col("c_name"), "literal")),
+        quad_sql(subj, RDF_TYPE, "'https://schema.org/Person'", "iri"),
+        quad_sql(subj, label, "c_name", "literal", cond="c_acctbal > 0"),
     )
     return cardinality_violations(
         quads, label, focus_type="https://schema.org/Person", min_count=1, max_count=1
@@ -1640,11 +1624,11 @@ def validate_golden_count(spark, sf_dir):
     from cam_etl_spark.operators.validate import RDF_TYPE, reconcile_counts
 
     o = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "P")
-    subj = F.format_string("https://example.org/order/%s", F.col("o_orderkey"))
-    quads = fan_out(
+    subj = "format_string('https://example.org/order/%s', o_orderkey)"
+    quads = fan_out_sql(
         o,
-        quad_struct(subj, RDF_TYPE, F.lit("https://schema.org/Order"), "iri"),
-        quad_struct(subj, "https://schema.org/orderStatus", F.col("o_orderstatus"), "literal"),
+        quad_sql(subj, RDF_TYPE, "'https://schema.org/Order'", "iri"),
+        quad_sql(subj, "https://schema.org/orderStatus", "o_orderstatus", "literal"),
     )
     return reconcile_counts(o, quads, "https://schema.org/Order")
 
@@ -2680,10 +2664,10 @@ def surface_multiline_address(spark, sf_dir):
     f"""
     SELECT s_suppkey AS objectid,
            concat(s_nationkey, '/', 'SP', s_nationkey % 5) AS lotplan,
-           round({_LON_SQL.format(k='s_suppkey * 7 + 3')}, 6) AS longitude,
-           round({_LAT_SQL.format(k='s_suppkey * 11 + 5')}, 6) AS latitude,
-           concat('POINT (', round({_LON_SQL.format(k='s_suppkey * 7 + 3')}, 6),
-                  ' ', round({_LAT_SQL.format(k='s_suppkey * 11 + 5')}, 6), ')') AS wkt
+           round({lon_sql('s_suppkey * 7 + 3')}, 6) AS longitude,
+           round({lat_sql('s_suppkey * 11 + 5')}, 6) AS latitude,
+           concat('POINT (', round({lon_sql('s_suppkey * 7 + 3')}, 6),
+                  ' ', round({lat_sql('s_suppkey * 11 + 5')}, 6), ')') AS wkt
     FROM supplier ORDER BY objectid
     """,
     tags=["S10", "F1", "F13", "P1"],
@@ -2696,8 +2680,8 @@ def s10_geocode_csv_export(spark, sf_dir):
     from cam_etl_spark.functions.spatial import wkt_point
 
     s = t(spark, sf_dir, "supplier")
-    lon = F.round(_lon(F.col("s_suppkey") * 7 + 3), 6)
-    lat = F.round(_lat(F.col("s_suppkey") * 11 + 5), 6)
+    lon = F.round(F.expr(lon_sql("s_suppkey * 7 + 3")), 6)
+    lat = F.round(F.expr(lat_sql("s_suppkey * 11 + 5")), 6)
     return s.select(
         F.col("s_suppkey").alias("objectid"),
         F.format_string("%s/SP%s", F.col("s_nationkey"), F.col("s_nationkey") % 5).alias("lotplan"),
@@ -2711,12 +2695,12 @@ def s10_geocode_csv_export(spark, sf_dir):
     "j10_knn_haversine",
     f"""
     WITH pts AS (SELECT c_custkey AS query_id,
-                        {_LON_SQL.format(k='c_custkey')} AS qlon,
-                        {_LAT_SQL.format(k='c_custkey')} AS qlat
+                        {lon_sql('c_custkey')} AS qlon,
+                        {lat_sql('c_custkey')} AS qlat
                  FROM customer WHERE c_custkey % 25 = 0),
          tgt AS (SELECT s_suppkey AS target_id,
-                        {_LON_SQL.format(k='s_suppkey * 7 + 3')} AS tlon,
-                        {_LAT_SQL.format(k='s_suppkey * 11 + 5')} AS tlat
+                        {lon_sql('s_suppkey * 7 + 3')} AS tlon,
+                        {lat_sql('s_suppkey * 11 + 5')} AS tlat
                  FROM supplier),
          scored AS (
            SELECT query_id, target_id,
@@ -2743,10 +2727,10 @@ def j10_knn_haversine(spark, sf_dir):
     c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 25 == 0)
     s = t(spark, sf_dir, "supplier")
     pts = c.select(F.col("c_custkey").alias("query_id"),
-                   _lon(F.col("c_custkey")).alias("qlon"), _lat(F.col("c_custkey")).alias("qlat"))
+                   F.expr(lon_sql("c_custkey")).alias("qlon"), F.expr(lat_sql("c_custkey")).alias("qlat"))
     tgt = s.select(F.col("s_suppkey").alias("target_id"),
-                   _lon(F.col("s_suppkey") * 7 + 3).alias("tlon"),
-                   _lat(F.col("s_suppkey") * 11 + 5).alias("tlat"))
+                   F.expr(lon_sql("s_suppkey * 7 + 3")).alias("tlon"),
+                   F.expr(lat_sql("s_suppkey * 11 + 5")).alias("tlat"))
     km = haversine_km(F.col("qlat"), F.col("qlon"), F.col("tlat"), F.col("tlon"))
     scored = pts.crossJoin(F.broadcast(tgt)).withColumn("km_raw", km)
     w = Window.partitionBy("query_id").orderBy(F.col("km_raw").asc(), F.col("target_id").asc())
@@ -3073,29 +3057,23 @@ def t10_property_on_address(spark, sf_dir):
         uuid5_expr(prop_ns, F.col("prop_id").cast("string"))
         .alias("prop_uuid"),
     )
-    bnode = F.concat_ws(
-        "-", F.col("addr_uuid"), F.col("prop_id").cast("string"),
-        F.lit("property-name"),
+    bnode = "concat_ws('-', addr_uuid, CAST(prop_id AS STRING), 'property-name')"
+    addr_iri = (
+        "format_string('https://linked.data.gov.au/dataset/qld-addr/address/%s',"
+        " addr_uuid)"
     )
-    addr_iri = F.format_string(
-        "https://linked.data.gov.au/dataset/qld-addr/address/%s",
-        F.col("addr_uuid"),
-    )
-    gn_iri = F.format_string(
-        "https://linked.data.gov.au/dataset/qld-addr/gn/%s",
-        F.col("prop_uuid"),
+    gn_iri = (
+        "format_string('https://linked.data.gov.au/dataset/qld-addr/gn/%s',"
+        " prop_uuid)"
     )
     g = "urn:qali:graph:addresses"
-    quads = fan_out(
+    quads = fan_out_sql(
         en,
-        quad_struct(addr_iri, "https://schema.org/hasPart", bnode,
-                    "bnode", graph=g),
-        quad_struct(bnode, "https://schema.org/additionalType",
-                    F.lit("https://linked.data.gov.au/def/"
-                          "addr-part-types/propertyName"),
-                    "iri", graph=g),
-        quad_struct(bnode, "https://schema.org/value", gn_iri, "iri",
-                    graph=g),
+        quad_sql(addr_iri, "https://schema.org/hasPart", bnode, "bnode", graph=g),
+        quad_sql(bnode, "https://schema.org/additionalType",
+                 "'https://linked.data.gov.au/def/addr-part-types/propertyName'",
+                 "iri", graph=g),
+        quad_sql(bnode, "https://schema.org/value", gn_iri, "iri", graph=g),
     )
     return quads.select(
         "subject", "predicate", "object_value", "object_kind", "graph"

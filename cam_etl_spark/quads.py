@@ -43,37 +43,6 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 GEO_WKT = "http://www.opengis.net/ont/geosparql#wktLiteral"
 
 
-def quad_struct(
-    subject: Column,
-    predicate: Column | str,
-    object_value: Column,
-    object_kind: str = "iri",
-    object_datatype: Column | str | None = None,
-    object_lang: str | None = None,
-    graph: Column | str | None = None,
-) -> Column:
-    """Build one quad struct column; pass through F.when for conditional
-    emission (SURVEY P7: null-guarded per-column emission,
-    /root/reference/etl_lalf_address.py:451-671)."""
-    pred = F.lit(predicate) if isinstance(predicate, str) else predicate
-    dt = (
-        F.lit(None).cast("string")
-        if object_datatype is None
-        else (F.lit(object_datatype) if isinstance(object_datatype, str) else object_datatype)
-    )
-    lang = F.lit(object_lang).cast("string") if object_lang is not None else F.lit(None).cast("string")
-    g = F.lit(graph) if isinstance(graph, str) or graph is None else graph
-    return F.struct(
-        subject.alias("subject"),
-        pred.alias("predicate"),
-        object_value.cast("string").alias("object_value"),
-        F.lit(object_kind).alias("object_kind"),
-        dt.alias("object_datatype"),
-        lang.alias("object_lang"),
-        g.cast("string").alias("graph"),
-    )
-
-
 def quad_sql(
     subject: str,
     predicate: str,
@@ -84,14 +53,21 @@ def quad_sql(
     graph: str | None = None,
     cond: str | None = None,
 ) -> str:
-    """SQL-text twin of ``quad_struct`` for hot CONSTRUCTION paths: the
-    Column-chain builder costs ~20 py4j round-trips per quad template
-    (struct + lits + casts + aliases), which dominated query BUILD time
-    for the fan-out pipelines (measured ~4x: 146 -> 36 ms per 7-quad
-    template block). Returns one expression string; combine with
-    ``fan_out_sql`` so a whole template set is a single F.expr. Same
-    fields, same types, same null-guard semantics (``cond`` maps to the
-    F.when(cond, quad) wrapper)."""
+    """One quad template as SQL text: a struct of the seven quad fields
+    (SURVEY P7: null-guarded per-column emission, reference
+    etl_lalf_address.py:451-671). ``subject``,
+    ``object_value`` and ``cond`` are SQL fragments over the input row;
+    ``predicate``, ``object_datatype``, ``object_lang`` and ``graph`` are
+    constants quoted here, so they must not contain a quote or a
+    backslash. A value that is not a plain SQL fragment (a Column
+    expression, a literal with escapes) is projected onto the input first
+    and referred to by name. With ``cond`` the quad is NULL — dropped by
+    ``fan_out_sql`` — where the condition does not hold.
+
+    Text rather than a Column chain because the chain cost ~20 py4j
+    round-trips per template, which dominated query BUILD time for the
+    fan-out pipelines (measured ~4x: 146 -> 36 ms per 7-quad template
+    block)."""
     dt = "CAST(NULL AS STRING)" if object_datatype is None else f"'{object_datatype}'"
     lang = "CAST(NULL AS STRING)" if object_lang is None else f"'{object_lang}'"
     g = "CAST(NULL AS STRING)" if graph is None else f"CAST('{graph}' AS STRING)"
@@ -107,9 +83,14 @@ def quad_sql(
 
 
 def fan_out_sql(df: DataFrame, *quad_sqls: str) -> DataFrame:
-    """``fan_out`` over ``quad_sql`` strings: the entire template array is
-    ONE parsed expression (one py4j round-trip), not a tree of Column
-    calls. Identical explode + null-filter semantics.
+    """The core row→quads transform (SURVEY §2.8): one input row becomes
+    10-60 conditionally-emitted quads. The reference does this as an
+    interpreted Python loop over rdflib calls (e.g. reference
+    etl_lalf_address.py:254-690). Here the ``quad_sql``
+    templates form one array expression (one py4j round-trip) that is
+    exploded and null-filtered — a columnar flatMap that stays inside
+    whole-stage codegen, so Catalyst prunes the input columns each quad
+    actually uses.
 
     Measured NON-win (r14): fusing the three ops into one
     ``selectExpr("inline(filter(array(...), q -> q IS NOT NULL))")``
@@ -119,20 +100,6 @@ def fan_out_sql(df: DataFrame, *quad_sqls: str) -> DataFrame:
     on etl_end_to_end_counts (min 1.418 s vs 1.499 s, median lower too).
     Keep the chain."""
     exploded = df.select(F.explode(F.expr(f"array({', '.join(quad_sqls)})")).alias("q"))
-    return exploded.filter(F.col("q").isNotNull()).select("q.*")
-
-
-def fan_out(df: DataFrame, *quad_cols: Column) -> DataFrame:
-    """The core row→quads transform (SURVEY §2.8): one input row becomes
-    10-60 conditionally-emitted quads.
-
-    The reference does this as an interpreted Python loop over rdflib calls
-    (e.g. /root/reference/etl_lalf_address.py:254-690). Here each quad is a
-    `F.when(cond, quad_struct(...))` element of an array that is exploded and
-    null-filtered — a columnar flatMap that stays inside whole-stage codegen,
-    so Catalyst prunes the input columns each quad actually uses.
-    """
-    exploded = df.select(F.explode(F.array(*quad_cols)).alias("q"))
     return exploded.filter(F.col("q").isNotNull()).select("q.*")
 
 

@@ -45,8 +45,8 @@ def get_spark(app_name: str = "cam_etl_spark", shuffle_partitions: int | None = 
         # NOTE: runtime bloom-filter pushdown is ON here — it is Spark 4's
         # DEFAULT (spark.sql.optimizer.runtime.bloomFilter.enabled=true,
         # creation-side threshold 10 MB). The round-2 "hang" attributed to
-        # it was root-caused in round 4 (tools/bisect_bloom.py, SCALE.md
-        # §Runtime filters): the experiment also set
+        # it was root-caused in round 4 (SCALE.md §Runtime filters, by
+        # stubbing PySpark's exception converter): the experiment also set
         # spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled,
         # which was REMOVED in Spark 4.0.0 — any session carrying it
         # throws AnalysisException on first SessionState use, and

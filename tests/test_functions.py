@@ -74,13 +74,14 @@ def test_word_shingles_and_ngrams(spark):
 
 
 def test_cosine_similarity(spark):
-    from cam_etl_spark.functions.vectors import cosine_similarity
+    from cam_etl_spark.functions.vectors import cosine_from_norms_sql, l2_norm_sql
 
     df = spark.createDataFrame(
         [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]), ([0.0, 0.0], [1.0, 1.0])],
         "a array<double>, b array<double>",
     )
-    out = [r["c"] for r in df.select(cosine_similarity(F.col("a"), F.col("b")).alias("c")).collect()]
+    cos = cosine_from_norms_sql("a", "b", l2_norm_sql("a"), l2_norm_sql("b"))
+    out = [r["c"] for r in df.selectExpr(f"{cos} AS c").collect()]
     assert abs(out[0] - 1.0) < 1e-12
     assert abs(out[1]) < 1e-12
     assert out[2] == 0.0  # zero-vector guard
@@ -283,6 +284,12 @@ def test_local_values_df_exact_roundtrip(spark):
             assert (r["c"] == c and math.copysign(1, r["c"]) == math.copysign(1, c))
     # LocalRelation plan: no RDD scan, no Python evaluation node
     plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "EvalPython" not in plan
+    # empty rows: same schema, no rows, still no RDD scan
+    empty = local_values_df(spark, [], "a int, b bigint, c double, d string")
+    assert empty.schema.simpleString() == df.schema.simpleString()
+    assert empty.collect() == []
+    plan = empty._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan and "EvalPython" not in plan
 
 

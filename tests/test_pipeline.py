@@ -57,7 +57,11 @@ def test_address_pipeline_streams(spark, sf_dir, tmp_path):
     batch pipeline's quads."""
     from pyspark.sql import functions as F
 
-    from cam_etl_spark.pipelines.address import address_quads, bronze_tables
+    from cam_etl_spark.pipelines.address import (
+        _address_fanout,
+        address_quads,
+        bronze_tables,
+    )
 
     t = bronze_tables(spark, sf_dir)
     # batch reference (dedup'd quads)
@@ -75,36 +79,7 @@ def test_address_pipeline_streams(spark, sf_dir, tmp_path):
         .join(F.broadcast(t["roads"]), "road_id", "left")
         .join(F.broadcast(t["localities"]), "locality_code", "left")
     )
-    from cam_etl_spark.pipelines.address import (
-        ADDR_GRAPH,
-        RDF_TYPE,
-        SDO,
-        STATUS_IRIS,
-        _display_label,
-    )
-    from cam_etl_spark.quads import fan_out, quad_struct
-
-    subj = F.format_string("https://example.org/address/%s", F.col("addr_id"))
-    status_map = F.create_map(*[F.lit(x) for kv in STATUS_IRIS.items() for x in kv])
-    quads = fan_out(
-        joined,
-        quad_struct(subj, RDF_TYPE, F.lit(SDO + "PostalAddress"), "iri", graph=ADDR_GRAPH),
-        quad_struct(subj, SDO + "identifier", F.col("addr_id"), "literal",
-                    object_datatype="https://example.org/datatype/address-pid", graph=ADDR_GRAPH),
-        quad_struct(subj, SDO + "additionalType", status_map[F.col("addr_status_code")], "iri",
-                    graph=ADDR_GRAPH),
-        quad_struct(subj, SDO + "containedInPlace",
-                    F.format_string("https://example.org/parcel/%s-%s", F.col("lot_no"), F.col("plan_no")),
-                    "iri", graph=ADDR_GRAPH),
-        F.when(F.col("road_name").isNotNull(),
-               quad_struct(subj, SDO + "streetAddress",
-                           F.format_string("https://example.org/road/%s", F.col("road_id")),
-                           "iri", graph=ADDR_GRAPH)),
-        F.when(F.col("unit_no").isNotNull(),
-               quad_struct(subj, SDO + "unitCode", F.col("unit_no"), "literal", graph=ADDR_GRAPH)),
-        quad_struct(subj, "http://www.w3.org/2000/01/rdf-schema#label", _display_label(),
-                    "literal", graph=ADDR_GRAPH),
-    )
+    quads = _address_fanout(joined)
     q = (
         quads.writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))

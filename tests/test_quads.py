@@ -5,28 +5,26 @@ from pyspark.sql import functions as F
 
 
 def _sample_quads(spark):
-    from cam_etl_spark.quads import fan_out, quad_struct
+    from cam_etl_spark.quads import fan_out_sql, quad_sql
 
     df = spark.createDataFrame(
         [(1, "Alice", 10.5), (2, 'Bo"b\n', None)], "id long, name string, bal double"
     )
-    subj = F.format_string("https://example.org/c/%s", F.col("id"))
+    subj = "format_string('https://example.org/c/%s', id)"
     g = "urn:g:test"
-    return fan_out(
+    return fan_out_sql(
         df,
-        quad_struct(subj, "https://schema.org/name", F.col("name"), "literal", graph=g),
-        F.when(
-            F.col("bal").isNotNull(),
-            quad_struct(
-                subj,
-                "https://schema.org/balance",
-                F.col("bal").cast("string"),
-                "literal",
-                object_datatype="http://www.w3.org/2001/XMLSchema#decimal",
-                graph=g,
-            ),
+        quad_sql(subj, "https://schema.org/name", "name", "literal", graph=g),
+        quad_sql(
+            subj,
+            "https://schema.org/balance",
+            "CAST(bal AS STRING)",
+            "literal",
+            object_datatype="http://www.w3.org/2001/XMLSchema#decimal",
+            graph=g,
+            cond="bal IS NOT NULL",
         ),
-        quad_struct(subj, "https://example.org/p/lang", F.lit("hi"), "literal", object_lang="en", graph=g),
+        quad_sql(subj, "https://example.org/p/lang", "'hi'", "literal", object_lang="en", graph=g),
     )
 
 
@@ -128,30 +126,23 @@ def test_graph_partitioned_write_prunes_partitions(spark, tmp_path):
     other graphs read), not a post-scan Filter."""
     from pyspark.sql import functions as F
 
-    from cam_etl_spark.quads import fan_out, quad_struct
+    from cam_etl_spark.quads import fan_out_sql, quad_sql
 
     rows = spark.range(20)
-    quads = fan_out(
-        rows,
-        quad_struct(
-            F.format_string("https://ex.org/e/%s", F.col("id")),
-            "https://schema.org/name",
-            F.col("id").cast("string"),
-            "literal",
-            graph="urn:g:a",
-        ),
-    ).unionByName(
-        fan_out(
+
+    def name_quads(graph):
+        return fan_out_sql(
             rows,
-            quad_struct(
-                F.format_string("https://ex.org/e/%s", F.col("id")),
+            quad_sql(
+                "format_string('https://ex.org/e/%s', id)",
                 "https://schema.org/name",
-                F.col("id").cast("string"),
+                "CAST(id AS STRING)",
                 "literal",
-                graph="urn:g:b",
+                graph=graph,
             ),
         )
-    )
+
+    quads = name_quads("urn:g:a").unionByName(name_quads("urn:g:b"))
     path = str(tmp_path / "quads_by_graph")
     quads.write.partitionBy("graph").parquet(path)
     filtered = spark.read.parquet(path).filter(F.col("graph") == "urn:g:a")

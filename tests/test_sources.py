@@ -356,23 +356,24 @@ def test_nquads_sink_writer_lifecycle(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from cam_etl_spark.quads import (
-        fan_out,
-        quad_struct,
+        fan_out_sql,
+        quad_sql,
         read_nquads,
         to_nquads_lines,
     )
     from cam_etl_spark.sources.nquads_sink import register_nquads_sink
 
     assert register_nquads_sink(spark)
-    base = spark.range(7).select(F.col("id"))
-    subj = F.format_string("https://example.org/x/%s", F.col("id"))
-    quads = fan_out(
+    # the hostile literal is a projected column, not SQL text
+    base = spark.range(7).select(
+        "id", F.concat(F.lit('a\\b"c\nd\te'), F.col("id").cast("string")).alias("name")
+    )
+    subj = "format_string('https://example.org/x/%s', id)"
+    quads = fan_out_sql(
         base,
-        quad_struct(subj, "https://schema.org/name",
-                    F.concat(F.lit('a\\b"c\nd\te'), F.col("id").cast("string")),
-                    "literal", graph="urn:g"),
-        quad_struct(subj, "https://schema.org/ref",
-                    F.format_string("b%s", F.col("id")), "bnode", graph="urn:g"),
+        quad_sql(subj, "https://schema.org/name", "name", "literal", graph="urn:g"),
+        quad_sql(subj, "https://schema.org/ref", "format_string('b%s', id)", "bnode",
+                 graph="urn:g"),
     )
     path = str(tmp_path / "out")
     quads.repartition(3).write.format("nquads_sink").mode("overwrite").save(path)
@@ -397,10 +398,9 @@ def test_nquads_sink_writer_lifecycle(spark, tmp_path):
     )
     assert lit.count() == 1
     # overwrite replaces: second job with fewer rows leaves no stale parts
-    quads2 = fan_out(
+    quads2 = fan_out_sql(
         base.filter(F.col("id") < 2),
-        quad_struct(subj, "https://schema.org/name", F.lit("x"), "literal",
-                    graph="urn:g"),
+        quad_sql(subj, "https://schema.org/name", "'x'", "literal", graph="urn:g"),
     )
     quads2.coalesce(1).write.format("nquads_sink").mode("overwrite").save(path)
     man2 = json.load(open(os.path.join(path, "_MANIFEST.json")))
