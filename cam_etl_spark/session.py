@@ -28,6 +28,8 @@ def get_spark(app_name: str = "cam_etl_spark", shuffle_partitions: int | None = 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # No \r progress bars interleaved with tool and test output.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # PySpark 4 captures the Python call site (a stack walk + origin
         # push) on EVERY DataFrame/Column API call for error enrichment

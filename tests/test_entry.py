@@ -1,8 +1,9 @@
 """Driver-contract smoke tests: entry(), queries()/oracle_sql() integrity."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_entry_returns_rows(spark):

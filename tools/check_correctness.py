@@ -8,14 +8,13 @@ compares row count + sorted-column value multiset. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
