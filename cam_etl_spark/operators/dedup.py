@@ -614,15 +614,16 @@ def embedding_near_pairs_blocked(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_blocks: int = 8,
+    n_blocks: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact and DISTRIBUTED: no
     driver ``collect()`` anywhere in the plan.
 
-    Blocked all-pairs product: vectors are hashed into ``n_blocks`` blocks,
-    each block's vectors are packed into one row (collect_list inside an
-    executor-side groupBy — one shuffle of the corpus), and the B(B+1)/2
-    unordered block pairs are scored independently with one BLAS
+    Blocked all-pairs product: vectors are hashed into ``n_blocks`` blocks
+    (default: ``similarity.one_wave_blocks``, so all tiles run in one wave
+    of cores), each block's vectors are packed into one row (collect_list
+    inside an executor-side groupBy — one shuffle of the corpus), and the
+    B(B+1)/2 unordered block pairs are scored independently with one BLAS
     ``A @ B.T`` per pair inside mapInPandas. Per-task memory is two blocks;
     at 100 TB you size ``n_blocks`` so a block is a few hundred MB and get
     n·B bytes of replication for n²/2 flops of exact scoring — the flops are
@@ -641,6 +642,10 @@ def embedding_near_pairs_blocked(
     import numpy as np
     import pandas as pd
 
+    from cam_etl_spark.operators.similarity import one_wave_blocks
+
+    if n_blocks is None:
+        n_blocks = one_wave_blocks(df.sparkSession.sparkContext.defaultParallelism)
     packed = (
         df.select(
             F.col(id_col).alias("id").cast("long"), F.col(vec_col).alias("vec")

@@ -549,11 +549,14 @@ def tfidf_cosine_pairs(
       degenerate to all pairs, and a postings join pays a pair-keyed
       shuffle of |pairs|x|terms| rows (measured 42 s for 224 M rows at
       sf0.1). Instead the vocabulary is broadcast as a dense index and
-      the docs are hashed into ``n_blocks`` blocks; each of the
-      B(B+1)/2 block tiles is scored with one BLAS ``A @ B.T`` inside
-      mapInPandas (the embedding_near_pairs_blocked layout). Per-task
-      memory is two blocks; rounding is HALF-UP to 4 decimals exactly
-      like the SQL twin, so both strategies return identical rows.
+      the docs are hashed into ``n_blocks`` blocks (default:
+      ``one_wave_blocks``); each of the B(B+1)/2 block tiles is one
+      mapInPandas task (the embedding_near_pairs_blocked layout), scored
+      by ``_pair_sums`` with either a merge of the two term-sorted
+      postings lists or, on overlap-heavy tiles, one BLAS ``A @ B.T``.
+      Per-task memory is two blocks; rounding is HALF-UP to 4 decimals
+      exactly like the SQL twin, so both strategies return identical
+      rows.
     """
     if threshold <= 0:
         raise ValueError(
@@ -604,12 +607,9 @@ def tfidf_cosine_pairs(
         )
     if 0 < len(vocab_rows) <= dense_vocab_max:
         if n_blocks is None:
-            # Size blocks so a tile's similarity matrix stays small
-            # (~1500² doubles ≈ 18 MB): huge tiles serialize badly and
-            # thrash memory across concurrent tasks — measured 62×/decade
-            # on a ×10 corpus with 8 fixed blocks vs ~linear when block
-            # size is held constant.
-            n_blocks = min(64, max(8, -(-int(n_docs_val) // 1500)))
+            n_blocks = one_wave_blocks(
+                tf.sparkSession.sparkContext.defaultParallelism, n_docs_val
+            )
         return _tfidf_pairs_dense(tf, vocab_rows, n_docs_val, threshold, n_blocks)
 
     # Band the document-frequency table BEFORE it is broadcast: the band
@@ -664,6 +664,26 @@ def tfidf_cosine_pairs(
         .agg(F.round(F.sum(F.col("a.u") * F.col("b.u")), 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
+
+
+def one_wave_blocks(cores: int, n_items: int = 0) -> int:
+    """Block count B for a blocked all-pairs scorer whose B(B+1)/2 tiles
+    each run as one mapInPandas task: the largest B whose tiles fit in
+    one wave of ``cores`` tasks, raised to ceil(n_items/1500) so a tile's
+    similarity matrix stays small (~1500² doubles ≈ 18 MB), capped at 64.
+
+    Each Python task has a fixed cost that dwarfs a small tile's scoring:
+    the worker's spark-files setup calls importlib.invalidate_caches(),
+    which re-reads the central directories of the spark-core jar and
+    pyspark.zip — ~0.28 CPU-s per task against 6-10 ms of scoring per
+    tile at 500 documents. A second wave of tiles doubles that cost while
+    the first wave's cores idle. The 1500-item floor keeps what the old
+    size rule measured: with fixed blocks on a ×10 corpus the tile time
+    grew 62×/decade, ~linear when block size is held constant."""
+    b = 1
+    while (b + 1) * (b + 2) // 2 <= cores:
+        b += 1
+    return min(64, max(b, -(-int(n_items) // 1500)))
 
 
 def _band_sql(min_df: int, max_df_frac: float, n_docs: int) -> str:

@@ -1521,7 +1521,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     from cam_etl_spark.operators.dedup import embedding_near_pairs_blocked
 
     e = t(spark, sf_dir, "embeddings")
-    return embedding_near_pairs_blocked(e, threshold=0.40, n_blocks=8)
+    return embedding_near_pairs_blocked(e, threshold=0.40)
 
 
 @register(
@@ -1550,7 +1550,7 @@ def dedup_embedding_lsh_recall(spark, sf_dir):
 
     e = t(spark, sf_dir, "embeddings")
     cands = lsh_candidate_pairs_cosine(e, dim=64, n_planes=2, n_bands=16)
-    exact = embedding_near_pairs_blocked(e, threshold=0.5, n_blocks=8)
+    exact = embedding_near_pairs_blocked(e, threshold=0.5)
     return exact.join(
         cands.withColumn("hit", F.lit(True)), ["id_a", "id_b"], "left"
     ).select(

@@ -215,6 +215,21 @@ def test_embedding_blocked_matches_collect_baseline(spark, sf_dir):
     assert blocked == base and len(base) > 0
 
 
+def test_embedding_blocked_default_blocks_match_eight(spark, sf_dir):
+    """The one-wave default block count changes the tiling, not the pairs."""
+    from cam_etl_spark.io import load_table
+    from cam_etl_spark.operators.dedup import embedding_near_pairs_blocked
+
+    e = load_table(spark, sf_dir, "embeddings")
+
+    def pairs(**kw):
+        out = embedding_near_pairs_blocked(e, threshold=0.40, **kw)
+        return sorted(tuple(r) for r in out.collect())
+
+    default = pairs()
+    assert default == pairs(n_blocks=8) and len(default) > 0
+
+
 def test_hierarchy_roots_and_closure(spark):
     from cam_etl_spark.operators.hierarchy import descendants_closure, resolve_roots
 
@@ -888,6 +903,42 @@ def test_tfidf_cosine_pairs_identity_and_pruning(spark):
 
     with pytest.raises(ValueError, match="threshold"):
         tfidf_cosine_pairs(df, threshold=0.0)
+
+
+def test_one_wave_blocks_rule():
+    """B(B+1)/2 tiles fit in one wave of cores; the ~1500-items-per-block
+    floor and the 64-block cap still hold."""
+    from cam_etl_spark.operators.similarity import one_wave_blocks
+
+    assert [one_wave_blocks(c) for c in (1, 4, 8, 32)] == [1, 2, 3, 7]  # 1/3/6/28 tiles
+    assert one_wave_blocks(4, 1500) == 2 and one_wave_blocks(4, 4501) == 4
+    assert one_wave_blocks(4, 10**9) == 64 and one_wave_blocks(10**6) == 64
+
+
+def test_tfidf_dense_tiles_fit_one_wave(spark):
+    """On a corpus whose 30-word vocabulary takes the dense path, the tile
+    stage has at most defaultParallelism tasks and returns the same rows
+    as 8 blocks and as the sparse postings join."""
+    import random
+
+    from cam_etl_spark.operators.similarity import tfidf_cosine_pairs
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(30)]
+    texts = [" ".join(rng.choices(words, k=rng.randint(5, 12))) for _ in range(600)]
+    for i in range(0, 600, 20):  # near-duplicates: an earlier doc + a marker
+        texts[i] = texts[rng.randrange(i + 1)] + " dup"
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    auto = tfidf_cosine_pairs(df, threshold=0.9)
+    assert auto.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    got = rows(auto)
+    assert len(got) > 0
+    assert got == rows(tfidf_cosine_pairs(df, threshold=0.9, n_blocks=8))
+    assert got == rows(tfidf_cosine_pairs(df, threshold=0.9, dense_vocab_max=0))
 
 
 def test_phrase_search_positions_counts_and_three_terms(spark):

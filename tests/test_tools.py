@@ -3,6 +3,8 @@ shares with the product."""
 
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -53,3 +55,23 @@ def test_session_builder_only_in_session_module():
                     if builder.search(fh.read()):
                         found.append(os.path.relpath(path, ROOT))
     assert found == [os.path.join("cam_etl_spark", "session.py")]
+
+
+@pytest.mark.parametrize(
+    "tool", ["bench_scaling", "catalog_report", "check_correctness", "plan_dump", "plan_report"]
+)
+def test_tool_scripts_import_stdlib_profile(tool):
+    """Run as a script, a tool's directory is sys.path[0]; PySpark's
+    ``import cProfile`` must still find the standard library's
+    ``profile``, not tools/profile.py (which made every such tool fail
+    with a circular import of cam_etl_spark.plans)."""
+    tools = os.path.join(ROOT, "tools")
+    code = (
+        "import runpy, sys\n"
+        f"sys.path.insert(0, {tools!r})\n"
+        f"runpy.run_path({os.path.join(tools, tool + '.py')!r}, run_name='tool')\n"
+        "import cProfile, profile\n"
+        f"assert not profile.__file__.startswith({tools!r}), profile.__file__\n"
+    )
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True)
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -29,7 +29,10 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Run as a script, this directory is sys.path[0], where tools/profile.py
+# would shadow the standard library's ``profile`` that PySpark imports.
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path[:] = [os.path.dirname(TOOLS)] + [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 
 KEY_STRIDE = 1_000_000_000
 

@@ -14,7 +14,10 @@ import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Run as a script, this directory is sys.path[0], where tools/profile.py
+# would shadow the standard library's ``profile`` that PySpark imports.
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path[:] = [os.path.dirname(TOOLS)] + [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (

@@ -15,7 +15,10 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Run as a script, this directory is sys.path[0], where tools/profile.py
+# would shadow the standard library's ``profile`` that PySpark imports.
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path[:] = [os.path.dirname(TOOLS)] + [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 
 from cam_etl_spark.plans import QUERIES  # noqa: E402
 from cam_etl_spark.session import get_spark  # noqa: E402
