@@ -1,19 +1,19 @@
-"""Distributed BPE merge learning (Sennrich et al. 2016, arXiv:1508.07909).
+"""BPE merge learning (Sennrich et al. 2016, arXiv:1508.07909).
 
-Learns the first ``n_merges`` byte-pair-encoding merges over a corpus as
-pure DataFrame algebra — the vocabulary-building step of an LLM data
-pipeline (the reference has no tokenizer training; this belongs to the
-training-data extension surface alongside token counting in
-plans/surface.py text_bpe_token_count).
+Learns the first ``n_merges`` byte-pair-encoding merges over a corpus —
+the vocabulary-building step of an LLM data pipeline (the reference has
+no tokenizer training; this belongs to the training-data extension
+surface alongside token counting in plans/surface.py
+text_bpe_token_count).
 
-The distributed shape is the same one real BPE trainers use: the corpus
-compresses to (distinct word, frequency) ONCE (the only corpus-sized
-shuffle), and every learning iteration then works on the vocabulary-sized
-word table: count adjacent symbol pairs weighted by word frequency (one
-map-side-combined shuffle), take the global top pair (TakeOrdered of the
-pair-count table — its single winning row is the per-iteration state,
-pulled to the driver: bounded by construction), and apply the merge to
-every word as a literal replace stacked on the checkpointed vocabulary.
+The corpus compresses to (distinct word, frequency) ONCE in Spark — the
+only corpus-sized shuffle, and the only Spark action of learning. That
+vocabulary-sized table is collected, and the greedy loop runs on the
+driver: count adjacent symbol pairs weighted by word frequency, take the
+top pair, apply its merge to every word. Each merge needs its
+predecessor's winner on the driver anyway, so a per-merge Spark job
+would only add a fixed action cost (docs/SCALE.md §An action has a fixed
+cost) per step; the driver's working set is the distinct-word table.
 
 Merge application is EXACT greedy left-to-right BPE, expressed as plain
 string algebra so a SQL oracle can replay it: a word's segmentation is a
@@ -30,6 +30,9 @@ mis-segmentation), which is why the delimiter is doubled.
 """
 
 from __future__ import annotations
+
+import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,57 +60,33 @@ def bpe_learn_merges(
     """Learn the first ``n_merges`` BPE merges; returns one row per merge:
     (step, merge_left, merge_right, pair_count), step starting at 1 in
     learning order. Ties on pair_count break by (merge_left, merge_right)
-    ascending — deterministic in any engine with binary string order."""
+    ascending — Python's code-point order, which equals Spark's and
+    DuckDB's binary UTF-8 string order.
+
+    One Spark action: the (encoded word, freq) vocabulary is collected
+    and the merges are learned on the driver, which therefore holds the
+    distinct-word table (vocabulary-sized, not corpus-sized)."""
     if n_merges < 1:
         raise ValueError("bpe_learn_merges: n_merges must be >= 1")
-    words = corpus_word_freqs(docs, text_col, token_split).select(
+    vocab = corpus_word_freqs(docs, text_col, token_split).select(
         # "  h  e  l  l  o  " — double-space delimiters (see module doc)
         F.concat(F.lit("  "), F.regexp_replace("word", "(.)", "$1  ")).alias("s"),
         "freq",
-    ).localCheckpoint(eager=True)
-
-    # Per step: ONE job — the pair-count shuffle collapsed to a single
-    # TakeOrdered(1) whose winning row (bounded: exactly one row, three
-    # scalars) is pulled to the driver, and the merge is applied as a
-    # nested LITERAL replace over the checkpointed base vocabulary.
-    # The previous shape paid three jobs per step (top-pair checkpoint,
-    # take(1) probe, words re-checkpoint) plus a broadcast join; replacing
-    # the words checkpoint with an accumulated replace-expression chain
-    # keeps the lineage flat (≤ n_merges nested replaces over the ONE
-    # materialized (word, freq) frame) and re-running those string
-    # replaces per step is a map-only pass over the vocabulary — far
-    # cheaper at any scale than materializing the vocabulary table
-    # n_merges times. Arithmetic, ordering, and tie-breaks are unchanged
-    # (cnt desc, l asc, r asc), so the learned merges are identical.
+    )
+    words = [(r["s"], r["freq"]) for r in vocab.collect()]
     merges: list[tuple[int, str, str, int]] = []
-    s_expr = F.col("s")
     for step in range(1, n_merges + 1):
-        pairs = (
-            words.select(s_expr.alias("s"), "freq")
-            .withColumn("syms", F.split(F.trim("s"), " +"))
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(syms, 1, size(syms) - 1), "
-                        "slice(syms, 2, size(syms) - 1), "
-                        "(a, b) -> struct(a AS l, b AS r))"
-                    )
-                ).alias("pr"),
-            )
-            .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
-            .agg(F.sum("freq").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        if not top:
+        pairs: Counter = Counter()
+        for s, freq in words:
+            syms = re.split(" +", s.strip(" "))
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += freq
+        if not pairs:
             break  # corpus exhausted (every word is a single symbol)
-        left, right, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
+        (left, right), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, left, right, cnt))
-        s_expr = F.replace(
-            s_expr,
-            F.lit(f" {left}  {right} "),
-            F.lit(f" {left}{right} "),
-        )
+        old, new = f" {left}  {right} ", f" {left}{right} "
+        words = [(s.replace(old, new), freq) for s, freq in words]
     # LocalRelation, not createDataFrame: the pickled-RDD result frame
     # costs a Python-worker round-trip per downstream task on every
     # action over what is an n_merges-row constant table (see
@@ -119,7 +98,6 @@ def bpe_learn_merges(
         merges,
         "step int, merge_left string, merge_right string, pair_count long",
     )
-
 
 
 def bpe_apply(

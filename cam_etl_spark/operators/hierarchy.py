@@ -31,11 +31,13 @@ def resolve_roots(
     ceil(log2(max_depth)) rounds instead of max_depth single-step rounds
     (guide §2.4: each round is an eagerly-checkpointed self-join, so
     halving the round count halves jobs, barriers, and driver overhead).
-    A row whose ancestor advanced this round is flagged in the SAME scan
-    (``stepped`` = the looked-up ancestor was itself a non-root), so the
-    fixpoint test is a filter over the checkpointed result — the previous
-    implementation paid an extra join against the prior state per round.
-    Deterministic; cycles are cut by max_iterations.
+    Each row carries ``settled``, which implies its ancestor is a root:
+    roots start settled and a joined row takes its hop's flag. The
+    fixpoint test is a filter over the checkpointed result — stop when no
+    row is unsettled — so the loop never stops early, and stops no later
+    than waiting for a round in which no pointer moves (one round sooner
+    on a tree of depth 3). Deterministic; cycles never settle and are cut
+    by max_iterations.
     """
     nodes = edges.select(
         F.col(id_col).alias("id"),
@@ -52,6 +54,7 @@ def resolve_roots(
         "id",
         F.coalesce("parent_id", "id").alias("anc"),
         F.when(F.col("parent_id").isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
+        F.col("parent_id").isNull().alias("settled"),
     )
     # Invariant: anc is the ancestor exactly ``depth`` parent steps up from
     # id (or id itself for roots, depth 0). Doubling step: look the current
@@ -63,6 +66,7 @@ def resolve_roots(
             F.col("id").alias("h_id"),
             F.col("anc").alias("h_anc"),
             F.col("depth").alias("h_depth"),
+            F.col("settled").alias("h_settled"),
         )
         prev = state
         state = (
@@ -71,14 +75,15 @@ def resolve_roots(
                 "id",
                 F.col("h_anc").alias("anc"),
                 (F.col("depth") + F.col("h_depth")).alias("depth"),
-                (F.col("h_depth") > 0).alias("stepped"),
+                F.col("h_settled").alias("settled"),
             )
             .localCheckpoint(eager=False)
         )
-        # One job does double duty: count() computes EVERY partition, which
-        # materializes the lazy checkpoint (truncating lineage) AND yields
-        # the fixpoint signal — vs. eager-checkpoint + isEmpty, two jobs.
-        done = state.filter("stepped").count() == 0
+        # One action does double duty: count() computes EVERY partition,
+        # which materializes the lazy checkpoint (truncating lineage) AND
+        # yields the fixpoint signal. (Under AQE the lazy localCheckpoint
+        # call is itself an execution that runs the join's shuffle stages.)
+        done = state.filter(~F.col("settled")).count() == 0
         # the new checkpoint is materialized now — the previous round's
         # blocks are dead (first round: prev is no checkpoint, no-op)
         unpersist_checkpoint(prev)
@@ -112,9 +117,11 @@ def descendants_closure(
             frontier.join(edge, frontier.ancestor_id == edge.e_child)
             .select("id", F.col("e_parent").alias("ancestor_id"), (F.col("distance") + 1).alias("distance"))
             .join(closure.select("id", "ancestor_id"), ["id", "ancestor_id"], "left_anti")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
+        # as in resolve_roots: count() materializes the lazy checkpoint and
+        # is the fixpoint test
+        if nxt.count() == 0:
             break
         closure = closure.unionByName(nxt)
         frontier = nxt

@@ -1306,15 +1306,14 @@ def _bpe_apply_oracle(n_merges: int) -> str:
     bench=True,
 )
 def text_bpe_learn_merges(spark, sf_dir):
-    """Distributed BPE merge LEARNING (not just counting — the tokenizer-
-    training step of an LLM data pipeline): the first 6 merges over the
-    documents corpus, operators/bpe.bpe_learn_merges. The corpus
-    compresses to (word, freq) once; each iteration is a vocabulary-sized
-    pair-count shuffle + a 1-row broadcast merge application, the same
-    shape real BPE trainers use. The oracle unrolls the identical
-    recurrence — including exact greedy merge application via the
-    double-space-delimiter replace identity — one CTE triple per
-    iteration."""
+    """BPE merge LEARNING (not just counting — the tokenizer-training step
+    of an LLM data pipeline): the first 6 merges over the documents
+    corpus, operators/bpe.bpe_learn_merges. Spark compresses the corpus to
+    (word, freq) once, in the query's one eager action; the greedy merge
+    loop then runs on the driver over that collected vocabulary. The
+    oracle unrolls the identical recurrence — including exact greedy merge
+    application via the double-space-delimiter replace identity — one CTE
+    triple per iteration."""
     from cam_etl_spark.operators.bpe import bpe_learn_merges
 
     d = t(spark, sf_dir, "documents")

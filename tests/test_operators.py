@@ -230,6 +230,17 @@ def test_embedding_blocked_default_blocks_match_eight(spark, sf_dir):
     assert default == pairs(n_blocks=8) and len(default) > 0
 
 
+def _sql_executions(spark) -> int:
+    """SQL executions started so far: the newest execution id + 1, since ids
+    count up from 0. The status store exists with the UI off, but it keeps
+    only the newest spark.sql.ui.retainedExecutions, so its
+    executionsCount() stops growing in a long session."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() + 1 if n else 0
+
+
 def test_hierarchy_roots_and_closure(spark):
     from cam_etl_spark.operators.hierarchy import descendants_closure, resolve_roots
 
@@ -237,8 +248,25 @@ def test_hierarchy_roots_and_closure(spark):
         [("a", None), ("b", "a"), ("c", "b"), ("d", "c"), ("e", None), ("f", "e")],
         "id string, parent_id string",
     )
-    roots = {r["id"]: (r["root_id"], r["depth"]) for r in resolve_roots(edges).collect()}
+    before = _sql_executions(spark)
+    resolved = resolve_roots(edges)
+    # every row is settled after two doubling rounds (depth <= 3); a round
+    # is two executions: the lazy checkpoint, which under AQE runs the
+    # join's shuffle stages, and the count that materializes it
+    assert _sql_executions(spark) - before == 2 * 2
+    roots = {r["id"]: (r["root_id"], r["depth"]) for r in resolved.collect()}
     assert roots["d"] == ("a", 3) and roots["a"] == ("a", 0) and roots["f"] == ("e", 1)
+
+    # a deeper chain gives the rows of a plain parent walk
+    parent = {i: (i - 1 if i > 0 else None) for i in range(10)}
+    want = []
+    for i in parent:
+        node, depth = i, 0
+        while parent[node] is not None:
+            node, depth = parent[node], depth + 1
+        want.append((i, node, depth))
+    chain = spark.createDataFrame(list(parent.items()), "id long, parent_id long")
+    assert sorted(tuple(r) for r in resolve_roots(chain).collect()) == want
 
     closure = {(r["id"], r["ancestor_id"], r["distance"]) for r in descendants_closure(edges).collect()}
     assert ("d", "a", 3) in closure and ("c", "a", 2) in closure and ("b", "a", 1) in closure
@@ -1019,8 +1047,12 @@ def test_bpe_learn_merges_textbook_and_greedy_semantics(spark):
          (4, "widest widest widest")],
         "doc_id long, text string",
     )
+    before = _sql_executions(spark)
+    learned = bpe_learn_merges(docs, 4)
+    # one collect of the vocabulary; the merges are learned on the driver
+    assert _sql_executions(spark) - before == 1
     got = [(r["step"], r["merge_left"], r["merge_right"], r["pair_count"])
-           for r in bpe_learn_merges(docs, 4).orderBy("step").collect()]
+           for r in learned.orderBy("step").collect()]
     assert got == [(1, "e", "s", 9), (2, "es", "t", 9),
                    (3, "l", "o", 7), (4, "lo", "w", 7)]
 
@@ -1047,10 +1079,25 @@ def test_bpe_learn_merges_textbook_and_greedy_semantics(spark):
     assert g5[0] == ("a", "a", 8)       # 4 overlapping bigrams per word
     assert g5[1] == ("aa", "a", 2)      # greedy tail pair; ties break (l, r)
 
+    # ties across code planes break in binary order: z < é < U+E000 < U+1D4B3
+    planes = spark.createDataFrame(
+        [(1, "\U0001d4b3\U0001d4b3 \ue000\ue000 \u00e9\u00e9 zz")], "doc_id long, text string"
+    )
+    gp = [(r["merge_left"], r["merge_right"], r["pair_count"]) for r in
+          bpe_learn_merges(planes, 5, token_split=r"\s+").orderBy("step").collect()]
+    assert gp == [("z", "z", 1), ("\u00e9", "\u00e9", 1), ("\ue000", "\ue000", 1),
+                  ("\U0001d4b3", "\U0001d4b3", 1)]
+
     # exhaustion: single-symbol corpus yields an empty merge table
     assert bpe_learn_merges(
         spark.createDataFrame([(1, "a b a")], "doc_id long, text string"), 3
     ).count() == 0
+    # empty corpus: no rows, the merge table's schema
+    none = bpe_learn_merges(docs.filter("doc_id < 0"), 3)
+    assert none.count() == 0
+    assert none.schema.simpleString() == (
+        "struct<step:int,merge_left:string,merge_right:string,pair_count:bigint>"
+    )
     with pytest.raises(ValueError, match="n_merges"):
         bpe_learn_merges(docs, 0)
 

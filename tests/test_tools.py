@@ -29,6 +29,13 @@ def test_profile_build_phase_jobs(profiles):
     assert etl["exec_jobs"] >= 1
 
 
+def test_profile_build_actions(profiles):
+    """SQL executions started during build: pagerank's checkpoints and
+    probes; the ETL counts build lazily."""
+    assert profiles["graph_pagerank"]["build_actions"] == 4
+    assert profiles["etl_end_to_end_counts"]["build_actions"] == 0
+
+
 @pytest.mark.parametrize("name", ["graph_pagerank", "etl_end_to_end_counts"])
 def test_profile_layers_stages_operators(spark, profiles, name):
     p = profiles[name]

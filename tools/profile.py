@@ -9,8 +9,12 @@ The jobs of run ``r`` (0 is the warm-up) carry the groups
 read from Spark's status stores, which exist without the UI:
 
 - ``build_s`` (driver build, including the jobs it fires eagerly),
-  ``build_jobs``, ``plan_s`` (``executedPlan()`` forced) and ``exec_s``,
-  which add up to ``wall_s``;
+  ``plan_s`` (``executedPlan()`` forced) and ``exec_s``, which add up to
+  ``wall_s``;
+- ``build_actions``, the SQL executions started during build, and
+  ``build_jobs``, their jobs: each action carries a fixed planning cost,
+  and under AQE one action runs a job per stage, so jobs overstate the
+  number of fixed costs paid (docs/SCALE.md §An action has a fixed cost);
 - ``counters``: job and stage totals (``perfbench.trace.spark_counters``);
 - ``stages``: one row per completed stage, with its submit and complete
   offsets in seconds from the run start;
@@ -98,16 +102,25 @@ def _stages(spark, groups: list[str], start_ms: float) -> list[dict]:
     return sorted(rows, key=lambda r: (r["submit_s"], r["stage"]))
 
 
+def _executions(spark, group: str, start_ms: float) -> list:
+    """SQL executions described as ``group`` (started at or after
+    ``start_ms``), newest first."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    found = []
+    for e in reversed(_seq(store.executionsList())):
+        if e.submissionTime() < start_ms:
+            break
+        if e.description() == group:
+            found.append(e)
+    return found
+
+
 def _operators(spark, group: str, start_ms: float) -> list[dict]:
     """SQL metrics per plan node of the executions described as ``group``
     (started at or after ``start_ms``)."""
     store = spark._jsparkSession.sharedState().statusStore()
     rows = []
-    for e in reversed(_seq(store.executionsList())):
-        if e.submissionTime() < start_ms:
-            break
-        if e.description() != group:
-            continue
+    for e in _executions(spark, group, start_ms):
         eid = e.executionId()
         values, it = {}, store.executionMetrics(eid).iterator()
         while it.hasNext():
@@ -140,6 +153,7 @@ def measure(spark, name: str, sf_dir: str, repeats: int = 2) -> dict:
         "wall_s": best["wall_s"],
         "build_s": best["build_s"],
         "build_jobs": counters["build_jobs"],
+        "build_actions": len(_executions(spark, groups[0], best["start_ms"])),
         "plan_s": best["plan_s"],
         "exec_s": best["exec_s"],
         "exec_jobs": counters["jobs"] - counters["build_jobs"],
@@ -170,14 +184,14 @@ def main() -> None:
     for name in names:
         _run(spark, name, sf_dir, 0)
     width = max(len(n) for n in names)
-    print(f"{'query':<{width}}  wall_s  build_s  bjobs  plan_s  exec_s  ejobs  stages  tasks",
+    print(f"{'query':<{width}}  wall_s  build_s  bacts  bjobs  plan_s  exec_s  ejobs  stages  tasks",
           flush=True)
     profile = {}
     for name in names:
         p = profile[name] = measure(spark, name, sf_dir, args.repeats)
         c = p["counters"]
-        print(f"{name:<{width}}  {p['wall_s']:6.3f}  {p['build_s']:7.3f}  {p['build_jobs']:5d}  "
-              f"{p['plan_s']:6.3f}  {p['exec_s']:6.3f}  {p['exec_jobs']:5d}  "
+        print(f"{name:<{width}}  {p['wall_s']:6.3f}  {p['build_s']:7.3f}  {p['build_actions']:5d}  "
+              f"{p['build_jobs']:5d}  {p['plan_s']:6.3f}  {p['exec_s']:6.3f}  {p['exec_jobs']:5d}  "
               f"{int(c.get('stages', 0)):6d}  {int(c.get('tasks', 0)):5d}", flush=True)
     total = sum(p["wall_s"] for p in profile.values())
     print(f"{'total':<{width}}  {total:6.3f}")
