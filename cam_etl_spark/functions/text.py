@@ -45,14 +45,6 @@ def stopword_ratio(col: Column, lang: str = "en") -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 
 
-def lang_scores(col: Column) -> Column:
-    """Map of language → stopword-hit ratio; argmax is the language guess."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in STOPWORDS]),
-        F.array(*[stopword_ratio(col, lang) for lang in STOPWORDS]),
-    )
-
-
 def word_shingles(col: Column, k: int = 3) -> Column:
     """k-word shingles as an array of strings — the unit set for MinHash /
     Jaccard dedup.
@@ -97,14 +89,6 @@ def hashed_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.when(n < k, F.array(F.xxhash64(F.concat_ws(" ", toks)))).otherwise(
         F.array_distinct(hashes)
     )
-
-
-def hashed_word_shingles(col: Column, k: int = 3) -> Column:
-    """``hashed_shingles_from_tokens`` over an inline tokenization of
-    ``col``. Prefer the staged two-select form (see ``shingle_sets`` in
-    operators.dedup) in hot paths — this convenience wrapper embeds the
-    tokenize expression at every reference site."""
-    return hashed_shingles_from_tokens(tokens(F.lower(F.trim(col))), k)
 
 
 def char_ngrams(col: Column, n: int = 3) -> Column:

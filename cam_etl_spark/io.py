@@ -218,17 +218,6 @@ def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names}){where}")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
-
-
 def read_csv_stringly(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV source matching the reference's "every column is text" model
     (SURVEY §1.1, /root/reference/etl-notes.md:30) with NUL-char scrub

@@ -267,16 +267,6 @@ def _best_order(samples: list[int]) -> int:
     return best
 
 
-def _rice_param(res: list[int]) -> int:
-    if not res:
-        return 0
-    mean = sum(_zigzag(e) for e in res) / len(res)
-    k = 0
-    while (1 << (k + 1)) < mean + 1 and k < 14:
-        k += 1
-    return k
-
-
 def _twos_width(e: int) -> int:
     """Smallest n with -(2^(n-1)) <= e < 2^(n-1)."""
     return (e.bit_length() if e >= 0 else (-e - 1).bit_length()) + 1

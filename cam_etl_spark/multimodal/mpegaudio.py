@@ -213,10 +213,6 @@ def l2_table_for(
     return "d"
 
 
-def b2a_nbal(sb: int) -> int:
-    return l2_nbal("a", sb)
-
-
 def b2a_steps_list(sb: int) -> list[int]:
     return l2_steps_list("a", sb)
 

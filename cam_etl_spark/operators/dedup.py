@@ -22,7 +22,6 @@ from cam_etl_spark.functions.text import (
     doc_fingerprint,
     hashed_shingles_from_tokens,
     tokens,
-    word_shingles,
 )
 
 
@@ -167,14 +166,14 @@ def ngram_jaccard_pairs(
 
 def _verify_jaccard(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
     """Exact-jaccard verify over candidate (id_a, id_b) pairs. ``sets`` must
-    be a MATERIALIZED (id, sh_set) frame of hashed_word_shingles longs
-    (checkpointed/cached) — it is scanned twice. Two byte-level tricks keep
-    this stage from dominating: (1) the sets are 64-bit shingle hashes, not
-    strings — same jaccard (collision odds ~|shingle vocab|²/2⁶⁴), ~5×
-    smaller rows; (2) broadcast the record side when it fits, so the pair
-    table never shuffles (measured 7.9 s → ~1 s at sf0.1). Past the
-    broadcast cutoff this degrades gracefully to a shuffle join carrying
-    the same hashed payload."""
+    be a MATERIALIZED (id, sh_set) frame of hashed shingle longs from
+    ``shingle_sets`` (checkpointed/cached) — it is scanned twice. Two
+    byte-level tricks keep this stage from dominating: (1) the sets are
+    64-bit shingle hashes, not strings — same jaccard (collision odds
+    ~|shingle vocab|²/2⁶⁴), ~5× smaller rows; (2) broadcast the record side
+    when it fits, so the pair table never shuffles (measured 7.9 s → ~1 s at
+    sf0.1). Past the broadcast cutoff this degrades gracefully to a shuffle
+    join carrying the same hashed payload."""
     sets_h = sets.select("id", F.col("sh_set").alias("hs"))
     if sets.count() <= 500_000:  # count is free: sets is materialized
         sets_h = F.broadcast(sets_h)
@@ -210,59 +209,6 @@ def _min_hash_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), k)).alias("sh")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    k: int = 3,
-) -> DataFrame:
-    """MinHash signature per document: for hash function i, the minimum over
-    shingles of a seeded 64-bit hash. One explode + one aggregation."""
-    agg = _min_hash_agg(_exploded_shingles(df, text_col, id_col, k), num_hashes)
-    return agg.select(
-        "id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("signature")
-    )
-
-
-def minhash_banded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    k: int = 3,
-) -> DataFrame:
-    """(id, band, bucket) rows, one per band: bucket = xxhash64 over that
-    band's rows_per_band minhashes (bucket ids only need equality — no
-    reason to pay for md5 strings). Banding is a single projection over the
-    aggregated minhash columns — each hash referenced once, nothing
-    recomputed."""
-    agg = _min_hash_agg(
-        _exploded_shingles(df, text_col, id_col, k), bands * rows_per_band
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return agg.select(F.col("id"), F.explode(band_structs).alias("bb")).select(
-        "id", "bb.band", "bb.bucket"
-    )
-
-
 def _banded_self_join(banded: DataFrame) -> DataFrame:
     """Distinct id pairs colliding in any (band, bucket). The bucket is the
     shuffle key → near-dups co-locate, everything else spreads uniformly."""
@@ -277,36 +223,6 @@ def _banded_self_join(banded: DataFrame) -> DataFrame:
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """Band precomputed signatures and equi-join on (band, band-hash): pairs
-    agreeing on all rows of any band collide. Pass a MATERIALIZED signatures
-    frame (parquet/cached) — on a raw ``minhash_signatures`` projection the
-    element_at calls inline-recompute the array (see that docstring); prefer
-    ``minhash_banded`` when starting from text."""
-    banded = signatures.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("signature", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    return _banded_self_join(banded)
 
 
 def minhash_dedup_pairs(

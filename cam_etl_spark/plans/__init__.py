@@ -1,248 +1,6 @@
-from cam_etl_spark.plans.catalog import QUERIES as _REGISTERED, Query  # noqa: F401
+"""The query catalog, in registration order: catalog, then extensions,
+then surface."""
+
+from cam_etl_spark.plans.catalog import QUERIES, Query  # noqa: F401
 import cam_etl_spark.plans.extensions  # noqa: F401,E402  (registers extension queries)
 import cam_etl_spark.plans.surface  # noqa: F401,E402  (registers query-surface queries)
-
-# The driver's per-round correctness sweep walks the catalog in iteration
-# order under a budget (~51 queries/round in rounds 1-2). Queries that
-# already earned a green driver row in a previous round are rotated to the
-# BACK so each round's budget lands on never-yet-driver-checked entries —
-# across rounds every query gets a driver row, and tools/check_correctness
-# covers the full set locally every round regardless of order.
-_DRIVER_GREEN_PRIOR_ROUNDS = {
-    # round 1-2 greens
-    "a1_scalar_count", "a2_count_distinct", "a4_having_duplicates",
-    "a6_distinct_enum", "ann_cosine_topk", "ann_lsh_buckets", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "f12_stable_hash_bnode", "f13_wkt_point",
-    "f17_code_mapping", "f18_label_assembly", "f22_json_extract",
-    "f7_packed_timestamp", "f_string_normalize",
-    "j10_knn_candidates_filtered", "j10_knn_nearest", "j11_group_collect",
-    "j12_hierarchy_roots", "j13_vocab_broadcast_lookup",
-    "j1_multiway_join_agg", "j2_left_join_agg", "j3_composite_derived_join",
-    "j4_dedup_then_join", "j5_anti_join", "j6_full_outer_join",
-    "j7_case_insensitive_join", "j8_enrichment_join", "j9_point_in_polygon",
-    "multimodal_decode", "multimodal_decode_real", "p1_projection_filter",
-    "p3_compound_filter", "p4_distinct_projection", "p5_case_when_not_in",
-    "p6_nullif_normalize", "p8_param_subset_filter", "stream_window_agg",
-    "t1_quad_fanout", "temporal_asof_join", "temporal_interval_join",
-    "text_fingerprint", "text_langid", "text_quality_signals",
-    "u1_union_distinct", "w1_history_sequencing", "w2_topk_per_key",
-    "w3_global_sort_limit",
-    # round 3 greens (CORRECTNESS_r03.json, hash_match=true)
-    "cam_address_labels", "a7_rollup_revenue", "t7_name_fanout",
-    "t3_road_vocab_fanout", "t2_road_name_normalization",
-    "surface_token_search", "a8_percentiles", "a9_pivot_status_matrix",
-    "a10_cube_counts", "surface_multiline_address", "s10_geocode_csv_export",
-    "j10_knn_haversine", "clean_corpus_pipeline", "a11_approx_aggregates",
-    "surface_bm25_ranking", "j9_point_in_polygon_grid",
-    "graph_connected_components", "dedup_clusters", "data_split_hash",
-    "sample_stratified", "pack_sequences", "stream_upsert_snapshot",
-    "fuzzy_levenshtein_join", "stream_stream_join", "decontaminate_splits",
-    "text_vocab_coverage", "text_pii_redact", "text_repetition_signals",
-    "sample_temperature_mix", "dedup_semantic_clusters",
-    "multimodal_signal_stats", "j_skew_salted_join", "text_unigram_logprob",
-    "dedup_keep_best_quality", "stream_sliding_window",
-    "stream_dedup_watermark", "j10_nearest_road_segment",
-    "f16_polygon_metrics", "w5_moving_average", "u3_intersect_except",
-    "multimodal_frame_sample_real", "multimodal_png_decode",
-    "multimodal_resize_real", "surface_component_flattening",
-    "surface_prefix_search", "surface_faceted_paging", "surface_facet_counts",
-    "u2_quad_set_dedup", "t12_skos_vocab_fanout",
-    # round 4 greens (CORRECTNESS_r04.json: 50/50 rows+schema+hash green)
-    "a12_grouping_sets", "ann_ivf_bucketed_serve", "ann_ivf_exact_probe",
-    "ann_ivf_topk", "cluster_kmeans_lloyd", "dedup_chunk_level",
-    "dedup_embedding_cosine", "dedup_embedding_lsh_recall",
-    "f10_uuid5_minting", "f15_polyline_length", "f19_f20_concat_coalesce",
-    "graph_pagerank", "graph_triangle_count", "j12_descendants_closure",
-    "j16_null_join_keys", "multimodal_features_ann",
-    "multimodal_frame_sample", "multimodal_gif_decode",
-    "multimodal_gif_frame_sample", "multimodal_jpeg420_decode",
-    "multimodal_jpeg_decode", "multimodal_jpeg_progressive_decode",
-    "multimodal_mixed_dispatch", "multimodal_tiff_decode",
-    "p9_null_semantics", "s1_jdbc_live_scan", "s3_csv_stringly_scan",
-    "s4_shapefile_scan", "s5_vocab_source_lookup",
-    "s7_nquads_sink_roundtrip", "s9_graph_partition_prune",
-    "similarity_tfidf_pairs", "stream_session_window",
-    "stream_stateful_running_total", "stream_stream_left_outer",
-    "stream_upsert_jdbc", "surface_autocomplete_index",
-    "surface_phrase_search", "t5_identifier_fanout", "t6_geometry_fanout",
-    "temporal_event_funnel", "text_bpe_learn_merges",
-    "text_bpe_token_count", "text_heavy_hitters",
-    "text_winnowing_fingerprint", "u4_union_schema_evolution",
-    "validate_cardinality_shape", "validate_golden_count",
-    "w6_rank_variants", "w7_forward_fill",
-    # round 5 greens (CORRECTNESS_r05.json: 50/50 rows+schema+hash green;
-    # the other 25 rows of that sweep re-greened the oldest r1/r2 entries)
-    "text_url_canonicalize", "text_corpus_composition",
-    "similarity_mmr_select", "multimodal_jpeg_progressive_refine",
-    "dedup_substring_spans", "stream_dedup_minhash",
-    "s2_mega_subquery_pushed", "s2_mega_subquery_planned", "text_bpe_apply",
-    "text_quality_classifier", "data_split_by_domain", "stream_heavy_hitters",
-    "ann_pq_adc", "stream_static_enrich_join", "text_bigram_perplexity",
-    "dedup_substring_removal", "rag_chunk_windows", "spatial_zorder_cluster",
-    "s13_json_quarantine", "s14_partition_backfill", "s4_shapefile_datasource",
-    "stream_custom_source", "f23_variant_semistructured",
-    "s2_jdbc_agg_pushdown", "multimodal_flac_decode",
-    # round 6 greens (CORRECTNESS_r06.json: 50/50 rows+schema+hash green;
-    # 13 new round-6 entries + re-greens of the r1/r2-stale set and the
-    # first 12 r3-stale rows)
-    "multimodal_flac_lpc_decode", "multimodal_mpeg_audio_decode",
-    "etl_end_to_end_counts", "j_runtime_bloom_filter",
-    "data_profile_summary", "s15_nquads_datasource_sink",
-    "a13_theil_sen_arrow", "multimodal_mpeg_stereo_decode",
-    "j17_recursive_cte_native", "j18_lateral_topk",
-    "sql_scripting_threshold_search", "sql_pipe_syntax_rollup",
-    "p10_parameterized_sql",
-    # round 8 greens (CORRECTNESS_r08.json: 50/50 rows+schema+hash
-    # green — the 30 new round-8 entries below plus re-greens of 20
-    # r4-stale rows already listed above)
-    "multimodal_mpeg_intensity_decode", "multimodal_mpeg_l2_lowrate_decode",
-    "multimodal_flac_multichannel_decode",
-    "multimodal_mpeg_441_padding_decode", "multimodal_mpeg_crc_decode",
-    "multimodal_mpeg_freeformat_decode", "f24_python_udtf_chunks",
-    "f25_sql_udf_tiering", "stream_state_store_reader", "sketch_count_min",
-    "s16_cow_bucketed_upsert", "sample_weighted_poisson",
-    "multimodal_audio_decimate", "multimodal_mp3_sideinfo_parse",
-    "multimodal_mpeg2_lsf_decode", "multimodal_image_dhash_neardup",
-    "multimodal_audio_fingerprint_neardup", "multimodal_video_dhash_neardup",
-    "multimodal_h264_sps_parse", "temporal_cohort_retention",
-    "a14_regression_aggregates", "temporal_ohlc_downsample",
-    "text_gzip_inflate", "temporal_sessionize", "s17_parquet_footer_scan",
-    "s18_parquet_page_decode", "s19_parquet_write_roundtrip",
-    "s20_xml_roundtrip", "multimodal_g711_decode",
-    "w8_range_interval_window",
-    # round 9 greens (CORRECTNESS_r09.json: 50/50 rows+schema+hash
-    # green — the 31 new round-9 entries, the 17 r4-stale rows, and
-    # the first 2 rows of the r5-stale block)
-    "s21_avro_roundtrip", "s22_delta_log_scan", "s23_orc_stripe_decode",
-    "s24_iceberg_snapshot_scan", "s25_orc_write_roundtrip",
-    "stream_delta_tail", "s26_avro_schema_evolution",
-    "temporal_pattern_match", "multimodal_mp3_reservoir_decode",
-    "a15_listagg_ordered", "f26_try_arithmetic",
-    "s27_iceberg_position_deletes", "s28_delta_deletion_vectors",
-    "s29_delta_column_mapping", "s30_avro_logical_types",
-    "s31_iceberg_metrics_pruning", "s32_delta_change_feed",
-    "s33_iceberg_equality_deletes", "s34_iceberg_bucket_transform",
-    "s35_delta_optimize_compaction", "s36_iceberg_manifest_pruning",
-    "s37_iceberg_expire_snapshots", "s38_delta_vacuum",
-    "s39_iceberg_incremental_scan", "stream_iceberg_tail",
-    "s40_delta_schema_evolution", "s41_delta_merge_upsert",
-    "s42_iceberg_merge_on_read_upsert", "s43_iceberg_metadata_tables",
-    "stream_delta_cdf", "data_budget_select",
-    # (the 17 r4-stale + 2 r5-stale re-greens are already members of
-    # the round-4/round-5 blocks above)
-    # round 10 greens (CORRECTNESS_r10.json: 50/50 rows+schema+hash
-    # green — the 7 new round-10 entries below plus re-greens of 43
-    # r5-stale rows already listed above)
-    "multimodal_mpeg_pcm_synthesis", "multimodal_mp3_bigvalues_decode",
-    "s44_delta_v2_checkpoint", "s45_iceberg_schema_evolution",
-    "s46_orc_rle_v1_decode", "multimodal_mp3_full_decode",
-    "s47_delta_id_column_mapping",
-    # round 11 greens (CORRECTNESS_r11.json: 50/50 rows+schema+hash
-    # green — the 20 new round-11 entries below plus re-greens of the
-    # 5 r5-missed rows and the first 25 r6-stale rows, all already
-    # listed above)
-    "s48_orc_lz4_timezone_decode", "s49_delta_multipart_checkpoint",
-    "s50_orc_zstd_decode", "s51_lzo_legacy_lz4_decode",
-    "s52_iceberg_v3_row_defaults", "s53_delta_type_widening",
-    "s54_orc_union_decode", "s55_iceberg_v3_deletion_vectors",
-    "s56_delta_variant_type", "s57_parquet_bloom_point_lookup",
-    "s58_parquet_page_index_prune", "stream_session_timeout_finalize",
-    "dedup_cdc_chunks", "multimodal_mp3_tables5_12_decode",
-    "multimodal_mp3_ms_stereo_decode", "multimodal_mp3_mixed_block_decode",
-    "multimodal_mp3_intensity_stereo_decode",
-    "multimodal_mp3_intensity_short_decode",
-    "multimodal_mp3_intensity_mixed_decode", "multimodal_mpeg2_l2_decode",
-    # round 12 greens (CORRECTNESS_r12.json: 50/50 rows+schema+hash
-    # green — the 14 new round-12 entries below plus re-greens of the
-    # r6-stale back half and the first 11 r8-stale rows, all already
-    # listed above)
-    "s59_parquet_brotli_decode", "s60_iceberg_v3_typed_defaults",
-    "s61_delta_variant_shredded", "s62_geoparquet_scan",
-    "stream_dedup_within_horizon", "s63_delta_version_checksum",
-    "s64_avro_single_object_stream", "s65_iceberg_puffin_ndv_stats",
-    "s66_webdataset_tar_scan", "s67_zip_deflate_scan",
-    "s68_warc_response_scan", "text_unicode_nfc",
-    "s69_jsonl_zst_corpus_scan", "stream_stream_full_outer",
-}
-
-# Front of the round-14 sweep.  Standing OLDEST-FIRST regression gate:
-# the new round-14 entries first (no driver row yet), then the 22
-# r7-stale rows the round-13 budget missed (latest driver green is
-# still CORRECTNESS_r07 — computed from the CORRECTNESS files), then
-# the 30 r8-stale rows.  The driver takes the first ~50; anything past
-# its budget leads the round-15 front.
-_SWEEP_FIRST = [
-    # new in round 14 (no driver row yet) — appended as they land
-    "corpus_end_to_end",
-    "stream_dedup_incremental",
-    "s77_sqlite_wal_scan",
-    "sample_importance_dsir",
-    "s78_arrow_ipc_stream_scan",
-    "s79_arrow_ipc_sink_roundtrip",
-    "text_line_dedup_c4",
-    # the 22 r7-stale rows the round-13 budget missed
-    "ann_ivf_exact_probe",
-    "ann_ivf_topk",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh_recall",
-    "f19_f20_concat_coalesce",
-    "j12_descendants_closure",
-    "multimodal_features_ann",
-    "multimodal_frame_sample",
-    "multimodal_frame_sample_real",
-    "multimodal_png_decode",
-    "multimodal_resize_real",
-    "stream_session_window",
-    "surface_component_flattening",
-    "surface_facet_counts",
-    "surface_faceted_paging",
-    "surface_prefix_search",
-    "t12_skos_vocab_fanout",
-    "t5_identifier_fanout",
-    "t6_geometry_fanout",
-    "u2_quad_set_dedup",
-    "u3_intersect_except",
-    "w5_moving_average",
-    # the 30 r8-stale rows (latest driver green: round 8)
-    "a14_regression_aggregates",
-    "ann_ivf_bucketed_serve",
-    "dedup_chunk_level",
-    "graph_pagerank",
-    "multimodal_g711_decode",
-    "multimodal_gif_decode",
-    "multimodal_gif_frame_sample",
-    "multimodal_jpeg_decode",
-    "multimodal_tiff_decode",
-    "s17_parquet_footer_scan",
-    "s18_parquet_page_decode",
-    "s19_parquet_write_roundtrip",
-    "s1_jdbc_live_scan",
-    "s20_xml_roundtrip",
-    "similarity_tfidf_pairs",
-    "stream_stateful_running_total",
-    "stream_stream_left_outer",
-    "stream_upsert_jdbc",
-    "surface_phrase_search",
-    "temporal_ohlc_downsample",
-    "temporal_sessionize",
-    "text_bpe_learn_merges",
-    "text_bpe_token_count",
-    "text_gzip_inflate",
-    "text_heavy_hitters",
-    "text_winnowing_fingerprint",
-    "validate_cardinality_shape",
-    "validate_golden_count",
-    "w6_rank_variants",
-    "w8_range_interval_window",
-]
-
-QUERIES: dict[str, Query] = {
-    **{n: _REGISTERED[n] for n in _SWEEP_FIRST if n in _REGISTERED},
-    **{
-        n: q
-        for n, q in _REGISTERED.items()
-        if n not in _DRIVER_GREEN_PRIOR_ROUNDS and n not in _SWEEP_FIRST
-    },
-    **{n: q for n, q in _REGISTERED.items() if n in _DRIVER_GREEN_PRIOR_ROUNDS},
-}

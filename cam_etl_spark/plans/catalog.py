@@ -31,20 +31,67 @@ class Query:
     oracle: str | Callable[[], str] | None
     tags: list[str] = field(default_factory=list)
     bench: bool = False  # included in bench.py headline set
+    #: plan budget: substring of the executed plan -> inclusive (min, max)
+    #: occurrence count, max None for no upper bound (``plan_violations``)
+    plan: dict[str, tuple[int, int | None]] | None = None
 
     def oracle_text(self) -> str | None:
         return self.oracle() if callable(self.oracle) else self.oracle
 
 
+#: Registration order: this module, then extensions, then surface.
 QUERIES: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None, tags: list[str], bench: bool = False):
+def register(
+    name: str,
+    oracle: str | None,
+    tags: list[str],
+    bench: bool = False,
+    plan: dict[str, tuple[int, int | None]] | None = None,
+):
     def deco(fn):
-        QUERIES[name] = Query(name=name, spark=fn, oracle=oracle, tags=tags, bench=bench)
+        QUERIES[name] = Query(
+            name=name, spark=fn, oracle=oracle, tags=tags, bench=bench, plan=plan
+        )
         return fn
 
     return deco
+
+
+def plan_violations(query: Query, plan_text: str) -> list[str]:
+    """Budget entries of ``query`` that ``plan_text`` (the
+    ``executedPlan().toString()`` of its DataFrame) breaks, one message
+    each naming the query, token, count and bounds."""
+    out = []
+    for token, (lo, hi) in (query.plan or {}).items():
+        n = plan_text.count(token)
+        if n < lo or (hi is not None and n > hi):
+            out.append(f"{query.name}: {token!r} occurs {n}x, budget ({lo}, {hi})")
+    return out
+
+
+# Plan budgets shared by several queries.
+#: One lazily planned pipeline: no cartesian product, no row-at-a-time
+#: Python UDF, no scan of a checkpointed RDD.
+PIPELINE_PLAN = {"CartesianProduct": (0, 0), "BatchEvalPython": (0, 0), "ExistingRDD": (0, 0)}
+#: The same for a query that reads its own checkpoints back.
+CHECKPOINT_PLAN = {"CartesianProduct": (0, 0), "BatchEvalPython": (0, 0)}
+#: Codec and metadata scans: one Arrow pass, no hash exchange, no join (a
+#: single-split scan may still get widen()'s round-robin rebalance).
+SCAN_ONLY_PLAN = {"Exchange hashpartitioning": (0, 0), "Join": (0, 0), "CartesianProduct": (0, 0)}
+#: Codec decodes with a JVM-side sample gate: exactly one round-robin
+#: repartition spreads the surviving rows before the decode.
+WIDENED_DECODE_PLAN = {
+    "Exchange hashpartitioning": (0, 0),
+    "Exchange": (0, 1),
+    "RoundRobinPartitioning": (1, None),
+    "CartesianProduct": (0, 0),
+}
+#: One task per file, then exactly one kilobyte-scale rollup exchange.
+ONE_ROLLUP_PLAN = {"Exchange hashpartitioning": (1, 1), "Join": (0, 0), "CartesianProduct": (0, 0)}
+#: Container and text scans: one Arrow pass, at most one rollup exchange.
+ROLLUP_PLAN = {"Exchange hashpartitioning": (0, 1), "Join": (0, 0), "CartesianProduct": (0, 0)}
 
 
 def t(spark, sf_dir, name):
@@ -243,6 +290,7 @@ def p8_param_subset_filter(spark, sf_dir):
     """,
     tags=["J1", "A3", "F1"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1), "BroadcastHashJoin": (4, None)},
 )
 def j1_multiway_join_agg(spark, sf_dir):
     """Multi-way inner equi-join (the address⋈site⋈parcel shape, ref
@@ -593,6 +641,7 @@ def a6_distinct_enum(spark, sf_dir):
     """,
     tags=["W1", "T11"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def w1_history_sequencing(spark, sf_dir):
     """Version/history sequencing: order within entity, link each stage to

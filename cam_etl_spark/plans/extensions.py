@@ -12,6 +12,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cam_etl_spark.plans.catalog import (
+    CHECKPOINT_PLAN,
+    ONE_ROLLUP_PLAN,
+    PIPELINE_PLAN,
+    ROLLUP_PLAN,
+    SCAN_ONLY_PLAN,
+    WIDENED_DECODE_PLAN,
     lat_sql,
     lon_sql,
     register,
@@ -84,6 +90,7 @@ _TABLE_3B3_SQL = """([0,-1,-1,-1,-1,-1,-1,-2,-2,-2,
     """,
     tags=["J10", "W2", "F15"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 1), "BroadcastHashJoin": (3, None)},
 )
 def j10_knn_nearest(spark, sf_dir):
     """Nearest-target spatial match — the PostGIS ``<->`` KNN operator
@@ -300,6 +307,7 @@ def j9_point_in_polygon_grid(spark, sf_dir):
     """,
     tags=["J12"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def j12_hierarchy_roots(spark, sf_dir):
     """Recursive parent-chain resolution — the site-hierarchy WITH RECURSIVE
@@ -374,6 +382,7 @@ def _customer_quads(spark, sf_dir):
     """,
     tags=["T1", "P7", "F9", "S7", "U2"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 3)},
 )
 def t1_quad_fanout(spark, sf_dir):
     """The engine's core transform: one row → N conditionally-emitted quads
@@ -446,6 +455,7 @@ def dedup_exact(spark, sf_dir):
     """,
     tags=["dedup", "substring", "exact-substr", "lee-2022", "A4"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2)},
 )
 def dedup_substring_spans(spark, sf_dir):
     """Exact substring-level duplicate spans — Lee et al. 2022's
@@ -571,6 +581,7 @@ def dedup_substring_removal(spark, sf_dir):
     """,
     tags=["dedup-jaccard"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 5), "BroadcastHashJoin": (4, None)},
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram (3-word shingle) Jaccard near-dup pairs at threshold
@@ -615,6 +626,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     """,
     tags=["dedup-minhash"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 1), "BroadcastHashJoin": (3, None)},
 )
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash (16 seeded xxhash64) + LSH banding (8 bands × 2 rows — LSH
@@ -664,6 +676,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     """,
     tags=["dedup-simhash"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 6), "BroadcastHashJoin": (1, None)},
 )
 def dedup_simhash(spark, sf_dir):
     """SimHash near-dup pairs (hamming ≤ 3 over a 60-bit hash of distinct
@@ -713,6 +726,7 @@ def dedup_simhash(spark, sf_dir):
     """,
     tags=["ann", "similarity"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-5 neighbours for query vectors (vec_id < 10):
@@ -787,6 +801,7 @@ def ann_lsh_buckets(spark, sf_dir):
     """,
     tags=["text-quality", "token-count"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def text_quality_signals(spark, sf_dir):
     """Quality scoring: token count, char count, punctuation ratio, and a
@@ -928,6 +943,7 @@ def f22_json_extract(spark, sf_dir):
     """,
     tags=["streaming", "W1"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def stream_window_agg(spark, sf_dir):
     """Tumbling-window aggregation via the STREAM-SAFE transform
@@ -1028,6 +1044,7 @@ def multimodal_decode_real(spark, sf_dir):
     """,
     tags=["temporal", "asof"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def temporal_asof_join(spark, sf_dir):
     """AS-OF join (event attribution): each click picks up the most recent
@@ -1306,6 +1323,7 @@ def multimodal_mixed_dispatch(spark, sf_dir):
     """,
     tags=["similarity", "mmr", "retrieval", "iterative"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def similarity_mmr_select(spark, sf_dir):
     """Maximal-marginal-relevance diversified retrieval (operators/
@@ -1342,6 +1360,7 @@ def similarity_mmr_select(spark, sf_dir):
     """,
     tags=["A3", "dataset-card", "text-analysis"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 3), "BroadcastHashJoin": (1, None)},
 )
 def text_corpus_composition(spark, sf_dir):
     """The dataset-card composition report: documents, tokens, characters,
@@ -1983,6 +2002,7 @@ def s13_json_quarantine(spark, sf_dir):
     FROM keyed GROUP BY 1
     """,
     tags=["spatial", "zorder", "clustering", "layout", "F13"],
+    plan={"HashAggregate": (2, None), "Exchange": (1, None)},
 )
 def spatial_zorder_cluster(spark, sf_dir):
     """Z-order (Morton) clustering for spatial layout — the multi-dim
@@ -2182,6 +2202,7 @@ def data_split_by_domain(spark, sf_dir):
     FROM dot
     """,
     tags=["quality-filter", "classifier", "hashing-trick", "text-analysis"],
+    plan={"BroadcastExchange": (1, None), "CartesianProduct": (0, 0)},
 )
 def text_quality_classifier(spark, sf_dir):
     """Model-based quality filtering — the fastText-shaped linear
@@ -2247,6 +2268,7 @@ def text_quality_classifier(spark, sf_dir):
     """,
     tags=["dedup", "url-canonicalization", "F2", "F4", "text-analysis"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def text_url_canonicalize(spark, sf_dir):
     """Web-corpus URL canonicalization (functions/strings.
@@ -2604,6 +2626,7 @@ def _pagerank_oracle(n_iter: int) -> str:
     _pagerank_oracle(3),
     tags=["graph", "pagerank", "J12", "iterative"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (1, None)},
 )
 def graph_pagerank(spark, sf_dir):
     """Three-iteration damped PageRank with dangling-mass redistribution
@@ -2972,6 +2995,7 @@ def fuzzy_levenshtein_join_q(spark, sf_dir):
     """,
     tags=["similarity", "tfidf", "all-pairs", "dedup"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def similarity_tfidf_pairs_q(spark, sf_dir):
     """All-pairs TF-IDF cosine similarity join over the documents corpus
@@ -3712,6 +3736,7 @@ def text_vocab_coverage(spark, sf_dir):
     """,
     tags=["text-pii", "F3"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def text_pii_redact(spark, sf_dir):
     """PII scrub over the corpus: per-class occurrence counts + typed-
@@ -3993,6 +4018,12 @@ def _kmeans_oracle(k: int, n_iter: int) -> str:
     FROM adc ORDER BY adc ASC, vec_id ASC LIMIT 10
     """,
     tags=["ann", "product-quantization", "adc", "similarity"],
+    plan={
+        "CartesianProduct": (0, 0),
+        "BroadcastExchange": (1, None),
+        "SortMergeJoin": (0, 0),
+        "Exchange": (0, 6),
+    },
 )
 def ann_pq_adc(spark, sf_dir):
     """Product-quantization ANN with asymmetric distance computation
@@ -4077,6 +4108,7 @@ def cluster_kmeans_lloyd(spark, sf_dir):
     """,
     tags=["multimodal", "decode", "features"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def multimodal_signal_stats(spark, sf_dir):
     """SAMPLE-LEVEL multimodal features, real DSP over real files: PCM
@@ -4125,6 +4157,7 @@ def multimodal_signal_stats(spark, sf_dir):
     """,
     tags=["skew", "J1"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2)},
 )
 def j_skew_salted_join(spark, sf_dir):
     """Hot-key join under 70% skew (seven of ten lineitem rows share one
@@ -4238,6 +4271,7 @@ def text_unigram_logprob(spark, sf_dir):
     FROM scored GROUP BY doc_id
     """,
     tags=["text-quality", "lm-score", "perplexity"],
+    plan={"CartesianProduct": (0, 0)},
 )
 def text_bigram_perplexity(spark, sf_dir):
     """Bigram-LM perplexity scoring — the KenLM-shaped quality gate of
@@ -5527,6 +5561,7 @@ def multimodal_tiff_decode(spark, sf_dir):
     """,
     tags=["multimodal", "decode", "jpeg", "dct", "huffman"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def multimodal_jpeg_decode(spark, sf_dir):
     """REAL baseline JPEG decode with NO codec library: marker walk,
@@ -9087,6 +9122,7 @@ def multimodal_audio_decimate(spark, sf_dir):
     JOIN scs s ON c.doc_id = s.doc_id
     """,
     tags=["multimodal", "decode", "mp3", "audio", "sideinfo"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_sideinfo_parse(spark, sf_dir):
     """MP3 (MPEG-1 Layer III) STRUCTURAL parse — the codes-recovered
@@ -9365,6 +9401,7 @@ def multimodal_mp3_sideinfo_parse(spark, sf_dir):
     FROM dims
     """,
     tags=["multimodal", "decode", "h264", "video", "structural"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_h264_sps_parse(spark, sf_dir):
     """H.264/AVC STRUCTURAL parse (ISO 14496-10) — the codes-recovered
@@ -9693,6 +9730,7 @@ def multimodal_h264_sps_parse(spark, sf_dir):
     FROM joined GROUP BY cohort_week, weeks_since
     """,
     tags=["temporal", "cohort", "retention", "analytics"],
+    plan={"BroadcastHashJoin": (1, None), "Exchange hashpartitioning": (0, 3)},
 )
 def temporal_cohort_retention(spark, sf_dir):
     """Cohort retention matrix — the standard product-analytics rollup:
@@ -9757,6 +9795,7 @@ def temporal_cohort_retention(spark, sf_dir):
     FROM pts GROUP BY grp
     """,
     tags=["A3", "regression", "ansi-sql", "aggregates"],
+    plan={"Exchange hashpartitioning": (1, 1), "partial": (1, None)},
 )
 def a14_regression_aggregates(spark, sf_dir):
     """ANSI SQL:2003 linear-regression aggregates (regr_slope /
@@ -9823,6 +9862,7 @@ def a14_regression_aggregates(spark, sf_dir):
     FROM o GROUP BY bucket
     """,
     tags=["temporal", "downsample", "ohlc", "min_by"],
+    plan={"Exchange hashpartitioning": (1, 1), "partial": (1, None)},
 )
 def temporal_ohlc_downsample(spark, sf_dir):
     """OHLC bar downsampling — the time-series rollup pattern: per
@@ -9875,6 +9915,7 @@ def temporal_ohlc_downsample(spark, sf_dir):
     FROM p
     """,
     tags=["text", "decompress", "gzip", "zlib", "deflate"],
+    plan=SCAN_ONLY_PLAN,
 )
 def text_gzip_inflate(spark, sf_dir):
     """gzip/zlib/DEFLATE decompression in the scan pass — the
@@ -10025,6 +10066,7 @@ def text_gzip_inflate(spark, sf_dir):
     FROM numbered GROUP BY user_id, session_no
     """,
     tags=["temporal", "sessionize", "window", "analytics"],
+    plan={"Exchange hashpartitioning": (1, 1)},
 )
 def temporal_sessionize(spark, sf_dir):
     """Batch sessionization — the gap rule (new session when >30 min
@@ -10116,6 +10158,7 @@ def temporal_sessionize(spark, sf_dir):
     FROM embeddings
     """,
     tags=["S1", "parquet", "footer", "thrift", "metadata"],
+    plan=SCAN_ONLY_PLAN,
 )
 def s17_parquet_footer_scan(spark, sf_dir):
     """Parquet footer scan — table maintenance as a distributed
@@ -10276,6 +10319,7 @@ def s17_parquet_footer_scan(spark, sf_dir):
     FROM embeddings
     """,
     tags=["S1", "parquet", "pages", "snappy", "decode"],
+    plan=SCAN_ONLY_PLAN,
 )
 def s18_parquet_page_decode(spark, sf_dir):
     """Parquet DATA PAGE decode from spec (sources/parquet_pages.py) —
@@ -10833,6 +10877,7 @@ def w8_range_interval_window(spark, sf_dir):
     """,
     tags=["S3", "avro", "source", "sink", "roundtrip"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def s21_avro_roundtrip(spark, sf_dir):
     """Avro object container files from spec (sources/avro_io.py) —
@@ -11350,6 +11395,7 @@ def s23_orc_stripe_decode(spark, sf_dir):
     """,
     tags=["W", "pattern", "match-recognize", "temporal"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (1, 1), "Window": (3, 3)},
 )
 def temporal_pattern_match(spark, sf_dir):
     """Row-pattern matching (the MATCH_RECOGNIZE `PATTERN (V+ C+ P+)`
@@ -13911,6 +13957,7 @@ def s43_iceberg_metadata_tables(spark, sf_dir):
     """,
     tags=["data-mixing", "token-budget", "curation", "W1",
           "training-data"],
+    plan={"Exchange hashpartitioning": (1, 1), "Window": (2, 2), "CartesianProduct": (0, 0)},
 )
 def data_budget_select(spark, sf_dir):
     """TOKEN-BUDGET DATA CURATION — the selection step every
@@ -15564,6 +15611,7 @@ def s26_avro_schema_evolution(spark, sf_dir):
     """.replace("__TABLE_3B3_SQL__", _TABLE_3B3_SQL),
     tags=["multimodal", "mpeg", "audio", "synthesis", "pcm",
           "table-3-b-3"],
+    plan=WIDENED_DECODE_PLAN,
 )
 def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
     """MPEG-1 AUDIO PCM SYNTHESIS with the REAL Table 3-B.3 window
@@ -15764,6 +15812,7 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
     """,
     tags=["multimodal", "mp3", "huffman", "big-values", "count1",
           "layer3"],
+    plan=WIDENED_DECODE_PLAN,
 )
 def multimodal_mp3_bigvalues_decode(spark, sf_dir):
     """MP3 BIG-VALUES HUFFMAN DECODE (multimodal/mp3.py) — the
@@ -15950,6 +15999,7 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
     SELECT 'layout', '_', 3::BIGINT, 1::BIGINT, 5::BIGINT
     """,
     tags=["S1", "delta", "lake", "v2-checkpoint", "sidecar"],
+    plan={"Exchange hashpartitioning": (0, 2), "CartesianProduct": (0, 0)},
 )
 def s44_delta_v2_checkpoint(spark, sf_dir):
     """Delta V2 (SIDECAR-BASED) CHECKPOINT — the round-9 ask: the
@@ -16128,6 +16178,7 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     FROM u GROUP BY src
     """,
     tags=["S1", "iceberg", "lake", "schema-evolution", "name-mapping"],
+    plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s45_iceberg_schema_evolution(spark, sf_dir):
     """ICEBERG SCHEMA EVOLUTION ON READ — the round-9 ask: an
@@ -16266,6 +16317,7 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
     FROM j GROUP BY range_id
     """,
     tags=["S1", "parquet", "lake", "page-index", "pruning"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s58_parquet_page_index_prune(spark, sf_dir):
     """PARQUET PAGE-INDEX PRUNING (round 11, parquet_meta.py
@@ -16409,6 +16461,7 @@ def s58_parquet_page_index_prune(spark, sf_dir):
     FROM j GROUP BY probe
     """,
     tags=["S1", "parquet", "lake", "bloom-filter", "point-lookup"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s57_parquet_bloom_point_lookup(spark, sf_dir):
     """PARQUET SPLIT-BLOCK BLOOM FILTERS (round 11,
@@ -16775,6 +16828,7 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
     FROM src WHERE k % 3 = 2
     """,
     tags=["S1", "orc", "lake", "union"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s54_orc_union_decode(spark, sf_dir):
     """ORC UNION COLUMNS (round-11 boundary removal,
@@ -17159,6 +17213,7 @@ def s52_iceberg_v3_row_defaults(spark, sf_dir):
            sum(v_small)::BIGINT FROM src
     """,
     tags=["S1", "orc", "lake", "rle-v1", "hive-011"],
+    plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s46_orc_rle_v1_decode(spark, sf_dir):
     """ORC RLE v1 DECODE (round-10 boundary removal,
@@ -17414,6 +17469,7 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
     tags=["multimodal", "mp3", "pcm", "imdct", "full-decode",
           "layer3"],
     bench=True,
+    plan={**PIPELINE_PLAN, **WIDENED_DECODE_PLAN},
 )
 def multimodal_mp3_full_decode(spark, sf_dir):
     """FULL MP3 DECODE TO PCM (multimodal/mp3.py decode_mp3_pcm) —
@@ -17566,6 +17622,7 @@ def multimodal_mp3_full_decode(spark, sf_dir):
     FROM u GROUP BY status
     """,
     tags=["S1", "delta", "lake", "column-mapping", "field-id"],
+    plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s47_delta_id_column_mapping(spark, sf_dir):
     """DELTA COLUMN MAPPING MODE "id" (round-10 boundary removal,
@@ -17943,6 +18000,7 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     LEFT JOIN qagg q USING (doc_id)
     """,
     tags=["multimodal", "mp3", "huffman", "tables-5-12"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_tables5_12_decode(spark, sf_dir):
     """MP3 BIG-VALUES HUFFMAN TABLES 5-12 (round-10 boundary
@@ -18159,6 +18217,7 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
     FROM lr GROUP BY doc_id
     """,
     tags=["multimodal", "mp3", "stereo", "m-s", "joint-stereo"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
     """MP3 M-S JOINT STEREO (round-10 boundary removal,
@@ -18355,6 +18414,7 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
            sum(epoch_us(ts) // 1000000 + 19800)::BIGINT FROM src
     """,
     tags=["S1", "orc", "lake", "lz4", "writer-timezone"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s48_orc_lz4_timezone_decode(spark, sf_dir):
     """ORC LZ4 + NON-UTC WRITER TIMEZONE (round-10 boundary
@@ -18541,6 +18601,7 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
     FROM samp GROUP BY doc_id
     """,
     tags=["multimodal", "mpeg2", "lsf", "layer2", "audio"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mpeg2_l2_decode(spark, sf_dir):
     """MPEG-2 LSF LAYER II (round-10 boundary removal,
@@ -18669,6 +18730,7 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
            sum(v_small)::BIGINT FROM src
     """,
     tags=["S1", "orc", "lake", "zstd", "rfc8878"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s50_orc_zstd_decode(spark, sf_dir):
     """ORC ZSTD DECODE (round-10 ask #4, the top lake boundary:
@@ -18857,6 +18919,7 @@ def s50_orc_zstd_decode(spark, sf_dir):
     FROM xr GROUP BY doc_id
     """,
     tags=["multimodal", "mp3", "mixed-block", "layer3"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_mixed_block_decode(spark, sf_dir):
     """MP3 MIXED-BLOCK REQUANTIZATION (round-10 boundary removal,
@@ -19089,6 +19152,7 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
     FROM lr GROUP BY doc_id
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "joint-stereo"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
     """MP3 LONG-BLOCK INTENSITY STEREO (round-10 boundary removal,
@@ -19389,6 +19453,7 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "short-block",
           "joint-stereo"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_short_decode(spark, sf_dir):
     """MP3 SHORT-BLOCK INTENSITY STEREO (round-11 boundary removal,
@@ -19689,6 +19754,7 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "mixed-block",
           "joint-stereo"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
     """MP3 MIXED-BLOCK INTENSITY STEREO (round-11 boundary removal,
@@ -19891,6 +19957,7 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
            sum(strlen(o_orderstatus))::BIGINT FROM src
     """,
     tags=["S1", "orc", "parquet", "lake", "lzo", "legacy-lz4"],
+    plan=ONE_ROLLUP_PLAN,
 )
 def s51_lzo_legacy_lz4_decode(spark, sf_dir):
     """ORC LZO + LEGACY PARQUET LZ4 (round 11 — the last two
@@ -20027,6 +20094,7 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
     SELECT 'v_small', count(*)::BIGINT, sum(v_small)::BIGINT FROM src
     """,
     tags=["S1", "parquet", "brotli", "rfc7932", "codec"],
+    plan={"Exchange hashpartitioning": (0, 2), "Join": (0, 0), "CartesianProduct": (0, 0)},
 )
 def s59_parquet_brotli_decode(spark, sf_dir):
     """Parquet BROTLI DECODE (round-11 ask #2 — the LAST parquet page
@@ -20163,6 +20231,11 @@ def s59_parquet_brotli_decode(spark, sf_dir):
     """,
     tags=["S1", "iceberg", "lake", "format-version-3",
           "typed-defaults", "timestamp-ns"],
+    plan={
+        "Exchange hashpartitioning": (0, 2),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+    },
 )
 def s60_iceberg_v3_typed_defaults(spark, sf_dir):
     """ICEBERG v3 TYPED DEFAULTS + v3-only TYPES (round-11 ask #3,
@@ -20340,6 +20413,11 @@ def s60_iceberg_v3_typed_defaults(spark, sf_dir):
     """,
     tags=["S1", "delta", "lake", "variant", "shredding",
           "reader-features"],
+    plan={
+        "Exchange hashpartitioning": (0, 1),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+    },
 )
 def s61_delta_variant_shredded(spark, sf_dir):
     """DELTA variantShredding READER FEATURE (round-11 ask #4,
@@ -20524,6 +20602,11 @@ def s61_delta_variant_shredded(spark, sf_dir):
     GROUP BY zone_id
     """,
     tags=["S4", "geoparquet", "spatial", "wkb", "lake"],
+    plan={
+        "Exchange hashpartitioning": (0, 1),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+    },
 )
 def s62_geoparquet_scan(spark, sf_dir):
     """GEOPARQUET SCAN (round 12, sources/geoparquet.py): customer
@@ -20773,6 +20856,7 @@ def stream_dedup_within_horizon(spark, sf_dir):
     FROM kept GROUP BY status
     """,
     tags=["S1", "delta", "lake", "version-checksum", "integrity"],
+    plan=ROLLUP_PLAN,
 )
 def s63_delta_version_checksum(spark, sf_dir):
     """DELTA VERSION CHECKSUM FILES (round 12, delta_log.py
@@ -20890,6 +20974,7 @@ def s63_delta_version_checksum(spark, sf_dir):
     FROM src GROUP BY status, schema_tag
     """,
     tags=["S1", "avro", "single-object", "kafka", "registry"],
+    plan=ROLLUP_PLAN,
 )
 def s64_avro_single_object_stream(spark, sf_dir):
     """AVRO SINGLE-OBJECT ENCODING (round 12, sources/avro_io.py
@@ -21005,6 +21090,11 @@ def s64_avro_single_object_stream(spark, sf_dir):
            1::BIGINT FROM src
     """,
     tags=["S1", "iceberg", "puffin", "theta", "ndv", "statistics"],
+    plan={
+        "Exchange hashpartitioning": (0, 0),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+    },
 )
 def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
     """ICEBERG TABLE STATISTICS — NDV THETA SKETCHES IN PUFFIN
@@ -21139,6 +21229,7 @@ def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
     FROM src GROUP BY doc_id % 7
     """,
     tags=["S4", "tar", "webdataset", "archives", "multimodal"],
+    plan=ROLLUP_PLAN,
 )
 def s66_webdataset_tar_scan(spark, sf_dir):
     """WEBDATASET TAR SHARDS (round 12, sources/archives.py): the
@@ -21270,6 +21361,7 @@ def s66_webdataset_tar_scan(spark, sf_dir):
     FROM src GROUP BY doc_id % 5
     """,
     tags=["S4", "zip", "archives", "deflate"],
+    plan=ROLLUP_PLAN,
 )
 def s67_zip_deflate_scan(spark, sf_dir):
     """ZIP MEMBER SCAN (round 12, sources/archives.py): crawl
@@ -21387,6 +21479,7 @@ def s67_zip_deflate_scan(spark, sf_dir):
     FROM src GROUP BY doc_id % 5
     """,
     tags=["S4", "warc", "common-crawl", "archives", "http"],
+    plan=ROLLUP_PLAN,
 )
 def s68_warc_response_scan(spark, sf_dir):
     """WARC RESPONSE SCAN (round 12, sources/warc.py): the Common
@@ -21521,6 +21614,7 @@ def s68_warc_response_scan(spark, sf_dir):
     FROM src GROUP BY doc_id % 4
     """,
     tags=["text-analysis", "unicode", "normalization", "F1"],
+    plan=ROLLUP_PLAN,
 )
 def text_unicode_nfc(spark, sf_dir):
     """UNICODE NFC NORMALIZATION (round 12, functions/text.py
@@ -21574,6 +21668,7 @@ def text_unicode_nfc(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S4", "jsonl", "zstd", "corpus", "the-pile"],
+    plan=ROLLUP_PLAN,
 )
 def s69_jsonl_zst_corpus_scan(spark, sf_dir):
     """JSONL.ZST CORPUS SCAN (round 12): the Pile-style corpus
@@ -21793,6 +21888,11 @@ def stream_stream_full_outer(spark, sf_dir):
     """,
     tags=["S1", "iceberg", "lake", "format-version-3",
           "typed-defaults", "variant", "geometry"],
+    plan={
+        "Exchange hashpartitioning": (0, 2),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+    },
 )
 def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
     """ICEBERG v3 VARIANT + GEOMETRY INITIAL-DEFAULTS (round-12 ask
@@ -22054,6 +22154,7 @@ def dedup_incremental_lsh(spark, sf_dir):
     FROM src WHERE k % 3 IN (1, 2)
     """,
     tags=["S1", "iceberg", "lake", "refs", "time-travel"],
+    plan=SCAN_ONLY_PLAN,
 )
 def s71_iceberg_refs_time_travel(spark, sf_dir):
     """ICEBERG SNAPSHOT REFERENCES (round 13, spec "Snapshot
@@ -22163,6 +22264,7 @@ def s71_iceberg_refs_time_travel(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S4", "warc", "wet", "corpus", "common-crawl"],
+    plan=ROLLUP_PLAN,
 )
 def s72_warc_wet_conversion_scan(spark, sf_dir):
     """COMMON CRAWL WET (extracted-text) SCAN (round 13): the layout
@@ -22291,6 +22393,7 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
     FROM rec GROUP BY lang
     """,
     tags=["text-html", "corpus", "F6", "boilerplate"],
+    plan=ROLLUP_PLAN,
 )
 def text_html_extract(spark, sf_dir):
     """HTML MAIN-TEXT EXTRACTION (round 13,
@@ -22413,6 +22516,7 @@ def text_html_extract(spark, sf_dir):
     FROM built GROUP BY host
     """,
     tags=["text-url", "dedup-exact", "corpus", "F11"],
+    plan={"Exchange hashpartitioning": (0, 2), "Join": (0, 0), "CartesianProduct": (0, 0)},
 )
 def text_url_normalize_dedup(spark, sf_dir):
     """URL CANONICALIZATION + URL-LEVEL DEDUP (round 13,
@@ -22545,6 +22649,7 @@ def _adpcm_oracle() -> str:
     "multimodal_adpcm_wav_decode",
     _adpcm_oracle,
     tags=["multimodal-audio", "adpcm", "wav", "codec"],
+    plan=SCAN_ONLY_PLAN,
 )
 def multimodal_adpcm_wav_decode(spark, sf_dir):
     """IMA ADPCM WAV DECODE (round 13, multimodal/adpcm.py): the
@@ -22625,6 +22730,7 @@ def multimodal_adpcm_wav_decode(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S1", "sqlite", "corpus", "source"],
+    plan=ROLLUP_PLAN,
 )
 def s73_sqlite_table_scan(spark, sf_dir):
     """SQLITE DATABASE FILE SCAN (round 13,
@@ -22733,6 +22839,7 @@ def s73_sqlite_table_scan(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S3", "bzip2", "xml", "corpus", "wikipedia"],
+    plan=ROLLUP_PLAN,
 )
 def s74_bz2_xml_dump_scan(spark, sf_dir):
     """WIKIPEDIA-STYLE .BZ2 XML DUMP SCAN (round 13,
@@ -22888,6 +22995,7 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
     FROM rules GROUP BY lang
     """,
     tags=["text-quality", "gopher", "corpus", "F6"],
+    plan=ROLLUP_PLAN,
 )
 def text_gopher_quality_rules(spark, sf_dir):
     """GOPHER-RULE QUALITY FILTERING (round 13 — the published
@@ -22996,6 +23104,7 @@ def text_gopher_quality_rules(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S4", "jsonl", "xz", "lzma", "corpus"],
+    plan=ROLLUP_PLAN,
 )
 def s75_jsonl_xz_corpus_scan(spark, sf_dir):
     """JSONL.XZ CORPUS SCAN (round 13, multimodal/xz.py): the
@@ -23119,6 +23228,7 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
     """,
     tags=["S1", "delta", "lake", "in-commit-timestamps",
           "time-travel"],
+    plan=SCAN_ONLY_PLAN,
 )
 def s76_delta_in_commit_timestamps(spark, sf_dir):
     """DELTA IN-COMMIT TIMESTAMPS (round 13, spec "In-Commit
@@ -23698,6 +23808,7 @@ def stream_dedup_incremental(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S1", "sqlite", "wal", "corpus", "source"],
+    plan=ROLLUP_PLAN,
 )
 def s77_sqlite_wal_scan(spark, sf_dir):
     """SQLITE WAL-MODE DATABASE SCAN (round 14,
@@ -23869,6 +23980,14 @@ def s77_sqlite_wal_scan(spark, sf_dir):
     LIMIT 50
     """,
     tags=["sampling", "dsir", "importance", "lm-score", "A3"],
+    plan={
+        "TakeOrderedAndProject": (1, None),
+        "SortMergeJoin": (0, 0),
+        "CartesianProduct": (0, 0),
+        "BroadcastHashJoin": (2, 2),
+        "BroadcastNestedLoopJoin": (0, 2),
+        "Exchange hashpartitioning": (0, 5),
+    },
 )
 def sample_importance_dsir(spark, sf_dir):
     """DSIR-STYLE IMPORTANCE RESAMPLING (round 14 — Xie et al. 2023,
@@ -23967,6 +24086,7 @@ def sample_importance_dsir(spark, sf_dir):
     """,
     tags=["S4", "arrow", "ipc", "feather", "corpus",
           "huggingface"],
+    plan=ROLLUP_PLAN,
 )
 def s78_arrow_ipc_stream_scan(spark, sf_dir):
     """ARROW IPC STREAM SCAN (round 14, sources/arrow_ipc.py): the
@@ -24123,6 +24243,7 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
     FROM src GROUP BY lang
     """,
     tags=["S10", "arrow", "ipc", "sink", "corpus"],
+    plan=ROLLUP_PLAN,
 )
 def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
     """ARROW IPC SINK ROUND-TRIP (round 14,
@@ -24268,6 +24389,11 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
     FROM rebuilt JOIN totals USING (doc_id)
     """,
     tags=["text-quality", "dedup-exact", "c4", "corpus", "A4"],
+    plan={
+        "CartesianProduct": (0, 0),
+        "BroadcastNestedLoopJoin": (0, 0),
+        "Exchange hashpartitioning": (0, 4),
+    },
 )
 def text_line_dedup_c4(spark, sf_dir):
     """C4-STYLE GLOBAL LINE DEDUP (round 14 — Raffel et al. 2020's

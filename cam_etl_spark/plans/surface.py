@@ -10,6 +10,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cam_etl_spark.plans.catalog import (
+    CHECKPOINT_PLAN,
+    PIPELINE_PLAN,
     lat_sql,
     lon_sql,
     register,
@@ -99,6 +101,7 @@ _ORACLE_COMPOUND = """
     """,
     tags=["S6", "query-surface"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0), "BroadcastHashJoin": (2, None)},
 )
 def surface_component_flattening(spark, sf_dir):
     """GraphDB func:getLiteralComponents as two quad self-joins: hasPart
@@ -390,6 +393,7 @@ def j12_descendants_closure(spark, sf_dir):
     """,
     tags=["streaming", "session-window"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
 )
 def stream_session_window(spark, sf_dir):
     """Gap-based sessionization via native session_window (batch semantics
@@ -410,6 +414,7 @@ def stream_session_window(spark, sf_dir):
     """,
     tags=["ann", "similarity-ivf"],
     bench=True,
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (2, None)},
 )
 def ann_ivf_topk(spark, sf_dir):
     """IVF ANN: corpus bucketed by nearest-of-16 sampled centroids, queries
@@ -596,6 +601,7 @@ def ann_ivf_bucketed_serve(spark, sf_dir):
     """,
     tags=["dedup", "chunk-level", "ccnet"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (2, None)},
 )
 def dedup_chunk_level(spark, sf_dir):
     """Sub-document (chunk-level) deduplication — the CCNet/RefinedWeb
@@ -1304,6 +1310,7 @@ def _bpe_apply_oracle(n_merges: int) -> str:
     _bpe_oracle(6),
     tags=["bpe", "tokenizer-training", "text-analysis", "iterative"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def text_bpe_learn_merges(spark, sf_dir):
     """BPE merge LEARNING (not just counting — the tokenizer-training step
@@ -1357,6 +1364,7 @@ def text_bpe_apply(spark, sf_dir):
     """,
     tags=["sketch", "heavy-hitters", "misra-gries", "text-analysis"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (1, None)},
 )
 def text_heavy_hitters(spark, sf_dir):
     """EXACT distributed heavy hitters (operators/sketch.heavy_hitters):
@@ -1485,6 +1493,7 @@ def stream_heavy_hitters(spark, sf_dir):
     """,
     tags=["text-fingerprint", "winnowing", "F12"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0)},
 )
 def text_winnowing_fingerprint(spark, sf_dir):
     """Rolling-hash document fingerprinting (winnowing/MOSS): char-5-gram
@@ -1507,6 +1516,7 @@ def text_winnowing_fingerprint(spark, sf_dir):
     """,
     tags=["dedup-embedding", "ann"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2)},
 )
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-dup pairs, exact, fully distributed: blocked
@@ -1861,6 +1871,13 @@ def _etl_code_sql(col, codes, null_code):
     """,
     tags=["pipeline", "etl", "T1", "T3", "T7", "U2", "validation", "golden-count"],
     bench=True,
+    plan={
+        **PIPELINE_PLAN,
+        "Exchange hashpartitioning": (0, 4),
+        "BroadcastHashJoin": (8, None),
+        "SortMergeJoin": (0, 0),
+        "BroadcastNestedLoopJoin": (0, 2),
+    },
 )
 def etl_end_to_end_counts(spark, sf_dir):
     """The COMPOSED reference ETL run as one job (ref Taskfile `task etl`,
@@ -2018,6 +2035,7 @@ def etl_end_to_end_counts(spark, sf_dir):
     """,
     tags=["pipeline", "J1", "J2", "F17", "F18", "T1", "P2"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 0), "BroadcastHashJoin": (5, None)},
 )
 def cam_address_labels(spark, sf_dir):
     """END-TO-END: the reference's address extraction pipeline — stringly
@@ -2896,6 +2914,7 @@ def a11_approx_aggregates(spark, sf_dir):
     """,
     tags=["S11", "F5", "text", "fts"],
     bench=True,
+    plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 6), "BroadcastHashJoin": (2, None)},
 )
 def surface_bm25_ranking(spark, sf_dir):
     """BM25 full-text ranking over the documents corpus — the scoring the
@@ -3012,6 +3031,11 @@ def _t10_oracle() -> str:
     "t10_property_on_address",
     _t10_oracle,  # callable: two uuid5 VALUES fixtures (~900 KB)
     tags=["T10", "T1", "F10", "F12", "J1"],
+    plan={
+        "Exchange hashpartitioning": (0, 0),
+        "BroadcastHashJoin": (1, None),
+        "CartesianProduct": (0, 0),
+    },
 )
 def t10_property_on_address(spark, sf_dir):
     """The property-name-on-address link transform (T10 — the last §2

@@ -120,7 +120,7 @@ def _escape_literal(col: Column) -> Column:
     return c
 
 
-def term_column(kind: str = "object") -> Column:
+def term_column() -> Column:
     """Render the object term of a quad row in N-Quads syntax."""
     val = F.col("object_value")
     return (

@@ -1,49 +1,40 @@
-"""Physical-plan shape assertions for flagship queries — the scale
-properties bench measures indirectly, pinned as hard test failures:
-broadcasts where dimensions are small, no cartesian products anywhere,
-pushed parquet filters on selective scans, and shuffle counts that do
-not regress. Wrong plans at sf0.01 are wrong plans at 100 TB."""
+"""Physical-plan shape checks. Token-count budgets live on each query's
+``@register(..., plan=...)`` and are checked here by one parametrized
+test (``catalog.plan_violations``); the tests below pin what a count on
+the default-conf plan cannot: a token's position, a domain, a helper's
+laziness, and the at-scale plans with broadcast off."""
 
 import pytest
+
+from cam_etl_spark.plans import QUERIES
+from cam_etl_spark.plans.catalog import plan_violations
 
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.fixture(scope="module")
-def qcat():
-    from cam_etl_spark.plans import QUERIES
+@pytest.mark.parametrize("name", [n for n, q in QUERIES.items() if q.plan])
+def test_plan_budget(spark, sf_dir, name):
+    q = QUERIES[name]
+    assert plan_violations(q, _plan(q.spark(spark, sf_dir))) == []
 
-    return QUERIES
+
+def test_bench_queries_declare_budgets():
+    assert [n for n, q in QUERIES.items() if q.bench and q.plan is None] == []
 
 
-def test_no_cartesian_products_in_flagships(spark, sf_dir, qcat):
-    """No flagship plan may contain a CartesianProduct or a non-broadcast
-    NestedLoopJoin — the O(n^2)-shuffle class that kills a 100 TB run."""
+def test_codec_sample_gate_pushed_to_scan(spark, sf_dir):
+    """The codec decodes pre-filter their sample gate on the JVM side
+    (DataFilters on the scan), so only the decoded 1/N of rows crosses
+    the Arrow boundary."""
     for name in (
-        "cam_address_labels",
-        "j1_multiway_join_agg",
-        "j10_knn_nearest",
-        "dedup_minhash_lsh",
-        "dedup_substring_spans",
-        "text_bigram_perplexity",
-        "ann_pq_adc",
+        "multimodal_mpeg_pcm_synthesis",
+        "multimodal_mp3_bigvalues_decode",
+        "multimodal_mp3_full_decode",
     ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert "CartesianProduct" not in plan, name
-
-
-def test_etl_end_to_end_plan_shape(spark, sf_dir, qcat):
-    """The composed ETL run: every dimension join must broadcast (the
-    fact side never shuffles for dims), no sort-merge joins, no
-    cartesians; the only nested-loop joins are the three 1-row scalar
-    metric frames being stitched together."""
-    plan = _plan(qcat["etl_end_to_end_counts"].spark(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2  # 1-row scalar stitches
-    assert "BroadcastHashJoin" in plan
+        plan = _plan(QUERIES[name].spark(spark, sf_dir))
+        assert "% " in plan.split("FileScan")[1][:400], name
 
 
 def test_etl_dictionary_encode_domain_pin(spark, sf_dir):
@@ -101,40 +92,13 @@ def test_etl_dictionary_encode_domain_pin(spark, sf_dir):
         ).collect()
 
 
-def test_pq_adc_single_real_shuffle(spark, sf_dir, qcat):
-    """PQ/ADC: the codebook must arrive broadcast and the corpus must
-    shuffle at most for the one vec_id aggregation + the k-row TakeOrdered
-    — no window exchange over the corpus, no self-join."""
-    plan = _plan(qcat["ann_pq_adc"].spark(spark, sf_dir))
-    assert "BroadcastExchange" in plan
-    assert "SortMergeJoin" not in plan
-    # corpus-wide window would appear as Window over a full-table sort
-    assert plan.count("Exchange") <= 6  # agg + take-ordered machinery
-
-
-def test_substring_spans_scan_side_pushdown(spark, sf_dir, qcat):
+def test_substring_spans_scan_side_pushdown(spark, sf_dir):
     """The gram pipeline reads only (doc_id, text): column pruning must
     reach the parquet scan."""
-    plan = _plan(qcat["dedup_substring_spans"].spark(spark, sf_dir))
+    plan = _plan(QUERIES["dedup_substring_spans"].spark(spark, sf_dir))
     assert "ReadSchema" in plan
     read = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "text" in read and "lang" not in read, read
-
-
-def test_classifier_weights_broadcast(spark, sf_dir, qcat):
-    """The weight table must broadcast; the doc-bucket aggregation is the
-    only corpus shuffle."""
-    plan = _plan(qcat["text_quality_classifier"].spark(spark, sf_dir))
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_zorder_groupby_partial_aggregation(spark, sf_dir, qcat):
-    """Z-order bucketing must partial-aggregate map-side (HashAggregate
-    appears both below and above the exchange)."""
-    plan = _plan(qcat["spatial_zorder_cluster"].spark(spark, sf_dir))
-    assert plan.count("HashAggregate") >= 2
-    assert "Exchange" in plan
 
 
 def test_widen_is_conditional(spark):
@@ -152,210 +116,7 @@ def test_widen_is_conditional(spark):
     assert widen(wide) is wide
 
 
-def test_round8_scan_only_entries_zero_hash_exchanges(spark, sf_dir, qcat):
-    """The codec/metadata entries are one Arrow mapInPandas pass: no
-    hash exchange, no join anywhere in the plan (the only allowed
-    exchange is widen()'s round-robin rebalance of a single-split
-    scan, which disappears at real scale)."""
-    for name in (
-        "multimodal_h264_sps_parse",
-        "text_gzip_inflate",
-        "multimodal_mp3_sideinfo_parse",
-        "s17_parquet_footer_scan",
-        "s18_parquet_page_decode",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert "Exchange hashpartitioning" not in plan, name
-        assert "Join" not in plan, name
-
-
-def test_round8_single_exchange_rollups(spark, sf_dir, qcat):
-    """OHLC bars and the regr_* aggregates are ONE map-side-combined
-    exchange (partial HashAggregate below it); sessionization is one
-    exchange shared by both windows and the rollup."""
-    for name in ("temporal_ohlc_downsample", "a14_regression_aggregates"):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") == 1, name
-        assert "partial" in plan, name
-    plan = _plan(qcat["temporal_sessionize"].spark(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_cohort_retention_broadcast_and_exchange_budget(spark, sf_dir, qcat):
-    """First-touch cohorts: the per-user min broadcasts into the event
-    scan (user-cardinality dim), and the whole plan spends at most the
-    audited three hash exchanges (user agg + the two-level distinct)."""
-    plan = _plan(qcat["temporal_cohort_retention"].spark(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") <= 3
-
-
-def test_pattern_match_single_exchange(spark, sf_dir, qcat):
-    """Row-pattern matching: segments, per-segment aggregation, and
-    the segment-transition lead-window ALL reuse the one user_id hash
-    partitioning (ClusteredDistribution on (user_id, seg) is
-    satisfied by hash(user_id)) — exactly one exchange end-to-end."""
-    plan = _plan(qcat["temporal_pattern_match"].spark(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Window") == 3
-
-
-def test_budget_select_single_exchange(spark, sf_dir, qcat):
-    """Token-budget curation: the running token sum and the per-source
-    budget window share ONE hash exchange on source, which the final
-    rollup also reuses — selection over 100 TB is a single shuffle
-    (docs/COVERAGE.md's claim, pinned here so it can't rot)."""
-    plan = _plan(qcat["data_budget_select"].spark(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Window") == 2
-    assert "CartesianProduct" not in plan
-
-
-def test_round10_codec_entries_zero_shuffle(spark, sf_dir, qcat):
-    """The codec entries are Arrow mapInPandas scans with NO hash
-    exchange and no cartesian at any corpus size. Round 14 added (a) a
-    JVM-side pre-filter of the sample gate (visible as DataFilters on
-    the scan — only the decoded 1/N of rows crosses the Arrow boundary)
-    and (b) exactly ONE round-robin repartition that spreads the
-    surviving rows before the CPU-heavy decode (guide §2.5 input skew:
-    a single-split input otherwise serializes the whole decode on one
-    core — measured 3.26 s → 0.86 s for mp3_full_decode at sf0.1)."""
-    for name in (
-        "multimodal_mpeg_pcm_synthesis",
-        "multimodal_mp3_bigvalues_decode",
-        "multimodal_mp3_full_decode",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert "Exchange hashpartitioning" not in plan, name
-        assert plan.count("Exchange") <= 1, name
-        assert "RoundRobinPartitioning" in plan, name
-        assert "% " in plan.split("FileScan")[1][:400], name  # pushed gate
-        assert "CartesianProduct" not in plan, name
-
-
-def test_round10_lake_entries_bounded_exchanges(spark, sf_dir, qcat):
-    """Lake entries: driver-side metadata replay feeds native scans;
-    the only shuffles are the final kilobyte-scale rollups."""
-    for name, max_hash in (
-        ("s44_delta_v2_checkpoint", 2),   # two per-version rollups
-        ("s45_iceberg_schema_evolution", 1),
-        ("s46_orc_rle_v1_decode", 1),
-        ("s47_delta_id_column_mapping", 1),
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") <= max_hash, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_round11_codec_entries_zero_hash_exchanges(spark, sf_dir,
-                                                   qcat):
-    """The round-11 codec kernels are one Arrow mapInPandas pass over
-    documents: no hash exchange, no join — embarrassingly parallel at
-    100 TB like the round-8 codec entries."""
-    for name in (
-        "multimodal_mp3_tables5_12_decode",
-        "multimodal_mp3_ms_stereo_decode",
-        "multimodal_mp3_mixed_block_decode",
-        "multimodal_mp3_intensity_stereo_decode",
-        "multimodal_mpeg2_l2_decode",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert "Exchange hashpartitioning" not in plan, name
-        assert "Join" not in plan, name
-
-
-def test_round11_lake_entries_one_rollup_exchange(spark, sf_dir,
-                                                  qcat):
-    """The round-11 lake audits (ZSTD / LZO+legacy-LZ4 / LZ4+timezone)
-    are one task per FILE followed by a kilobyte-scale rollup: exactly
-    one hash exchange (the final groupBy), no join."""
-    for name in (
-        "s48_orc_lz4_timezone_decode",
-        "s50_orc_zstd_decode",
-        "s51_lzo_legacy_lz4_decode",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") == 1, name
-        assert "Join" not in plan, name
-
-
-def test_round11_second_half_plan_shapes(spark, sf_dir, qcat):
-    """Second-half entries: the two new MP3 intensity kernels are
-    zero-hash-exchange Arrow scans; the ORC-union / bloom /
-    page-index audits are one task per file plus exactly one
-    kilobyte-scale rollup exchange, no join."""
-    for name in (
-        "multimodal_mp3_intensity_short_decode",
-        "multimodal_mp3_intensity_mixed_decode",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert "Exchange hashpartitioning" not in plan, name
-        assert "Join" not in plan, name
-    for name in (
-        "s54_orc_union_decode",
-        "s57_parquet_bloom_point_lookup",
-        "s58_parquet_page_index_prune",
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") == 1, name
-        assert "Join" not in plan, name
-
-
-def test_round12_scan_entries_single_rollup_exchange(spark, sf_dir,
-                                                     qcat):
-    """Round-12 container/codec scans (WebDataset tar, zip, WARC,
-    jsonl.zst, brotli parquet, Avro single-object, Delta checksum,
-    NFC) are mapInPandas/native work over shard or binary columns
-    followed by one kilobyte-scale rollup: at most the pinned hash
-    exchanges, no join. s69's former `parsed.count()` consistency
-    assert is gone (it re-executed the decode); the rollup itself is
-    the oracle-checked consistency gate, so the plan stays a single
-    pipeline."""
-    for name, max_hash in (
-        ("s59_parquet_brotli_decode", 2),
-        ("s63_delta_version_checksum", 1),
-        ("s64_avro_single_object_stream", 1),
-        ("s66_webdataset_tar_scan", 1),
-        ("s67_zip_deflate_scan", 1),
-        ("s68_warc_response_scan", 1),
-        ("s69_jsonl_zst_corpus_scan", 1),
-        ("text_unicode_nfc", 1),
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") <= max_hash, name
-        assert "Join" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_round12_lake_entries_bounded_exchanges(spark, sf_dir, qcat):
-    """Round-12/13 lake entries: driver-side metadata replay feeds
-    native scans; shuffles are bounded to the final rollups (plus
-    s70's broadcast stitch of two kilobyte-scale aggregates)."""
-    for name, max_hash in (
-        ("s60_iceberg_v3_typed_defaults", 2),
-        ("s61_delta_variant_shredded", 1),
-        ("s62_geoparquet_scan", 1),
-        ("s65_iceberg_puffin_ndv_stats", 0),
-        ("s70_iceberg_v3_variant_geometry_defaults", 2),
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") <= max_hash, name
-        assert "SortMergeJoin" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_t10_broadcast_join_zero_shuffle(spark, sf_dir, qcat):
-    """T10's link join broadcasts the projected dimension and the
-    quad fan-out is a columnar explode: ZERO hash exchanges — the
-    whole transform is embarrassingly parallel over the fact scan."""
-    plan = _plan(qcat["t10_property_on_address"].spark(spark, sf_dir))
-    assert "Exchange hashpartitioning" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_incremental_lsh_persisted_index_no_exchange(spark, sf_dir,
-                                                     qcat):
+def test_incremental_lsh_persisted_index_no_exchange(spark, sf_dir):
     """The corpus-delta dedup's 100 TB contract: the PERSISTED band
     index joins through its bucketed layout — no Exchange ever lands
     on the corpus side. At fixture scale AQE rightly broadcasts the
@@ -363,12 +124,11 @@ def test_incremental_lsh_persisted_index_no_exchange(spark, sf_dir,
     index FileScan feeds the sort-merge join via its 8 buckets
     (SelectedBucketsCount) while only the NEW batch (1) and the
     candidate distinct (1) shuffle."""
-    qcat["dedup_incremental_lsh"].spark(spark, sf_dir)  # build tables
+    QUERIES["dedup_incremental_lsh"].spark(spark, sf_dir)  # build tables
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(qcat["dedup_incremental_lsh"].spark(spark,
-                                                         sf_dir))
+        plan = _plan(QUERIES["dedup_incremental_lsh"].spark(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "Bucketed: true" in plan
@@ -378,31 +138,7 @@ def test_incremental_lsh_persisted_index_no_exchange(spark, sf_dir,
     assert "CartesianProduct" not in plan
 
 
-def test_round13_new_entries_plan_shapes(spark, sf_dir, qcat):
-    """Round-13 entries: ref time travel and the ADPCM container
-    decode are pure scans (zero hash exchanges); the WET scan and
-    HTML extraction are one Arrow pass + one rollup; URL
-    canonicalization pays the two-phase distinct only. No joins, no
-    cartesians anywhere."""
-    for name, max_hash in (
-        ("s71_iceberg_refs_time_travel", 0),
-        ("s76_delta_in_commit_timestamps", 0),
-        ("multimodal_adpcm_wav_decode", 0),
-        ("s72_warc_wet_conversion_scan", 1),
-        ("s73_sqlite_table_scan", 1),
-        ("s74_bz2_xml_dump_scan", 1),
-        ("s75_jsonl_xz_corpus_scan", 1),
-        ("text_html_extract", 1),
-        ("text_gopher_quality_rules", 1),
-        ("text_url_normalize_dedup", 2),
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") <= max_hash, name
-        assert "Join" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_corpus_end_to_end_plan_shape(spark, sf_dir, qcat):
+def test_corpus_end_to_end_plan_shape(spark, sf_dir):
     """The composed training-data pipeline (round 14): no cartesian
     anywhere; the persisted prior-corpus band index reads through its
     bucketed layout (SelectedBucketsCount — never an Exchange on the
@@ -410,11 +146,11 @@ def test_corpus_end_to_end_plan_shape(spark, sf_dir, qcat):
     incremental-LSH entry); the ingest→extract→gate path is
     checkpointed ONCE so the Arrow pass never re-executes for the
     dedup's two consumers."""
-    qcat["corpus_end_to_end"].spark(spark, sf_dir)  # build tables
+    QUERIES["corpus_end_to_end"].spark(spark, sf_dir)  # build tables
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(qcat["corpus_end_to_end"].spark(spark, sf_dir))
+        plan = _plan(QUERIES["corpus_end_to_end"].spark(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "CartesianProduct" not in plan
@@ -423,8 +159,7 @@ def test_corpus_end_to_end_plan_shape(spark, sf_dir, qcat):
     assert "SelectedBucketsCount: 8 out of 8" in plan
 
 
-def test_stream_incremental_kernel_no_exchange_on_index(spark, sf_dir,
-                                                        qcat):
+def test_stream_incremental_kernel_no_exchange_on_index(spark, sf_dir):
     """The streaming twin shares dedup_batch_against_index with the
     batch entry, so the per-micro-batch plan is the batch plan: the
     persisted band index reads through its 8 buckets with zero
@@ -436,7 +171,7 @@ def test_stream_incremental_kernel_no_exchange_on_index(spark, sf_dir,
     from cam_etl_spark.operators.dedup import dedup_batch_against_index
     from cam_etl_spark.plans.catalog import t as load
 
-    qcat["stream_dedup_incremental"].spark(spark, sf_dir)  # day-0 build
+    QUERIES["stream_dedup_incremental"].spark(spark, sf_dir)  # day-0 build
     import os
     sfx = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     batch = load(spark, sf_dir, "documents").filter(
@@ -455,44 +190,3 @@ def test_stream_incremental_kernel_no_exchange_on_index(spark, sf_dir,
     assert "SelectedBucketsCount: 8 out of 8" in plan
     assert "SortMergeJoin" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_round14_scan_entries_plan_shapes(spark, sf_dir, qcat):
-    """Round-14 scan entries: the WAL-mode database scan and the
-    Arrow IPC shard scan are one Arrow pass + one rollup — no joins,
-    no cartesians."""
-    for name, max_hash in (
-        ("s77_sqlite_wal_scan", 1),
-        ("s78_arrow_ipc_stream_scan", 1),
-        ("s79_arrow_ipc_sink_roundtrip", 1),
-    ):
-        plan = _plan(qcat[name].spark(spark, sf_dir))
-        assert plan.count("Exchange hashpartitioning") <= max_hash, name
-        assert "Join" not in plan, name
-        assert "CartesianProduct" not in plan, name
-
-
-def test_dsir_plan_shape(spark, sf_dir, qcat):
-    """DSIR importance scoring at 100 TB: bucket-stat frames are
-    ≤1024 rows so both stat joins BROADCAST (never a vocab-keyed
-    SMJ — the hashing trick's whole point); the only nested-loop
-    joins are the two 1-row scalar totals; top-k plans as
-    TakeOrdered, never a global sort."""
-    plan = _plan(qcat["sample_importance_dsir"].spark(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") == 2
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
-    assert plan.count("Exchange hashpartitioning") <= 5
-
-
-def test_c4_line_dedup_plan_shape(spark, sf_dir, qcat):
-    """C4 global line dedup: exactly the two keyed shuffles the
-    operator needs (line-key rank + doc-key reassembly, plus the
-    totals agg on the same doc key) — no cartesians, no joins beyond
-    the final doc-key stitch."""
-    plan = _plan(qcat["text_line_dedup_c4"].spark(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") <= 4

@@ -49,6 +49,25 @@ def test_profile_layers_stages_operators(spark, profiles, name):
     assert spark.sparkContext.uiWebUrl is None
 
 
+def test_profile_budget_violations(spark, sf_dir, profiles, monkeypatch):
+    """The record carries the query's plan-budget check: clean as
+    registered, and the broken entry once the budget is tightened."""
+    from cam_etl_spark.plans import QUERIES
+    from tools.profile import measure
+
+    name = "etl_end_to_end_counts"
+    assert profiles[name]["budget_violations"] == []
+    q = QUERIES[name]
+    lo, hi = q.plan["Exchange hashpartitioning"]
+    monkeypatch.setattr(q, "plan", {**q.plan, "Exchange hashpartitioning": (lo, hi - 1)})
+    # a second measure of the query: its counters also hold the first's
+    # jobs, but only the budget check is read here
+    violations = measure(spark, name, sf_dir, repeats=1)["budget_violations"]
+    assert violations == [
+        f"{name}: 'Exchange hashpartitioning' occurs {hi}x, budget ({lo}, {hi - 1})"
+    ]
+
+
 def test_session_builder_only_in_session_module():
     """Every measured or tested session is the product's ``get_spark``."""
     builder = re.compile(r"SparkSession\s*\.\s*builder\b")

@@ -18,7 +18,9 @@ read from Spark's status stores, which exist without the UI:
 - ``counters``: job and stage totals (``perfbench.trace.spark_counters``);
 - ``stages``: one row per completed stage, with its submit and complete
   offsets in seconds from the run start;
-- ``operators``: the SQL metrics of every node of the executed plan.
+- ``operators``: the SQL metrics of every node of the executed plan;
+- ``budget_violations``: the entries of the query's ``plan=`` budget
+  that its executed plan breaks (``catalog.plan_violations``).
 
 Prints one row per query and writes the full record to PROFILE_LOCAL.json
 at the repository root. Input: $SPARK_GRAFT_SF_DIR (default: the sf0.1
@@ -43,6 +45,7 @@ ROOT = os.path.dirname(TOOLS)
 sys.path[:] = [ROOT] + [p for p in sys.path if os.path.abspath(p or ".") != TOOLS]
 
 from cam_etl_spark.plans import QUERIES  # noqa: E402
+from cam_etl_spark.plans.catalog import plan_violations  # noqa: E402
 from cam_etl_spark.session import get_spark  # noqa: E402
 from perfbench.trace import spark_counters  # noqa: E402
 
@@ -65,8 +68,10 @@ def _run(spark, name: str, sf_dir: str, run: int) -> dict:
     t2 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
     t3 = time.perf_counter()
+    # The noop write plans its own command, so this is the plan forced above.
+    plan = df._jdf.queryExecution().executedPlan().toString()
     return {"run": run, "start_ms": start_ms, "wall_s": t3 - t0,
-            "build_s": t1 - t0, "plan_s": t2 - t1, "exec_s": t3 - t2}
+            "build_s": t1 - t0, "plan_s": t2 - t1, "exec_s": t3 - t2, "plan": plan}
 
 
 def _stages(spark, groups: list[str], start_ms: float) -> list[dict]:
@@ -161,6 +166,7 @@ def measure(spark, name: str, sf_dir: str, repeats: int = 2) -> dict:
         "counters": counters,
         "stages": _stages(spark, groups, best["start_ms"]),
         "operators": _operators(spark, groups[1], best["start_ms"]),
+        "budget_violations": plan_violations(QUERIES[name], best["plan"]),
     }
 
 
@@ -193,6 +199,8 @@ def main() -> None:
         print(f"{name:<{width}}  {p['wall_s']:6.3f}  {p['build_s']:7.3f}  {p['build_actions']:5d}  "
               f"{p['build_jobs']:5d}  {p['plan_s']:6.3f}  {p['exec_s']:6.3f}  {p['exec_jobs']:5d}  "
               f"{int(c.get('stages', 0)):6d}  {int(c.get('tasks', 0)):5d}", flush=True)
+        for v in p["budget_violations"]:
+            print(f"  over budget: {v}", flush=True)
     total = sum(p["wall_s"] for p in profile.values())
     print(f"{'total':<{width}}  {total:6.3f}")
     with open(os.path.join(ROOT, "PROFILE_LOCAL.json"), "w", encoding="utf-8") as fh:
