@@ -3209,12 +3209,13 @@ def s5_vocab_source_lookup(spark, sf_dir):
 def s7_nquads_sink_roundtrip(spark, sf_dir):
     """Full N-Quads SINK round trip, value-checked per quad (the T1 fan-out
     checks aggregates; this writes the actual .nq files): the customer
-    quads are serialized with quads.write_nquads (global dedup, files
-    partitioned by graph — the S7/S9 sink), read back through the
-    escaping-aware parser, and every (subject, predicate, object_value,
-    kind, graph) must match the relational oracle — so a term-escaping,
-    formatting, or parser bug anywhere in the sink path hash-fails on
-    real data, including names with punctuation."""
+    quads are serialized with quads.write_nquads (global dedup, one part
+    file per shuffle partition, hashed on subject — the S7 sink), read
+    back through the escaping-aware parser, and every (subject,
+    predicate, object_value, kind, graph) must match the relational
+    oracle — so a term-escaping, formatting, or parser bug anywhere in
+    the sink path hash-fails on real data, including names with
+    punctuation."""
     import tempfile
 
     from cam_etl_spark.quads import read_nquads, write_nquads

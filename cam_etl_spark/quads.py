@@ -15,7 +15,8 @@ Spark mapping (SURVEY §1.3): a flat quad DataFrame
 with global ``dropDuplicates()`` before the sink (stronger than the
 reference's per-file dedup — required for the count-reconciliation queries in
 SURVEY §5.3 to match). ``graph`` is the physical partition column of the
-sink, so `graph = …` predicates prune partitions for free.
+parquet quad table (``write_quads_parquet``), so `graph = …` predicates
+prune partitions for free.
 """
 
 from __future__ import annotations
@@ -161,10 +162,23 @@ def to_nquads_lines(quads: DataFrame) -> DataFrame:
 
 
 def write_nquads(quads: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """N-Quads sink: dedup globally, partition the files by graph (the
-    reference's one-file-per-job maps to one-file-per-partition)."""
-    lines = to_nquads_lines(dedup_quads(quads).repartition("graph"))
-    lines.write.mode(mode).text(path)
+    """N-Quads sink: one hash shuffle of the raw quads on ``subject`` into
+    ``spark.sql.shuffle.partitions`` partitions, then every task dedups,
+    formats and writes its own part file (the reference writes one part
+    file per partition or per worker batch).
+
+    The count is fixed on purpose: an AQE-coalesced shuffle or a
+    REBALANCE hint folds a sub-MB output back into one partition, so one
+    task would write everything. ``subject`` is one of the dedup keys, so
+    its hash partitioning already satisfies the aggregate and the plan has
+    exactly one Exchange; hashing all seven columns does not, because a
+    constant ``predicate`` or ``graph`` folds into an aliased grouping key
+    and a second Exchange appears. The shuffled bytes are the raw quads
+    (dedup and formatting run after it, in the writing task), and all
+    quads of a subject land in one file."""
+    n = int(quads.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    deduped = quads.repartition(n, "subject").dropDuplicates(QUAD_COLS)
+    to_nquads_lines(deduped).write.mode(mode).text(path)
 
 
 # Object term is a full alternation — a lazy `.*?` here mis-parses literals

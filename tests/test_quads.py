@@ -61,6 +61,42 @@ def test_nquads_roundtrip(spark, tmp_path):
     assert got == orig
 
 
+def test_write_nquads_one_shuffle_all_partitions(spark, tmp_path):
+    """The sink writes every shuffle partition, with one shuffle, even when
+    ``predicate`` and ``graph`` are constants that Catalyst folds into the
+    dedup keys."""
+    import os
+
+    from cam_etl_spark.quads import QUAD_COLS, read_nquads, write_nquads
+
+    quads = spark.range(300).selectExpr(
+        "concat('https://example.org/s/', id % 120) AS subject",
+        "'https://example.org/p' AS predicate",
+        "CAST(id % 240 AS STRING) AS object_value",
+        "'literal' AS object_kind",
+        "CAST(NULL AS STRING) AS object_datatype",
+        "CAST(NULL AS STRING) AS object_lang",
+        "'urn:g:one' AS graph",
+    )
+    out = str(tmp_path / "nq")
+    sc = spark.sparkContext
+    sc.setJobGroup("write_nquads_jobs", "write_nquads_jobs")
+    try:
+        write_nquads(quads, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # one job for the shuffle map stage, one for the dedup-and-write stage
+    assert len(sc.statusTracker().getJobIdsForGroup("write_nquads_jobs")) == 2
+
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert sum(os.path.getsize(os.path.join(out, f)) > 0 for f in parts) > 1
+
+    got = [tuple(r[c] for c in QUAD_COLS) for r in read_nquads(spark, out).collect()]
+    want = {tuple(r[c] for c in QUAD_COLS) for r in quads.collect()}
+    assert len(want) == 240 and len(got) == len(want) and set(got) == want
+
+
 def test_lang_and_datatype_rendering(spark):
     from cam_etl_spark.quads import to_nquads_lines
 
