@@ -124,10 +124,10 @@ def ngram_jaccard_pairs(
     # window's partitionBy("id") exchange is identical on both aliases, so
     # Spark computes it once; an eager localCheckpoint here measured ~1 s
     # SLOWER at sf0.1 (full materialize + barrier for no extra reuse).
-    # (An explicit cluster-width repartition on "sh" here — the
-    # simhash_near_pairs trick — DEFEATS that reuse: the duplicated
-    # shingle+window subtree cost far more than the wider join saved;
-    # measured 1.6 s -> 3.7 s at sf0.1. Left coalesced deliberately.)
+    # (An explicit cluster-width repartition on "sh" here — band_index's
+    # rule — DEFEATS that reuse: the duplicated shingle+window subtree
+    # cost far more than the wider join saved; measured 1.6 s -> 3.7 s at
+    # sf0.1. Left coalesced deliberately.)
     a, b = prefix.alias("a"), prefix.alias("b")
     # Two lossless prunes folded into the join:
     # (1) size-ratio: jaccard >= t ⟹ t <= |A|/|B| <= 1/t;
@@ -209,20 +209,59 @@ def _min_hash_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _banded_self_join(banded: DataFrame) -> DataFrame:
-    """Distinct id pairs colliding in any (band, bucket). The bucket is the
-    shuffle key → near-dups co-locate, everything else spreads uniformly."""
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+def band_rows(items: DataFrame, bands: list[str]) -> DataFrame:
+    """``items`` with every band value projected onto the row as
+    ``__b0…`` (each band is SQL text over the item's columns), exploded to
+    one row per band as ``(__bi, __bv)``. The values stay on every
+    exploded row so a joined pair can find its first matching band
+    (``first_band_sql``) without a dedup shuffle."""
+    cols = [f"__b{i}" for i in range(len(bands))]
+    return items.selectExpr(
+        "*", *[f"{sql} AS {c}" for sql, c in zip(bands, cols)]
+    ).selectExpr("*", f"posexplode(array({', '.join(cols)})) AS (__bi, __bv)")
+
+
+def first_band_sql(n_bands: int, a: str = "a", b: str = "b") -> str:
+    """SQL text of the index of the first band on which rows ``a`` and
+    ``b`` agree (NULL never agrees, as in the equi-join)."""
+    return "CASE " + " ".join(
+        f"WHEN {a}.__b{i} = {b}.__b{i} THEN {i}" for i in range(n_bands)
+    ) + " END"
+
+
+def band_index(items: DataFrame, bands: list[str], keys: tuple[str, ...] = ()) -> DataFrame:
+    """The banded-candidate index: ``band_rows`` hash-partitioned on
+    (keys, __bi, __bv) at cluster width. The explicit width is not
+    coalesced by AQE (an index of a few hundred KB would otherwise join in
+    ONE task, and the pair expansion behind it is compute-bound), and both
+    self-join aliases of ``banded_pairs`` reuse the one exchange, so the
+    producer (a decode, the SimHash reconstruction) runs once."""
+    par = items.sparkSession.sparkContext.defaultParallelism
+    return band_rows(items, bands).repartition(par, *keys, "__bi", "__bv")
+
+
+def banded_pairs(index: DataFrame, id_col: str, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Each unordered pair of ``band_index`` rows that agrees on the keys
+    and on at least one band, exactly once: the self-join (aliases ``a``
+    and ``b``, ``a.id < b.id``) keeps a row only when its band is the
+    pair's first matching band. A pair sharing m bands meets the equi-join
+    m times; the per-row filter drops the m-1 repeats where a trailing
+    distinct would re-shuffle every candidate. Callers select and verify
+    with SQL text on ``a.``/``b.``."""
+    n = sum(c.startswith("__b") and c[3:].isdigit() for c in index.columns)
+    cond = " AND ".join(
+        [f"a.{k} = b.{k}" for k in keys]
+        + ["a.__bi = b.__bi", "a.__bv = b.__bv", f"a.{id_col} < b.{id_col}"]
     )
+    a, b = index.alias("a"), index.alias("b")
+    return a.join(b, F.expr(cond)).filter(f"a.__bi = {first_band_sql(n)}")
+
+
+def minhash_band_sql(band: int, rows_per_band: int) -> str:
+    """SQL text of one MinHash LSH band over the ``m0…`` signature columns
+    of ``_min_hash_agg``: the xxhash64 of its ``rows_per_band`` minima."""
+    ms = ", ".join(f"m{band * rows_per_band + r}" for r in range(rows_per_band))
+    return f"xxhash64({ms})"
 
 
 def minhash_dedup_pairs(
@@ -245,13 +284,17 @@ def minhash_dedup_pairs(
     rows_per_band = num_hashes // bands
     # Shingle ONCE (the regex tokenize + zip-slice shingling is the most
     # expensive projection; the signature and verify paths both need it) —
-    # then materialize the banded index before self-joining: it's tiny
+    # then materialize the band index before self-joining: it's tiny
     # (N×bands short rows) and both join sides would otherwise re-run the
-    # whole shingle+hash pipeline. Same reasoning holds on a cluster — the
-    # index is the thing you keep, the text scan is the thing you do once.
+    # whole shingle+hash pipeline. The checkpoint sits after band_index's
+    # repartition, so the plan reads the materialized, partitioned index
+    # and carries no hash exchange.
     sets = shingle_sets(df, text_col, id_col, k)
-    banded = banded_from_sets(sets, bands, rows_per_band)
-    cands = _banded_self_join(banded)
+    sigs = _min_hash_agg(sets.select("id", F.explode("sh_set").alias("sh")), num_hashes)
+    index = band_index(
+        sigs, [minhash_band_sql(b, rows_per_band) for b in range(bands)]
+    ).localCheckpoint(eager=True)
+    cands = banded_pairs(index, "id").selectExpr("a.id AS id_a", "b.id AS id_b")
     return _verify_jaccard(cands, sets, threshold)
 
 
@@ -259,27 +302,16 @@ def banded_from_sets(
     sets: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
     """(id, band, bucket) LSH index from a materialized (id, sh_set)
-    shingle frame — the candidate-generation half of
-    ``minhash_dedup_pairs``, shared with the streaming band index so the
-    incremental path produces byte-identical buckets to the batch path."""
+    shingle frame, for the streaming band index and the persisted
+    prior-corpus index: its buckets are the ``minhash_band_sql`` values
+    ``minhash_dedup_pairs`` joins on, so the incremental paths find the
+    batch path's pairs."""
     sh = sets.select("id", F.explode("sh_set").alias("sh"))
     agg = _min_hash_agg(sh, bands * rows_per_band)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return (
-        agg.select(F.col("id"), F.explode(band_structs).alias("bb"))
-        .select("id", "bb.band", "bb.bucket")
-        .localCheckpoint(eager=True)
-    )
+    buckets = ", ".join(minhash_band_sql(b, rows_per_band) for b in range(bands))
+    return agg.selectExpr(
+        "id", f"posexplode(array({buckets})) AS (band, bucket)"
+    ).localCheckpoint(eager=True)
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64) -> DataFrame:
@@ -367,60 +399,18 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
 def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3, blocks: int = 4) -> DataFrame:
     """Hamming-ball pairing at scale: split the 60-bit hash into ``blocks``
     segments; by pigeonhole any pair within ``max_hamming < blocks`` bits
-    agrees on ≥1 whole segment → equi-join per segment, then verify the true
-    Hamming distance with bit_count(xor)."""
+    agrees on ≥1 whole segment → one banded self-join on the segments,
+    then verify the true Hamming distance with bit_count(xor)."""
     width = 60 // blocks
-    # Segment templates as ONE parsed expression (the Column-chain builder
-    # cost ~8 py4j calls per block struct); explode of a plain struct
-    # array stays fully codegen'd (no HOF), and the parsed tree is the
-    # same int-literal block + shifted/masked segment pair.
-    seg_arr = ", ".join(
-        f"struct({i} AS block, shiftright(simhash, {i * width}) & {(1 << width) - 1}"
-        " AS segment)"
-        for i in range(blocks)
-    )
-    seg = sims.selectExpr(
-        "id", "simhash", f"explode(array({seg_arr})) AS s"
-    ).select("id", "simhash", "s.block", "s.segment")
-    # Pin the join's partitioning at cluster width: the seg frame is a few
-    # hundred KB, so AQE coalesces the join's exchange to ONE task — but
-    # the m² candidate expansion behind it is compute-bound, not
-    # byte-bound (measured 666 ms serial at sf0.1). An explicit-width
-    # repartition on exactly the equi-join key is not coalesced, and both
-    # aliases reuse the single exchange.
-    par = sims.sparkSession.sparkContext.defaultParallelism
-    seg = seg.repartition(par, "block", "segment")
-    a, b = seg.alias("a"), seg.alias("b")
-    # First-matching-block emission instead of a trailing distinct: a pair
-    # sharing m segments met the equi-join m times, and the old
-    # dropDuplicates re-shuffled EVERY surviving candidate to collapse
-    # those repeats (profiled at sf0.1: 613k partial rows, an 18.7 MiB
-    # exchange with one 6.7 MiB skewed task, + a whole final-agg stage for
-    # 271k unique pairs). Both simhashes are already on the candidate row,
-    # so "is this the first block where the pair agrees?" is a pure
-    # per-row expression — keep the row iff the join's block IS the
-    # pair's minimal matching block, and every qualifying pair survives
-    # exactly once. Same pair set, same hamming, one exchange fewer and
-    # zero dedup shuffle (guide §2.4: remove shuffles outright).
-    first_match = "CASE " + " ".join(
-        f"WHEN (shiftright(a.simhash, {i * width}) & {(1 << width) - 1}) = "
-        f"(shiftright(b.simhash, {i * width}) & {(1 << width) - 1}) THEN {i}"
-        for i in range(blocks)
-    ) + " END"
+    segments = [
+        f"shiftright(simhash, {i * width}) & {(1 << width) - 1}" for i in range(blocks)
+    ]
     return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.segment") == F.col("b.segment"))
-            & (F.col("a.id") < F.col("b.id")),
+        banded_pairs(band_index(sims, segments), "id")
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b", "bit_count(a.simhash ^ b.simhash) AS hamming"
         )
-        .filter(F.expr(f"a.block = {first_match}"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(f"hamming <= {max_hamming}")
     )
 
 
@@ -834,50 +824,26 @@ def banded_hamming_pairs(
     thresholds below 16 * (len(band_cols) - 1) + 15 in the worst case
     and verified exactly by the full Hamming distance either way.
 
-    Plan shape: explode the bands, then an EXPLICIT repartition on the
-    join keys ABOVE the (usually expensive — a decode) producer, so
-    both self-join aliases share one exchange via ReuseExchange and the
-    producer runs ONCE; then one candidate hash join and one pair-dedup
-    exchange. Linear in band-bucket collisions, never all-pairs.
+    Plan shape: ``band_index``'s repartition sits ABOVE the (usually
+    expensive — a decode) producer, so both self-join aliases share one
+    exchange and the producer runs once; ``banded_pairs`` emits each pair
+    once, so no pair-dedup exchange follows. Linear in band-bucket
+    collisions, never all-pairs.
 
     Returns (doc_l, doc_r, *extra_key_cols, hamming) with
     hamming <= max_hamming, one row per (pair, extra keys)."""
-    keys = list(extra_key_cols)
-    e = bands_df.select(
-        id_col, *keys, *band_cols,
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("i"), F.col(c).alias("band"))
-            for i, c in enumerate(band_cols)
-        ])).alias("k"),
-    ).select(
-        id_col, *keys, *band_cols,
-        F.col("k.i").alias("i"), F.col("k.band").alias("band"),
-    ).repartition(*keys, "i", "band")
-    ham = sum(
-        F.bit_count(F.col(f"l.{c}").bitwiseXOR(F.col(f"r.{c}")))
-        for c in band_cols
-    )
-    cond = (
-        (F.col("l.i") == F.col("r.i"))
-        & (F.col("l.band") == F.col("r.band"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    )
-    for kcol in keys:
-        cond = cond & (F.col(f"l.{kcol}") == F.col(f"r.{kcol}"))
+    # verify from the band copies the index carries (__b{i} is
+    # band_cols[i]), so the original columns are pruned from the exchange
+    ham = " + ".join(f"bit_count(a.__b{i} ^ b.__b{i})" for i in range(len(band_cols)))
     return (
-        e.alias("l")
-        .join(e.alias("r"), cond)
-        .select(
-            F.col(f"l.{id_col}").alias("doc_l"),
-            F.col(f"r.{id_col}").alias("doc_r"),
-            *[F.col(f"l.{kcol}").alias(kcol) for kcol in keys],
-            ham.cast("long").alias("hamming"),
+        banded_pairs(band_index(bands_df, band_cols, extra_key_cols), id_col, extra_key_cols)
+        .selectExpr(
+            f"a.{id_col} AS doc_l",
+            f"b.{id_col} AS doc_r",
+            *[f"a.{k} AS {k}" for k in extra_key_cols],
+            f"CAST({ham} AS BIGINT) AS hamming",
         )
-        # filter first (hamming is a pure function of the pair): the
-        # dedup exchange then carries only surviving near-pairs, not
-        # every banded candidate — result-identical, fewer shuffled rows
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+        .filter(f"hamming <= {max_hamming}")
     )
 
 

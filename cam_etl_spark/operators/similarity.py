@@ -20,6 +20,7 @@ from cam_etl_spark.functions.vectors import (
     cosine_from_norms_sql,
     l2_norm_sql,
 )
+from cam_etl_spark.operators.dedup import band_index, band_rows, banded_pairs, first_band_sql
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -91,31 +92,20 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
     return vals
 
 
-def lsh_bucket_signature(vec, dim: int, n_planes: int, band: int):
-    """Random-hyperplane signature for one band: bit i = sign of
-    <vec, plane_{band,i}>. Vectors with high cosine similarity collide with
-    high probability."""
+def hyperplane_band_sql(vec: str, dim: int, n_planes: int, band: int) -> str:
+    """SQL text of one random-hyperplane LSH band: bit p = sign of
+    <vec, plane_{band,p}>, packed into an int. Vectors with high cosine
+    similarity collide with high probability. The planes are double
+    literals (``repr`` round-trips every value exactly)."""
     bits = []
     for p in range(n_planes):
-        plane = _hyperplane(dim, band * 1000 + p)
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(v) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        plane = ", ".join(f"{v!r}D" for v in _hyperplane(dim, band * 1000 + p))
+        proj = (
+            f"aggregate(zip_with({vec}, array({plane}), (x, y) -> CAST(x AS DOUBLE) * y), "
+            "0.0D, (acc, v) -> acc + v)"
         )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(F.lit(f"{band}:"), *bits)
-
-
-def _banded(df: DataFrame, id_alias: str, vec_alias: str, dim: int, n_planes: int, n_bands: int):
-    sigs = F.array(
-        *[lsh_bucket_signature(F.col(vec_alias), dim, n_planes, b) for b in range(n_bands)]
-    )
-    return df.withColumn("bucket", F.explode(sigs))
+        bits.append(f"IF({proj} >= 0, {1 << p}, 0)")
+    return " + ".join(bits)
 
 
 def knn_lsh_cosine(
@@ -130,43 +120,35 @@ def knn_lsh_cosine(
 ) -> DataFrame:
     """Approximate top-k with OR-amplified LSH: ``n_bands`` independent
     hyperplane sets; a corpus vector is a candidate if it matches the query
-    in ANY band. The (band, signature) bucket is the shuffle/join key → no
+    in ANY band. The (band, signature) bucket is the join key → no
     corpus-wide cross join; recall rises with n_bands, bucket selectivity
     with n_planes."""
-    # Norms projected once per row before the band explode (each vector
-    # appears n_bands times in the bucket index and meets every bucket
-    # partner).
-    c = _banded(
-        corpus.selectExpr(
-            f"{id_col} AS neighbor_id",
-            f"{vec_col} AS c_vec",
-            f"{l2_norm_sql(vec_col)} AS c_nrm",
-        ),
-        "neighbor_id",
-        "c_vec",
-        dim,
-        n_planes,
-        n_bands,
-    )
-    q = _banded(
-        queries.selectExpr(
-            f"{id_col} AS query_id",
-            f"{vec_col} AS q_vec",
-            f"{l2_norm_sql(vec_col)} AS q_nrm",
-        ),
-        "query_id",
-        "q_vec",
-        dim,
-        n_planes,
-        n_bands,
-    )
+    def banded(df, side, id_alias):
+        # Norms projected once per row before the band explode (each vector
+        # appears n_bands times in the bucket index and meets every bucket
+        # partner).
+        rows = df.selectExpr(
+            f"{id_col} AS {id_alias}",
+            f"{vec_col} AS {side}_vec",
+            f"{l2_norm_sql(vec_col)} AS {side}_nrm",
+        )
+        bands = [hyperplane_band_sql(f"{side}_vec", dim, n_planes, b) for b in range(n_bands)]
+        return band_rows(rows, bands).alias(side)
+
+    # Queries × corpus is bipartite, not a self-join: the (small) query
+    # bands are broadcast, and the first-match filter keeps each
+    # (query, neighbor) pair once without a dedup exchange.
     scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "q_vec", "c_vec", "q_nrm", "c_nrm")
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn(
-            "cosine", F.expr(cosine_from_norms_sql("q_vec", "c_vec", "q_nrm", "c_nrm"))
+        banded(corpus, "c", "neighbor_id")
+        .join(
+            F.broadcast(banded(queries, "q", "query_id")),
+            F.expr("c.__bi = q.__bi AND c.__bv = q.__bv"),
+        )
+        .filter(f"query_id != neighbor_id AND c.__bi = {first_band_sql(n_bands, 'c', 'q')}")
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            f"{cosine_from_norms_sql('q_vec', 'c_vec', 'q_nrm', 'c_nrm')} AS cosine",
         )
     )
     return _rank_topk(scored, k)
@@ -450,20 +432,11 @@ def lsh_candidate_pairs_cosine(
     random pairs narrows and candidate volume rises toward all-pairs —
     pick n_planes for the threshold you verify at (see
     dedup.embedding_near_pairs_blocked's docstring for the arithmetic)."""
-    banded = _banded(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        "id",
-        "vec",
-        dim,
-        n_planes,
-        n_bands,
+    index = band_index(
+        corpus.selectExpr(f"{id_col} AS id", f"{vec_col} AS vec"),
+        [hyperplane_band_sql("vec", dim, n_planes, b) for b in range(n_bands)],
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return banded_pairs(index, "id").selectExpr("a.id AS id_a", "b.id AS id_b")
 
 
 def fuzzy_levenshtein_join(

@@ -626,7 +626,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     """,
     tags=["dedup-minhash"],
     bench=True,
-    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 1), "BroadcastHashJoin": (3, None)},
+    plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 0), "BroadcastHashJoin": (3, None)},
 )
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash (16 seeded xxhash64) + LSH banding (8 bands × 2 rows — LSH
@@ -8166,6 +8166,7 @@ def multimodal_mpeg2_lsf_decode(spark, sf_dir):
            + bit_count(xor(la.bl[4], lb.bl[4]))) <= 12
     """,
     tags=["multimodal", "dedup", "image", "dhash", "lsh"],
+    plan={"CartesianProduct": (0, 0), "HashAggregate": (0, 0)},
 )
 def multimodal_image_dhash_neardup(spark, sf_dir):
     """IMAGE near-duplicate detection — the perceptual-hash member of
@@ -8179,8 +8180,9 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
     candidates (pigeonhole: <=12 differing bits leave >=1 of 4 bands
     intact), full Hamming distance filters them. Plan: one Arrow
     mapInPandas scan (decode + hash, zero exchanges), ONE candidate
-    shuffle on the band key, one pair-dedup exchange — linear in band
-    collisions, never all-pairs; the join skeleton is the shared
+    shuffle on the band key and no pair-dedup exchange (each pair is
+    emitted at its first matching band) — linear in band collisions,
+    never all-pairs; the join skeleton is the shared
     banded_hamming_pairs operator (operators/dedup.py), whose explicit
     band-key repartition lets both self-join aliases reuse one
     exchange so the decode runs once."""
@@ -8288,6 +8290,7 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
            + bit_count(xor(la.bl[4], lb.bl[4]))) <= 12
     """,
     tags=["multimodal", "dedup", "audio", "fingerprint", "lsh"],
+    plan={"CartesianProduct": (0, 0), "HashAggregate": (0, 0)},
 )
 def multimodal_audio_fingerprint_neardup(spark, sf_dir):
     """AUDIO near-duplicate detection — the acoustic sibling of
@@ -8304,7 +8307,7 @@ def multimodal_audio_fingerprint_neardup(spark, sf_dir):
     full Hamming verify, identical shape and ReuseExchange discipline
     to the image entry (shared banded_hamming_pairs skeleton,
     operators/dedup.py): ONE Arrow decode scan, one candidate shuffle
-    on the band key, one pair-dedup exchange — linear in band
+    on the band key, no pair-dedup exchange — linear in band
     collisions at any corpus size."""
     import hashlib
     import struct
@@ -8416,6 +8419,7 @@ def multimodal_audio_fingerprint_neardup(spark, sf_dir):
     GROUP BY doc_l, doc_r HAVING count(*) = 4
     """,
     tags=["multimodal", "dedup", "video", "dhash", "lsh"],
+    plan={"CartesianProduct": (0, 0), "HashAggregate": (2, 2)},
 )
 def multimodal_video_dhash_neardup(spark, sf_dir):
     """VIDEO near-duplicate detection — the temporal member of the
@@ -8432,7 +8436,7 @@ def multimodal_video_dhash_neardup(spark, sf_dir):
     independent frame-level collisions). Plan: one Arrow decode scan
     shared across both self-join aliases (banded_hamming_pairs with
     the frame index as an extra blocking key), one candidate shuffle,
-    one per-frame dedup exchange, one pair rollup — linear in band
+    no per-frame dedup exchange, one pair rollup — linear in band
     collisions."""
     import hashlib
 

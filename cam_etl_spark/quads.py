@@ -14,9 +14,8 @@ Spark mapping (SURVEY §1.3): a flat quad DataFrame
 
 with global ``dropDuplicates()`` before the sink (stronger than the
 reference's per-file dedup — required for the count-reconciliation queries in
-SURVEY §5.3 to match). ``graph`` is the physical partition column of the
-parquet quad table (``write_quads_parquet``), so `graph = …` predicates
-prune partitions for free.
+SURVEY §5.3 to match). A quad table written with ``partitionBy("graph")``
+turns `graph = …` predicates into partition pruning.
 """
 
 from __future__ import annotations
@@ -238,16 +237,3 @@ def read_nquads(spark, path: str) -> DataFrame:
         ),
         F.col("graph"),
     )
-
-
-def write_quads_parquet(quads: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Columnar quad-table sink, hive-partitioned by graph: ``graph = …``
-    filters become partition pruning (zero IO for other graphs), and
-    predicate/subject filters push into the parquet scan. This is the
-    engine-internal store format; N-Quads (write_nquads) is the loader
-    exchange format."""
-    dedup_quads(quads).write.mode(mode).partitionBy("graph").parquet(path)
-
-
-def read_quads_parquet(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -1414,7 +1414,7 @@ def test_cow_bucketed_upsert(spark, tmp_path):
 
 
 def test_banded_hamming_pairs(spark):
-    from cam_etl_spark.operators.dedup import banded_hamming_pairs
+    from cam_etl_spark.operators.dedup import band_index, banded_hamming_pairs, banded_pairs
 
     # 4 bands of 16 bits; doc 1 differs from doc 0 in band 0 by 2 bits,
     # doc 2 shares no band with doc 0/1, doc 3 == doc 0 exactly
@@ -1427,11 +1427,22 @@ def test_banded_hamming_pairs(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, b0 long, b1 long, b2 long, b3 long"
     )
-    got = {
-        (r.doc_l, r.doc_r): r.hamming
-        for r in banded_hamming_pairs(df, ["b0", "b1", "b2", "b3"], 3).collect()
-    }
-    assert got == {(0, 1): 2, (0, 3): 0, (1, 3): 2}
+    # docs 0 and 3 agree on all four bands: the join meets them four
+    # times, the first-match filter emits them once, and no dedup
+    # aggregate is planned
+    out = banded_hamming_pairs(df, ["b0", "b1", "b2", "b3"], 3)
+    got = sorted((r.doc_l, r.doc_r, r.hamming) for r in out.collect())
+    assert got == [(0, 1, 2), (0, 3, 0), (1, 3, 2)]
+    assert "HashAggregate" not in out._jdf.queryExecution().executedPlan().toString()
+    # a NULL band never collides: 4/6 and 5/6 share only a NULL b0, and
+    # 4/5 pair through b1 alone
+    nulls = spark.createDataFrame(
+        [(4, None, 5), (5, None, 5), (6, None, 6)], "doc_id long, b0 long, b1 long"
+    )
+    pairs = banded_pairs(band_index(nulls, ["b0", "b1"]), "doc_id").selectExpr(
+        "a.doc_id", "b.doc_id", "a.__bi"
+    )
+    assert [tuple(r) for r in pairs.collect()] == [(4, 5, 1)]
     # threshold excludes; candidates still require a shared band
     got1 = {
         (r.doc_l, r.doc_r)

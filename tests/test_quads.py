@@ -127,35 +127,6 @@ def test_wkt_point_round_trip(spark):
     assert all(r["lon"] is None and r["lat"] is None for r in got)
 
 
-def test_quads_parquet_graph_partition_pruning(spark, tmp_path):
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from cam_etl_spark.quads import read_quads_parquet, write_quads_parquet
-
-    rows = [
-        ("s1", "p", "o1", "iri", None, None, "urn:g:a"),
-        ("s1", "p", "o1", "iri", None, None, "urn:g:a"),  # dup -> dedup on write
-        ("s2", "p", "o2", "iri", None, None, "urn:g:b"),
-    ]
-    quads = spark.createDataFrame(
-        rows,
-        "subject string, predicate string, object_value string, object_kind string,"
-        "object_datatype string, object_lang string, graph string",
-    )
-    path = str(tmp_path / "quads")
-    write_quads_parquet(quads, path)
-    rd = read_quads_parquet(spark, path).filter(F.col("graph") == "urn:g:a")
-    assert rd.count() == 1  # dedup applied, only graph a
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rd.explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-    assert "urn:g:a" in buf.getvalue()
-
-
 def test_graph_partitioned_write_prunes_partitions(spark, tmp_path):
     """SURVEY §1.3/§4: graph is the quad table's partition column, so a
     graph= filter must become PartitionFilters on the scan (no files of

@@ -202,8 +202,9 @@ def test_streaming_band_index_cross_batch_pairs(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from cam_etl_spark.operators.dedup import (
-        _banded_self_join,
+        band_index,
         banded_from_sets,
+        banded_pairs,
         shingle_sets,
     )
     from cam_etl_spark.streaming.stateful import streaming_band_index
@@ -248,8 +249,12 @@ def test_streaming_band_index_cross_batch_pairs(spark, tmp_path):
         (r["id_a"], r["id_b"])
         for r in spark.read.parquet(str(tmp_path / "out")).distinct().collect()
     }
+    # the batch self-join over the same buckets, one band per column
+    wide = banded.groupBy("id").pivot("band", list(range(8))).agg(F.first("bucket"))
+    index = band_index(wide, [f"`{b}`" for b in range(8)])
     want = {
-        (r["id_a"], r["id_b"]) for r in _banded_self_join(banded).collect()
+        (r.id_a, r.id_b)
+        for r in banded_pairs(index, "id").selectExpr("a.id AS id_a", "b.id AS id_b").collect()
     }
     assert got == want
     assert (1, 4) in got and (1, 2) in got  # cross-batch collisions found
