@@ -17,8 +17,10 @@ for those.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +36,14 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 DECODED_SCHEMA = "media_id long, media_type string, n_bytes long, checksum string, width int, height int"
+
+
+def micro6(x: float) -> int:
+    """``x`` in exact integer micro-units, rounded half away from zero:
+    DuckDB's ``round(x*1e6)::BIGINT``. Integer sums of these are
+    boundary-stable across engines, where float sums of 1e-6 multiples
+    sit on 1e-4 rounding boundaries and flip."""
+    return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
 
 
 def real_decode(payload: bytes, media_type: str):

@@ -373,25 +373,17 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
         "shiftleft(CAST(1 AS BIGINT), CAST(j AS INT)), CAST(0 AS BIGINT)))"
     )
     # The reconstruction aggregate is INTERPRETED (higher-order functions
-    # don't codegen), ~70 µs/row — and AQE coalesces the final-agg read to
-    # ONE task at fixture scale (few hundred KB), serializing it (measured
-    # 356 ms single-task). An explicit cluster-width repartition on the agg
-    # key is not coalesced, so the per-doc reconstruction runs wide; the
-    # extra exchange moves only the packed counters (a few MB at 100 TB
-    # per partition — trivially small either way).
+    # don't codegen), ~70 µs/row.
     # coalesce(sim, 0): sim is never null (aggregate over non-null packed
     # counters), but element_at leaves the expression NULLABLE — so the
     # segment join downstream infers isnotnull(segment), rewrites it to
-    # isnotnull(<the whole interpreted aggregate>), and pushes it below
-    # the repartition: the 60-step HOF then ran TWICE per doc, once on
-    # the AQE-coalesced single task (the 356 ms serial stage in the
-    # before-timeline). The non-nullable coalesce constant-folds the
+    # isnotnull(<the whole interpreted aggregate>), and the 60-step HOF
+    # then ran TWICE per doc. The non-nullable coalesce constant-folds the
     # inferred filter away entirely.
-    par = df.sparkSession.sparkContext.defaultParallelism
     # ONE selectExpr (the packed-counter array is inlined into the
     # reconstruction text instead of a withColumn("parr", ...) staging
     # column — same expression tree after alias substitution).
-    return packed.repartition(par, "id").selectExpr(
+    return packed.selectExpr(
         "id", f"coalesce({sim_txt}, CAST(0 AS BIGINT)) AS simhash"
     )
 

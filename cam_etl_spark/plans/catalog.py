@@ -8,10 +8,26 @@ BOTH engines so accumulation-order differences can't flip the hash.
 
 The ``tags`` list names the SURVEY §2 operator IDs each query demonstrates;
 the docstring of each builder cites the reference behavior it models.
+
+Two fixture mechanisms have one definition here:
+
+- ``map_rows(df, fn, schema)`` is the Arrow batch loop of a per-row
+  decoder: ``fn(*row)`` yields the output rows of one input row as dicts.
+- ``fixture_dir(sf_dir, name, *sub)`` is an entry's emptied scratch
+  directory under the system temp dir, one per scale.
+
+Code that runs on a Python worker must never live in, or pull in,
+``cam_etl_spark.plans``: importing the package registers every query
+(~0.25 s per worker). ``map_rows`` nests its batch loop so cloudpickle
+ships it by value, and worker-side helpers such as ``micro6`` live in
+the modules the decoders already import (``cam_etl_spark.multimodal``).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -111,6 +127,53 @@ def widen(df):
     return df
 
 
+def _ddl_names(schema: str) -> list[str]:
+    """Top-level column names of a DDL schema string."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            names.append(schema[start:i].split()[0])
+            start = i + 1
+    return names
+
+
+def map_rows(df, fn, schema):
+    """One Arrow ``mapInPandas`` scan of ``df``: ``fn(*row)`` is called
+    with every column of an input row and yields its output rows (zero or
+    more) as dicts keyed by ``schema``'s column names; a missing key reads
+    as null. Each batch becomes one frame with ``schema``'s columns in
+    schema order, empty for an empty batch.
+
+    The batch loop is nested here, so cloudpickle ships it by value and a
+    worker never imports ``cam_etl_spark.plans``; ``fn`` must not reach
+    that package either."""
+    cols = _ddl_names(schema)
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in pdf.columns)) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(run, schema)
+
+
+def fixture_dir(sf_dir, name, *sub):
+    """``<tmp>/<name>/<basename(sf_dir)>/<sub...>``, emptied and created:
+    the scratch directory of one entry's fixture at one scale."""
+    path = os.path.join(
+        tempfile.gettempdir(), name, os.path.basename(os.path.normpath(sf_dir)), *sub
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
 # Plan memo for the widen(t(...).select(...)) idiom: the `.rdd` width
 # probe costs ~65 ms of driver-side analysis per call and its answer is
 # fixed per (session, table, columns) — pay it once. Like io.load_table's
@@ -123,12 +186,10 @@ def widen(df):
 
 def widen_table(spark, sf_dir, name, *cols):
     """widen() over a (projected) memoized base table, plan-memoized."""
-    import os as _os
-
     from cam_etl_spark.io import _session_cache
 
     cache = _session_cache(spark, "_cam_etl_wide_plans")
-    key = (_os.path.abspath(sf_dir), name, cols)
+    key = (os.path.abspath(sf_dir), name, cols)
     hit = cache.get(key)
     if hit is None:
         df = load_table(spark, sf_dir, name)

@@ -18,8 +18,10 @@ from cam_etl_spark.plans.catalog import (
     ROLLUP_PLAN,
     SCAN_ONLY_PLAN,
     WIDENED_DECODE_PLAN,
+    fixture_dir,
     lat_sql,
     lon_sql,
+    map_rows,
     register,
     t,
     widen,
@@ -1203,88 +1205,77 @@ def multimodal_mixed_dispatch(spark, sf_dir):
     from cam_etl_spark.multimodal.jpeg import encode_jpeg_gray_blocks
     from cam_etl_spark.multimodal.mpegaudio import encode_layer1_frame
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                k = d % 9
-                if k == 0:
-                    buf = encode_bmp(d % 31 + 1, d % 17 + 1, seed)
-                elif k == 1:
-                    buf = encode_wav(d % 100 + 1, 8000 * (d % 3 + 1), (d >> 1) % 2 + 1)
-                elif k == 2:
-                    buf = encode_avi(d % 12 + 1, d % 8 + 1, d % 6 + 2, pixels=seed)
-                elif k == 3:
-                    buf = encode_png(d % 13 + 1, d % 11 + 1, seed)
-                elif k == 4:
-                    buf = encode_gif(d % 14 + 1, d % 9 + 1, seed)
-                elif k == 5:
-                    buf = encode_tiff(d % 17 + 1, d % 7 + 1, seed, rows_per_strip=2)
-                elif k == 6:
-                    buf = encode_jpeg_gray_blocks(d % 5 + 1, d % 3 + 1, seed)
-                elif k == 7:  # FLAC: digest int16, varied channel/LPC/rate
-                    ns = d % 60 + 1
-                    sig = [
-                        (seed[(2 * j) % 16] + 256 * seed[(2 * j + 1) % 16]) - 32768
-                        for j in range(ns)
-                    ]
-                    rate = [8000, 16000, 32000, 48000][d % 4]
-                    # selectors must be independent of d % 9 (== 7 here):
-                    # d % 3 would be the constant 1, pinning one mode and
-                    # never exercising LPC — d // 9 varies freely
-                    v = d // 9
-                    lpc = 2 if v % 3 == 0 else None
-                    if d % 2 == 0:
-                        mode = ["left_side", "right_side", "mid_side"][v % 3]
-                        rchan = [~s for s in sig]  # NOT stays in int16 range
-                        buf = encode_flac(
-                            (sig, rchan), rate, lpc_order=lpc, stereo_mode=mode
-                        )
-                    else:
-                        buf = encode_flac(sig, rate, lpc_order=lpc)
-                else:  # MPEG-1 audio Layer I, 1-3 back-to-back frames
-                    alloc = [seed[(sb * 3 + 1) % 16] % 8 for sb in range(32)]
-                    active = [sb for sb in range(32) if alloc[sb]]
-                    scf = [seed[(sb + 2) % 16] % 63 for sb in active]
-                    codes = [
-                        [
-                            (seed[(sb + j) % 16] + d)
-                            % ((1 << (alloc[sb] + 1)) - 1)
-                            for j in range(12)
-                        ]
-                        for sb in active
-                    ]
-                    frame = encode_layer1_frame(alloc, scf, codes)
-                    buf = frame * (d % 3 + 1)
-                m = decode_payload(buf)
-                # audio formats report interchannel samples/frames in
-                # format-specific keys; surface them in the frame-count
-                # column (same unit family as WAV frames)
-                n_frames = m.get("n_frames")
-                if m["format"] == "flac":
-                    n_frames = m["n_samples"]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "fmt": m["format"],
-                        "width": m.get("width"),
-                        "height": m.get("height"),
-                        "n_frames": n_frames,
-                        "sample_rate": m.get("sample_rate"),
-                    }
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        k = d % 9
+        if k == 0:
+            buf = encode_bmp(d % 31 + 1, d % 17 + 1, seed)
+        elif k == 1:
+            buf = encode_wav(d % 100 + 1, 8000 * (d % 3 + 1), (d >> 1) % 2 + 1)
+        elif k == 2:
+            buf = encode_avi(d % 12 + 1, d % 8 + 1, d % 6 + 2, pixels=seed)
+        elif k == 3:
+            buf = encode_png(d % 13 + 1, d % 11 + 1, seed)
+        elif k == 4:
+            buf = encode_gif(d % 14 + 1, d % 9 + 1, seed)
+        elif k == 5:
+            buf = encode_tiff(d % 17 + 1, d % 7 + 1, seed, rows_per_strip=2)
+        elif k == 6:
+            buf = encode_jpeg_gray_blocks(d % 5 + 1, d % 3 + 1, seed)
+        elif k == 7:  # FLAC: digest int16, varied channel/LPC/rate
+            ns = d % 60 + 1
+            sig = [
+                (seed[(2 * j) % 16] + 256 * seed[(2 * j + 1) % 16]) - 32768
+                for j in range(ns)
+            ]
+            rate = [8000, 16000, 32000, 48000][d % 4]
+            # selectors must be independent of d % 9 (== 7 here):
+            # d % 3 would be the constant 1, pinning one mode and
+            # never exercising LPC — d // 9 varies freely
+            v = d // 9
+            lpc = 2 if v % 3 == 0 else None
+            if d % 2 == 0:
+                mode = ["left_side", "right_side", "mid_side"][v % 3]
+                rchan = [~s for s in sig]  # NOT stays in int16 range
+                buf = encode_flac(
+                    (sig, rchan), rate, lpc_order=lpc, stereo_mode=mode
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "width", "height", "n_frames", "sample_rate"],
-            )
+            else:
+                buf = encode_flac(sig, rate, lpc_order=lpc)
+        else:  # MPEG-1 audio Layer I, 1-3 back-to-back frames
+            alloc = [seed[(sb * 3 + 1) % 16] % 8 for sb in range(32)]
+            active = [sb for sb in range(32) if alloc[sb]]
+            scf = [seed[(sb + 2) % 16] % 63 for sb in active]
+            codes = [
+                [
+                    (seed[(sb + j) % 16] + d)
+                    % ((1 << (alloc[sb] + 1)) - 1)
+                    for j in range(12)
+                ]
+                for sb in active
+            ]
+            frame = encode_layer1_frame(alloc, scf, codes)
+            buf = frame * (d % 3 + 1)
+        m = decode_payload(buf)
+        # audio formats report interchannel samples/frames in
+        # format-specific keys; surface them in the frame-count
+        # column (same unit family as WAV frames)
+        n_frames = m.get("n_frames")
+        if m["format"] == "flac":
+            n_frames = m["n_samples"]
+        yield {
+            "media_id": d,
+            "fmt": m["format"],
+            "width": m.get("width"),
+            "height": m.get("height"),
+            "n_frames": n_frames,
+            "sample_rate": m.get("sample_rate"),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, fmt string, width int, height int, "
         "n_frames int, sample_rate int",
     )
@@ -1483,39 +1474,28 @@ def multimodal_flac_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.flac import decode_flac, encode_flac
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
-                ns = d % 300 + 1
-                j = np.arange(ns)
-                raw = dig[(2 * j) % 16] + 256 * dig[(2 * j + 1) % 16]
-                sig = np.where(raw >= 32768, raw - 65536, raw)
-                m = decode_flac(encode_flac([int(v) for v in sig]))
-                got = np.array(m["samples"], dtype=np.int64)
-                assert m["n_samples"] == ns
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_samples": ns,
-                        "sum_samples": int(got.sum()),
-                        "min_s": int(got.min()),
-                        "max_s": int(got.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sum_samples", "min_s", "max_s"],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
+        ns = d % 300 + 1
+        j = np.arange(ns)
+        raw = dig[(2 * j) % 16] + 256 * dig[(2 * j + 1) % 16]
+        sig = np.where(raw >= 32768, raw - 65536, raw)
+        m = decode_flac(encode_flac([int(v) for v in sig]))
+        got = np.array(m["samples"], dtype=np.int64)
+        assert m["n_samples"] == ns
+        yield {
+            "media_id": d,
+            "n_samples": ns,
+            "sum_samples": int(got.sum()),
+            "min_s": int(got.min()),
+            "max_s": int(got.max()),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, n_samples long, sum_samples long, min_s long, max_s long",
     )
 
@@ -1570,56 +1550,42 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.flac import decode_flac, encode_flac
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
-                ns = d % 350 + 8
-                j = np.arange(ns)
-                raw_l = dig[(2 * j) % 16] + 256 * dig[(2 * j + 1) % 16]
-                raw_r = dig[(2 * j + 5) % 16] + 256 * dig[(2 * j + 11) % 16]
-                left = np.where(raw_l >= 32768, raw_l - 65536, raw_l)
-                right = np.where(raw_r >= 32768, raw_r - 65536, raw_r)
-                mode = ["left_side", "right_side", "mid_side"][d % 3]
-                rate = [8000, 44100, 96000][d % 3]
-                buf = encode_flac(
-                    ([int(v) for v in left], [int(v) for v in right]),
-                    rate,
-                    lpc_order=d % 4 + 1,
-                    stereo_mode=mode,
-                )
-                m = decode_flac(buf)
-                got = np.array(m["samples"], dtype=np.int64)
-                assert m["channels"] == 2 and m["n_samples"] == ns
-                assert np.array_equal(got[0::2], left), f"left mismatch doc {d}"
-                assert np.array_equal(got[1::2], right), f"right mismatch doc {d}"
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_samples": ns,
-                        "sample_rate": m["sample_rate"],
-                        "sum_left": int(left.sum()),
-                        "sum_right": int(right.sum()),
-                        "min_left": int(left.min()),
-                        "max_right": int(right.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "sample_rate",
-                    "sum_left", "sum_right", "min_left", "max_right",
-                ],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
+        ns = d % 350 + 8
+        j = np.arange(ns)
+        raw_l = dig[(2 * j) % 16] + 256 * dig[(2 * j + 1) % 16]
+        raw_r = dig[(2 * j + 5) % 16] + 256 * dig[(2 * j + 11) % 16]
+        left = np.where(raw_l >= 32768, raw_l - 65536, raw_l)
+        right = np.where(raw_r >= 32768, raw_r - 65536, raw_r)
+        mode = ["left_side", "right_side", "mid_side"][d % 3]
+        rate = [8000, 44100, 96000][d % 3]
+        buf = encode_flac(
+            ([int(v) for v in left], [int(v) for v in right]),
+            rate,
+            lpc_order=d % 4 + 1,
+            stereo_mode=mode,
+        )
+        m = decode_flac(buf)
+        got = np.array(m["samples"], dtype=np.int64)
+        assert m["channels"] == 2 and m["n_samples"] == ns
+        assert np.array_equal(got[0::2], left), f"left mismatch doc {d}"
+        assert np.array_equal(got[1::2], right), f"right mismatch doc {d}"
+        yield {
+            "media_id": d,
+            "n_samples": ns,
+            "sample_rate": m["sample_rate"],
+            "sum_left": int(left.sum()),
+            "sum_right": int(right.sum()),
+            "min_left": int(left.min()),
+            "max_right": int(right.max()),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, n_samples long, sample_rate long, "
         "sum_left long, sum_right long, min_left long, max_right long",
     )
@@ -1724,10 +1690,8 @@ def multimodal_mpeg_audio_decode(spark, sf_dir):
     deliberately outside the oracle: the spec's Table 3-B.3 window is a
     printed table with no closed form (see its docstring)."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         B2A_SBLIMIT,
         b2a_steps_list,
@@ -1736,93 +1700,72 @@ def multimodal_mpeg_audio_decode(spark, sf_dir):
         encode_layer2_frame,
     )
 
-    def micro6(x: float) -> int:
-        # half-AWAY-FROM-ZERO at 1e-6, in exact integer micro-units —
-        # matches DuckDB round(x*1e6)::BIGINT; integer sums are then
-        # boundary-stable (float sums of 1e-6 multiples sit on 1e-4
-        # rounding boundaries and flip between engines)
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text, *_):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        if d % 2 == 0:  # Layer I
+            alloc = [dig[(sb * 7 + 1) % 16] % 8 for sb in range(32)]
+            active = [sb for sb in range(32) if alloc[sb]]
+            scf = [dig[(sb * 3 + 5) % 16] % 63 for sb in active]
+            codes = [
+                [
+                    (dig[(sb + j * 5) % 16] * 31 + j * 7 + d)
+                    % ((1 << (alloc[sb] + 1)) - 1)
+                    for j in range(12)
+                ]
+                for sb in active
+            ]
+            buf = encode_layer1_frame(alloc, scf, codes)
+            m = decode_mpeg1_audio(buf)
+            f = m["frames"][0]
+            assert m["layer"] == 1 and f["codes"] == codes
+            assert [t[0] for t in f["scf"]] == scf
+        else:  # Layer II, table 3-B.2a
+            def amax(sb):
+                return 3 if sb < 3 else (5 if sb < 23 else 2)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                if d % 2 == 0:  # Layer I
-                    alloc = [dig[(sb * 7 + 1) % 16] % 8 for sb in range(32)]
-                    active = [sb for sb in range(32) if alloc[sb]]
-                    scf = [dig[(sb * 3 + 5) % 16] % 63 for sb in active]
-                    codes = [
-                        [
-                            (dig[(sb + j * 5) % 16] * 31 + j * 7 + d)
-                            % ((1 << (alloc[sb] + 1)) - 1)
-                            for j in range(12)
-                        ]
-                        for sb in active
-                    ]
-                    buf = encode_layer1_frame(alloc, scf, codes)
-                    m = decode_mpeg1_audio(buf)
-                    f = m["frames"][0]
-                    assert m["layer"] == 1 and f["codes"] == codes
-                    assert [t[0] for t in f["scf"]] == scf
-                else:  # Layer II, table 3-B.2a
-                    def amax(sb):
-                        return 3 if sb < 3 else (5 if sb < 23 else 2)
-
-                    alloc = [
-                        dig[(sb * 5 + 2) % 16] % (amax(sb) + 1)
-                        for sb in range(B2A_SBLIMIT)
-                    ]
-                    active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
-                    scfsi = [dig[(sb * 3 + 4) % 16] % 4 for sb in active]
-                    stored = [
-                        (
-                            dig[(sb * 2 + 3) % 16] % 63,
-                            dig[(sb * 2 + 8) % 16] % 63,
-                            dig[(sb * 2 + 13) % 16] % 63,
-                        )
-                        for sb in active
-                    ]
-                    codes = []
-                    for sb in active:
-                        steps = b2a_steps_list(sb)[alloc[sb] - 1]
-                        codes.append(
-                            [
-                                (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11 + d)
-                                % steps
-                                for i in range(36)
-                            ]
-                        )
-                    buf = encode_layer2_frame(alloc, scfsi, stored, codes)
-                    m = decode_mpeg1_audio(buf)
-                    f = m["frames"][0]
-                    assert m["layer"] == 2 and f["codes"] == codes
-                    assert f["scfsi"] == scfsi
-                vals = [micro6(v) for row in f["values"] for v in row]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "layer": m["layer"],
-                        "n_active_sb": len(f["active"]),
-                        "n_active_samples": len(vals),
-                        "sum_val_micro": sum(vals),
-                        "max_abs_micro": max(abs(v) for v in vals),
-                    }
+            alloc = [
+                dig[(sb * 5 + 2) % 16] % (amax(sb) + 1)
+                for sb in range(B2A_SBLIMIT)
+            ]
+            active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
+            scfsi = [dig[(sb * 3 + 4) % 16] % 4 for sb in active]
+            stored = [
+                (
+                    dig[(sb * 2 + 3) % 16] % 63,
+                    dig[(sb * 2 + 8) % 16] % 63,
+                    dig[(sb * 2 + 13) % 16] % 63,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "layer", "n_active_sb", "n_active_samples",
-                    "sum_val_micro", "max_abs_micro",
-                ],
-            )
+                for sb in active
+            ]
+            codes = []
+            for sb in active:
+                steps = b2a_steps_list(sb)[alloc[sb] - 1]
+                codes.append(
+                    [
+                        (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11 + d)
+                        % steps
+                        for i in range(36)
+                    ]
+                )
+            buf = encode_layer2_frame(alloc, scfsi, stored, codes)
+            m = decode_mpeg1_audio(buf)
+            f = m["frames"][0]
+            assert m["layer"] == 2 and f["codes"] == codes
+            assert f["scfsi"] == scfsi
+        vals = [micro6(v) for row in f["values"] for v in row]
+        yield {
+            "media_id": d,
+            "layer": m["layer"],
+            "n_active_sb": len(f["active"]),
+            "n_active_samples": len(vals),
+            "sum_val_micro": sum(vals),
+            "max_abs_micro": max(abs(v) for v in vals),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, layer long, n_active_sb long, n_active_samples long, "
         "sum_val_micro long, max_abs_micro long",
     )
@@ -5388,37 +5331,25 @@ def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int
 
     import numpy as np
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                buf = encoder(d % wmod + 1, d % hmod + 1, seed)
-                meta, px = pixels_fn(buf)
-                mean = px.astype(np.float64).mean(axis=0)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "n_pixels": px.shape[0],
-                        "mean_r": float(mean[0]),
-                        "mean_g": float(mean[1]),
-                        "mean_b": float(mean[2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_pixels",
-                         "mean_r", "mean_g", "mean_b"],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        buf = encoder(d % wmod + 1, d % hmod + 1, seed)
+        meta, px = pixels_fn(buf)
+        mean = px.astype(np.float64).mean(axis=0)
+        yield {
+            "media_id": d,
+            "width": meta["width"],
+            "height": meta["height"],
+            "n_pixels": px.shape[0],
+            "mean_r": float(mean[0]),
+            "mean_g": float(mean[1]),
+            "mean_b": float(mean[2]),
+        }
 
     d = t(spark, sf_dir, "documents")
-    feats = d.mapInPandas(
-        run,
+    feats = map_rows(
+        d, run,
         "media_id long, width int, height int, n_pixels long, "
         "mean_r double, mean_g double, mean_b double",
     )
@@ -5582,33 +5513,22 @@ def multimodal_jpeg_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import encode_jpeg_gray_blocks, jpeg_gray_pixels
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                buf = encode_jpeg_gray_blocks(d % 5 + 1, d % 3 + 1, seed)
-                meta, px = jpeg_gray_pixels(buf)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "n_pixels": int(px.shape[0]),
-                        "mean_gray": float(px.astype(np.float64).mean()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_pixels", "mean_gray"],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        buf = encode_jpeg_gray_blocks(d % 5 + 1, d % 3 + 1, seed)
+        meta, px = jpeg_gray_pixels(buf)
+        yield {
+            "media_id": d,
+            "width": meta["width"],
+            "height": meta["height"],
+            "n_pixels": int(px.shape[0]),
+            "mean_gray": float(px.astype(np.float64).mean()),
+        }
 
     d = widen_table(spark, sf_dir, "documents")
-    feats = d.mapInPandas(
-        run,
+    feats = map_rows(
+        d, run,
         "media_id long, width int, height int, n_pixels long, mean_gray double",
     )
     return feats.select(
@@ -5653,38 +5573,27 @@ def multimodal_jpeg_progressive_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                wb, hb = d % 6 + 1, d % 5 + 1
-                vals = np.frombuffer(seed, dtype=np.uint8)
-                tiles = vals[np.arange(wb * hb) % 16].reshape(hb, wb)
-                img = np.repeat(np.repeat(tiles, 8, 0), 8, 1)
-                m = decode_jpeg(encode_jpeg(wb * 8, hb * 8, img, progressive=True))
-                assert m["progressive"]
-                px = m["pixels"].astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "width": m["width"],
-                        "height": m["height"],
-                        "n_pixels": int(px.size),
-                        "mean_gray": float(px.mean()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_pixels", "mean_gray"],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        wb, hb = d % 6 + 1, d % 5 + 1
+        vals = np.frombuffer(seed, dtype=np.uint8)
+        tiles = vals[np.arange(wb * hb) % 16].reshape(hb, wb)
+        img = np.repeat(np.repeat(tiles, 8, 0), 8, 1)
+        m = decode_jpeg(encode_jpeg(wb * 8, hb * 8, img, progressive=True))
+        assert m["progressive"]
+        px = m["pixels"].astype(np.float64)
+        yield {
+            "media_id": d,
+            "width": m["width"],
+            "height": m["height"],
+            "n_pixels": int(px.size),
+            "mean_gray": float(px.mean()),
+        }
 
     d = t(spark, sf_dir, "documents")
-    feats = d.mapInPandas(
-        run,
+    feats = map_rows(
+        d, run,
         "media_id long, width int, height int, n_pixels long, mean_gray double",
     )
     return feats.select(
@@ -5744,48 +5653,34 @@ def multimodal_jpeg_progressive_refine(spark, sf_dir):
         jpeg_gray_coeffs,
     )
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                wb, hb = d % 6 + 1, d % 5 + 1
-                n = wb * hb
-                dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
-                b_idx = np.arange(n)[:, None]
-                k_idx = np.arange(64)[None, :]
-                gate = dig[(b_idx * 7 + k_idx) % 16] % 11 == 0
-                val = dig[(b_idx + k_idx) % 16] % 7 - 3
-                blocks = np.where(gate, val, 0).astype(np.int32)
-                blocks[:, 0] = dig[np.arange(n) % 16] - 128
-                meta, got = jpeg_gray_coeffs(
-                    encode_jpeg_gray_coeff_blocks(wb, hb, blocks)
-                )
-                assert meta["progressive"] and meta["width"] == wb * 8
-                rows.append(
-                    {
-                        "media_id": d,
-                        "width": wb * 8,
-                        "height": hb * 8,
-                        "n_nonzero": int((got != 0).sum()),
-                        "sum_abs": int(np.abs(got).sum()),
-                        "sum_coef": int(got.sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height",
-                    "n_nonzero", "sum_abs", "sum_coef",
-                ],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        wb, hb = d % 6 + 1, d % 5 + 1
+        n = wb * hb
+        dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
+        b_idx = np.arange(n)[:, None]
+        k_idx = np.arange(64)[None, :]
+        gate = dig[(b_idx * 7 + k_idx) % 16] % 11 == 0
+        val = dig[(b_idx + k_idx) % 16] % 7 - 3
+        blocks = np.where(gate, val, 0).astype(np.int32)
+        blocks[:, 0] = dig[np.arange(n) % 16] - 128
+        meta, got = jpeg_gray_coeffs(
+            encode_jpeg_gray_coeff_blocks(wb, hb, blocks)
+        )
+        assert meta["progressive"] and meta["width"] == wb * 8
+        yield {
+            "media_id": d,
+            "width": wb * 8,
+            "height": hb * 8,
+            "n_nonzero": int((got != 0).sum()),
+            "sum_abs": int(np.abs(got).sum()),
+            "sum_coef": int(got.sum()),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, width int, height int, "
         "n_nonzero long, sum_abs long, sum_coef long",
     )
@@ -5833,43 +5728,31 @@ def multimodal_jpeg420_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                wb, hb = d % 3 + 1, d % 2 + 1
-                vals = np.frombuffer(seed, dtype=np.uint8)
-                tiles = vals[np.arange(wb * hb) % 16].reshape(hb, wb)
-                gray = np.repeat(np.repeat(tiles, 16, 0), 16, 1)
-                rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                m = decode_jpeg(
-                    encode_jpeg(wb * 16, hb * 16, rgb, subsampling="420")
-                )
-                px = m["pixels"].astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": d,
-                        "width": m["width"],
-                        "height": m["height"],
-                        "n_pixels": int(px.shape[0] * px.shape[1]),
-                        "mean_r": float(px[..., 0].mean()),
-                        "mean_g": float(px[..., 1].mean()),
-                        "mean_b": float(px[..., 2].mean()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_pixels",
-                         "mean_r", "mean_g", "mean_b"],
-            )
+    def run(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        wb, hb = d % 3 + 1, d % 2 + 1
+        vals = np.frombuffer(seed, dtype=np.uint8)
+        tiles = vals[np.arange(wb * hb) % 16].reshape(hb, wb)
+        gray = np.repeat(np.repeat(tiles, 16, 0), 16, 1)
+        rgb = np.repeat(gray[:, :, None], 3, axis=2)
+        m = decode_jpeg(
+            encode_jpeg(wb * 16, hb * 16, rgb, subsampling="420")
+        )
+        px = m["pixels"].astype(np.float64)
+        yield {
+            "media_id": d,
+            "width": m["width"],
+            "height": m["height"],
+            "n_pixels": int(px.shape[0] * px.shape[1]),
+            "mean_r": float(px[..., 0].mean()),
+            "mean_g": float(px[..., 1].mean()),
+            "mean_b": float(px[..., 2].mean()),
+        }
 
     d = t(spark, sf_dir, "documents")
-    feats = d.mapInPandas(
-        run,
+    feats = map_rows(
+        d, run,
         "media_id long, width int, height int, n_pixels long, "
         "mean_r double, mean_g double, mean_b double",
     )
@@ -5934,23 +5817,17 @@ def multimodal_resize_real(spark, sf_dir):
     from cam_etl_spark.multimodal import resize_media_real
     from cam_etl_spark.multimodal.codecs import encode_bmp, encode_png
 
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                if d % 2 == 0:
-                    buf = encode_bmp(d % 31 + 1, d % 17 + 1, seed)
-                else:
-                    buf = encode_png(d % 13 + 1, d % 11 + 1, seed)
-                rows.append({"media_id": d, "payload": buf})
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def gen(did, text, *_):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        if d % 2 == 0:
+            buf = encode_bmp(d % 31 + 1, d % 17 + 1, seed)
+        else:
+            buf = encode_png(d % 13 + 1, d % 11 + 1, seed)
+        yield {"media_id": d, "payload": buf}
 
     d = t(spark, sf_dir, "documents")
-    media = d.mapInPandas(gen, "media_id long, payload binary")
+    media = map_rows(d, gen, "media_id long, payload binary")
     out = resize_media_real(media, target_w=4, target_h=3)
     return out.select(
         "media_id", "format", "width", "height",
@@ -6377,10 +6254,8 @@ def multimodal_mpeg_stereo_decode(spark, sf_dir):
     sum_right and reds the row. One Arrow mapInPandas scan, zero
     shuffles at any corpus size."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         B2A_SBLIMIT,
         b2a_steps_list,
@@ -6389,123 +6264,106 @@ def multimodal_mpeg_stereo_decode(spark, sf_dir):
         encode_layer2_frame,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                if d % 2 == 0:  # Layer I stereo
-                    allocs = [
-                        [dig[(sb * 7 + ch * 3 + 1) % 16] % 6 for sb in range(32)]
-                        for ch in range(2)
+    def run(did, text, *_):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        if d % 2 == 0:  # Layer I stereo
+            allocs = [
+                [dig[(sb * 7 + ch * 3 + 1) % 16] % 6 for sb in range(32)]
+                for ch in range(2)
+            ]
+            active = [
+                [sb for sb in range(32) if allocs[ch][sb]]
+                for ch in range(2)
+            ]
+            scfs = [
+                [dig[(sb * 3 + ch * 5 + 5) % 16] % 63 for sb in active[ch]]
+                for ch in range(2)
+            ]
+            codes = [
+                [
+                    [
+                        (dig[(sb + j * 5 + ch * 9) % 16] * 31
+                         + j * 7 + ch * 13 + d)
+                        % ((1 << (allocs[ch][sb] + 1)) - 1)
+                        for j in range(12)
                     ]
-                    active = [
-                        [sb for sb in range(32) if allocs[ch][sb]]
-                        for ch in range(2)
-                    ]
-                    scfs = [
-                        [dig[(sb * 3 + ch * 5 + 5) % 16] % 63 for sb in active[ch]]
-                        for ch in range(2)
-                    ]
-                    codes = [
-                        [
-                            [
-                                (dig[(sb + j * 5 + ch * 9) % 16] * 31
-                                 + j * 7 + ch * 13 + d)
-                                % ((1 << (allocs[ch][sb] + 1)) - 1)
-                                for j in range(12)
-                            ]
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    buf = encode_layer1_frame(allocs, scfs, codes)
-                    m = decode_mpeg1_audio(buf)
-                    f = m["frames"][0]
-                    assert f["channels"] == 2 and f["codes"] == codes
-                    assert [[t[0] for t in c] for c in f["scf"]] == scfs
-                else:  # Layer II stereo, 384 kbps
-                    def amax(sb):
-                        return 3 if sb < 3 else (5 if sb < 23 else 2)
-
-                    allocs = [
-                        [
-                            dig[(sb * 5 + ch * 7 + 2) % 16] % (amax(sb) + 1)
-                            for sb in range(B2A_SBLIMIT)
-                        ]
-                        for ch in range(2)
-                    ]
-                    active = [
-                        [sb for sb in range(B2A_SBLIMIT) if allocs[ch][sb]]
-                        for ch in range(2)
-                    ]
-                    scfsi = [
-                        [dig[(sb * 3 + ch * 11 + 4) % 16] % 4 for sb in active[ch]]
-                        for ch in range(2)
-                    ]
-                    stored = [
-                        [
-                            (
-                                dig[(sb * 2 + ch * 3 + 3) % 16] % 63,
-                                dig[(sb * 2 + ch * 3 + 8) % 16] % 63,
-                                dig[(sb * 2 + ch * 3 + 13) % 16] % 63,
-                            )
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    codes = [
-                        [
-                            [
-                                (dig[(sb + i * 7 + ch * 5 + 1) % 16] * 29
-                                 + i * 11 + ch * 17 + d)
-                                % b2a_steps_list(sb)[allocs[ch][sb] - 1]
-                                for i in range(36)
-                            ]
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    buf = encode_layer2_frame(
-                        allocs, scfsi, stored, codes, bitrate_kbps=384
-                    )
-                    m = decode_mpeg1_audio(buf)
-                    f = m["frames"][0]
-                    assert f["channels"] == 2 and f["codes"] == codes
-                    assert f["scfsi"] == scfsi
-                ch_micro = [
-                    [micro6(v) for row in f["values"][ch] for v in row]
-                    for ch in range(2)
+                    for sb in active[ch]
                 ]
-                all_micro = ch_micro[0] + ch_micro[1]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "layer": m["layer"],
-                        "n_active_sb": sum(len(a) for a in f["active"]),
-                        "n_active_samples": len(all_micro),
-                        "sum_left_micro": sum(ch_micro[0]),
-                        "sum_right_micro": sum(ch_micro[1]),
-                        "max_abs_micro": max(abs(v) for v in all_micro),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "layer", "n_active_sb", "n_active_samples",
-                    "sum_left_micro", "sum_right_micro", "max_abs_micro",
-                ],
+                for ch in range(2)
+            ]
+            buf = encode_layer1_frame(allocs, scfs, codes)
+            m = decode_mpeg1_audio(buf)
+            f = m["frames"][0]
+            assert f["channels"] == 2 and f["codes"] == codes
+            assert [[t[0] for t in c] for c in f["scf"]] == scfs
+        else:  # Layer II stereo, 384 kbps
+            def amax(sb):
+                return 3 if sb < 3 else (5 if sb < 23 else 2)
+
+            allocs = [
+                [
+                    dig[(sb * 5 + ch * 7 + 2) % 16] % (amax(sb) + 1)
+                    for sb in range(B2A_SBLIMIT)
+                ]
+                for ch in range(2)
+            ]
+            active = [
+                [sb for sb in range(B2A_SBLIMIT) if allocs[ch][sb]]
+                for ch in range(2)
+            ]
+            scfsi = [
+                [dig[(sb * 3 + ch * 11 + 4) % 16] % 4 for sb in active[ch]]
+                for ch in range(2)
+            ]
+            stored = [
+                [
+                    (
+                        dig[(sb * 2 + ch * 3 + 3) % 16] % 63,
+                        dig[(sb * 2 + ch * 3 + 8) % 16] % 63,
+                        dig[(sb * 2 + ch * 3 + 13) % 16] % 63,
+                    )
+                    for sb in active[ch]
+                ]
+                for ch in range(2)
+            ]
+            codes = [
+                [
+                    [
+                        (dig[(sb + i * 7 + ch * 5 + 1) % 16] * 29
+                         + i * 11 + ch * 17 + d)
+                        % b2a_steps_list(sb)[allocs[ch][sb] - 1]
+                        for i in range(36)
+                    ]
+                    for sb in active[ch]
+                ]
+                for ch in range(2)
+            ]
+            buf = encode_layer2_frame(
+                allocs, scfsi, stored, codes, bitrate_kbps=384
             )
+            m = decode_mpeg1_audio(buf)
+            f = m["frames"][0]
+            assert f["channels"] == 2 and f["codes"] == codes
+            assert f["scfsi"] == scfsi
+        ch_micro = [
+            [micro6(v) for row in f["values"][ch] for v in row]
+            for ch in range(2)
+        ]
+        all_micro = ch_micro[0] + ch_micro[1]
+        yield {
+            "media_id": d,
+            "layer": m["layer"],
+            "n_active_sb": sum(len(a) for a in f["active"]),
+            "n_active_samples": len(all_micro),
+            "sum_left_micro": sum(ch_micro[0]),
+            "sum_right_micro": sum(ch_micro[1]),
+            "max_abs_micro": max(abs(v) for v in all_micro),
+        }
 
     d = t(spark, sf_dir, "documents")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, layer long, n_active_sb long, n_active_samples long, "
         "sum_left_micro long, sum_right_micro long, max_abs_micro long",
     )
@@ -6816,7 +6674,7 @@ def p10_parameterized_sql(spark, sf_dir):
 )
 def multimodal_mpeg_intensity_decode(spark, sf_dir):
     """JOINT-STEREO (intensity) and DUAL-CHANNEL MPEG-1 audio decode —
-    the round-7 mode extension under driver verification: docs cycle
+    the mode extension under driver verification: docs cycle
     through Layer I joint (bound 4/8/12/16 from the doc key), Layer II
     joint (table 3-B.2a at 256 kbps), and Layer II dual_channel
     (384 kbps). In the shared region (sb >= bound) ONE allocation and
@@ -6829,10 +6687,8 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
     inside the Arrow batch. One mapInPandas scan, zero shuffles at any
     corpus size."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         decode_mpeg1_audio,
         encode_layer1_frame,
@@ -6840,148 +6696,130 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
         l2_steps_list,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        v = d % 3
+        variant = ("l1_joint", "l2_joint", "l2_dual")[v]
+        layer = 1 if v == 0 else 2
+        sblimit = 32 if v == 0 else 27
+        bound = 0 if v == 2 else 4 * (1 + d % 4)
+        eb = sblimit if v == 2 else bound
 
-    def run(batches):
-        import pandas as pd
+        def ce_of(sb, ch):
+            return ch if sb < eb else 0
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                v = d % 3
-                variant = ("l1_joint", "l2_joint", "l2_dual")[v]
-                layer = 1 if v == 0 else 2
-                sblimit = 32 if v == 0 else 27
-                bound = 0 if v == 2 else 4 * (1 + d % 4)
-                eb = sblimit if v == 2 else bound
+        if layer == 1:
+            allocs = [
+                [dig[(sb * 7 + ce_of(sb, ch) * 3 + 1) % 16] % 6
+                 for sb in range(32)]
+                for ch in range(2)
+            ]
+        else:
+            def amax(sb):
+                return 2 if sb < 3 else (3 if sb < 23 else 2)
 
-                def ce_of(sb, ch):
-                    return ch if sb < eb else 0
-
-                if layer == 1:
-                    allocs = [
-                        [dig[(sb * 7 + ce_of(sb, ch) * 3 + 1) % 16] % 6
-                         for sb in range(32)]
-                        for ch in range(2)
+            allocs = [
+                [dig[(sb * 5 + ce_of(sb, ch) * 7 + 2) % 16]
+                 % (amax(sb) + 1) for sb in range(sblimit)]
+                for ch in range(2)
+            ]
+        active = [
+            [sb for sb in range(sblimit) if allocs[ch][sb]]
+            for ch in range(2)
+        ]
+        if layer == 1:
+            scfs = [
+                [dig[(sb * 3 + ch * 5 + 5) % 16] % 63
+                 for sb in active[ch]]
+                for ch in range(2)
+            ]
+            codes = [
+                [
+                    [
+                        (dig[(sb + j * 5 + ce_of(sb, ch) * 9) % 16]
+                         * 31 + j * 7 + ce_of(sb, ch) * 13 + d)
+                        % ((1 << (allocs[ch][sb] + 1)) - 1)
+                        for j in range(12)
                     ]
-                else:
-                    def amax(sb):
-                        return 2 if sb < 3 else (3 if sb < 23 else 2)
-
-                    allocs = [
-                        [dig[(sb * 5 + ce_of(sb, ch) * 7 + 2) % 16]
-                         % (amax(sb) + 1) for sb in range(sblimit)]
-                        for ch in range(2)
-                    ]
-                active = [
-                    [sb for sb in range(sblimit) if allocs[ch][sb]]
-                    for ch in range(2)
+                    for sb in active[ch]
                 ]
-                if layer == 1:
-                    scfs = [
-                        [dig[(sb * 3 + ch * 5 + 5) % 16] % 63
-                         for sb in active[ch]]
-                        for ch in range(2)
-                    ]
-                    codes = [
-                        [
-                            [
-                                (dig[(sb + j * 5 + ce_of(sb, ch) * 9) % 16]
-                                 * 31 + j * 7 + ce_of(sb, ch) * 13 + d)
-                                % ((1 << (allocs[ch][sb] + 1)) - 1)
-                                for j in range(12)
-                            ]
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    buf = encode_layer1_frame(
-                        allocs, scfs, codes, sample_rate=32000,
-                        bitrate_kbps=448, joint_bound=bound,
-                    )
-                else:
-                    scfsi = [
-                        [dig[(sb * 3 + ch * 11 + 4) % 16] % 4
-                         for sb in active[ch]]
-                        for ch in range(2)
-                    ]
-                    stored = [
-                        [
-                            (
-                                dig[(sb * 2 + ch * 3 + 3) % 16] % 63,
-                                dig[(sb * 2 + ch * 3 + 8) % 16] % 63,
-                                dig[(sb * 2 + ch * 3 + 13) % 16] % 63,
-                            )
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    codes = [
-                        [
-                            [
-                                (dig[(sb + i * 7 + ce_of(sb, ch) * 5 + 1)
-                                     % 16] * 29
-                                 + i * 11 + ce_of(sb, ch) * 17 + d)
-                                % l2_steps_list("a", sb)[allocs[ch][sb] - 1]
-                                for i in range(36)
-                            ]
-                            for sb in active[ch]
-                        ]
-                        for ch in range(2)
-                    ]
-                    buf = encode_layer2_frame(
-                        allocs, scfsi, stored, codes, sample_rate=48000,
-                        bitrate_kbps=384 if v == 2 else 256,
-                        joint_bound=None if v == 2 else bound,
-                        dual=(v == 2),
-                    )
-                m = decode_mpeg1_audio(buf)
-                f = m["frames"][0]
-                assert f["channels"] == 2 and f["alloc"] == allocs
-                assert f["codes"] == codes
-                assert f["mode"] == (
-                    "dual_channel" if v == 2 else "joint_stereo"
-                )
-                assert f.get("bound") == (None if v == 2 else bound)
-                if layer == 1:
-                    assert [[t[0] for t in c] for c in f["scf"]] == scfs
-                else:
-                    assert f["scfsi"] == scfsi
-                ch_micro = [
-                    [micro6(x) for row in f["values"][ch] for x in row]
-                    for ch in range(2)
-                ]
-                all_micro = ch_micro[0] + ch_micro[1]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "variant": variant,
-                        "layer": layer,
-                        "bound": bound,
-                        "n_active_sb": sum(len(a) for a in active),
-                        "n_active_samples": len(all_micro),
-                        "sum_left_micro": sum(ch_micro[0]),
-                        "sum_right_micro": sum(ch_micro[1]),
-                        "max_abs_micro": (
-                            max(abs(x) for x in all_micro) if all_micro else 0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "variant", "layer", "bound", "n_active_sb",
-                    "n_active_samples", "sum_left_micro", "sum_right_micro",
-                    "max_abs_micro",
-                ],
+                for ch in range(2)
+            ]
+            buf = encode_layer1_frame(
+                allocs, scfs, codes, sample_rate=32000,
+                bitrate_kbps=448, joint_bound=bound,
             )
+        else:
+            scfsi = [
+                [dig[(sb * 3 + ch * 11 + 4) % 16] % 4
+                 for sb in active[ch]]
+                for ch in range(2)
+            ]
+            stored = [
+                [
+                    (
+                        dig[(sb * 2 + ch * 3 + 3) % 16] % 63,
+                        dig[(sb * 2 + ch * 3 + 8) % 16] % 63,
+                        dig[(sb * 2 + ch * 3 + 13) % 16] % 63,
+                    )
+                    for sb in active[ch]
+                ]
+                for ch in range(2)
+            ]
+            codes = [
+                [
+                    [
+                        (dig[(sb + i * 7 + ce_of(sb, ch) * 5 + 1)
+                             % 16] * 29
+                         + i * 11 + ce_of(sb, ch) * 17 + d)
+                        % l2_steps_list("a", sb)[allocs[ch][sb] - 1]
+                        for i in range(36)
+                    ]
+                    for sb in active[ch]
+                ]
+                for ch in range(2)
+            ]
+            buf = encode_layer2_frame(
+                allocs, scfsi, stored, codes, sample_rate=48000,
+                bitrate_kbps=384 if v == 2 else 256,
+                joint_bound=None if v == 2 else bound,
+                dual=(v == 2),
+            )
+        m = decode_mpeg1_audio(buf)
+        f = m["frames"][0]
+        assert f["channels"] == 2 and f["alloc"] == allocs
+        assert f["codes"] == codes
+        assert f["mode"] == (
+            "dual_channel" if v == 2 else "joint_stereo"
+        )
+        assert f.get("bound") == (None if v == 2 else bound)
+        if layer == 1:
+            assert [[t[0] for t in c] for c in f["scf"]] == scfs
+        else:
+            assert f["scfsi"] == scfsi
+        ch_micro = [
+            [micro6(x) for row in f["values"][ch] for x in row]
+            for ch in range(2)
+        ]
+        all_micro = ch_micro[0] + ch_micro[1]
+        yield {
+            "media_id": d,
+            "variant": variant,
+            "layer": layer,
+            "bound": bound,
+            "n_active_sb": sum(len(a) for a in active),
+            "n_active_samples": len(all_micro),
+            "sum_left_micro": sum(ch_micro[0]),
+            "sum_right_micro": sum(ch_micro[1]),
+            "max_abs_micro": (
+                max(abs(x) for x in all_micro) if all_micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, variant string, layer long, bound long, "
         "n_active_sb long, n_active_samples long, sum_left_micro long, "
         "sum_right_micro long, max_abs_micro long",
@@ -7068,7 +6906,7 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
           "allocation-tables"],
 )
 def multimodal_mpeg_l2_lowrate_decode(spark, sf_dir):
-    """Layer II allocation tables 3-B.2b/c/d — the round-7 table
+    """Layer II allocation tables 3-B.2b/c/d — the table
     extension under driver verification: docs cycle through table b
     (32 kHz mono at 192 kbps, sblimit 30), table c (48 kHz mono at
     48 kbps, sblimit 8), and table d (32 kHz mono at 48 kbps, sblimit
@@ -7081,10 +6919,8 @@ def multimodal_mpeg_l2_lowrate_decode(spark, sf_dir):
     lists. Decoded table id, allocations, scfsi, and codes are asserted
     bit-exact in the Arrow batch. One mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         L2_SBLIMIT,
         decode_mpeg1_audio,
@@ -7092,88 +6928,70 @@ def multimodal_mpeg_l2_lowrate_decode(spark, sf_dir):
         l2_steps_list,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        tb = ("b", "c", "d")[d % 3]
+        rate = 48000 if tb == "c" else 32000
+        kbps = 192 if tb == "b" else 48
+        sblimit = L2_SBLIMIT[tb]
 
-    def run(batches):
-        import pandas as pd
+        def amax(sb):
+            if tb == "b":
+                return 3 if sb < 3 else (5 if sb < 23 else 2)
+            return 3 if sb < 2 else 2
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                tb = ("b", "c", "d")[d % 3]
-                rate = 48000 if tb == "c" else 32000
-                kbps = 192 if tb == "b" else 48
-                sblimit = L2_SBLIMIT[tb]
-
-                def amax(sb):
-                    if tb == "b":
-                        return 3 if sb < 3 else (5 if sb < 23 else 2)
-                    return 3 if sb < 2 else 2
-
-                alloc = [
-                    dig[(sb * 5 + 2) % 16] % (amax(sb) + 1)
-                    for sb in range(sblimit)
-                ]
-                active = [sb for sb in range(sblimit) if alloc[sb]]
-                scfsi = [dig[(sb * 3 + 4) % 16] % 4 for sb in active]
-                stored = [
-                    (
-                        dig[(sb * 2 + 3) % 16] % 63,
-                        dig[(sb * 2 + 8) % 16] % 63,
-                        dig[(sb * 2 + 13) % 16] % 63,
-                    )
-                    for sb in active
-                ]
-                codes = [
-                    [
-                        (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11 + d)
-                        % l2_steps_list(tb, sb)[alloc[sb] - 1]
-                        for i in range(36)
-                    ]
-                    for sb in active
-                ]
-                buf = encode_layer2_frame(
-                    alloc, scfsi, stored, codes,
-                    sample_rate=rate, bitrate_kbps=kbps,
-                )
-                m = decode_mpeg1_audio(buf)
-                f = m["frames"][0]
-                assert m["sample_rate"] == rate
-                assert m["bitrate_kbps"] == kbps
-                assert f["table"] == tb and f["channels"] == 1
-                assert f["alloc"] == alloc and f["codes"] == codes
-                assert f["scfsi"] == scfsi
-                micro = [micro6(x) for row in f["values"] for x in row]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "table_id": tb,
-                        "sblimit": sblimit,
-                        "sample_rate": rate,
-                        "bitrate_kbps": kbps,
-                        "n_active_sb": len(active),
-                        "n_active_samples": len(micro),
-                        "sum_micro": sum(micro),
-                        "max_abs_micro": (
-                            max(abs(x) for x in micro) if micro else 0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "table_id", "sblimit", "sample_rate",
-                    "bitrate_kbps", "n_active_sb", "n_active_samples",
-                    "sum_micro", "max_abs_micro",
-                ],
+        alloc = [
+            dig[(sb * 5 + 2) % 16] % (amax(sb) + 1)
+            for sb in range(sblimit)
+        ]
+        active = [sb for sb in range(sblimit) if alloc[sb]]
+        scfsi = [dig[(sb * 3 + 4) % 16] % 4 for sb in active]
+        stored = [
+            (
+                dig[(sb * 2 + 3) % 16] % 63,
+                dig[(sb * 2 + 8) % 16] % 63,
+                dig[(sb * 2 + 13) % 16] % 63,
             )
+            for sb in active
+        ]
+        codes = [
+            [
+                (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11 + d)
+                % l2_steps_list(tb, sb)[alloc[sb] - 1]
+                for i in range(36)
+            ]
+            for sb in active
+        ]
+        buf = encode_layer2_frame(
+            alloc, scfsi, stored, codes,
+            sample_rate=rate, bitrate_kbps=kbps,
+        )
+        m = decode_mpeg1_audio(buf)
+        f = m["frames"][0]
+        assert m["sample_rate"] == rate
+        assert m["bitrate_kbps"] == kbps
+        assert f["table"] == tb and f["channels"] == 1
+        assert f["alloc"] == alloc and f["codes"] == codes
+        assert f["scfsi"] == scfsi
+        micro = [micro6(x) for row in f["values"] for x in row]
+        yield {
+            "media_id": d,
+            "table_id": tb,
+            "sblimit": sblimit,
+            "sample_rate": rate,
+            "bitrate_kbps": kbps,
+            "n_active_sb": len(active),
+            "n_active_samples": len(micro),
+            "sum_micro": sum(micro),
+            "max_abs_micro": (
+                max(abs(x) for x in micro) if micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, table_id string, sblimit long, sample_rate long, "
         "bitrate_kbps long, n_active_sb long, n_active_samples long, "
         "sum_micro long, max_abs_micro long",
@@ -7211,7 +7029,7 @@ def multimodal_mpeg_l2_lowrate_decode(spark, sf_dir):
     tags=["multimodal", "decode", "flac", "audio", "multichannel"],
 )
 def multimodal_flac_multichannel_decode(spark, sf_dir):
-    """MULTICHANNEL FLAC decode (3-8 channels — the round-8 extension
+    """MULTICHANNEL FLAC decode (3-8 channels — the extension
     closing the former >2ch boundary): digest-derived int16 signals per
     channel are FLAC-encoded under the independent-channel assignment
     codes 0b0010-0b0111 (the spec defines no decorrelation beyond
@@ -7228,60 +7046,46 @@ def multimodal_flac_multichannel_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.flac import decode_flac, encode_flac
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
-                ns = d % 240 + 4
-                nch = 3 + d % 6
-                j = np.arange(ns)
-                chans = []
-                for c in range(nch):
-                    raw = (dig[(2 * j + 3 * c) % 16]
-                           + 256 * dig[(2 * j + 5 * c + 1) % 16])
-                    chans.append(np.where(raw >= 32768, raw - 65536, raw))
-                lpc = d % 5 or None  # rotate None,1,2,3,4
-                buf = encode_flac(
-                    [[int(v) for v in ch] for ch in chans],
-                    48000, lpc_order=lpc,
-                )
-                m = decode_flac(buf)
-                got = np.array(m["samples"], dtype=np.int64)
-                assert m["channels"] == nch and m["n_samples"] == ns
-                for c in range(nch):
-                    assert np.array_equal(got[c::nch], chans[c]), (
-                        f"channel {c} mismatch doc {d}"
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_channels": nch,
-                        "n_samples": ns,
-                        "sum_all": int(sum(ch.sum() for ch in chans)),
-                        "min_all": int(min(ch.min() for ch in chans)),
-                        "max_all": int(max(ch.max() for ch in chans)),
-                        "weighted_sum": int(
-                            sum((c + 1) * ch.sum()
-                                for c, ch in enumerate(chans))
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_channels", "n_samples", "sum_all",
-                    "min_all", "max_all", "weighted_sum",
-                ],
+    def run(did, text):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
+        ns = d % 240 + 4
+        nch = 3 + d % 6
+        j = np.arange(ns)
+        chans = []
+        for c in range(nch):
+            raw = (dig[(2 * j + 3 * c) % 16]
+                   + 256 * dig[(2 * j + 5 * c + 1) % 16])
+            chans.append(np.where(raw >= 32768, raw - 65536, raw))
+        lpc = d % 5 or None  # rotate None,1,2,3,4
+        buf = encode_flac(
+            [[int(v) for v in ch] for ch in chans],
+            48000, lpc_order=lpc,
+        )
+        m = decode_flac(buf)
+        got = np.array(m["samples"], dtype=np.int64)
+        assert m["channels"] == nch and m["n_samples"] == ns
+        for c in range(nch):
+            assert np.array_equal(got[c::nch], chans[c]), (
+                f"channel {c} mismatch doc {d}"
             )
+        yield {
+            "media_id": d,
+            "n_channels": nch,
+            "n_samples": ns,
+            "sum_all": int(sum(ch.sum() for ch in chans)),
+            "min_all": int(min(ch.min() for ch in chans)),
+            "max_all": int(max(ch.max() for ch in chans)),
+            "weighted_sum": int(
+                sum((c + 1) * ch.sum()
+                    for c, ch in enumerate(chans))
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, n_channels long, n_samples long, sum_all long, "
         "min_all long, max_all long, weighted_sum long",
     )
@@ -7375,7 +7179,7 @@ def multimodal_flac_multichannel_decode(spark, sf_dir):
     tags=["multimodal", "decode", "mpeg", "audio", "padding", "44100"],
 )
 def multimodal_mpeg_441_padding_decode(spark, sf_dir):
-    """44.1 kHz MPEG-1 audio with the PADDING bit — the round-8 slot
+    """44.1 kHz MPEG-1 audio with the PADDING bit — the slot
     extension: no 44.1 kHz bitrate yields an integer slot count, so
     every 44.1 kHz stream needs per-frame padding, which until now was
     rejected. Each doc encodes TWO back-to-back frames (Layer I mono at
@@ -7388,10 +7192,8 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
     aggregate in integer micro-units against the closed-form SQL
     replay. One Arrow mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         decode_mpeg1_audio,
         encode_layer1_frame,
@@ -7399,112 +7201,94 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
         l2_steps_list,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                layer = 1 if d % 2 == 0 else 2
-                kbps = 256 if layer == 1 else 128
-                sblimit = 32 if layer == 1 else 30
-                pads = [bool((d >> 1) & 1), bool((d >> 2) & 1)]
-                bufs = []
-                for f in range(2):
-                    if layer == 1:
-                        alloc = [dig[(sb * 7 + f * 5 + 1) % 16] % 4
-                                 for sb in range(32)]
-                        active = [sb for sb in range(32) if alloc[sb]]
-                        scf = [dig[(sb * 3 + f * 7 + 5) % 16] % 63
-                               for sb in active]
-                        codes = [
-                            [
-                                (dig[(sb + j * 5 + f * 3) % 16] * 31
-                                 + j * 7 + f * 19 + d)
-                                % ((1 << (alloc[sb] + 1)) - 1)
-                                for j in range(12)
-                            ]
-                            for sb in active
-                        ]
-                        bufs.append(encode_layer1_frame(
-                            alloc, scf, codes, sample_rate=44100,
-                            bitrate_kbps=256, padding=pads[f],
-                        ))
-                    else:
-                        alloc = [dig[(sb * 5 + f * 3 + 2) % 16] % 3
-                                 for sb in range(sblimit)]
-                        active = [sb for sb in range(sblimit) if alloc[sb]]
-                        scfsi = [dig[(sb * 3 + f * 5 + 4) % 16] % 4
-                                 for sb in active]
-                        stored = [
-                            (
-                                dig[(sb * 2 + f * 7 + 3) % 16] % 63,
-                                dig[(sb * 2 + f * 7 + 8) % 16] % 63,
-                                dig[(sb * 2 + f * 7 + 13) % 16] % 63,
-                            )
-                            for sb in active
-                        ]
-                        codes = [
-                            [
-                                (dig[(sb + i * 7 + f * 3 + 1) % 16] * 29
-                                 + i * 11 + f * 13 + d)
-                                % l2_steps_list("b", sb)[alloc[sb] - 1]
-                                for i in range(36)
-                            ]
-                            for sb in active
-                        ]
-                        bufs.append(encode_layer2_frame(
-                            alloc, scfsi, stored, codes, sample_rate=44100,
-                            bitrate_kbps=128, padding=pads[f],
-                        ))
-                stream = bufs[0] + bufs[1]
-                m = decode_mpeg1_audio(stream)
-                assert m["n_frames"] == 2
-                assert m["sample_rate"] == 44100
-                assert [fr["padding"] for fr in m["frames"]] == pads
-                if layer == 2:
-                    assert all(fr["table"] == "b" for fr in m["frames"])
-                micro = [
-                    micro6(x)
-                    for fr in m["frames"]
-                    for row in fr["values"] for x in row
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        layer = 1 if d % 2 == 0 else 2
+        kbps = 256 if layer == 1 else 128
+        sblimit = 32 if layer == 1 else 30
+        pads = [bool((d >> 1) & 1), bool((d >> 2) & 1)]
+        bufs = []
+        for f in range(2):
+            if layer == 1:
+                alloc = [dig[(sb * 7 + f * 5 + 1) % 16] % 4
+                         for sb in range(32)]
+                active = [sb for sb in range(32) if alloc[sb]]
+                scf = [dig[(sb * 3 + f * 7 + 5) % 16] % 63
+                       for sb in active]
+                codes = [
+                    [
+                        (dig[(sb + j * 5 + f * 3) % 16] * 31
+                         + j * 7 + f * 19 + d)
+                        % ((1 << (alloc[sb] + 1)) - 1)
+                        for j in range(12)
+                    ]
+                    for sb in active
                 ]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "layer": layer,
-                        "sample_rate": 44100,
-                        "bitrate_kbps": kbps,
-                        "n_frames": 2,
-                        "n_padded": sum(pads),
-                        "stream_bytes": len(stream),
-                        "n_active_sb": sum(
-                            len(fr["active"]) for fr in m["frames"]
-                        ),
-                        "n_active_samples": len(micro),
-                        "sum_micro": sum(micro),
-                        "max_abs_micro": (
-                            max(abs(x) for x in micro) if micro else 0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "layer", "sample_rate", "bitrate_kbps",
-                    "n_frames", "n_padded", "stream_bytes", "n_active_sb",
-                    "n_active_samples", "sum_micro", "max_abs_micro",
-                ],
-            )
+                bufs.append(encode_layer1_frame(
+                    alloc, scf, codes, sample_rate=44100,
+                    bitrate_kbps=256, padding=pads[f],
+                ))
+            else:
+                alloc = [dig[(sb * 5 + f * 3 + 2) % 16] % 3
+                         for sb in range(sblimit)]
+                active = [sb for sb in range(sblimit) if alloc[sb]]
+                scfsi = [dig[(sb * 3 + f * 5 + 4) % 16] % 4
+                         for sb in active]
+                stored = [
+                    (
+                        dig[(sb * 2 + f * 7 + 3) % 16] % 63,
+                        dig[(sb * 2 + f * 7 + 8) % 16] % 63,
+                        dig[(sb * 2 + f * 7 + 13) % 16] % 63,
+                    )
+                    for sb in active
+                ]
+                codes = [
+                    [
+                        (dig[(sb + i * 7 + f * 3 + 1) % 16] * 29
+                         + i * 11 + f * 13 + d)
+                        % l2_steps_list("b", sb)[alloc[sb] - 1]
+                        for i in range(36)
+                    ]
+                    for sb in active
+                ]
+                bufs.append(encode_layer2_frame(
+                    alloc, scfsi, stored, codes, sample_rate=44100,
+                    bitrate_kbps=128, padding=pads[f],
+                ))
+        stream = bufs[0] + bufs[1]
+        m = decode_mpeg1_audio(stream)
+        assert m["n_frames"] == 2
+        assert m["sample_rate"] == 44100
+        assert [fr["padding"] for fr in m["frames"]] == pads
+        if layer == 2:
+            assert all(fr["table"] == "b" for fr in m["frames"])
+        micro = [
+            micro6(x)
+            for fr in m["frames"]
+            for row in fr["values"] for x in row
+        ]
+        yield {
+            "media_id": d,
+            "layer": layer,
+            "sample_rate": 44100,
+            "bitrate_kbps": kbps,
+            "n_frames": 2,
+            "n_padded": sum(pads),
+            "stream_bytes": len(stream),
+            "n_active_sb": sum(
+                len(fr["active"]) for fr in m["frames"]
+            ),
+            "n_active_samples": len(micro),
+            "sum_micro": sum(micro),
+            "max_abs_micro": (
+                max(abs(x) for x in micro) if micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, layer long, sample_rate long, bitrate_kbps long, "
         "n_frames long, n_padded long, stream_bytes long, n_active_sb long, "
         "n_active_samples long, sum_micro long, max_abs_micro long",
@@ -7599,7 +7383,7 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
 def multimodal_mpeg_crc_decode(spark, sf_dir):
     """CRC-PROTECTED MPEG-1 audio (§2.4.3.1 crc_check, polynomial
     X^16+X^15+X^2+1 over header bytes 2-3 + the allocation/scfsi
-    prefix) — the round-8 protection extension: every doc encodes one
+    prefix) — the protection extension: every doc encodes one
     protected frame (Layer I mono at 448 kbps for even docs, Layer II
     table-a mono at 192 kbps for odd docs), decodes it through the CRC
     verification path, AND asserts in-batch that flipping one
@@ -7609,10 +7393,8 @@ def multimodal_mpeg_crc_decode(spark, sf_dir):
     closed-form SQL replay (the CRC changes framing, never values).
     One Arrow mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         B2A_SBLIMIT,
         b2a_steps_list,
@@ -7621,101 +7403,84 @@ def multimodal_mpeg_crc_decode(spark, sf_dir):
         encode_layer2_frame,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        if d % 2 == 0:  # Layer I mono, protected
+            layer = 1
+            alloc = [dig[(sb * 11 + 2) % 16] % 6 for sb in range(32)]
+            active = [sb for sb in range(32) if alloc[sb]]
+            scf = [dig[(sb * 5 + 3) % 16] % 63 for sb in active]
+            codes = [
+                [
+                    (dig[(sb + j * 3 + 4) % 16] * 23 + j * 5 + d)
+                    % ((1 << (alloc[sb] + 1)) - 1)
+                    for j in range(12)
+                ]
+                for sb in active
+            ]
+            buf = encode_layer1_frame(alloc, scf, codes, crc=True)
+        else:  # Layer II table-a mono, protected
+            layer = 2
 
-    def run(batches):
-        import pandas as pd
+            def amax(sb):
+                return 3 if sb < 3 else (5 if sb < 23 else 2)
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                if d % 2 == 0:  # Layer I mono, protected
-                    layer = 1
-                    alloc = [dig[(sb * 11 + 2) % 16] % 6 for sb in range(32)]
-                    active = [sb for sb in range(32) if alloc[sb]]
-                    scf = [dig[(sb * 5 + 3) % 16] % 63 for sb in active]
-                    codes = [
-                        [
-                            (dig[(sb + j * 3 + 4) % 16] * 23 + j * 5 + d)
-                            % ((1 << (alloc[sb] + 1)) - 1)
-                            for j in range(12)
-                        ]
-                        for sb in active
-                    ]
-                    buf = encode_layer1_frame(alloc, scf, codes, crc=True)
-                else:  # Layer II table-a mono, protected
-                    layer = 2
-
-                    def amax(sb):
-                        return 3 if sb < 3 else (5 if sb < 23 else 2)
-
-                    alloc = [
-                        dig[(sb * 7 + 1) % 16] % (amax(sb) + 1)
-                        for sb in range(B2A_SBLIMIT)
-                    ]
-                    active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
-                    scfsi = [dig[(sb * 5 + 6) % 16] % 4 for sb in active]
-                    stored = [
-                        (
-                            dig[(sb * 3 + 2) % 16] % 63,
-                            dig[(sb * 3 + 7) % 16] % 63,
-                            dig[(sb * 3 + 12) % 16] % 63,
-                        )
-                        for sb in active
-                    ]
-                    codes = [
-                        [
-                            (dig[(sb + i * 5 + 3) % 16] * 27 + i * 7 + d)
-                            % b2a_steps_list(sb)[alloc[sb] - 1]
-                            for i in range(36)
-                        ]
-                        for sb in active
-                    ]
-                    buf = encode_layer2_frame(
-                        alloc, scfsi, stored, codes, bitrate_kbps=192,
-                        crc=True,
-                    )
-                m = decode_mpeg1_audio(buf)
-                f = m["frames"][0]
-                assert f["protected"] and f["codes"] == codes
-                if active:  # corruption must FAIL the crc, loudly
-                    bad = bytearray(buf)
-                    bad[6] ^= 0x80  # first allocation bit (CRC-covered)
-                    try:
-                        decode_mpeg1_audio(bytes(bad))
-                        raise AssertionError(
-                            f"doc {d}: corrupted frame decoded silently"
-                        )
-                    except ValueError as err:
-                        assert "crc_check mismatch" in str(err), err
-                micro = [micro6(x) for row in f["values"] for x in row]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "layer": layer,
-                        "protected": 1,
-                        "n_active_sb": len(active),
-                        "n_active_samples": len(micro),
-                        "sum_micro": sum(micro),
-                        "max_abs_micro": (
-                            max(abs(x) for x in micro) if micro else 0
-                        ),
-                    }
+            alloc = [
+                dig[(sb * 7 + 1) % 16] % (amax(sb) + 1)
+                for sb in range(B2A_SBLIMIT)
+            ]
+            active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
+            scfsi = [dig[(sb * 5 + 6) % 16] % 4 for sb in active]
+            stored = [
+                (
+                    dig[(sb * 3 + 2) % 16] % 63,
+                    dig[(sb * 3 + 7) % 16] % 63,
+                    dig[(sb * 3 + 12) % 16] % 63,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "layer", "protected", "n_active_sb",
-                    "n_active_samples", "sum_micro", "max_abs_micro",
-                ],
+                for sb in active
+            ]
+            codes = [
+                [
+                    (dig[(sb + i * 5 + 3) % 16] * 27 + i * 7 + d)
+                    % b2a_steps_list(sb)[alloc[sb] - 1]
+                    for i in range(36)
+                ]
+                for sb in active
+            ]
+            buf = encode_layer2_frame(
+                alloc, scfsi, stored, codes, bitrate_kbps=192,
+                crc=True,
             )
+        m = decode_mpeg1_audio(buf)
+        f = m["frames"][0]
+        assert f["protected"] and f["codes"] == codes
+        if active:  # corruption must FAIL the crc, loudly
+            bad = bytearray(buf)
+            bad[6] ^= 0x80  # first allocation bit (CRC-covered)
+            try:
+                decode_mpeg1_audio(bytes(bad))
+                raise AssertionError(
+                    f"doc {d}: corrupted frame decoded silently"
+                )
+            except ValueError as err:
+                assert "crc_check mismatch" in str(err), err
+        micro = [micro6(x) for row in f["values"] for x in row]
+        yield {
+            "media_id": d,
+            "layer": layer,
+            "protected": 1,
+            "n_active_sb": len(active),
+            "n_active_samples": len(micro),
+            "sum_micro": sum(micro),
+            "max_abs_micro": (
+                max(abs(x) for x in micro) if micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, layer long, protected long, n_active_sb long, "
         "n_active_samples long, sum_micro long, max_abs_micro long",
     )
@@ -7792,7 +7557,7 @@ def multimodal_mpeg_crc_decode(spark, sf_dir):
     tags=["multimodal", "decode", "mpeg", "audio", "free-format"],
 )
 def multimodal_mpeg_freeformat_decode(spark, sf_dir):
-    """FREE-FORMAT MPEG-1 audio (bitrate_index 0) — the round-8 sizing
+    """FREE-FORMAT MPEG-1 audio (bitrate_index 0) — the sizing
     extension: every doc is a THREE-frame Layer II mono stream at
     48 kHz with a caller-chosen 440-byte frame (implied 146.67 kbps →
     table 3-B.2a). Frame 0 is silent (all-zero allocation — provably no
@@ -7804,10 +7569,8 @@ def multimodal_mpeg_freeformat_decode(spark, sf_dir):
     integer micro-units against the closed-form replay. One Arrow
     mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         B2A_SBLIMIT,
         decode_mpeg1_audio,
@@ -7815,95 +7578,77 @@ def multimodal_mpeg_freeformat_decode(spark, sf_dir):
         l2_steps_list,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        pads = [False, bool((d >> 1) & 1), bool((d >> 2) & 1)]
+        bufs = [encode_layer2_frame(
+            [0] * B2A_SBLIMIT, [], [], [],
+            sample_rate=48000, free_format_bytes=440,
+        )]
+        for f in (1, 2):
+            def amax(sb):
+                return 2 if sb < 3 else (3 if sb < 23 else 2)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                pads = [False, bool((d >> 1) & 1), bool((d >> 2) & 1)]
-                bufs = [encode_layer2_frame(
-                    [0] * B2A_SBLIMIT, [], [], [],
-                    sample_rate=48000, free_format_bytes=440,
-                )]
-                for f in (1, 2):
-                    def amax(sb):
-                        return 2 if sb < 3 else (3 if sb < 23 else 2)
-
-                    alloc = [
-                        dig[(sb * 5 + f * 7 + 2) % 16] % (amax(sb) + 1)
-                        for sb in range(B2A_SBLIMIT)
-                    ]
-                    active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
-                    scfsi = [dig[(sb * 3 + f * 11 + 4) % 16] % 4
-                             for sb in active]
-                    stored = [
-                        (
-                            dig[(sb * 2 + f * 5 + 3) % 16] % 63,
-                            dig[(sb * 2 + f * 5 + 8) % 16] % 63,
-                            dig[(sb * 2 + f * 5 + 13) % 16] % 63,
-                        )
-                        for sb in active
-                    ]
-                    codes = [
-                        [
-                            (dig[(sb + i * 7 + f * 9 + 1) % 16] * 29
-                             + i * 11 + f * 17 + d)
-                            % l2_steps_list("a", sb)[alloc[sb] - 1]
-                            for i in range(36)
-                        ]
-                        for sb in active
-                    ]
-                    bufs.append(encode_layer2_frame(
-                        alloc, scfsi, stored, codes, sample_rate=48000,
-                        free_format_bytes=440, padding=pads[f],
-                    ))
-                stream = b"".join(bufs)
-                m = decode_mpeg1_audio(stream)
-                assert m["n_frames"] == 3 and m["bitrate_kbps"] == 0
-                assert [fr["padding"] for fr in m["frames"]] == pads
-                assert all(fr["free_format"] for fr in m["frames"])
-                assert all(fr["table"] == "a" for fr in m["frames"])
-                micro = [
-                    micro6(x)
-                    for fr in m["frames"]
-                    for row in fr["values"] for x in row
-                ]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_frames": 3,
-                        "bitrate_kbps": 0,
-                        "table_id": "a",
-                        "n_padded": sum(pads),
-                        "stream_bytes": len(stream),
-                        "n_active_sb": sum(
-                            len(fr["active"]) for fr in m["frames"]
-                        ),
-                        "n_active_samples": len(micro),
-                        "sum_micro": sum(micro),
-                        "max_abs_micro": (
-                            max(abs(x) for x in micro) if micro else 0
-                        ),
-                    }
+            alloc = [
+                dig[(sb * 5 + f * 7 + 2) % 16] % (amax(sb) + 1)
+                for sb in range(B2A_SBLIMIT)
+            ]
+            active = [sb for sb in range(B2A_SBLIMIT) if alloc[sb]]
+            scfsi = [dig[(sb * 3 + f * 11 + 4) % 16] % 4
+                     for sb in active]
+            stored = [
+                (
+                    dig[(sb * 2 + f * 5 + 3) % 16] % 63,
+                    dig[(sb * 2 + f * 5 + 8) % 16] % 63,
+                    dig[(sb * 2 + f * 5 + 13) % 16] % 63,
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "bitrate_kbps", "table_id",
-                    "n_padded", "stream_bytes", "n_active_sb",
-                    "n_active_samples", "sum_micro", "max_abs_micro",
-                ],
-            )
+                for sb in active
+            ]
+            codes = [
+                [
+                    (dig[(sb + i * 7 + f * 9 + 1) % 16] * 29
+                     + i * 11 + f * 17 + d)
+                    % l2_steps_list("a", sb)[alloc[sb] - 1]
+                    for i in range(36)
+                ]
+                for sb in active
+            ]
+            bufs.append(encode_layer2_frame(
+                alloc, scfsi, stored, codes, sample_rate=48000,
+                free_format_bytes=440, padding=pads[f],
+            ))
+        stream = b"".join(bufs)
+        m = decode_mpeg1_audio(stream)
+        assert m["n_frames"] == 3 and m["bitrate_kbps"] == 0
+        assert [fr["padding"] for fr in m["frames"]] == pads
+        assert all(fr["free_format"] for fr in m["frames"])
+        assert all(fr["table"] == "a" for fr in m["frames"])
+        micro = [
+            micro6(x)
+            for fr in m["frames"]
+            for row in fr["values"] for x in row
+        ]
+        yield {
+            "media_id": d,
+            "n_frames": 3,
+            "bitrate_kbps": 0,
+            "table_id": "a",
+            "n_padded": sum(pads),
+            "stream_bytes": len(stream),
+            "n_active_sb": sum(
+                len(fr["active"]) for fr in m["frames"]
+            ),
+            "n_active_samples": len(micro),
+            "sum_micro": sum(micro),
+            "max_abs_micro": (
+                max(abs(x) for x in micro) if micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, n_frames long, bitrate_kbps long, table_id string, "
         "n_padded long, n_active_sb long, n_active_samples long, "
         "sum_micro long, max_abs_micro long, stream_bytes long",
@@ -7985,126 +7730,105 @@ def multimodal_mpeg2_lsf_decode(spark, sf_dir):
     micro-units against the closed-form SQL replay. One Arrow
     mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         decode_mpeg1_audio,
         encode_layer1_frame,
         frame_bytes,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
-                rate = [22050, 24000, 16000][d % 3]
-                kbps = [144, 176, 256][d % 3]
-                nch = 1 if d % 2 == 0 else 2
-                crc = d % 4 >= 2
-                pads = [bool((d >> 3) & 1), bool((d >> 4) & 1)]
-                bufs = []
-                for f in range(2):
-                    alloc = [
-                        [
-                            dig[(sb * 7 + ch * 11 + f * 5 + 3) % 16] % 4
-                            if (sb + d) % 2 == 0 else 0
-                            for sb in range(32)
-                        ]
-                        for ch in range(nch)
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
+        rate = [22050, 24000, 16000][d % 3]
+        kbps = [144, 176, 256][d % 3]
+        nch = 1 if d % 2 == 0 else 2
+        crc = d % 4 >= 2
+        pads = [bool((d >> 3) & 1), bool((d >> 4) & 1)]
+        bufs = []
+        for f in range(2):
+            alloc = [
+                [
+                    dig[(sb * 7 + ch * 11 + f * 5 + 3) % 16] % 4
+                    if (sb + d) % 2 == 0 else 0
+                    for sb in range(32)
+                ]
+                for ch in range(nch)
+            ]
+            act = [[sb for sb in range(32) if alloc[ch][sb]]
+                   for ch in range(nch)]
+            scf = [
+                [dig[(sb * 3 + ch * 5 + f * 7 + 6) % 16] % 63
+                 for sb in act[ch]]
+                for ch in range(nch)
+            ]
+            codes = [
+                [
+                    [
+                        (dig[(sb + j * 5 + ch * 3 + f * 2 + 1) % 16]
+                         * 31 + j * 7 + f * 19 + ch * 23 + d)
+                        % ((1 << (alloc[ch][sb] + 1)) - 1)
+                        for j in range(12)
                     ]
-                    act = [[sb for sb in range(32) if alloc[ch][sb]]
-                           for ch in range(nch)]
-                    scf = [
-                        [dig[(sb * 3 + ch * 5 + f * 7 + 6) % 16] % 63
-                         for sb in act[ch]]
-                        for ch in range(nch)
-                    ]
-                    codes = [
-                        [
-                            [
-                                (dig[(sb + j * 5 + ch * 3 + f * 2 + 1) % 16]
-                                 * 31 + j * 7 + f * 19 + ch * 23 + d)
-                                % ((1 << (alloc[ch][sb] + 1)) - 1)
-                                for j in range(12)
-                            ]
-                            for sb in act[ch]
-                        ]
-                        for ch in range(nch)
-                    ]
-                    args = (
-                        (alloc, scf, codes) if nch == 2
-                        else (alloc[0], scf[0], codes[0])
-                    )
-                    bufs.append(encode_layer1_frame(
-                        *args, sample_rate=rate, bitrate_kbps=kbps,
-                        padding=pads[f], crc=crc, version=2,
-                    ))
-                stream = bufs[0] + bufs[1]
-                m = decode_mpeg1_audio(stream)
-                assert m["format"] == "mpeg2_lsf_audio"
-                assert m["version"] == 2 and m["n_frames"] == 2
-                assert m["sample_rate"] == rate
-                assert [fr["padding"] for fr in m["frames"]] == pads
-                assert all(fr["protected"] == crc for fr in m["frames"])
-                assert len(stream) == sum(
-                    frame_bytes(1, kbps, rate, p) for p in pads
-                )
-                micro, n_sb = [], 0
-                for fr in m["frames"]:
-                    chans = (
-                        fr["values"] if fr["channels"] == 2
-                        else [fr["values"]]
-                    )
-                    acts = (
-                        fr["active"] if fr["channels"] == 2
-                        else [fr["active"]]
-                    )
-                    n_sb += sum(len(a) for a in acts)
-                    micro.extend(
-                        micro6(x) for chan in chans
-                        for row in chan for x in row
-                    )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "version": 2,
-                        "layer": 1,
-                        "sample_rate": rate,
-                        "bitrate_kbps": kbps,
-                        "nch": nch,
-                        "n_frames": 2,
-                        "n_padded": sum(pads),
-                        "stream_bytes": len(stream),
-                        "n_active_sb": n_sb,
-                        "n_active_samples": len(micro),
-                        "sum_micro": sum(micro),
-                        "max_abs_micro": (
-                            max(abs(x) for x in micro) if micro else 0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "version", "layer", "sample_rate",
-                    "bitrate_kbps", "nch", "n_frames", "n_padded",
-                    "stream_bytes", "n_active_sb", "n_active_samples",
-                    "sum_micro", "max_abs_micro",
-                ],
+                    for sb in act[ch]
+                ]
+                for ch in range(nch)
+            ]
+            args = (
+                (alloc, scf, codes) if nch == 2
+                else (alloc[0], scf[0], codes[0])
             )
+            bufs.append(encode_layer1_frame(
+                *args, sample_rate=rate, bitrate_kbps=kbps,
+                padding=pads[f], crc=crc, version=2,
+            ))
+        stream = bufs[0] + bufs[1]
+        m = decode_mpeg1_audio(stream)
+        assert m["format"] == "mpeg2_lsf_audio"
+        assert m["version"] == 2 and m["n_frames"] == 2
+        assert m["sample_rate"] == rate
+        assert [fr["padding"] for fr in m["frames"]] == pads
+        assert all(fr["protected"] == crc for fr in m["frames"])
+        assert len(stream) == sum(
+            frame_bytes(1, kbps, rate, p) for p in pads
+        )
+        micro, n_sb = [], 0
+        for fr in m["frames"]:
+            chans = (
+                fr["values"] if fr["channels"] == 2
+                else [fr["values"]]
+            )
+            acts = (
+                fr["active"] if fr["channels"] == 2
+                else [fr["active"]]
+            )
+            n_sb += sum(len(a) for a in acts)
+            micro.extend(
+                micro6(x) for chan in chans
+                for row in chan for x in row
+            )
+        yield {
+            "media_id": d,
+            "version": 2,
+            "layer": 1,
+            "sample_rate": rate,
+            "bitrate_kbps": kbps,
+            "nch": nch,
+            "n_frames": 2,
+            "n_padded": sum(pads),
+            "stream_bytes": len(stream),
+            "n_active_sb": n_sb,
+            "n_active_samples": len(micro),
+            "sum_micro": sum(micro),
+            "max_abs_micro": (
+                max(abs(x) for x in micro) if micro else 0
+            ),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, version long, layer long, sample_rate long, "
         "bitrate_kbps long, nch long, n_frames long, n_padded long, "
         "stream_bytes long, n_active_sb long, n_active_samples long, "
@@ -8197,39 +7921,31 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
 
     W, H = 36, 32
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                dig = hashlib.md5(str(d // 2).encode()).digest()
-                stored_rows = []
-                for y in range(H):
-                    row = bytearray()
-                    for x in range(W):
-                        g = (dig[(x * 7 + y * 13) % 16] * 31
-                             + x * 3 + y * 5) % 256
-                        if d % 2 == 1 and y < 2:
-                            g = 255 - g
-                        row += bytes((g, g, g))
-                    stored_rows.append(bytes(row))
-                # encode_bmp stores rows bottom-up; 36 px * 3 B = 108 B
-                # rows are already 4-byte aligned (no padding ambiguity)
-                buf = encode_bmp(W, H, b"".join(reversed(stored_rows)))
-                w, h, gray = bmp_gray_pixels(buf)
-                assert (w, h) == (W, H)
-                b = dhash_bands(gray, w, h)
-                rows.append({"doc_id": d, "b0": b[0], "b1": b[1],
-                             "b2": b[2], "b3": b[3]})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
+    def run(did):
+        d = int(did)
+        dig = hashlib.md5(str(d // 2).encode()).digest()
+        stored_rows = []
+        for y in range(H):
+            row = bytearray()
+            for x in range(W):
+                g = (dig[(x * 7 + y * 13) % 16] * 31
+                     + x * 3 + y * 5) % 256
+                if d % 2 == 1 and y < 2:
+                    g = 255 - g
+                row += bytes((g, g, g))
+            stored_rows.append(bytes(row))
+        # encode_bmp stores rows bottom-up; 36 px * 3 B = 108 B
+        # rows are already 4-byte aligned (no padding ambiguity)
+        buf = encode_bmp(W, H, b"".join(reversed(stored_rows)))
+        w, h, gray = bmp_gray_pixels(buf)
+        assert (w, h) == (W, H)
+        b = dhash_bands(gray, w, h)
+        yield {"doc_id": d, "b0": b[0], "b1": b[1],
+                     "b2": b[2], "b3": b[3]}
 
     docs = widen_table(spark, sf_dir, "documents", "doc_id")
-    bands = docs.mapInPandas(
-        run, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    bands = map_rows(
+        docs, run, "doc_id long, b0 long, b1 long, b2 long, b3 long"
     )
     return banded_hamming_pairs(bands, ["b0", "b1", "b2", "b3"], 12)
 
@@ -8317,49 +8033,42 @@ def multimodal_audio_fingerprint_neardup(spark, sf_dir):
 
     T = 1040  # 65 frames x 16 samples
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                dig = hashlib.md5(("aud" + str(d // 2)).encode()).digest()
-                samples = []
-                for t in range(T):
-                    # two-byte multiplicative mix mod 4097: per-frame
-                    # energies decorrelate ACROSS docs (a single-byte
-                    # linear form left every frame summing the same 16
-                    # digest bytes — all fingerprints collided)
-                    s = ((dig[(t * 7 + 1) % 16] * 251 + t)
-                         * (dig[(t * 11 + 3) % 16] + 13)) % 4097 - 2048
-                    m = abs(s)
-                    if d % 2 == 1 and 16 <= t < 32:
-                        m //= 2
-                    samples.append(m if s >= 0 else -m)
-                pcm = struct.pack(f"<{T}h", *samples)
-                buf = encode_wav(
-                    n_frames=T, sample_rate=8000, n_channels=1,
-                    bits_per_sample=16, samples=pcm,
-                )
-                meta, data = wav_data_chunk(buf)
-                assert meta["n_frames"] == T and meta["n_channels"] == 1
-                arr = np.frombuffer(data, "<i2").astype(np.int64)
-                en = np.abs(arr).reshape(65, 16).sum(axis=1)
-                bands = [0, 0, 0, 0]
-                for b in range(64):
-                    if en[b] > en[b + 1]:
-                        bands[b // 16] |= 1 << (b % 16)
-                rows.append({"doc_id": d, "b0": bands[0], "b1": bands[1],
-                             "b2": bands[2], "b3": bands[3]})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
+    def run(did):
+        d = int(did)
+        dig = hashlib.md5(("aud" + str(d // 2)).encode()).digest()
+        samples = []
+        for t in range(T):
+            # two-byte multiplicative mix mod 4097: per-frame
+            # energies decorrelate ACROSS docs (a single-byte
+            # linear form left every frame summing the same 16
+            # digest bytes — all fingerprints collided)
+            s = ((dig[(t * 7 + 1) % 16] * 251 + t)
+                 * (dig[(t * 11 + 3) % 16] + 13)) % 4097 - 2048
+            m = abs(s)
+            if d % 2 == 1 and 16 <= t < 32:
+                m //= 2
+            samples.append(m if s >= 0 else -m)
+        pcm = struct.pack(f"<{T}h", *samples)
+        buf = encode_wav(
+            n_frames=T, sample_rate=8000, n_channels=1,
+            bits_per_sample=16, samples=pcm,
+        )
+        meta, data = wav_data_chunk(buf)
+        assert meta["n_frames"] == T and meta["n_channels"] == 1
+        arr = np.frombuffer(data, "<i2").astype(np.int64)
+        en = np.abs(arr).reshape(65, 16).sum(axis=1)
+        bands = [0, 0, 0, 0]
+        for b in range(64):
+            if en[b] > en[b + 1]:
+                bands[b // 16] |= 1 << (b % 16)
+        yield {"doc_id": d, "b0": bands[0], "b1": bands[1],
+                     "b2": bands[2], "b3": bands[3]}
 
     docs = widen_table(spark, sf_dir, "documents", "doc_id")
-    bands = docs.mapInPandas(
-        run, "doc_id long, b0 long, b1 long, b2 long, b3 long"
+    bands = map_rows(
+        docs, run, "doc_id long, b0 long, b1 long, b2 long, b3 long"
     )
     return banded_hamming_pairs(bands, ["b0", "b1", "b2", "b3"], 12)
 
@@ -8451,41 +8160,33 @@ def multimodal_video_dhash_neardup(spark, sf_dir):
 
     W, H, NF = 36, 32, 4
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                dig = hashlib.md5(("vid" + str(d // 2)).encode()).digest()
-                frames = []
-                for f in range(NF):
-                    stored_rows = []
-                    for y in range(H):
-                        row = bytearray()
-                        for x in range(W):
-                            g = (dig[(x * 7 + y * 13 + f * 3) % 16] * 31
-                                 + x * 3 + y * 5 + f * 11) % 256
-                            if d % 2 == 1 and f == 0 and y < 2:
-                                g = 255 - g
-                            row += bytes((g, g, g))
-                        stored_rows.append(bytes(row))
-                    frames.append(b"".join(reversed(stored_rows)))
-                buf = encode_avi(W, H, NF, frames=frames)
-                w, h, grays = avi_gray_frames(buf)
-                assert (w, h, len(grays)) == (W, H, NF)
-                for f, gray in enumerate(grays):
-                    b = dhash_bands(gray, w, h)
-                    rows.append({"doc_id": d, "f": f, "b0": b[0],
-                                 "b1": b[1], "b2": b[2], "b3": b[3]})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "f", "b0", "b1", "b2", "b3"]
-            )
+    def run(did):
+        d = int(did)
+        dig = hashlib.md5(("vid" + str(d // 2)).encode()).digest()
+        frames = []
+        for f in range(NF):
+            stored_rows = []
+            for y in range(H):
+                row = bytearray()
+                for x in range(W):
+                    g = (dig[(x * 7 + y * 13 + f * 3) % 16] * 31
+                         + x * 3 + y * 5 + f * 11) % 256
+                    if d % 2 == 1 and f == 0 and y < 2:
+                        g = 255 - g
+                    row += bytes((g, g, g))
+                stored_rows.append(bytes(row))
+            frames.append(b"".join(reversed(stored_rows)))
+        buf = encode_avi(W, H, NF, frames=frames)
+        w, h, grays = avi_gray_frames(buf)
+        assert (w, h, len(grays)) == (W, H, NF)
+        for f, gray in enumerate(grays):
+            b = dhash_bands(gray, w, h)
+            yield {"doc_id": d, "f": f, "b0": b[0],
+                         "b1": b[1], "b2": b[2], "b3": b[3]}
 
     docs = widen_table(spark, sf_dir, "documents", "doc_id")
-    bands = docs.mapInPandas(
-        run, "doc_id long, f long, b0 long, b1 long, b2 long, b3 long"
+    bands = map_rows(
+        docs, run, "doc_id long, f long, b0 long, b1 long, b2 long, b3 long"
     )
     fham = banded_hamming_pairs(
         bands, ["b0", "b1", "b2", "b3"], 12, extra_key_cols=("f",)
@@ -8957,54 +8658,40 @@ def multimodal_audio_decimate(spark, sf_dir):
 
     H = np.array([1, 4, 8, 12, 14, 12, 8, 4, 1], dtype=np.int64)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                seed = hashlib.md5((text or "").encode()).digest()
-                dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
-                ns = d % 200 + 16
-                j = np.arange(ns)
-                raw = dig[(2 * j + 3) % 16] + 256 * dig[(2 * j + 7) % 16]
-                sig = np.where(raw >= 32768, raw - 65536, raw)
-                m = decode_flac(encode_flac([int(v) for v in sig]))
-                x = np.array(m["samples"], dtype=np.int64)
-                assert np.array_equal(x, sig)
-                n_out = (ns + 1) // 2
-                padded = np.concatenate(
-                    [np.zeros(4, np.int64), x, np.zeros(4, np.int64)]
-                )
-                acc = np.array(
-                    [
-                        int((padded[2 * n : 2 * n + 9] * H).sum())
-                        for n in range(n_out)
-                    ],
-                    dtype=np.int64,
-                )
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_in": ns,
-                        "n_out": n_out,
-                        "sum_acc": int(acc.sum()),
-                        "min_acc": int(acc.min()),
-                        "max_acc": int(acc.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_in", "n_out", "sum_acc", "min_acc",
-                    "max_acc",
-                ],
-            )
+    def run(did, text):
+        d = int(did)
+        seed = hashlib.md5((text or "").encode()).digest()
+        dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
+        ns = d % 200 + 16
+        j = np.arange(ns)
+        raw = dig[(2 * j + 3) % 16] + 256 * dig[(2 * j + 7) % 16]
+        sig = np.where(raw >= 32768, raw - 65536, raw)
+        m = decode_flac(encode_flac([int(v) for v in sig]))
+        x = np.array(m["samples"], dtype=np.int64)
+        assert np.array_equal(x, sig)
+        n_out = (ns + 1) // 2
+        padded = np.concatenate(
+            [np.zeros(4, np.int64), x, np.zeros(4, np.int64)]
+        )
+        acc = np.array(
+            [
+                int((padded[2 * n : 2 * n + 9] * H).sum())
+                for n in range(n_out)
+            ],
+            dtype=np.int64,
+        )
+        yield {
+            "media_id": d,
+            "n_in": ns,
+            "n_out": n_out,
+            "sum_acc": int(acc.sum()),
+            "min_acc": int(acc.min()),
+            "max_acc": int(acc.max()),
+        }
 
     d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
-    return d.mapInPandas(
-        run,
+    return map_rows(
+        d, run,
         "media_id long, n_in long, n_out long, sum_acc long, "
         "min_acc long, max_acc long",
     )
@@ -11033,26 +10720,19 @@ def s22_delta_log_scan(spark, sf_dir):
     this is the whole point of a lake table: the driver replays
     kilobytes of log (checkpoint + tail) and executors only ever see
     live, pruned files."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import (
+        add_action,
         read_snapshot,
+        remove_action,
         replay_log,
+        table_files,
         write_checkpoint,
         write_commit,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_delta")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_fixture", "orders_delta")
 
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -11062,36 +10742,13 @@ def s22_delta_log_scan(spark, sf_dir):
     )
     o.write.partitionBy("o_orderstatus").parquet(table, mode="overwrite")
 
-    def data_files():
-        rel = []
-        for root, _dirs, names in os.walk(table):
-            if "_delta_log" in root:
-                continue
-            for n in names:
-                if n.endswith(".parquet"):
-                    rel.append(
-                        os.path.relpath(os.path.join(root, n), table)
-                    )
-        return sorted(rel)
-
     def part_of(path):
         return path.split("o_orderstatus=")[1].split("/")[0]
 
     def adds(paths):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {"o_orderstatus": part_of(p)},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in paths
-        ]
+        return [add_action(table, p, {"o_orderstatus": part_of(p)}) for p in paths]
 
-    files_v0 = data_files()
+    files_v0 = table_files(table)
     meta = {
         "id": "orders-delta-fixture",
         "format": {"provider": "parquet", "options": {}},
@@ -11113,22 +10770,10 @@ def s22_delta_log_scan(spark, sf_dir):
     o.filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 2 == 0)
     ).write.partitionBy("o_orderstatus").parquet(table, mode="append")
-    new_files = sorted(set(data_files()) - set(files_v0))
+    new_files = sorted(set(table_files(table)) - set(files_v0))
     old_o = [p for p in files_v0 if part_of(p) == "O"]
     write_commit(
-        table,
-        1,
-        [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 1,
-                    "dataChange": True,
-                }
-            }
-            for p in old_o
-        ]
-        + adds(new_files),
+        table, 1, [remove_action(p, 1) for p in old_o] + adds(new_files)
     )
 
     # checkpoint at v1 must reconstruct the identical live set
@@ -11244,18 +10889,12 @@ def s23_orc_stripe_decode(spark, sf_dir):
     each, no Spark scan of the audited bytes — and the same kernel a
     custom DataSource needs for stripe-selective serving."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.orc_read import read_orc
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_orc_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = fixture_dir(sf_dir, "cam_etl_orc_fixture")
     comps = {"orders": "none", "documents": "zlib", "lineitem": "snappy"}
     plans = {
         "orders": ["o_orderkey", "o_orderstatus", "o_totalprice",
@@ -11283,7 +10922,6 @@ def s23_orc_stripe_decode(spark, sf_dir):
                 "l_line_tiny", F.col("l_linenumber").cast("tinyint")
             )
         out_dir = os.path.join(base, tbl)
-        shutil.rmtree(out_dir, ignore_errors=True)
         df.select(*cols).repartition(4).write.option(
             "compression", comps[tbl]
         ).orc(out_dir)
@@ -11291,66 +10929,56 @@ def s23_orc_stripe_decode(spark, sf_dir):
             if name.endswith(".orc"):
                 pairs.append((tbl, os.path.join(out_dir, name)))
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.orc as paorc
+    import pyarrow.orc as paorc
 
-        for pdf in batches:
-            rows = []
-            for tbl, path in zip(pdf["tbl"], pdf["path"]):
-                raw = open(path, "rb").read()
-                got = read_orc(raw)
-                ref = paorc.read_table(path).to_pydict()
-                for col in plans[tbl]:
-                    vals = got["columns"][col]
-                    assert vals == ref[col], (tbl, col, path)
-                    present = [v for v in vals if v is not None]
-                    if col in ("o_totalprice", "l_quantity"):
-                        import math
+    def run(tbl, path):
+        raw = open(path, "rb").read()
+        got = read_orc(raw)
+        ref = paorc.read_table(path).to_pydict()
+        for col in plans[tbl]:
+            vals = got["columns"][col]
+            assert vals == ref[col], (tbl, col, path)
+            present = [v for v in vals if v is not None]
+            if col in ("o_totalprice", "l_quantity"):
+                import math
 
-                        checksum = sum(
-                            int(math.floor(v * 1000)) for v in present
-                        )
-                    elif col == "o_total_dec":
-                        # decimal path: exact unscaled cents
-                        checksum = sum(
-                            int(v.scaleb(2)) for v in present
-                        )
-                    elif col == "tokens":
-                        # list path: bytes across all child elements
-                        checksum = sum(
-                            sum(
-                                len(e.encode("utf-8"))
-                                for e in row
-                                if e is not None
-                            )
-                            for row in present
-                        )
-                    elif isinstance(present[0], str) if present else False:
-                        checksum = sum(
-                            len(v.encode("utf-8")) for v in present
-                        )
-                    else:
-                        checksum = sum(present)
-                    rows.append(
-                        {
-                            "tbl": tbl,
-                            "col": col,
-                            "n_values": len(present),
-                            "n_nulls": len(vals) - len(present),
-                            "checksum": checksum,
-                        }
+                checksum = sum(
+                    int(math.floor(v * 1000)) for v in present
+                )
+            elif col == "o_total_dec":
+                # decimal path: exact unscaled cents
+                checksum = sum(
+                    int(v.scaleb(2)) for v in present
+                )
+            elif col == "tokens":
+                # list path: bytes across all child elements
+                checksum = sum(
+                    sum(
+                        len(e.encode("utf-8"))
+                        for e in row
+                        if e is not None
                     )
-            yield pd.DataFrame(
-                rows,
-                columns=["tbl", "col", "n_values", "n_nulls", "checksum"],
-            )
+                    for row in present
+                )
+            elif isinstance(present[0], str) if present else False:
+                checksum = sum(
+                    len(v.encode("utf-8")) for v in present
+                )
+            else:
+                checksum = sum(present)
+            yield {
+                "tbl": tbl,
+                "col": col,
+                "n_values": len(present),
+                "n_nulls": len(vals) - len(present),
+                "checksum": checksum,
+            }
 
     files = spark.createDataFrame(
         pairs, "tbl string, path string"
     ).repartition(len(pairs))
-    partials = files.mapInPandas(
-        run,
+    partials = map_rows(
+        files, run,
         "tbl string, col string, n_values long, n_nulls long, "
         "checksum long",
     )
@@ -11558,7 +11186,7 @@ def multimodal_mp3_reservoir_decode(spark, sf_dir):
     equal the closed-form layout arithmetic (mdb_f = f*cap - sum of
     prior frames' main bytes, cap = 171) the oracle replays — the
     same digest-arithmetic discipline as the sideinfo entry.
-    (Boundary as of round 9; rounds 10-11 removed most of it — see
+    (Most of the former boundary is gone — see
     multimodal_mp3_full_decode; tables 13/15 and ESC/linbits 16-31
     remain.) One Arrow mapInPandas scan, zero shuffles."""
     import hashlib
@@ -11571,119 +11199,106 @@ def multimodal_mp3_reservoir_decode(spark, sf_dir):
 
     CAP = 192 - 4 - 17  # 171: 48 kHz 64 kbps mono payload bytes
 
-    def run(batches):
-        import pandas as pd
+    def run(did, text):
+        d = int(did)
+        dig = hashlib.md5((text or "").encode()).digest()
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                dig = hashlib.md5((text or "").encode()).digest()
+        def B(i):
+            return dig[i % 16]
 
-                def B(i):
-                    return dig[i % 16]
-
-                frames = []
-                m_bytes = []
-                stats = {
-                    "sum_p23": 0, "n_quads": 0, "sum_count1": 0,
-                    "sum_scalefac": 0, "sum_gg": 0,
+        frames = []
+        m_bytes = []
+        stats = {
+            "sum_p23": 0, "n_quads": 0, "sum_count1": 0,
+            "sum_scalefac": 0, "sum_gg": 0,
+        }
+        for f in range(3):
+            grs = []
+            fbits = 0
+            for gr in range(2):
+                sfc = B(f * 5 + gr * 3 + 1) % 16
+                slen1, slen2 = SLEN[sfc]
+                gg = B(f * 7 + gr * 2 + 3) % 256
+                nq = B(f * 9 + gr * 4 + 6) % 8
+                sfs = []
+                for i in range(21):
+                    slen = slen1 if i < 11 else slen2
+                    sfs.append(
+                        B(f * 3 + gr * 5 + i * 7 + 8)
+                        % (1 << slen) if slen else 0
+                    )
+                quads = []
+                for q in range(nq):
+                    mag = B(f * 11 + gr * 6 + q * 5 + 7) % 16
+                    sgn = B(f * 11 + gr * 6 + q * 5 + 12) % 16
+                    quads.append(tuple(
+                        ((mag >> (3 - j)) & 1)
+                        * (1 - 2 * ((sgn >> (3 - j)) & 1))
+                        for j in range(4)
+                    ))
+                g = {
+                    "block_type": 0, "mixed_block_flag": 0,
+                    "scalefac_compress": sfc,
+                    "global_gain": gg, "preflag": 0,
+                    "scalefac_scale": 0,
+                    "table_select": [1, 2, 3],
+                    "subblock_gain": [0, 0, 0],
+                    "region0_count": 4, "region1_count": 3,
+                    "scfsi": 0,
+                    "scalefacs": sfs, "quads": quads,
                 }
-                for f in range(3):
-                    grs = []
-                    fbits = 0
-                    for gr in range(2):
-                        sfc = B(f * 5 + gr * 3 + 1) % 16
-                        slen1, slen2 = SLEN[sfc]
-                        gg = B(f * 7 + gr * 2 + 3) % 256
-                        nq = B(f * 9 + gr * 4 + 6) % 8
-                        sfs = []
-                        for i in range(21):
-                            slen = slen1 if i < 11 else slen2
-                            sfs.append(
-                                B(f * 3 + gr * 5 + i * 7 + 8)
-                                % (1 << slen) if slen else 0
-                            )
-                        quads = []
-                        for q in range(nq):
-                            mag = B(f * 11 + gr * 6 + q * 5 + 7) % 16
-                            sgn = B(f * 11 + gr * 6 + q * 5 + 12) % 16
-                            quads.append(tuple(
-                                ((mag >> (3 - j)) & 1)
-                                * (1 - 2 * ((sgn >> (3 - j)) & 1))
-                                for j in range(4)
-                            ))
-                        g = {
-                            "block_type": 0, "mixed_block_flag": 0,
-                            "scalefac_compress": sfc,
-                            "global_gain": gg, "preflag": 0,
-                            "scalefac_scale": 0,
-                            "table_select": [1, 2, 3],
-                            "subblock_gain": [0, 0, 0],
-                            "region0_count": 4, "region1_count": 3,
-                            "scfsi": 0,
-                            "scalefacs": sfs, "quads": quads,
-                        }
-                        grs.append([g])
-                        part3 = sum(
-                            4 + sum(1 for v in q if v) for q in quads
-                        )
-                        fbits += 11 * slen1 + 10 * slen2 + part3
-                        stats["sum_gg"] += gg
-                        stats["sum_scalefac"] += sum(sfs)
-                        stats["n_quads"] += len(quads)
-                        stats["sum_count1"] += sum(
-                            v for q in quads for v in q
-                        )
-                        stats["sum_p23"] += (
-                            11 * slen1 + 10 * slen2 + part3
-                        )
-                    frames.append(grs)
-                    m_bytes.append((fbits + 7) // 8)
-                buf = encode_mp3_stream(frames, 48000, 64)
-                shells = parse_mp3_stream(buf)
-                assert len(shells) == 3, d
-                want_mdb = [
-                    0,
-                    CAP - m_bytes[0],
-                    2 * CAP - m_bytes[0] - m_bytes[1],
-                ]
-                got_mdb = [s["main_data_begin"] for s in shells]
-                assert got_mdb == want_mdb, (d, got_mdb, want_mdb)
-                assert want_mdb[1] > 0 and want_mdb[2] > 0, d
-                for f in range(3):
-                    for gr in range(2):
-                        enc = frames[f][gr][0]
-                        dec = shells[f]["granules"][gr][0]
-                        assert dec["scalefacs"] == enc["scalefacs"], (
-                            d, f, gr,
-                        )
-                        assert dec["quads"] == enc["quads"], (d, f, gr)
-                        assert dec["global_gain"] == enc["global_gain"]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_frames": 3,
-                        "mdb1": want_mdb[1],
-                        "mdb2": want_mdb[2],
-                        "total_main_bytes": sum(m_bytes),
-                        "sum_p23": stats["sum_p23"],
-                        "n_quads": stats["n_quads"],
-                        "sum_count1": stats["sum_count1"],
-                        "sum_scalefac": stats["sum_scalefac"],
-                        "sum_gg": stats["sum_gg"],
-                    }
+                grs.append([g])
+                part3 = sum(
+                    4 + sum(1 for v in q if v) for q in quads
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_frames", "mdb1", "mdb2",
-                         "total_main_bytes", "sum_p23", "n_quads",
-                         "sum_count1", "sum_scalefac", "sum_gg"],
-            )
+                fbits += 11 * slen1 + 10 * slen2 + part3
+                stats["sum_gg"] += gg
+                stats["sum_scalefac"] += sum(sfs)
+                stats["n_quads"] += len(quads)
+                stats["sum_count1"] += sum(
+                    v for q in quads for v in q
+                )
+                stats["sum_p23"] += (
+                    11 * slen1 + 10 * slen2 + part3
+                )
+            frames.append(grs)
+            m_bytes.append((fbits + 7) // 8)
+        buf = encode_mp3_stream(frames, 48000, 64)
+        shells = parse_mp3_stream(buf)
+        assert len(shells) == 3, d
+        want_mdb = [
+            0,
+            CAP - m_bytes[0],
+            2 * CAP - m_bytes[0] - m_bytes[1],
+        ]
+        got_mdb = [s["main_data_begin"] for s in shells]
+        assert got_mdb == want_mdb, (d, got_mdb, want_mdb)
+        assert want_mdb[1] > 0 and want_mdb[2] > 0, d
+        for f in range(3):
+            for gr in range(2):
+                enc = frames[f][gr][0]
+                dec = shells[f]["granules"][gr][0]
+                assert dec["scalefacs"] == enc["scalefacs"], (
+                    d, f, gr,
+                )
+                assert dec["quads"] == enc["quads"], (d, f, gr)
+                assert dec["global_gain"] == enc["global_gain"]
+        yield {
+            "media_id": d,
+            "n_frames": 3,
+            "mdb1": want_mdb[1],
+            "mdb2": want_mdb[2],
+            "total_main_bytes": sum(m_bytes),
+            "sum_p23": stats["sum_p23"],
+            "n_quads": stats["n_quads"],
+            "sum_count1": stats["sum_count1"],
+            "sum_scalefac": stats["sum_scalefac"],
+            "sum_gg": stats["sum_gg"],
+        }
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_frames long, mdb1 long, mdb2 long, "
         "total_main_bytes long, sum_p23 long, n_quads long, "
         "sum_count1 long, sum_scalefac long, sum_gg long",
@@ -11734,25 +11349,19 @@ def s24_iceberg_snapshot_scan(spark, sf_dir):
     driver replays kilobytes of metadata, never lists directories.
     The oracle replays each snapshot's logical content."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from cam_etl_spark.sources.delta_log import table_files
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         read_snapshot,
         write_manifest,
         write_snapshot,
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_iceberg")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_fixture", "orders_iceberg")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -11764,29 +11373,13 @@ def s24_iceberg_snapshot_scan(spark, sf_dir):
     o.write.partitionBy("o_orderstatus").parquet(data_dir, mode="overwrite")
 
     def data_files():
-        out = []
-        for root, _dirs, names in os.walk(data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    out.append(os.path.join(root, n))
-        return sorted(out)
+        return [os.path.join(data_dir, p) for p in table_files(data_dir)]
 
     def part_of(path):
         return path.split("o_orderstatus=")[1].split("/")[0]
 
     def entry(path, status):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {"o_orderstatus": part_of(path)},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(path, {"o_orderstatus": part_of(path)}, status=status)
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -11882,12 +11475,11 @@ def s27_iceberg_position_deletes(spark, sf_dir):
     anti-join either broadcasts (AQE, small deletes) or shuffles on
     (file, pos)."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         read_snapshot,
         write_manifest,
         write_position_deletes,
@@ -11895,13 +11487,7 @@ def s27_iceberg_position_deletes(spark, sf_dir):
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_posdel",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_mor")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_posdel", "orders_mor")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -11923,19 +11509,10 @@ def s27_iceberg_position_deletes(spark, sf_dir):
                 bucket_file[bkt] = os.path.join(root, n)
 
     def entry(path, bkt, seq, content=0, status=1):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": seq,
-            "data_file": {
-                "content": content,
-                "file_path": path,
-                "file_format": "avro" if content else "parquet",
-                "partition": {} if content else {"bucket": bkt},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(
+            path, None if content else {"bucket": bkt}, status=status,
+            sequence_number=seq, content=content,
+        )
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -12053,21 +11630,12 @@ def s32_delta_change_feed(spark, sf_dir):
     path: at 100 TB a downstream job reads kilobytes of log plus
     exactly the changed files, never diffs snapshots."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_cdf",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_cdf")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_cdf", "orders_cdf")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -12076,40 +11644,11 @@ def s32_delta_change_feed(spark, sf_dir):
         ),
     )
 
-    def write_files(df, rel):
-        out = os.path.join(table, rel)
-        df.write.parquet(out, mode="overwrite")
-        return [
-            os.path.join(rel, n)
-            for n in sorted(os.listdir(out))
-            if n.endswith(".parquet")
-        ]
-
     def adds(paths, data_change=True):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": data_change,
-                }
-            }
-            for p in paths
-        ]
+        return [D.add_action(table, p, mtime=1, data_change=data_change) for p in paths]
 
     def removes(paths):
-        return [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 2,
-                    "dataChange": True,
-                }
-            }
-            for p in paths
-        ]
+        return [D.remove_action(p, 2) for p in paths]
 
     meta = {
         "id": "orders-cdf",
@@ -12118,7 +11657,7 @@ def s32_delta_change_feed(spark, sf_dir):
         "partitionColumns": [],
         "configuration": {"delta.enableChangeDataFeed": "true"},
     }
-    v0_files = write_files(o.repartition(4), "v0")
+    v0_files = D.write_files(table, o.repartition(4), "v0")
     D.write_commit(
         table,
         0,
@@ -12136,15 +11675,15 @@ def s32_delta_change_feed(spark, sf_dir):
             F.col("cents")
         ),
     )
-    v1_files = write_files(v1_df.repartition(4), "v1")
+    v1_files = D.write_files(table, v1_df.repartition(4), "v1")
     touched = o.filter(F.col("k") % 10 == 0)
     pre = touched.withColumn("_change_type", F.lit("update_preimage"))
     post = (
         touched.withColumn("cents", F.col("cents") + 11)
         .withColumn("_change_type", F.lit("update_postimage"))
     )
-    cdc_files = write_files(pre, "_change_data/v1pre") + write_files(
-        post, "_change_data/v1post"
+    cdc_files = D.write_files(table, pre, "_change_data/v1pre") + D.write_files(
+        table, post, "_change_data/v1post"
     )
     cdc_actions = [
         {
@@ -12163,7 +11702,7 @@ def s32_delta_change_feed(spark, sf_dir):
 
     # v2: rewrite DELETE of k % 9 = 0 — NO cdc, change set derived
     v2_df = v1_df.filter(F.col("k") % 9 != 0)
-    v2_files = write_files(v2_df.repartition(4), "v2")
+    v2_files = D.write_files(table, v2_df.repartition(4), "v2")
     D.write_commit(table, 2, removes(v1_files) + adds(v2_files))
 
     snap_df, _snap, _n = D.read_snapshot(spark, table)
@@ -12224,12 +11763,11 @@ def s33_iceberg_equality_deletes(spark, sf_dir):
     read path: equality deletes are how Flink/CDC writers express
     key-level retractions without knowing row positions."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         read_snapshot,
         write_equality_deletes,
         write_manifest,
@@ -12237,13 +11775,7 @@ def s33_iceberg_equality_deletes(spark, sf_dir):
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_eqdel",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_eq")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_eqdel", "orders_eq")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -12264,20 +11796,10 @@ def s33_iceberg_equality_deletes(spark, sf_dir):
                 bucket_file[bkt] = os.path.join(root, n)
 
     def entry(path, bkt, seq, content=0, status=1, eq_ids=None):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": seq,
-            "data_file": {
-                "content": content,
-                "file_path": path,
-                "file_format": "avro" if content else "parquet",
-                "partition": {} if content else {"bucket": bkt},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": eq_ids,
-            },
-        }
+        return manifest_entry(
+            path, None if content else {"bucket": bkt}, status=status,
+            sequence_number=seq, content=content, equality_ids=eq_ids,
+        )
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -12402,13 +11924,12 @@ def s34_iceberg_bucket_transform(spark, sf_dir):
     point lookups and joins without a shuffle: the scan plan comes
     from kilobytes of manifest, touching only matching buckets."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
         bucket_transform,
+        manifest_entry,
         read_snapshot,
         transform_partition_filter,
         write_manifest,
@@ -12416,13 +11937,7 @@ def s34_iceberg_bucket_transform(spark, sf_dir):
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_bucket",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_bucketed")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_bucket", "orders_bucketed")
     data_dir = os.path.join(table, "data")
 
     def add_bucket(batches):
@@ -12447,23 +11962,9 @@ def s34_iceberg_bucket_transform(spark, sf_dir):
         for n in names:
             if n.endswith(".parquet"):
                 kb = root.split("kb=")[1].split("/")[0]
-                entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": None,
-                        "sequence_number": 1,
-                        "data_file": {
-                            "content": 0,
-                            "file_path": os.path.join(root, n),
-                            "file_format": "parquet",
-                            "partition": {"kb": kb},
-                            "record_count": 0,
-                            "file_size_in_bytes": os.path.getsize(
-                                os.path.join(root, n)
-                            ),
-                        },
-                    }
-                )
+                entries.append(manifest_entry(
+                    os.path.join(root, n), {"kb": kb}, sequence_number=1
+                ))
     assert len(entries) == 8, len(entries)
 
     md = os.path.join(table, "metadata")
@@ -12570,22 +12071,11 @@ def s35_delta_optimize_compaction(spark, sf_dir):
     millions -> thousands there); each group rewrite is one
     distributed job, the commit is kilobytes of log, and CDF
     consumers are provably undisturbed."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_optimize",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_opt")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_optimize", "orders_opt")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -12594,28 +12084,8 @@ def s35_delta_optimize_compaction(spark, sf_dir):
         ),
     )
 
-    def write_files(df, rel):
-        out = os.path.join(table, rel)
-        df.write.parquet(out, mode="overwrite")
-        return [
-            os.path.join(rel, n)
-            for n in sorted(os.listdir(out))
-            if n.endswith(".parquet")
-        ]
-
     def adds(paths, data_change=True):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": data_change,
-                }
-            }
-            for p in paths
-        ]
+        return [D.add_action(table, p, mtime=1, data_change=data_change) for p in paths]
 
     meta = {
         "id": "orders-optimize",
@@ -12624,7 +12094,7 @@ def s35_delta_optimize_compaction(spark, sf_dir):
         "partitionColumns": [],
         "configuration": {"delta.enableChangeDataFeed": "true"},
     }
-    v0_files = write_files(o.repartition(12), "v0")
+    v0_files = D.write_files(table, o.repartition(12), "v0")
     assert len(v0_files) == 12, len(v0_files)
     D.write_commit(
         table,
@@ -12648,7 +12118,7 @@ def s35_delta_optimize_compaction(spark, sf_dir):
         (F.col("k") + 1000000000).alias("k"),
         (F.col("cents") + 5).alias("cents"),
     )
-    v2_files = write_files(appended.repartition(1), "v2")
+    v2_files = D.write_files(table, appended.repartition(1), "v2")
     D.write_commit(table, 2, adds(v2_files))
     snap2_df, snap2, n2 = D.read_snapshot(spark, table)
     assert snap2["from_checkpoint"] == 1 and n2 == 4, snap2
@@ -12736,26 +12206,19 @@ def s36_iceberg_manifest_pruning(spark, sf_dir):
     (field_summary -> per-file bounds) is what keeps planning cost
     proportional to the MATCHING data, not the table size."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
         long_bound,
+        manifest_entry,
         read_snapshot,
         write_manifest,
         write_snapshot,
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_msum",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_ranges")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_msum", "orders_ranges")
     data_dir = os.path.join(table, "data")
 
     o0 = t(spark, sf_dir, "orders")
@@ -12780,20 +12243,7 @@ def s36_iceberg_manifest_pruning(spark, sf_dir):
     assert sorted(kr_file) == list(range(8)), sorted(kr_file)
 
     def entry(kr):
-        path = kr_file[kr]
-        return {
-            "status": 1,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {"kr": str(kr)},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(kr_file[kr], {"kr": str(kr)}, sequence_number=1)
 
     def summary(lo, hi):
         return [
@@ -12891,12 +12341,12 @@ def s37_iceberg_expire_snapshots(spark, sf_dir):
     storage growth under rewrite churn."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
         expire_snapshots,
+        manifest_entry,
         read_snapshot,
         snapshot_files,
         write_manifest,
@@ -12904,13 +12354,7 @@ def s37_iceberg_expire_snapshots(spark, sf_dir):
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_expire",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_expire")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_expire", "orders_expire")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -12947,19 +12391,9 @@ def s37_iceberg_expire_snapshots(spark, sf_dir):
     shutil.rmtree(rewrite_tmp)
 
     def entry(path, st, status_code=1):
-        return {
-            "status": status_code,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {"status": st},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(
+            path, {"status": st}, status=status_code, sequence_number=1
+        )
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -13049,21 +12483,12 @@ def s38_delta_vacuum(spark, sf_dir):
     reclaims the storage compaction strands; the candidate scan is a
     driver-side walk over kilobytes of log."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_vacuum",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_vac")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_vacuum", "orders_vac")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -13093,18 +12518,7 @@ def s38_delta_vacuum(spark, sf_dir):
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             {"metaData": meta},
         ]
-        + [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": True,
-                }
-            }
-            for p in v0_files
-        ],
+        + [D.add_action(table, p, mtime=1) for p in v0_files],
     )
     res = D.compact_files(spark, table, group_size=3)
     assert res["n_after"] == 2
@@ -13171,12 +12585,11 @@ def s39_iceberg_incremental_scan(spark, sf_dir):
     rollback is the cheap bad-commit undo: both are pure metadata
     operations."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         read_incremental,
         read_snapshot,
         rollback_to_snapshot,
@@ -13186,13 +12599,7 @@ def s39_iceberg_incremental_scan(spark, sf_dir):
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_incr",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_incr")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_incr", "orders_incr")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -13212,19 +12619,7 @@ def s39_iceberg_incremental_scan(spark, sf_dir):
         ]
 
     def entry(path, status=1):
-        return {
-            "status": status,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(path, status=status, sequence_number=1)
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -13317,22 +12712,12 @@ def s40_delta_schema_evolution(spark, sf_dir):
     is why lake schema changes are instant: the schema lives in
     kilobytes of log, never in the petabytes of parquet."""
     import json as _json
-    import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_evolve",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_evolve")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_evolve", "orders_evolve")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -13341,28 +12726,8 @@ def s40_delta_schema_evolution(spark, sf_dir):
         ),
     )
 
-    def write_files(df, rel):
-        out = os.path.join(table, rel)
-        df.write.parquet(out, mode="overwrite")
-        return [
-            os.path.join(rel, n)
-            for n in sorted(os.listdir(out))
-            if n.endswith(".parquet")
-        ]
-
     def adds(paths):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": True,
-                }
-            }
-            for p in paths
-        ]
+        return [D.add_action(table, p, mtime=1) for p in paths]
 
     def field(name):
         return {
@@ -13383,7 +12748,7 @@ def s40_delta_schema_evolution(spark, sf_dir):
             "configuration": {},
         }
 
-    v0_files = write_files(o.repartition(4), "v0")
+    v0_files = D.write_files(table, o.repartition(4), "v0")
     D.write_commit(
         table,
         0,
@@ -13398,7 +12763,7 @@ def s40_delta_schema_evolution(spark, sf_dir):
         "cents",
         F.lit(7).cast("long").alias("flag"),
     )
-    v1_files = write_files(appended.repartition(1), "v1")
+    v1_files = D.write_files(table, appended.repartition(1), "v1")
     D.write_commit(
         table,
         1,
@@ -13500,21 +12865,12 @@ def s41_delta_merge_upsert(spark, sf_dir):
     what makes upserts affordable: cost scales with touched data,
     not table size."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_merge",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_merge")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_merge", "orders_merge")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -13562,19 +12918,11 @@ def s41_delta_merge_upsert(spark, sf_dir):
             {"metaData": meta},
         ]
         + [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": True,
-                    "stats": {
-                        "minValues": {"k": stats[p][0]},
-                        "maxValues": {"k": stats[p][1]},
-                    },
-                }
-            }
+            D.add_action(
+                table, p, mtime=1,
+                stats={"minValues": {"k": stats[p][0]},
+                       "maxValues": {"k": stats[p][1]}},
+            )
             for p in v0_files
         ],
     )
@@ -13675,12 +13023,11 @@ def s42_iceberg_merge_on_read_upsert(spark, sf_dir):
     ratio — this engine now implements BOTH sides of that
     trade-off."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         merge_upsert_mor,
         read_snapshot,
         snapshot_files,
@@ -13689,13 +13036,7 @@ def s42_iceberg_merge_on_read_upsert(spark, sf_dir):
         write_table_metadata,
     )
 
-    base_dir = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_mor",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base_dir, "orders_mor_upsert")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_mor", "orders_mor_upsert")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -13713,19 +13054,7 @@ def s42_iceberg_merge_on_read_upsert(spark, sf_dir):
     assert len(v0_files) == 4
 
     def entry(path):
-        return {
-            "status": 1,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(path, sequence_number=1)
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -13811,24 +13140,18 @@ def s43_iceberg_metadata_tables(spark, sf_dir):
     partition skew from kilobytes of metadata, no parquet scan."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         metadata_table,
         write_manifest,
         write_snapshot,
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_mtab",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_meta")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_mtab", "orders_meta")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -13863,19 +13186,10 @@ def s43_iceberg_metadata_tables(spark, sf_dir):
     shutil.rmtree(rewrite_tmp)
 
     def entry(path, st, n, seq, status_code=1):
-        return {
-            "status": status_code,
-            "snapshot_id": None,
-            "sequence_number": seq,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {"status": st},
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        return manifest_entry(
+            path, {"status": st}, status=status_code, sequence_number=seq,
+            record_count=n,
+        )
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -14054,26 +13368,19 @@ def s31_iceberg_metrics_pruning(spark, sf_dir):
     million-file table scan into kilobytes of Avro plus the two
     files a point query needs."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.iceberg_meta import (
         long_bound,
+        manifest_entry,
         read_snapshot,
         write_manifest,
         write_snapshot,
         write_table_metadata,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_bounds",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_bounds")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_bounds", "orders_bounds")
     data_dir = os.path.join(table, "data")
 
     src = t(spark, sf_dir, "orders").select(
@@ -14110,25 +13417,11 @@ def s31_iceberg_metrics_pruning(spark, sf_dir):
 
     def entry(rv):
         lo, hi = bounds[rv]
-        return {
-            "status": 1,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": rng_file[rv],
-                "file_format": "parquet",
-                "partition": {"rng": rv},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(rng_file[rv]),
-                "lower_bounds": [
-                    {"key": KEY_FIELD, "value": long_bound(lo)}
-                ],
-                "upper_bounds": [
-                    {"key": KEY_FIELD, "value": long_bound(hi)}
-                ],
-            },
-        }
+        return manifest_entry(
+            rng_file[rv], {"rng": rv}, sequence_number=1,
+            lower_bounds=[{"key": KEY_FIELD, "value": long_bound(lo)}],
+            upper_bounds=[{"key": KEY_FIELD, "value": long_bound(hi)}],
+        )
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -14202,21 +13495,13 @@ def s28_delta_deletion_vectors(spark, sf_dir):
     tasks, never transit the driver; the anti-join broadcasts (AQE)
     or shuffles on (file, pos)."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
     from cam_etl_spark.sources.roaring import serialize_bitmap_array
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_dv",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_dv")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_dv", "orders_dv")
 
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -14238,25 +13523,13 @@ def s28_delta_deletion_vectors(spark, sf_dir):
                 )
 
     def add(bkt, dv=None):
-        a = {
-            "path": bucket_rel[bkt],
-            "partitionValues": {"bucket": bkt},
-            "size": 1,
-            "modificationTime": 1,
-            "dataChange": True,
-        }
-        if dv:
-            a["deletionVector"] = dv
-        return {"add": a}
+        extra = {"deletionVector": dv} if dv else {}
+        return D.add_action(
+            table, bucket_rel[bkt], {"bucket": bkt}, size=1, mtime=1, **extra
+        )
 
     def rm(bkt):
-        return {
-            "remove": {
-                "path": bucket_rel[bkt],
-                "deletionTimestamp": 2,
-                "dataChange": True,
-            }
-        }
+        return D.remove_action(bucket_rel[bkt], 2)
 
     meta = {
         "id": "orders-dv",
@@ -14404,20 +13677,12 @@ def s29_delta_column_mapping(spark, sf_dir):
     2)."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_cmap",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_cmap")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_cmap", "orders_cmap")
 
     PHYS = {
         "o_orderkey": "col-8a1",
@@ -14443,17 +13708,10 @@ def s29_delta_column_mapping(spark, sf_dir):
             if n.endswith(".parquet"):
                 full = os.path.join(root, n)
                 bval = root.split(PHYS["bucket"] + "=")[1].split("/")[0]
-                adds.append(
-                    {
-                        "add": {
-                            "path": os.path.relpath(full, table),
-                            "partitionValues": {PHYS["bucket"]: bval},
-                            "size": os.path.getsize(full),
-                            "modificationTime": 1,
-                            "dataChange": True,
-                        }
-                    }
-                )
+                adds.append(D.add_action(
+                    table, os.path.relpath(full, table),
+                    {PHYS["bucket"]: bval}, mtime=1,
+                ))
 
     def field(logical, typ, fid):
         return {
@@ -14912,13 +14170,14 @@ def stream_iceberg_tail(spark, sf_dir):
     union of all three snapshots' adds; exactly-once across custom
     offset tracking."""
     import os
-    import shutil
     import tempfile
     import time
 
     from pyspark.sql import functions as F
 
+    from cam_etl_spark.sources.delta_log import table_files
     from cam_etl_spark.sources.iceberg_meta import (
+        manifest_entry,
         write_manifest,
         write_snapshot,
         write_table_metadata,
@@ -14926,13 +14185,7 @@ def stream_iceberg_tail(spark, sf_dir):
     from cam_etl_spark.sources.icebergtail import register_iceberg_tail
 
     register_iceberg_tail(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_icebergtail_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_feed")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_icebergtail_fixture", "orders_feed")
     data_dir = os.path.join(table, "data")
 
     o = t(spark, sf_dir, "orders").select(
@@ -14942,30 +14195,11 @@ def stream_iceberg_tail(spark, sf_dir):
     )
 
     def data_files():
-        out = []
-        for root, _dirs, names in os.walk(data_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    out.append(os.path.join(root, n))
-        return sorted(out)
+        return [os.path.join(data_dir, p) for p in table_files(data_dir)]
 
     def entry(path):
-        return {
-            "status": 1,
-            "snapshot_id": None,
-            "sequence_number": 1,
-            "data_file": {
-                "content": 0,
-                "file_path": path,
-                "file_format": "parquet",
-                "partition": {
-                    "o_orderstatus": path.split("o_orderstatus=")[1]
-                    .split("/")[0]
-                },
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-            },
-        }
+        status = path.split("o_orderstatus=")[1].split("/")[0]
+        return manifest_entry(path, {"o_orderstatus": status}, sequence_number=1)
 
     md = os.path.join(table, "metadata")
     os.makedirs(md, exist_ok=True)
@@ -15106,7 +14340,6 @@ def stream_delta_cdf(spark, sf_dir):
     downstream aggregate or index stays consistent under rewrites —
     an append-only tail cannot give you that."""
     import os
-    import shutil
     import tempfile
     import time
 
@@ -15116,14 +14349,7 @@ def stream_delta_cdf(spark, sf_dir):
     from cam_etl_spark.sources.deltacdf import register_delta_cdf
 
     register_delta_cdf(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_deltacdf_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_cdf_stream")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table, exist_ok=True)
+    table = fixture_dir(sf_dir, "cam_etl_deltacdf_fixture", "orders_cdf_stream")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -15132,40 +14358,11 @@ def stream_delta_cdf(spark, sf_dir):
         ),
     )
 
-    def write_files(df, rel):
-        out = os.path.join(table, rel)
-        df.write.parquet(out, mode="overwrite")
-        return [
-            os.path.join(rel, n)
-            for n in sorted(os.listdir(out))
-            if n.endswith(".parquet")
-        ]
-
     def adds(paths, data_change=True):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 1,
-                    "dataChange": data_change,
-                }
-            }
-            for p in paths
-        ]
+        return [D.add_action(table, p, mtime=1, data_change=data_change) for p in paths]
 
     def removes(paths, data_change=True):
-        return [
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 2,
-                    "dataChange": data_change,
-                }
-            }
-            for p in paths
-        ]
+        return [D.remove_action(p, 2, data_change=data_change) for p in paths]
 
     meta = {
         "id": "orders-cdf-stream",
@@ -15174,7 +14371,7 @@ def stream_delta_cdf(spark, sf_dir):
         "partitionColumns": [],
         "configuration": {"delta.enableChangeDataFeed": "true"},
     }
-    v0_files = write_files(o.repartition(4), "v0")
+    v0_files = D.write_files(table, o.repartition(4), "v0")
     D.write_commit(
         table,
         0,
@@ -15191,14 +14388,14 @@ def stream_delta_cdf(spark, sf_dir):
             F.col("cents")
         ),
     )
-    v1_files = write_files(v1_df.repartition(4), "v1")
+    v1_files = D.write_files(table, v1_df.repartition(4), "v1")
     touched = o.filter(F.col("k") % 10 == 0)
     pre = touched.withColumn("_change_type", F.lit("update_preimage"))
     post = touched.withColumn(
         "cents", F.col("cents") + 11
     ).withColumn("_change_type", F.lit("update_postimage"))
-    cdc_files = write_files(pre, "_change_data/v1pre") + write_files(
-        post, "_change_data/v1post"
+    cdc_files = D.write_files(table, pre, "_change_data/v1pre") + D.write_files(
+        table, post, "_change_data/v1post"
     )
     D.write_commit(
         table,
@@ -15223,7 +14420,7 @@ def stream_delta_cdf(spark, sf_dir):
     # v3: rewrite DELETE of k % 9 = 0 — derived change set
     compacted = [f["path"] for f in D.replay_log(table)["files"]]
     v3_df = v1_df.filter(F.col("k") % 9 != 0)
-    v3_files = write_files(v3_df.repartition(4), "v3")
+    v3_files = D.write_files(table, v3_df.repartition(4), "v3")
     D.write_commit(table, 3, removes(compacted) + adds(v3_files))
 
     n_orders = o.count()
@@ -15319,24 +14516,16 @@ def stream_delta_tail(spark, sf_dir):
     all three commits' adds — the oracle replays it relationally.
     Exactly-once across custom-source offset tracking; the loud
     completion check refuses partial runs."""
-    import os
-    import shutil
     import tempfile
     import time
 
     from pyspark.sql import functions as F
 
-    from cam_etl_spark.sources.delta_log import write_commit
+    from cam_etl_spark.sources.delta_log import add_action, table_files, write_commit
     from cam_etl_spark.sources.deltatail import register_delta_tail
 
     register_delta_tail(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_deltatail_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_feed")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_deltatail_fixture", "orders_feed")
 
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -15344,37 +14533,16 @@ def stream_delta_tail(spark, sf_dir):
         "o_orderstatus",
     )
 
-    def data_files():
-        out = []
-        for root, _dirs, names in os.walk(table):
-            if "_delta_log" in root:
-                continue
-            for n in names:
-                if n.endswith(".parquet"):
-                    out.append(
-                        os.path.relpath(os.path.join(root, n), table)
-                    )
-        return sorted(out)
-
     def adds(paths):
         return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {
-                        "o_orderstatus": p.split("o_orderstatus=")[1]
-                        .split("/")[0]
-                    },
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
+            add_action(
+                table, p, {"o_orderstatus": p.split("o_orderstatus=")[1].split("/")[0]}
+            )
             for p in paths
         ]
 
     o.write.partitionBy("o_orderstatus").parquet(table, mode="overwrite")
-    seen = data_files()
+    seen = table_files(table)
     write_commit(table, 0, adds(seen))
     slices = [
         o.filter(
@@ -15387,7 +14555,7 @@ def stream_delta_tail(spark, sf_dir):
     expected = o.count()
     for v, sl in enumerate(slices, start=1):
         sl.write.partitionBy("o_orderstatus").parquet(table, mode="append")
-        now = data_files()
+        now = table_files(table)
         write_commit(table, v, adds(sorted(set(now) - set(seen))))
         seen = now
         expected += sl.count()
@@ -15620,7 +14788,7 @@ def s26_avro_schema_evolution(spark, sf_dir):
 )
 def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
     """MPEG-1 AUDIO PCM SYNTHESIS with the REAL Table 3-B.3 window
-    (multimodal/mpegaudio.py synthesize_pcm) — the round-7/8/9 ask,
+    (multimodal/mpegaudio.py synthesize_pcm),
     landed: windowed-PCM values hash-checked against a SQL oracle
     that replays the ENTIRE synthesis relationally — the 64x32 cosine
     matrixing as a grouped join, the V-register/U-vector structure as
@@ -15643,56 +14811,39 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
     Reference parity: cam-etl has no audio surface; SURVEY.md SS2.8
     multimodal extension."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import synthesize_pcm
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 16 != 0:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                # subband samples S[s][k], replayed verbatim in SQL
-                vals = [
-                    [
-                        (((dig[(s * 7 + k * 3 + 1) % 16] * 17
-                           + s * 5 + k * 11 + d) % 513) - 256) / 256.0
-                        for s in range(36)
-                    ]
-                    for k in range(32)
-                ]
-                frame = {
-                    "layer": 2,
-                    "channels": 1,
-                    "active": list(range(32)),
-                    "values": vals,
-                }
-                pcm = synthesize_pcm([frame])
-                m = [micro6(v) for v in pcm]
-                rows.append(
-                    {
-                        "media_id": d,
-                        "n_samples": len(m),
-                        "sum_pcm_micro": sum(m),
-                        "sum_abs_micro": sum(abs(v) for v in m),
-                        "max_abs_micro": max(abs(v) for v in m),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sum_pcm_micro",
-                         "sum_abs_micro", "max_abs_micro"],
-            )
+    def run(did, text):
+        d = int(did)
+        if d % 16 != 0:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        # subband samples S[s][k], replayed verbatim in SQL
+        vals = [
+            [
+                (((dig[(s * 7 + k * 3 + 1) % 16] * 17
+                   + s * 5 + k * 11 + d) % 513) - 256) / 256.0
+                for s in range(36)
+            ]
+            for k in range(32)
+        ]
+        frame = {
+            "layer": 2,
+            "channels": 1,
+            "active": list(range(32)),
+            "values": vals,
+        }
+        pcm = synthesize_pcm([frame])
+        m = [micro6(v) for v in pcm]
+        yield {
+            "media_id": d,
+            "n_samples": len(m),
+            "sum_pcm_micro": sum(m),
+            "sum_abs_micro": sum(abs(v) for v in m),
+            "max_abs_micro": max(abs(v) for v in m),
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/16 of documents are decoded, so only those rows should
@@ -15711,8 +14862,8 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_samples long, sum_pcm_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -16007,7 +15158,7 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
     plan={"Exchange hashpartitioning": (0, 2), "CartesianProduct": (0, 0)},
 )
 def s44_delta_v2_checkpoint(spark, sf_dir):
-    """Delta V2 (SIDECAR-BASED) CHECKPOINT — the round-9 ask: the
+    """Delta V2 (SIDECAR-BASED) CHECKPOINT: the
     checkpoint form modern Delta writers emit at scale (PROTOCOL.md
     "V2 Spec Checkpoints"), where a UUID-named top-level file carries
     checkpointMetadata + sidecar actions and the add list is SPREAD
@@ -16025,24 +15176,19 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     the driver reads one small top file, sidecar file-lists can fan
     out, and executors only ever see live parquet."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import (
+        add_action,
+        remove_action,
         replay_log,
+        table_files,
         write_checkpoint_v2,
         write_commit,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_v2ckpt_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_v2ckpt")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_v2ckpt_fixture", "orders_v2ckpt")
 
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -16051,33 +15197,10 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     )
     o.repartition(4).write.parquet(table, mode="overwrite")
 
-    def data_files():
-        rel = []
-        for root, _dirs, names in os.walk(table):
-            if "_delta_log" in root:
-                continue
-            for n in names:
-                if n.endswith(".parquet"):
-                    rel.append(
-                        os.path.relpath(os.path.join(root, n), table)
-                    )
-        return sorted(rel)
-
     def adds(paths):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in paths
-        ]
+        return [add_action(table, p) for p in paths]
 
-    files_v0 = data_files()
+    files_v0 = table_files(table)
     assert len(files_v0) == 4, files_v0
     meta = {
         "id": "orders-v2ckpt-fixture",
@@ -16101,7 +15224,7 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     o.filter(
         (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 5 == 0)
     ).coalesce(1).write.parquet(table, mode="append")
-    f_slice = sorted(set(data_files()) - set(files_v0))
+    f_slice = sorted(set(table_files(table)) - set(files_v0))
     write_commit(table, 1, adds(f_slice))
 
     # the pure-JSON replay BEFORE any checkpoint exists...
@@ -16122,12 +15245,11 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     o.filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 2 == 0)
     ).coalesce(1).write.parquet(table, mode="append")
-    o_slice = sorted(set(data_files()) - set(files_v0) - set(f_slice))
+    o_slice = sorted(set(table_files(table)) - set(files_v0) - set(f_slice))
     write_commit(
         table,
         2,
-        [{"remove": {"path": p, "deletionTimestamp": 2,
-                     "dataChange": True}} for p in f_slice]
+        [remove_action(p, 2) for p in f_slice]
         + adds(o_slice),
     )
 
@@ -16186,7 +15308,7 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
     plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s45_iceberg_schema_evolution(spark, sf_dir):
-    """ICEBERG SCHEMA EVOLUTION ON READ — the round-9 ask: an
+    """ICEBERG SCHEMA EVOLUTION ON READ: an
     add-column AND a rename over EXISTING data files, resolved at
     scan time with zero data rewrite (sources/iceberg_meta.py). File
     A holds every order under the v1 schema (k, amount_old); the
@@ -16201,22 +15323,14 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
     'legacy'). At 100 TB this is why evolution is metadata-only:
     renames and adds touch kilobytes of JSON while petabytes of old
     parquet stay byte-identical and remain scannable."""
-    import glob
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from cam_etl_spark.sources import delta_log as D
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_evo_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_evo")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_evo_fixture", "orders_evo")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -16225,12 +15339,7 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
 
     def one_file(df, name):
-        tmp = data + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        p = os.path.join(data, name)
-        shutil.move(glob.glob(tmp + "/*.parquet")[0], p)
-        shutil.rmtree(tmp)
-        return p
+        return D.one_file(df, os.path.join(data, name))
 
     fa = one_file(
         o.select(
@@ -16252,21 +15361,7 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
     m1 = os.path.join(md, "m1.avro")
     I.write_manifest(
         m1,
-        [
-            {
-                "status": 1,
-                "snapshot_id": 1,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "parquet",
-                    "partition": {},
-                    "record_count": 1,
-                    "file_size_in_bytes": os.path.getsize(p),
-                },
-            }
-            for p in (fa, fb)
-        ],
+        [I.manifest_entry(p, snapshot_id=1, record_count=1) for p in (fa, fb)],
     )
     s1 = I.write_snapshot(table, 1, [m1])
     schema_fields = [
@@ -16325,7 +15420,7 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s58_parquet_page_index_prune(spark, sf_dir):
-    """PARQUET PAGE-INDEX PRUNING (round 11, parquet_meta.py
+    """PARQUET PAGE-INDEX PRUNING (parquet_meta.py
     read_page_index / prune_pages): the OffsetIndex (page locations +
     first row indexes) and ColumnIndex (per-page min/max) that
     parquet-mr writes by default, parsed with the engine's own
@@ -16342,7 +15437,6 @@ def s58_parquet_page_index_prune(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -16352,14 +15446,7 @@ def s58_parquet_page_index_prune(spark, sf_dir):
         read_page_index,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_parquet_pageindex_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    out_dir = os.path.join(base, "orders_sorted")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
+    out_dir = fixture_dir(sf_dir, "cam_etl_parquet_pageindex_fixture", "orders_sorted")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -16378,66 +15465,57 @@ def s58_parquet_page_index_prune(spark, sf_dir):
 
     ranges = [(i, 1 + i * 997, 1 + i * 997 + 400) for i in range(8)]
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                raw = open(p, "rb").read()
-                foot = parse_footer(raw)
-                tbl = pq.read_table(p, columns=["k", "cents"])
-                ks = tbl["k"].to_pylist()
-                cents = tbl["cents"].to_pylist()
-                row_base = 0
-                acc = {i: [0, 0, 0] for i, _, _ in ranges}
-                for rg in foot["row_groups"]:
-                    col = next(c for c in rg["columns"]
-                               if c["path"] == "k")
-                    idx = read_page_index(raw, col)
-                    n_pages = len(idx["page_locations"])
-                    for rid, lo, hi in ranges:
-                        keep = prune_pages(idx, lo, hi,
-                                           rg["num_rows"])
-                        # real skip power on a sorted column
-                        assert len(keep) < max(3, n_pages // 4), \
-                            (p, rid, len(keep), n_pages)
-                        kept_rows = {
-                            i for _pi, fr, er in keep
-                            for i in range(row_base + fr,
-                                           row_base + er)
-                        }
-                        for i in range(row_base,
-                                       row_base + rg["num_rows"]):
-                            if lo <= ks[i] <= hi:
-                                # NO FALSE SKIP
-                                assert i in kept_rows, (p, rid, i)
-                        # answer from kept pages ONLY
-                        for i in sorted(kept_rows):
-                            if lo <= ks[i] <= hi:
-                                acc[rid][0] += 1
-                                acc[rid][1] += ks[i]
-                                acc[rid][2] += cents[i]
-                    row_base += rg["num_rows"]
-                for rid, _, _ in ranges:
-                    if acc[rid][0]:
-                        rows.append({
-                            "range_id": rid,
-                            "n_rows": acc[rid][0],
-                            "sum_key": acc[rid][1],
-                            "sum_cents": acc[rid][2],
-                        })
-            yield pd.DataFrame(
-                rows,
-                columns=["range_id", "n_rows", "sum_key",
-                         "sum_cents"],
-            )
+    def run(p):
+        raw = open(p, "rb").read()
+        foot = parse_footer(raw)
+        tbl = pq.read_table(p, columns=["k", "cents"])
+        ks = tbl["k"].to_pylist()
+        cents = tbl["cents"].to_pylist()
+        row_base = 0
+        acc = {i: [0, 0, 0] for i, _, _ in ranges}
+        for rg in foot["row_groups"]:
+            col = next(c for c in rg["columns"]
+                       if c["path"] == "k")
+            idx = read_page_index(raw, col)
+            n_pages = len(idx["page_locations"])
+            for rid, lo, hi in ranges:
+                keep = prune_pages(idx, lo, hi,
+                                   rg["num_rows"])
+                # real skip power on a sorted column
+                assert len(keep) < max(3, n_pages // 4), \
+                    (p, rid, len(keep), n_pages)
+                kept_rows = {
+                    i for _pi, fr, er in keep
+                    for i in range(row_base + fr,
+                                   row_base + er)
+                }
+                for i in range(row_base,
+                               row_base + rg["num_rows"]):
+                    if lo <= ks[i] <= hi:
+                        # NO FALSE SKIP
+                        assert i in kept_rows, (p, rid, i)
+                # answer from kept pages ONLY
+                for i in sorted(kept_rows):
+                    if lo <= ks[i] <= hi:
+                        acc[rid][0] += 1
+                        acc[rid][1] += ks[i]
+                        acc[rid][2] += cents[i]
+            row_base += rg["num_rows"]
+        for rid, _, _ in ranges:
+            if acc[rid][0]:
+                yield {
+                    "range_id": rid,
+                    "n_rows": acc[rid][0],
+                    "sum_key": acc[rid][1],
+                    "sum_cents": acc[rid][2],
+                }
 
     files = spark.createDataFrame([(path,)], "path string")
     return (
-        files.mapInPandas(
-            run,
+        map_rows(
+            files, run,
             "range_id long, n_rows long, sum_key long, "
             "sum_cents long",
         )
@@ -16469,8 +15547,8 @@ def s58_parquet_page_index_prune(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s57_parquet_bloom_point_lookup(spark, sf_dir):
-    """PARQUET SPLIT-BLOCK BLOOM FILTERS (round 11,
-    sources/parquet_meta.py read_bloom_filter / bloom_might_contain /
+    """PARQUET SPLIT-BLOCK BLOOM FILTERS
+    (sources/parquet_meta.py read_bloom_filter / bloom_might_contain /
     bloom_prune): per column chunk, xxHash64 over the PLAIN encoding
     picks one 256-bit block (upper 32 bits) and 8 salted bits (lower
     32) — the spec's SBBF. Orders is written by Spark's parquet-mr as
@@ -16487,7 +15565,6 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -16496,14 +15573,7 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
         parse_footer,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_parquet_bloom_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    out_dir = os.path.join(base, "orders_bloom")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
+    out_dir = fixture_dir(sf_dir, "cam_etl_parquet_bloom_fixture", "orders_bloom")
 
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -16524,56 +15594,50 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
     paths = [(os.path.join(out_dir, f"part-{i}.parquet"),)
              for i in range(4)]
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = open(path, "rb").read()
-                foot = parse_footer(raw)
-                assert all(
-                    c["bloom_filter_offset"] is not None
-                    for rg in foot["row_groups"]
-                    for c in rg["columns"] if c["path"] == "k"
-                ), path
-                verdict = bloom_prune(raw, "k", probes)
-                # the absent probe set must show real skip power
-                absent = [p for p in probes if p > 10**9]
-                assert sum(1 for p in absent if not verdict[p]) \
-                    >= len(absent) - 3, path
-                tbl = pq.read_table(path, columns=["k", "cents"])
-                ks = tbl["k"].to_pylist()
-                cents = tbl["cents"].to_pylist()
-                probe_set = set(probes)
-                by_key = {}
-                for kk, cc in zip(ks, cents):
-                    if kk in probe_set:
-                        e = by_key.setdefault(kk, [0, 0])
-                        e[0] += 1
-                        e[1] += cc
-                for p in probes:
-                    hit = by_key.get(p)
-                    if not verdict[p]:
-                        # NO FALSE NEGATIVES: a bloom-rejected probe
-                        # must have zero rows in this file
-                        assert hit is None, (path, p)
-                        rows.append({"probe": p, "n_rows": 0,
-                                     "sum_cents": 0})
-                    else:
-                        rows.append({
-                            "probe": p,
-                            "n_rows": hit[0] if hit else 0,
-                            "sum_cents": hit[1] if hit else 0,
-                        })
-            yield pd.DataFrame(
-                rows, columns=["probe", "n_rows", "sum_cents"])
+    def run(path):
+        raw = open(path, "rb").read()
+        foot = parse_footer(raw)
+        assert all(
+            c["bloom_filter_offset"] is not None
+            for rg in foot["row_groups"]
+            for c in rg["columns"] if c["path"] == "k"
+        ), path
+        verdict = bloom_prune(raw, "k", probes)
+        # the absent probe set must show real skip power
+        absent = [p for p in probes if p > 10**9]
+        assert sum(1 for p in absent if not verdict[p]) \
+            >= len(absent) - 3, path
+        tbl = pq.read_table(path, columns=["k", "cents"])
+        ks = tbl["k"].to_pylist()
+        cents = tbl["cents"].to_pylist()
+        probe_set = set(probes)
+        by_key = {}
+        for kk, cc in zip(ks, cents):
+            if kk in probe_set:
+                e = by_key.setdefault(kk, [0, 0])
+                e[0] += 1
+                e[1] += cc
+        for p in probes:
+            hit = by_key.get(p)
+            if not verdict[p]:
+                # NO FALSE NEGATIVES: a bloom-rejected probe
+                # must have zero rows in this file
+                assert hit is None, (path, p)
+                yield {"probe": p, "n_rows": 0,
+                             "sum_cents": 0}
+            else:
+                yield {
+                    "probe": p,
+                    "n_rows": hit[0] if hit else 0,
+                    "sum_cents": hit[1] if hit else 0,
+                }
 
     files = spark.createDataFrame(paths, "path string").repartition(4)
     return (
-        files.mapInPandas(
-            run, "probe long, n_rows long, sum_cents long"
+        map_rows(
+            files, run, "probe long, n_rows long, sum_cents long"
         )
         .groupBy("probe")
         .agg(
@@ -16599,8 +15663,8 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
     tags=["S1", "delta", "lake", "variant", "reader-features"],
 )
 def s56_delta_variant_type(spark, sf_dir):
-    """DELTA variantType READER FEATURE (round 11,
-    sources/delta_log.py SUPPORTED_READER_FEATURES): a Delta table
+    """DELTA variantType READER FEATURE
+    (sources/delta_log.py SUPPORTED_READER_FEATURES): a Delta table
     whose schemaString carries a VARIANT column — Spark 4 owns the
     type end-to-end (parse_json, the parquet value+metadata physical
     layout, variant_get extraction), so the replayer's job is the
@@ -16615,20 +15679,12 @@ def s56_delta_variant_type(spark, sf_dir):
     import json as _json
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_variant_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_variant")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table)
+    table = fixture_dir(sf_dir, "cam_etl_delta_variant_fixture", "orders_variant")
 
     o = t(spark, sf_dir, "orders").filter("o_orderkey % 4 = 1")
     df = o.selectExpr(
@@ -16664,8 +15720,7 @@ def s56_delta_variant_type(spark, sf_dir):
             "schemaString": _json.dumps(schema),
             "partitionColumns": [], "configuration": {},
         }},
-        {"add": {"path": name, "partitionValues": {}, "size": 1,
-                 "modificationTime": 0, "dataChange": True}},
+        D.add_action(table, name, size=1),
     ])
     out, _snap, n_files = D.read_snapshot(spark, table)
     assert n_files == 1
@@ -16721,22 +15776,14 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
     row_number. At 100 TB a DV is a kilobyte bitmap per data file —
     deletes never rewrite data, and the scan stays a pruned
     vectorized parquet read plus one anti-join."""
-    import glob
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from cam_etl_spark.sources import delta_log as D
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_dv_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_dv")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_dv_fixture", "orders_dv")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -16750,13 +15797,9 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
     )
 
     def one_file(df, name):
-        tmp = data + ".tmp"
-        (df.repartition(1).sortWithinPartitions("k")
-         .write.mode("overwrite").parquet(tmp))
-        p = os.path.join(data, name)
-        shutil.move(glob.glob(tmp + "/*.parquet")[0], p)
-        shutil.rmtree(tmp)
-        return p
+        return D.one_file(
+            df.repartition(1).sortWithinPartitions("k"), os.path.join(data, name)
+        )
 
     fa = one_file(o.filter("par = 0"), "even.parquet")
     fb = one_file(o.filter("par = 1"), "odd.parquet")
@@ -16771,31 +15814,17 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
     ])
     m1 = os.path.join(md, "m1.avro")
     I.write_manifest(m1, [
-        {
-            "status": 1, "snapshot_id": 1, "sequence_number": 1,
-            "data_file": {
-                "content": 0, "file_path": p,
-                "file_format": "parquet", "partition": {},
-                "record_count": 1,
-                "file_size_in_bytes": os.path.getsize(p),
-            },
-        }
+        I.manifest_entry(p, snapshot_id=1, sequence_number=1, record_count=1)
         for p in (fa, fb)
     ])
     mdv = os.path.join(md, "dv.avro")
     I.write_manifest(mdv, [
-        {
-            "status": 1, "snapshot_id": 1, "sequence_number": 2,
-            "data_file": {
-                "content": 1, "file_path": puffin,
-                "file_format": "puffin", "partition": {},
-                "record_count": fr["cardinality"],
-                "file_size_in_bytes": os.path.getsize(puffin),
-                "referenced_data_file": ref,
-                "content_offset": fr["offset"],
-                "content_size_in_bytes": fr["length"],
-            },
-        }
+        I.manifest_entry(
+            puffin, snapshot_id=1, sequence_number=2, content=1,
+            file_format="puffin", record_count=fr["cardinality"],
+            referenced_data_file=ref, content_offset=fr["offset"],
+            content_size_in_bytes=fr["length"],
+        )
         for ref, fr in ((fa, frags[0]), (fb, frags[1]))
     ])
     s1 = I.write_snapshot(table, 1, [m1, (mdv, 1)])
@@ -16967,33 +15996,19 @@ def s53_delta_type_widening(spark, sf_dir):
     relationally. At 100 TB this is why type widening matters: the
     ALTER touches kilobytes of JSON while petabytes of narrow parquet
     stay byte-identical and scannable."""
-    import glob
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_widen_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_widen")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table)
+    table = fixture_dir(sf_dir, "cam_etl_delta_widen_fixture", "orders_widen")
 
     o = t(spark, sf_dir, "orders")
 
     def one_file(df, name):
-        tmp = os.path.join(table, "_tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(tmp + "/*.parquet")[0],
-                    os.path.join(table, name))
-        shutil.rmtree(tmp)
+        D.one_file(df, os.path.join(table, name))
         return name
 
     fa = one_file(
@@ -17039,9 +16054,7 @@ def s53_delta_type_widening(spark, sf_dir):
             "schemaString": _json.dumps(schema),
             "partitionColumns": [], "configuration": {},
         }},
-    ] + [{"add": {"path": p, "partitionValues": {}, "size": 1,
-                  "modificationTime": 0, "dataChange": True}}
-         for p in (fa, fb)])
+    ] + [D.add_action(table, p, size=1) for p in (fa, fb)])
     df, _snap, n_files = D.read_snapshot(spark, table)
     assert n_files == 2
     types = dict(df.dtypes)
@@ -17085,8 +16098,8 @@ def s53_delta_type_widening(spark, sf_dir):
           "default-values"],
 )
 def s52_iceberg_v3_row_defaults(spark, sf_dir):
-    """ICEBERG FORMAT-VERSION 3 READ + DEFAULT VALUES (round-11
-    boundary removal, sources/iceberg_meta.py): v3 metadata is
+    """ICEBERG FORMAT-VERSION 3 READ + DEFAULT VALUES
+    (sources/iceberg_meta.py): v3 metadata is
     accepted (row-lineage bookkeeping ignored — this reader exposes
     no _row_id), and the v3 ``initial-default`` field property is
     honored on read. File A holds every order written BEFORE the
@@ -17101,22 +16114,14 @@ def s52_iceberg_v3_row_defaults(spark, sf_dir):
     v3-only types stay loud boundaries. At 100 TB this is the same
     story as schema evolution: adding a defaulted column touches
     kilobytes of JSON, zero data rewrite."""
-    import glob
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from cam_etl_spark.sources import delta_log as D
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_v3_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_v3")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_v3_fixture", "orders_v3")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -17125,12 +16130,7 @@ def s52_iceberg_v3_row_defaults(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
 
     def one_file(df, name):
-        tmp = data + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        p = os.path.join(data, name)
-        shutil.move(glob.glob(tmp + "/*.parquet")[0], p)
-        shutil.rmtree(tmp)
-        return p
+        return D.one_file(df, os.path.join(data, name))
 
     fa = one_file(
         o.select(
@@ -17153,21 +16153,7 @@ def s52_iceberg_v3_row_defaults(spark, sf_dir):
     m1 = os.path.join(md, "m1.avro")
     I.write_manifest(
         m1,
-        [
-            {
-                "status": 1,
-                "snapshot_id": 1,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "parquet",
-                    "partition": {},
-                    "record_count": 1,
-                    "file_size_in_bytes": os.path.getsize(p),
-                },
-            }
-            for p in (fa, fb)
-        ],
+        [I.manifest_entry(p, snapshot_id=1, record_count=1) for p in (fa, fb)],
     )
     s1 = I.write_snapshot(table, 1, [m1])
     schema_fields = [
@@ -17237,8 +16223,6 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
     is how a lake migration audits decade-old hive-0.11 files without
     a rewrite."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -17248,11 +16232,7 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
         read_orc,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_orc_v1_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = fixture_dir(sf_dir, "cam_etl_orc_v1_fixture")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_orderkey") % 997).alias("v_small"),
@@ -17262,7 +16242,6 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
     pairs = []
     for parity, comp in enumerate(("zlib", "snappy")):
         out_dir = os.path.join(base, comp)
-        shutil.rmtree(out_dir, ignore_errors=True)
         (
             o.filter(F.col("o_orderkey") % 2 == parity)
             .repartition(2)
@@ -17276,42 +16255,33 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
 
     cols = ["o_orderkey", "v_small", "o_orderstatus", "cents"]
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.orc as paorc
+    import pyarrow.orc as paorc
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = open(path, "rb").read()
-                tail = parse_tail(raw)
-                for st in tail["stripes"]:
-                    sf = _stripe_footer(raw, st, tail["compression"])
-                    kinds = {e["kind"] for e in sf["encodings"]}
-                    assert kinds <= {"DIRECT", "DICTIONARY"}, kinds
-                got = read_orc(raw)
-                ref = paorc.read_table(path).to_pydict()
-                for col in cols:
-                    vals = got["columns"][col]
-                    assert vals == ref[col], (col, path)
-                    checksum = (
-                        sum(len(v.encode("utf-8")) for v in vals)
-                        if col == "o_orderstatus"
-                        else sum(vals)
-                    )
-                    rows.append(
-                        {"col": col, "n_values": len(vals),
-                         "checksum": checksum}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["col", "n_values", "checksum"]
+    def run(path):
+        raw = open(path, "rb").read()
+        tail = parse_tail(raw)
+        for st in tail["stripes"]:
+            sf = _stripe_footer(raw, st, tail["compression"])
+            kinds = {e["kind"] for e in sf["encodings"]}
+            assert kinds <= {"DIRECT", "DICTIONARY"}, kinds
+        got = read_orc(raw)
+        ref = paorc.read_table(path).to_pydict()
+        for col in cols:
+            vals = got["columns"][col]
+            assert vals == ref[col], (col, path)
+            checksum = (
+                sum(len(v.encode("utf-8")) for v in vals)
+                if col == "o_orderstatus"
+                else sum(vals)
             )
+            yield {"col": col, "n_values": len(vals),
+             "checksum": checksum}
 
     files = spark.createDataFrame(pairs, "path string").repartition(
         len(pairs)
     )
-    partials = files.mapInPandas(
-        run, "col string, n_values long, checksum long"
+    partials = map_rows(
+        files, run, "col string, n_values long, checksum long"
     )
     return (
         partials.groupBy("col")
@@ -17502,92 +16472,77 @@ def multimodal_mp3_full_decode(spark, sf_dir):
     extension — this completes codes->PCM for MP3 within the vendored
     tables."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         decode_mp3_pcm,
         encode_mp3_frame,
         parse_mp3_frame,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 32 != 2:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                np_pairs = 60 + dig[1] % 120
-                grans = []
-                for gr in range(2):
-                    pairs = []
-                    for i in range(np_pairs):
-                        x = ((dig[(i * 3 + gr + 4) % 16] + i) % 3) * (
-                            -1 if (dig[(i + 9) % 16] + i + gr) % 2
-                            else 1)
-                        y = ((dig[(i * 5 + gr + 6) % 16] + 2 * i) % 3
-                             ) * (
-                            -1 if (dig[(i + 12) % 16] + i + gr) % 2
-                            else 1)
-                        pairs.append((x, y))
-                    nq = dig[10 + gr] % 4
-                    quads = []
-                    for qi in range(nq):
-                        quads.append(tuple(
-                            ((dig[((4 * qi + t) * 2 + 12 + gr) % 16]
-                              + 4 * qi + t) % 3) - 1
-                            for t in range(4)
-                        ))
-                    g = {
-                        "block_type": 0, "mixed_block_flag": 0,
-                        "scalefac_compress": 9,  # slen (2,2): sf 0..3
-                        "global_gain": 150 + dig[12 + gr] % 40,
-                        "preflag": 0,
-                        "scalefac_scale": dig[gr] % 2,
-                        "table_select": [3, 3, 3],
-                        "subblock_gain": [0, 0, 0],
-                        "region0_count": 4, "region1_count": 4,
-                        "scfsi": 0,
-                        "scalefacs": [
-                            dig[(b * 5 + gr + 3) % 16] % 4
-                            for b in range(21)
-                        ],
-                        "count1table_select": 1,
-                        "pairs": pairs,
-                        "quads": quads,
-                    }
-                    grans.append([g])
-                buf = encode_mp3_frame(grans, sample_rate=44100,
-                                       bitrate_kbps=320)
-                shell = parse_mp3_frame(buf)
-                for gr in range(2):
-                    got = shell["granules"][gr][0]
-                    assert got["pairs"] == grans[gr][0]["pairs"], d
-                    assert got["quads"] == grans[gr][0]["quads"], d
-                    assert (got["scalefacs"]
-                            == grans[gr][0]["scalefacs"]), d
-                pcm = decode_mp3_pcm([shell])
-                m = [micro6(v) for v in pcm]
-                rows.append({
-                    "media_id": d,
-                    "n_samples": len(m),
-                    "sum_pcm_micro": sum(m),
-                    "sum_abs_micro": sum(abs(v) for v in m),
-                    "max_abs_micro": max(abs(v) for v in m),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sum_pcm_micro",
-                         "sum_abs_micro", "max_abs_micro"],
-            )
+    def run(did, text):
+        d = int(did)
+        if d % 32 != 2:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        np_pairs = 60 + dig[1] % 120
+        grans = []
+        for gr in range(2):
+            pairs = []
+            for i in range(np_pairs):
+                x = ((dig[(i * 3 + gr + 4) % 16] + i) % 3) * (
+                    -1 if (dig[(i + 9) % 16] + i + gr) % 2
+                    else 1)
+                y = ((dig[(i * 5 + gr + 6) % 16] + 2 * i) % 3
+                     ) * (
+                    -1 if (dig[(i + 12) % 16] + i + gr) % 2
+                    else 1)
+                pairs.append((x, y))
+            nq = dig[10 + gr] % 4
+            quads = []
+            for qi in range(nq):
+                quads.append(tuple(
+                    ((dig[((4 * qi + t) * 2 + 12 + gr) % 16]
+                      + 4 * qi + t) % 3) - 1
+                    for t in range(4)
+                ))
+            g = {
+                "block_type": 0, "mixed_block_flag": 0,
+                "scalefac_compress": 9,  # slen (2,2): sf 0..3
+                "global_gain": 150 + dig[12 + gr] % 40,
+                "preflag": 0,
+                "scalefac_scale": dig[gr] % 2,
+                "table_select": [3, 3, 3],
+                "subblock_gain": [0, 0, 0],
+                "region0_count": 4, "region1_count": 4,
+                "scfsi": 0,
+                "scalefacs": [
+                    dig[(b * 5 + gr + 3) % 16] % 4
+                    for b in range(21)
+                ],
+                "count1table_select": 1,
+                "pairs": pairs,
+                "quads": quads,
+            }
+            grans.append([g])
+        buf = encode_mp3_frame(grans, sample_rate=44100,
+                               bitrate_kbps=320)
+        shell = parse_mp3_frame(buf)
+        for gr in range(2):
+            got = shell["granules"][gr][0]
+            assert got["pairs"] == grans[gr][0]["pairs"], d
+            assert got["quads"] == grans[gr][0]["quads"], d
+            assert (got["scalefacs"]
+                    == grans[gr][0]["scalefacs"]), d
+        pcm = decode_mp3_pcm([shell])
+        m = [micro6(v) for v in pcm]
+        yield {
+            "media_id": d,
+            "n_samples": len(m),
+            "sum_pcm_micro": sum(m),
+            "sum_abs_micro": sum(abs(v) for v in m),
+            "max_abs_micro": max(abs(v) for v in m),
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/32 of documents are decoded, so only those rows should
@@ -17606,8 +16561,8 @@ def multimodal_mp3_full_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_samples long, sum_pcm_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -17648,23 +16603,16 @@ def s47_delta_id_column_mapping(spark, sf_dir):
     byte-identical across any number of renames."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import (
+        add_action,
         read_snapshot,
         write_commit,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_idmap_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_idmap")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_idmap_fixture", "orders_idmap")
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
 
     o = t(spark, sf_dir, "orders").select(
@@ -17709,12 +16657,7 @@ def s47_delta_id_column_mapping(spark, sf_dir):
     }
 
     def adds(paths):
-        return [
-            {"add": {"path": p, "partitionValues": {},
-                     "size": os.path.getsize(os.path.join(table, p)),
-                     "modificationTime": 0, "dataChange": True}}
-            for p in paths
-        ]
+        return [add_action(table, p) for p in paths]
 
     write_commit(table, 0, [
         {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
@@ -17763,8 +16706,8 @@ def s47_delta_id_column_mapping(spark, sf_dir):
     tags=["S1", "delta", "lake", "multipart-checkpoint"],
 )
 def s49_delta_multipart_checkpoint(spark, sf_dir):
-    """DELTA CLASSIC MULTI-PART CHECKPOINT (round-10 boundary
-    removal, sources/delta_log.py write_checkpoint_multipart + the
+    """DELTA CLASSIC MULTI-PART CHECKPOINT
+    (sources/delta_log.py write_checkpoint_multipart + the
     list branch of _load_checkpoint): the pre-v2Checkpoint layout
     `%020d.checkpoint.%010d.%010d.parquet` (part o of n) that real
     old tables carry when the file list outgrew one parquet. The
@@ -17783,24 +16726,19 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     parquet, so executors can fan the snapshot's file list out
     part-parallel instead of single-reader."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import (
+        add_action,
+        remove_action,
         replay_log,
+        table_files,
         write_checkpoint_multipart,
         write_commit,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_multickpt_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_multickpt")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_delta_multickpt_fixture", "orders_multickpt")
 
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -17809,33 +16747,10 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     )
     o.repartition(4).write.parquet(table, mode="overwrite")
 
-    def data_files():
-        rel = []
-        for root, _dirs, names in os.walk(table):
-            if "_delta_log" in root:
-                continue
-            for n in names:
-                if n.endswith(".parquet"):
-                    rel.append(
-                        os.path.relpath(os.path.join(root, n), table)
-                    )
-        return sorted(rel)
-
     def adds(paths):
-        return [
-            {
-                "add": {
-                    "path": p,
-                    "partitionValues": {},
-                    "size": os.path.getsize(os.path.join(table, p)),
-                    "modificationTime": 0,
-                    "dataChange": True,
-                }
-            }
-            for p in paths
-        ]
+        return [add_action(table, p) for p in paths]
 
-    files_v0 = data_files()
+    files_v0 = table_files(table)
     assert len(files_v0) == 4, files_v0
     meta = {
         "id": "orders-multickpt-fixture",
@@ -17858,7 +16773,7 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     o.filter(
         (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 7 == 0)
     ).coalesce(1).write.parquet(table, mode="append")
-    f_slice = sorted(set(data_files()) - set(files_v0))
+    f_slice = sorted(set(table_files(table)) - set(files_v0))
     write_commit(table, 1, adds(f_slice))
 
     # a crashed writer's INCOMPLETE multipart at v0 must be ignored
@@ -17886,12 +16801,11 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     o.filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 3 == 0)
     ).coalesce(1).write.parquet(table, mode="append")
-    o_slice = sorted(set(data_files()) - set(files_v0) - set(f_slice))
+    o_slice = sorted(set(table_files(table)) - set(files_v0) - set(f_slice))
     write_commit(
         table,
         2,
-        [{"remove": {"path": p, "deletionTimestamp": 2,
-                     "dataChange": True}} for p in f_slice]
+        [remove_action(p, 2) for p in f_slice]
         + adds(o_slice),
     )
 
@@ -18008,8 +16922,8 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_tables5_12_decode(spark, sf_dir):
-    """MP3 BIG-VALUES HUFFMAN TABLES 5-12 (round-10 boundary
-    removal, multimodal/mp3.py BIGVALUE_TABLES): the 4x4 / 6x6 / 8x8
+    """MP3 BIG-VALUES HUFFMAN TABLES 5-12
+    (multimodal/mp3.py BIGVALUE_TABLES): the 4x4 / 6x6 / 8x8
     printed tables of ISO 11172-3 Table B.7, each vendored ONLY
     after passing the joint structural gate (Kraft sum exactly 1 AND
     prefix-freeness over the (hlen, hcod) pairs — variants off by a
@@ -18032,90 +16946,79 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
         parse_mp3_frame,
     )
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 8 != 3:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                tl = [5 + dig[0] % 8, 5 + dig[1] % 8, 5 + dig[2] % 8]
-                r0c, r1c = dig[3] % 7, dig[4] % 6
-                np_pairs = 10 + dig[5] % 50
-                g0 = {
-                    "block_type": 0, "mixed_block_flag": 0,
-                    "scalefac_compress": 0, "global_gain": 180,
-                    "preflag": 0, "scalefac_scale": 0,
-                    "table_select": tl, "subblock_gain": [0, 0, 0],
-                    "region0_count": r0c, "region1_count": r1c,
-                    "scfsi": 0, "scalefacs": [0] * 21,
-                    "count1table_select": 0,
-                    "quads": [],
-                }
-                bounds = bigvalue_regions(
-                    dict(g0, big_values=np_pairs), 44100
-                )
-                pairs = []
-                tids = []
-                for i in range(np_pairs):
-                    s = 2 * i
-                    region = (0 if s < bounds[1]
-                              else (1 if s < bounds[2] else 2))
-                    tid = tl[region]
-                    dim = BIGVALUE_TABLES[tid][0]
-                    x = ((dig[(i * 3 + 6) % 16] + i) % dim) * (
-                        -1 if (dig[(i + 8) % 16] + i) % 2 else 1)
-                    y = ((dig[(i * 5 + 7) % 16] + 2 * i) % dim) * (
-                        -1 if (dig[(i + 11) % 16] + i) % 2 else 1)
-                    pairs.append((x, y))
-                    tids.append(tid)
-                g0["pairs"] = pairs
-                nq = dig[10] % 5
-                g0["quads"] = [
-                    tuple(((dig[((4 * qi + t) * 2 + 12) % 16]
-                            + 4 * qi + t) % 3) - 1 for t in range(4))
-                    for qi in range(nq)
-                ]
-                g1 = {
-                    "block_type": 0, "mixed_block_flag": 0,
-                    "scalefac_compress": 0, "global_gain": 170,
-                    "preflag": 0, "scalefac_scale": 0,
-                    "table_select": [0, 0, 0],
-                    "subblock_gain": [0, 0, 0],
-                    "region0_count": 4, "region1_count": 4,
-                    "scfsi": 0, "scalefacs": [0] * 21,
-                    "count1table_select": 1,
-                    "pairs": [], "quads": [],
-                }
-                buf = encode_mp3_frame([[g0], [g1]],
-                                       sample_rate=44100,
-                                       bitrate_kbps=320)
-                m = parse_mp3_frame(buf)
-                got = m["granules"][0][0]
-                assert got["pairs"] == pairs, d
-                assert got["quads"] == g0["quads"], d
-                assert got["table_select"] == tl, d
-                qvals = [v for q in g0["quads"] for v in q]
-                rows.append({
-                    "media_id": d,
-                    "n_pairs": len(pairs),
-                    "sum_signed": sum(x + y for x, y in pairs),
-                    "sum_abs": sum(abs(x) + abs(y) for x, y in pairs),
-                    "max_abs": max(max(abs(x), abs(y))
-                                   for x, y in pairs),
-                    "sum_tid": sum(tids),
-                    "n_quad_vals": len(qvals),
-                    "sum_quads": sum(qvals),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_pairs", "sum_signed",
-                         "sum_abs", "max_abs", "sum_tid",
-                         "n_quad_vals", "sum_quads"],
-            )
+    def run(did, text):
+        d = int(did)
+        if d % 8 != 3:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        tl = [5 + dig[0] % 8, 5 + dig[1] % 8, 5 + dig[2] % 8]
+        r0c, r1c = dig[3] % 7, dig[4] % 6
+        np_pairs = 10 + dig[5] % 50
+        g0 = {
+            "block_type": 0, "mixed_block_flag": 0,
+            "scalefac_compress": 0, "global_gain": 180,
+            "preflag": 0, "scalefac_scale": 0,
+            "table_select": tl, "subblock_gain": [0, 0, 0],
+            "region0_count": r0c, "region1_count": r1c,
+            "scfsi": 0, "scalefacs": [0] * 21,
+            "count1table_select": 0,
+            "quads": [],
+        }
+        bounds = bigvalue_regions(
+            dict(g0, big_values=np_pairs), 44100
+        )
+        pairs = []
+        tids = []
+        for i in range(np_pairs):
+            s = 2 * i
+            region = (0 if s < bounds[1]
+                      else (1 if s < bounds[2] else 2))
+            tid = tl[region]
+            dim = BIGVALUE_TABLES[tid][0]
+            x = ((dig[(i * 3 + 6) % 16] + i) % dim) * (
+                -1 if (dig[(i + 8) % 16] + i) % 2 else 1)
+            y = ((dig[(i * 5 + 7) % 16] + 2 * i) % dim) * (
+                -1 if (dig[(i + 11) % 16] + i) % 2 else 1)
+            pairs.append((x, y))
+            tids.append(tid)
+        g0["pairs"] = pairs
+        nq = dig[10] % 5
+        g0["quads"] = [
+            tuple(((dig[((4 * qi + t) * 2 + 12) % 16]
+                    + 4 * qi + t) % 3) - 1 for t in range(4))
+            for qi in range(nq)
+        ]
+        g1 = {
+            "block_type": 0, "mixed_block_flag": 0,
+            "scalefac_compress": 0, "global_gain": 170,
+            "preflag": 0, "scalefac_scale": 0,
+            "table_select": [0, 0, 0],
+            "subblock_gain": [0, 0, 0],
+            "region0_count": 4, "region1_count": 4,
+            "scfsi": 0, "scalefacs": [0] * 21,
+            "count1table_select": 1,
+            "pairs": [], "quads": [],
+        }
+        buf = encode_mp3_frame([[g0], [g1]],
+                               sample_rate=44100,
+                               bitrate_kbps=320)
+        m = parse_mp3_frame(buf)
+        got = m["granules"][0][0]
+        assert got["pairs"] == pairs, d
+        assert got["quads"] == g0["quads"], d
+        assert got["table_select"] == tl, d
+        qvals = [v for q in g0["quads"] for v in q]
+        yield {
+            "media_id": d,
+            "n_pairs": len(pairs),
+            "sum_signed": sum(x + y for x, y in pairs),
+            "sum_abs": sum(abs(x) + abs(y) for x, y in pairs),
+            "max_abs": max(max(abs(x), abs(y))
+                           for x, y in pairs),
+            "sum_tid": sum(tids),
+            "n_quad_vals": len(qvals),
+            "sum_quads": sum(qvals),
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/8 of documents are decoded, so only those rows should
@@ -18134,8 +17037,8 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_pairs long, sum_signed long, "
         "sum_abs long, max_abs long, sum_tid long, "
         "n_quad_vals long, sum_quads long",
@@ -18256,117 +17159,105 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
         requantize,
     )
 
-    def run(batches):
-        import pandas as pd
+    sqrt2 = math.sqrt(2.0)
 
-        sqrt2 = math.sqrt(2.0)
+    def run(did, text):
+        d = int(did)
+        if d % 32 != 7:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 32 != 7:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
+        def granule(gr, ch):
+            tl = [5 + dig[1 + r + 3 * ch] % 8
+                  for r in range(3)]
+            np_pairs = 20 + dig[7 + 2 * gr + ch] % 40
+            gg = 140 + dig[11 + 2 * gr + ch] % 50
+            pairs = []
+            for i in range(np_pairs):
+                s = 2 * i
+                region = (0 if s < min(20, 2 * np_pairs)
+                          else (1 if s < min(52, 2 * np_pairs)
+                                else 2))
+                dim = BIGVALUE_TABLES[tl[region]][0]
+                x = ((dig[(i * 3 + gr + 2 * ch + 4) % 16]
+                      + i) % dim) * (
+                    -1 if (dig[(i + 9) % 16] + i + gr + ch)
+                    % 2 else 1)
+                y = ((dig[(i * 5 + gr + 3 * ch + 6) % 16]
+                      + 2 * i) % dim) * (
+                    -1 if (dig[(i + 12) % 16] + i + gr + ch)
+                    % 2 else 1)
+                pairs.append((x, y))
+            return {
+                "block_type": 0, "mixed_block_flag": 0,
+                "scalefac_compress": 0, "global_gain": gg,
+                "preflag": 0, "scalefac_scale": 0,
+                "table_select": tl,
+                "subblock_gain": [0, 0, 0],
+                "region0_count": 4, "region1_count": 4,
+                "scfsi": 0, "scalefacs": [0] * 21,
+                "count1table_select": 1,
+                "pairs": pairs, "quads": [],
+            }
 
-                def granule(gr, ch):
-                    tl = [5 + dig[1 + r + 3 * ch] % 8
-                          for r in range(3)]
-                    np_pairs = 20 + dig[7 + 2 * gr + ch] % 40
-                    gg = 140 + dig[11 + 2 * gr + ch] % 50
-                    pairs = []
-                    for i in range(np_pairs):
-                        s = 2 * i
-                        region = (0 if s < min(20, 2 * np_pairs)
-                                  else (1 if s < min(52, 2 * np_pairs)
-                                        else 2))
-                        dim = BIGVALUE_TABLES[tl[region]][0]
-                        x = ((dig[(i * 3 + gr + 2 * ch + 4) % 16]
-                              + i) % dim) * (
-                            -1 if (dig[(i + 9) % 16] + i + gr + ch)
-                            % 2 else 1)
-                        y = ((dig[(i * 5 + gr + 3 * ch + 6) % 16]
-                              + 2 * i) % dim) * (
-                            -1 if (dig[(i + 12) % 16] + i + gr + ch)
-                            % 2 else 1)
-                        pairs.append((x, y))
-                    return {
-                        "block_type": 0, "mixed_block_flag": 0,
-                        "scalefac_compress": 0, "global_gain": gg,
-                        "preflag": 0, "scalefac_scale": 0,
-                        "table_select": tl,
-                        "subblock_gain": [0, 0, 0],
-                        "region0_count": 4, "region1_count": 4,
-                        "scfsi": 0, "scalefacs": [0] * 21,
-                        "count1table_select": 1,
-                        "pairs": pairs, "quads": [],
-                    }
+        grans = [[granule(gr, ch) for ch in range(2)]
+                 for gr in range(2)]
+        buf = encode_mp3_frame(grans, sample_rate=44100,
+                               bitrate_kbps=320, ms=True)
+        shell = parse_mp3_frame(buf)
+        assert shell["mode"] == 0b01, d
+        assert shell["mode_ext"] == 0b10, d
+        for gr in range(2):
+            for ch in range(2):
+                got = shell["granules"][gr][ch]
+                assert (got["pairs"]
+                        == grans[gr][ch]["pairs"]), d
+        left, right = decode_mp3_pcm([shell],
+                                     channel=None)
+        # two independent MONO decodes of the same data
+        mono = []
+        for ch in range(2):
+            mb = encode_mp3_frame(
+                [[grans[0][ch]], [grans[1][ch]]],
+                sample_rate=44100, bitrate_kbps=160)
+            mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
+        assert np.allclose(left, (mono[0] + mono[1]) / sqrt2,
+                           rtol=1e-9, atol=1e-12), d
+        assert np.allclose(right, (mono[0] - mono[1]) / sqrt2,
+                           rtol=1e-9, atol=1e-12), d
 
-                grans = [[granule(gr, ch) for ch in range(2)]
-                         for gr in range(2)]
-                buf = encode_mp3_frame(grans, sample_rate=44100,
-                                       bitrate_kbps=320, ms=True)
-                shell = parse_mp3_frame(buf)
-                assert shell["mode"] == 0b01, d
-                assert shell["mode_ext"] == 0b10, d
-                for gr in range(2):
-                    for ch in range(2):
-                        got = shell["granules"][gr][ch]
-                        assert (got["pairs"]
-                                == grans[gr][ch]["pairs"]), d
-                left, right = decode_mp3_pcm([shell],
-                                             channel=None)
-                # two independent MONO decodes of the same data
-                mono = []
-                for ch in range(2):
-                    mb = encode_mp3_frame(
-                        [[grans[0][ch]], [grans[1][ch]]],
-                        sample_rate=44100, bitrate_kbps=160)
-                    mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
-                assert np.allclose(left, (mono[0] + mono[1]) / sqrt2,
-                                   rtol=1e-9, atol=1e-12), d
-                assert np.allclose(right, (mono[0] - mono[1]) / sqrt2,
-                                   rtol=1e-9, atol=1e-12), d
-
-                # spectral-domain stats the oracle replays: the
-                # butterfly on requantized spectra, integer micro
-                n_lines = 0
-                sums = [0, 0, 0, 0, 0, 0]
-                for gr in range(2):
-                    xm = requantize(shell["granules"][gr][0], 44100)
-                    xs = requantize(shell["granules"][gr][1], 44100)
-                    for a, b in zip(xm, xs):
-                        lv = (a + b) / sqrt2
-                        rv = (a - b) / sqrt2
-                        ml = int(math.copysign(
-                            np.floor(abs(lv) * 1e6 + 0.5), lv))
-                        mr = int(math.copysign(
-                            np.floor(abs(rv) * 1e6 + 0.5), rv))
-                        if ml or mr:
-                            n_lines += 1
-                        sums[0] += ml
-                        sums[1] += abs(ml)
-                        sums[2] = max(sums[2], abs(ml))
-                        sums[3] += mr
-                        sums[4] += abs(mr)
-                        sums[5] = max(sums[5], abs(mr))
-                rows.append({
-                    "media_id": d,
-                    "n_lines": n_lines,
-                    "sum_l_micro": sums[0],
-                    "sum_abs_l_micro": sums[1],
-                    "max_abs_l_micro": sums[2],
-                    "sum_r_micro": sums[3],
-                    "sum_abs_r_micro": sums[4],
-                    "max_abs_r_micro": sums[5],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_lines", "sum_l_micro",
-                         "sum_abs_l_micro", "max_abs_l_micro",
-                         "sum_r_micro", "sum_abs_r_micro",
-                         "max_abs_r_micro"],
-            )
+        # spectral-domain stats the oracle replays: the
+        # butterfly on requantized spectra, integer micro
+        n_lines = 0
+        sums = [0, 0, 0, 0, 0, 0]
+        for gr in range(2):
+            xm = requantize(shell["granules"][gr][0], 44100)
+            xs = requantize(shell["granules"][gr][1], 44100)
+            for a, b in zip(xm, xs):
+                lv = (a + b) / sqrt2
+                rv = (a - b) / sqrt2
+                ml = int(math.copysign(
+                    np.floor(abs(lv) * 1e6 + 0.5), lv))
+                mr = int(math.copysign(
+                    np.floor(abs(rv) * 1e6 + 0.5), rv))
+                if ml or mr:
+                    n_lines += 1
+                sums[0] += ml
+                sums[1] += abs(ml)
+                sums[2] = max(sums[2], abs(ml))
+                sums[3] += mr
+                sums[4] += abs(mr)
+                sums[5] = max(sums[5], abs(mr))
+        yield {
+            "media_id": d,
+            "n_lines": n_lines,
+            "sum_l_micro": sums[0],
+            "sum_abs_l_micro": sums[1],
+            "max_abs_l_micro": sums[2],
+            "sum_r_micro": sums[3],
+            "sum_abs_r_micro": sums[4],
+            "max_abs_r_micro": sums[5],
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/32 of documents are decoded, so only those rows should
@@ -18385,8 +17276,8 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -18422,8 +17313,8 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s48_orc_lz4_timezone_decode(spark, sf_dir):
-    """ORC LZ4 + NON-UTC WRITER TIMEZONE (round-10 boundary
-    removals, sources/orc_read.py): orders plus a per-row timestamp
+    """ORC LZ4 + NON-UTC WRITER TIMEZONE
+    (sources/orc_read.py): orders plus a per-row timestamp
     is written by Spark's native Java ORC writer with
     compression=lz4 UNDER A JVM DEFAULT TIMEZONE OF Asia/Kolkata
     (restored afterwards), so every stripe footer carries
@@ -18439,8 +17330,6 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
     file, zero shuffles before the kilobyte rollup — the 100 TB
     lake-audit shape."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -18450,11 +17339,7 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
         read_orc,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_orc_lz4tz_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = fixture_dir(sf_dir, "cam_etl_orc_lz4tz_fixture")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -18465,7 +17350,6 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
         ).alias("ts"),
     )
     out_dir = os.path.join(base, "lz4_kolkata")
-    shutil.rmtree(out_dir, ignore_errors=True)
     jvm = spark._jvm
     TZ = jvm.java.util.TimeZone
     orig = TZ.getDefault()
@@ -18486,58 +17370,48 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
 
     cols = ["o_orderkey", "o_orderstatus", "cents", "ts"]
 
-    def run(batches):
-        import datetime
+    import datetime
+    import pyarrow.orc as paorc
 
-        import pandas as pd
-        import pyarrow.orc as paorc
+    epoch = datetime.datetime(1970, 1, 1)
 
-        epoch = datetime.datetime(1970, 1, 1)
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = open(path, "rb").read()
-                tail = parse_tail(raw)
-                assert tail["compression"] == "LZ4", path
-                for st in tail["stripes"]:
-                    sf = _stripe_footer(raw, st, tail["compression"])
-                    assert (sf["writer_timezone"]
-                            == "Asia/Kolkata"), path
-                got = read_orc(raw)
-                ref = paorc.read_table(path).to_pydict()
-                for col in cols:
-                    vals = got["columns"][col]
-                    if col == "ts":
-                        assert [v.isoformat() for v in vals] == [
-                            r.isoformat() for r in ref[col]
-                        ], path
-                        checksum = sum(
-                            int((v - epoch).total_seconds())
-                            for v in vals
-                        )
-                    elif col == "o_orderstatus":
-                        assert vals == ref[col], (col, path)
-                        checksum = sum(
-                            len(v.encode("utf-8")) for v in vals
-                        )
-                    else:
-                        assert vals == ref[col], (col, path)
-                        checksum = sum(vals)
-                    rows.append(
-                        {"col": col, "n_values": len(vals),
-                         "checksum": checksum}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["col", "n_values", "checksum"]
-            )
+    def run(path):
+        raw = open(path, "rb").read()
+        tail = parse_tail(raw)
+        assert tail["compression"] == "LZ4", path
+        for st in tail["stripes"]:
+            sf = _stripe_footer(raw, st, tail["compression"])
+            assert (sf["writer_timezone"]
+                    == "Asia/Kolkata"), path
+        got = read_orc(raw)
+        ref = paorc.read_table(path).to_pydict()
+        for col in cols:
+            vals = got["columns"][col]
+            if col == "ts":
+                assert [v.isoformat() for v in vals] == [
+                    r.isoformat() for r in ref[col]
+                ], path
+                checksum = sum(
+                    int((v - epoch).total_seconds())
+                    for v in vals
+                )
+            elif col == "o_orderstatus":
+                assert vals == ref[col], (col, path)
+                checksum = sum(
+                    len(v.encode("utf-8")) for v in vals
+                )
+            else:
+                assert vals == ref[col], (col, path)
+                checksum = sum(vals)
+            yield {"col": col, "n_values": len(vals),
+             "checksum": checksum}
 
     files = spark.createDataFrame(paths, "path string").repartition(
         len(paths)
     )
     return (
-        files.mapInPandas(
-            run, "col string, n_values long, checksum long"
+        map_rows(
+            files, run, "col string, n_values long, checksum long"
         )
         .groupBy("col")
         .agg(
@@ -18623,71 +17497,55 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
     value-for-value in integer micro-units. One Arrow mapInPandas
     scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mpegaudio import (
         decode_mpeg1_audio,
         encode_layer2_frame,
         l2_steps_list,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 16 != 9:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                alloc, scfsi, scf, codes = [], [], [], []
-                for sb in range(30):
-                    amax = 7 if sb < 4 else (5 if sb < 11 else 3)
-                    a = dig[(sb * 5 + 2) % 16] % (1 + amax)
-                    alloc.append(a)
-                    if not a:
-                        continue
-                    scfsi.append(dig[(sb * 3 + 5) % 16] % 4)
-                    scf.append((dig[(sb * 2 + 4) % 16] % 63,
-                                dig[(sb * 2 + 8) % 16] % 63,
-                                dig[(sb * 2 + 13) % 16] % 63))
-                    steps = l2_steps_list("lsf", sb)[a - 1]
-                    codes.append([
-                        (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11
-                         + d) % steps
-                        for i in range(36)
-                    ])
-                buf = encode_layer2_frame(
-                    alloc, scfsi, scf, codes, sample_rate=24000,
-                    bitrate_kbps=160, version=2,
-                )
-                m = decode_mpeg1_audio(buf)
-                assert m["format"] == "mpeg2_lsf_audio", d
-                f = m["frames"][0]
-                assert f["table"] == "lsf", d
-                assert f["alloc"] == alloc, d
-                assert f["scfsi"] == scfsi, d
-                assert f["codes"] == codes, d
-                micros = [micro6(v) for vs in f["values"] for v in vs]
-                rows.append({
-                    "media_id": d,
-                    "n_active_sb": len(f["active"]),
-                    "n_active_samples": len(micros),
-                    "sum_val_micro": sum(micros),
-                    "max_abs_micro": max(abs(v) for v in micros),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_active_sb",
-                         "n_active_samples", "sum_val_micro",
-                         "max_abs_micro"],
-            )
+    def run(did, text):
+        d = int(did)
+        if d % 16 != 9:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        alloc, scfsi, scf, codes = [], [], [], []
+        for sb in range(30):
+            amax = 7 if sb < 4 else (5 if sb < 11 else 3)
+            a = dig[(sb * 5 + 2) % 16] % (1 + amax)
+            alloc.append(a)
+            if not a:
+                continue
+            scfsi.append(dig[(sb * 3 + 5) % 16] % 4)
+            scf.append((dig[(sb * 2 + 4) % 16] % 63,
+                        dig[(sb * 2 + 8) % 16] % 63,
+                        dig[(sb * 2 + 13) % 16] % 63))
+            steps = l2_steps_list("lsf", sb)[a - 1]
+            codes.append([
+                (dig[(sb + i * 7 + 1) % 16] * 29 + i * 11
+                 + d) % steps
+                for i in range(36)
+            ])
+        buf = encode_layer2_frame(
+            alloc, scfsi, scf, codes, sample_rate=24000,
+            bitrate_kbps=160, version=2,
+        )
+        m = decode_mpeg1_audio(buf)
+        assert m["format"] == "mpeg2_lsf_audio", d
+        f = m["frames"][0]
+        assert f["table"] == "lsf", d
+        assert f["alloc"] == alloc, d
+        assert f["scfsi"] == scfsi, d
+        assert f["codes"] == codes, d
+        micros = [micro6(v) for vs in f["values"] for v in vs]
+        yield {
+            "media_id": d,
+            "n_active_sb": len(f["active"]),
+            "n_active_samples": len(micros),
+            "sum_val_micro": sum(micros),
+            "max_abs_micro": max(abs(v) for v in micros),
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/16 of documents are decoded, so only those rows should
@@ -18706,8 +17564,8 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_active_sb long, n_active_samples long, "
         "sum_val_micro long, max_abs_micro long",
     )
@@ -18738,7 +17596,7 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s50_orc_zstd_decode(spark, sf_dir):
-    """ORC ZSTD DECODE (round-10 ask #4, the top lake boundary:
+    """ORC ZSTD DECODE (the top lake boundary:
     ZSTD is Spark 4's DEFAULT ORC compression, so this is the file an
     unconfigured `df.write.orc(...)` produces). orders is written by
     Spark's native Java ORC writer with NO compression option; each
@@ -18753,18 +17611,12 @@ def s50_orc_zstd_decode(spark, sf_dir):
     from-spec lake readers cover every default-configuration
     Spark/Hive ORC deployment."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.orc_read import parse_tail, read_orc
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_orc_zstd_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = fixture_dir(sf_dir, "cam_etl_orc_zstd_fixture")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         (F.col("o_orderkey") % 997).alias("v_small"),
@@ -18772,7 +17624,6 @@ def s50_orc_zstd_decode(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
     out_dir = os.path.join(base, "zstd_default")
-    shutil.rmtree(out_dir, ignore_errors=True)
     o.repartition(3).write.orc(out_dir)  # default codec = ZSTD
     paths = [
         (os.path.join(out_dir, name),)
@@ -18782,42 +17633,33 @@ def s50_orc_zstd_decode(spark, sf_dir):
 
     cols = ["o_orderkey", "v_small", "o_orderstatus", "cents"]
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.orc as paorc
+    import pyarrow.orc as paorc
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = open(path, "rb").read()
-                tail = parse_tail(raw)
-                assert tail["compression"] == "ZSTD", (
-                    path, tail["compression"],
-                )
-                got = read_orc(raw)
-                ref = paorc.read_table(path).to_pydict()
-                for col in cols:
-                    vals = got["columns"][col]
-                    assert vals == ref[col], (col, path)
-                    checksum = (
-                        sum(len(v.encode("utf-8")) for v in vals)
-                        if col == "o_orderstatus"
-                        else sum(vals)
-                    )
-                    rows.append(
-                        {"col": col, "n_values": len(vals),
-                         "checksum": checksum}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["col", "n_values", "checksum"]
+    def run(path):
+        raw = open(path, "rb").read()
+        tail = parse_tail(raw)
+        assert tail["compression"] == "ZSTD", (
+            path, tail["compression"],
+        )
+        got = read_orc(raw)
+        ref = paorc.read_table(path).to_pydict()
+        for col in cols:
+            vals = got["columns"][col]
+            assert vals == ref[col], (col, path)
+            checksum = (
+                sum(len(v.encode("utf-8")) for v in vals)
+                if col == "o_orderstatus"
+                else sum(vals)
             )
+            yield {"col": col, "n_values": len(vals),
+             "checksum": checksum}
 
     files = spark.createDataFrame(paths, "path string").repartition(
         len(paths)
     )
     return (
-        files.mapInPandas(
-            run, "col string, n_values long, checksum long"
+        map_rows(
+            files, run, "col string, n_values long, checksum long"
         )
         .groupBy("col")
         .agg(
@@ -18943,10 +17785,8 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
     44.1 kHz band tables, in integer micro-units. One Arrow
     mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
-    import numpy as np
-
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         decode_mp3_pcm,
         encode_mp3_frame,
@@ -18954,80 +17794,67 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
         requantize,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        if d % 16 != 11:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        gg = 160 + dig[13] % 40
+        sfs = dig[15] % 2
+        np_pairs = 30 + dig[6] % 60
+        pairs = []
+        for i in range(np_pairs):
+            x = ((dig[(i * 3 + 4) % 16] + i) % 3) * (
+                -1 if (dig[(i + 9) % 16] + i) % 2 else 1)
+            y = ((dig[(i * 5 + 6) % 16] + 2 * i) % 3) * (
+                -1 if (dig[(i + 12) % 16] + i) % 2 else 1)
+            pairs.append((x, y))
+        scalefacs = (
+            [dig[(b * 5 + 2) % 16] % 4 for b in range(8)]
+            + [dig[((b * 3 + w) * 2 + 4) % 16] % 4
+               for b in range(3, 12) for w in range(3)]
+        )
+        g0 = {
+            "block_type": 2, "mixed_block_flag": 1,
+            "scalefac_compress": 9, "global_gain": gg,
+            "preflag": 0, "scalefac_scale": sfs,
+            "table_select": [2, 3],
+            "subblock_gain": [0, 1, 2], "scfsi": 0,
+            "scalefacs": scalefacs,
+            "count1table_select": 1,
+            "pairs": pairs, "quads": [],
+        }
+        g1 = {
+            "block_type": 0, "mixed_block_flag": 0,
+            "scalefac_compress": 0, "global_gain": 170,
+            "preflag": 0, "scalefac_scale": 0,
+            "table_select": [0, 0, 0],
+            "subblock_gain": [0, 0, 0], "scfsi": 0,
+            "region0_count": 4, "region1_count": 4,
+            "scalefacs": [0] * 21,
+            "count1table_select": 1,
+            "pairs": [], "quads": [],
+        }
+        buf = encode_mp3_frame([[g0], [g1]],
+                               sample_rate=44100,
+                               bitrate_kbps=160)
+        shell = parse_mp3_frame(buf)
+        got = shell["granules"][0][0]
+        assert got["mixed_block_flag"] == 1, d
+        assert got["pairs"] == pairs, d
+        assert got["scalefacs"] == scalefacs, d
+        pcm = decode_mp3_pcm([shell])
+        assert pcm.shape == (1152,), d
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 16 != 11:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                gg = 160 + dig[13] % 40
-                sfs = dig[15] % 2
-                np_pairs = 30 + dig[6] % 60
-                pairs = []
-                for i in range(np_pairs):
-                    x = ((dig[(i * 3 + 4) % 16] + i) % 3) * (
-                        -1 if (dig[(i + 9) % 16] + i) % 2 else 1)
-                    y = ((dig[(i * 5 + 6) % 16] + 2 * i) % 3) * (
-                        -1 if (dig[(i + 12) % 16] + i) % 2 else 1)
-                    pairs.append((x, y))
-                scalefacs = (
-                    [dig[(b * 5 + 2) % 16] % 4 for b in range(8)]
-                    + [dig[((b * 3 + w) * 2 + 4) % 16] % 4
-                       for b in range(3, 12) for w in range(3)]
-                )
-                g0 = {
-                    "block_type": 2, "mixed_block_flag": 1,
-                    "scalefac_compress": 9, "global_gain": gg,
-                    "preflag": 0, "scalefac_scale": sfs,
-                    "table_select": [2, 3],
-                    "subblock_gain": [0, 1, 2], "scfsi": 0,
-                    "scalefacs": scalefacs,
-                    "count1table_select": 1,
-                    "pairs": pairs, "quads": [],
-                }
-                g1 = {
-                    "block_type": 0, "mixed_block_flag": 0,
-                    "scalefac_compress": 0, "global_gain": 170,
-                    "preflag": 0, "scalefac_scale": 0,
-                    "table_select": [0, 0, 0],
-                    "subblock_gain": [0, 0, 0], "scfsi": 0,
-                    "region0_count": 4, "region1_count": 4,
-                    "scalefacs": [0] * 21,
-                    "count1table_select": 1,
-                    "pairs": [], "quads": [],
-                }
-                buf = encode_mp3_frame([[g0], [g1]],
-                                       sample_rate=44100,
-                                       bitrate_kbps=160)
-                shell = parse_mp3_frame(buf)
-                got = shell["granules"][0][0]
-                assert got["mixed_block_flag"] == 1, d
-                assert got["pairs"] == pairs, d
-                assert got["scalefacs"] == scalefacs, d
-                pcm = decode_mp3_pcm([shell])
-                assert pcm.shape == (1152,), d
-
-                xr = requantize(got, 44100)
-                micros = [micro6(v) for v in xr]
-                rows.append({
-                    "media_id": d,
-                    "n_lines": sum(1 for m in micros if m),
-                    "sum_xr_micro": sum(micros),
-                    "sum_abs_micro": sum(abs(m) for m in micros),
-                    "max_abs_micro": max(abs(m) for m in micros),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_lines", "sum_xr_micro",
-                         "sum_abs_micro", "max_abs_micro"],
-            )
+        xr = requantize(got, 44100)
+        micros = [micro6(v) for v in xr]
+        yield {
+            "media_id": d,
+            "n_lines": sum(1 for m in micros if m),
+            "sum_xr_micro": sum(micros),
+            "sum_abs_micro": sum(abs(m) for m in micros),
+            "max_abs_micro": max(abs(m) for m in micros),
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/16 of documents are decoded, so only those rows should
@@ -19046,8 +17873,8 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_lines long, sum_xr_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -19181,6 +18008,7 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
 
     import numpy as np
 
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         SFB_LONG,
         decode_mp3_pcm,
@@ -19189,136 +18017,121 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
         requantize,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    sfb = SFB_LONG[44100]
 
-    def run(batches):
-        import pandas as pd
+    def run(did, text):
+        d = int(did)
+        if d % 32 != 15:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
 
-        sfb = SFB_LONG[44100]
+        def granule(gr):
+            np_l = 40 + dig[7 + gr] % 40
+            np_r = 5 + dig[9 + gr] % 10
+            gg_l = 150 + dig[11 + gr] % 40
+            gg_r = 150 + dig[13 + gr] % 40
+            is_pos = [dig[(b * 7 + 5) % 16] % 8
+                      for b in range(21)]
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 32 != 15:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
+            def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
+                      sg_a, sg_b):
+                out = []
+                for i in range(np_pairs):
+                    x = ((dig[(i * mul_a + gr + off_a) % 16]
+                          + i) % 3) * (
+                        -1 if (dig[(i + sg_a) % 16] + i + gr)
+                        % 2 else 1)
+                    y = ((dig[(i * mul_b + gr + off_b) % 16]
+                          + 2 * i) % 3) * (
+                        -1 if (dig[(i + sg_b) % 16] + i + gr)
+                        % 2 else 1)
+                    out.append((x, y))
+                return out
 
-                def granule(gr):
-                    np_l = 40 + dig[7 + gr] % 40
-                    np_r = 5 + dig[9 + gr] % 10
-                    gg_l = 150 + dig[11 + gr] % 40
-                    gg_r = 150 + dig[13 + gr] % 40
-                    is_pos = [dig[(b * 7 + 5) % 16] % 8
-                              for b in range(21)]
+            base = {
+                "block_type": 0, "mixed_block_flag": 0,
+                "scalefac_compress": 13, "preflag": 0,
+                "scalefac_scale": 0,
+                "table_select": [2, 3, 2],
+                "subblock_gain": [0, 0, 0], "scfsi": 0,
+                "region0_count": 4, "region1_count": 4,
+                "count1table_select": 1, "quads": [],
+            }
+            gl = dict(base, global_gain=gg_l,
+                      scalefacs=[0] * 21,
+                      pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
+            gr_ = dict(base, global_gain=gg_r,
+                       scalefacs=is_pos,
+                       pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
+            return gl, gr_, np_r
 
-                    def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
-                              sg_a, sg_b):
-                        out = []
-                        for i in range(np_pairs):
-                            x = ((dig[(i * mul_a + gr + off_a) % 16]
-                                  + i) % 3) * (
-                                -1 if (dig[(i + sg_a) % 16] + i + gr)
-                                % 2 else 1)
-                            y = ((dig[(i * mul_b + gr + off_b) % 16]
-                                  + 2 * i) % 3) * (
-                                -1 if (dig[(i + sg_b) % 16] + i + gr)
-                                % 2 else 1)
-                            out.append((x, y))
-                        return out
+        (l0, r0, _), (l1, r1, _) = granule(0), granule(1)
+        buf = encode_mp3_frame([[l0, r0], [l1, r1]],
+                               sample_rate=44100,
+                               bitrate_kbps=256,
+                               intensity=True)
+        shell = parse_mp3_frame(buf)
+        assert shell["mode"] == 0b01, d
+        assert shell["mode_ext"] == 0b01, d
+        for gr in range(2):
+            for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
+                got = shell["granules"][gr][ch]
+                assert got["pairs"] == g["pairs"], d
+                assert got["scalefacs"] == g["scalefacs"], d
+        left, right = decode_mp3_pcm([shell],
+                                     channel=None)
+        mono = []
+        for ch in range(2):
+            mb = encode_mp3_frame(
+                [[(l0, r0)[ch]], [(l1, r1)[ch]]],
+                sample_rate=44100, bitrate_kbps=160)
+            mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
+        assert np.allclose(left + right, mono[0] + mono[1],
+                           rtol=1e-9, atol=1e-12), d
 
-                    base = {
-                        "block_type": 0, "mixed_block_flag": 0,
-                        "scalefac_compress": 13, "preflag": 0,
-                        "scalefac_scale": 0,
-                        "table_select": [2, 3, 2],
-                        "subblock_gain": [0, 0, 0], "scfsi": 0,
-                        "region0_count": 4, "region1_count": 4,
-                        "count1table_select": 1, "quads": [],
-                    }
-                    gl = dict(base, global_gain=gg_l,
-                              scalefacs=[0] * 21,
-                              pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
-                    gr_ = dict(base, global_gain=gg_r,
-                               scalefacs=is_pos,
-                               pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
-                    return gl, gr_, np_r
-
-                (l0, r0, _), (l1, r1, _) = granule(0), granule(1)
-                buf = encode_mp3_frame([[l0, r0], [l1, r1]],
-                                       sample_rate=44100,
-                                       bitrate_kbps=256,
-                                       intensity=True)
-                shell = parse_mp3_frame(buf)
-                assert shell["mode"] == 0b01, d
-                assert shell["mode_ext"] == 0b01, d
-                for gr in range(2):
-                    for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
-                        got = shell["granules"][gr][ch]
-                        assert got["pairs"] == g["pairs"], d
-                        assert got["scalefacs"] == g["scalefacs"], d
-                left, right = decode_mp3_pcm([shell],
-                                             channel=None)
-                mono = []
-                for ch in range(2):
-                    mb = encode_mp3_frame(
-                        [[(l0, r0)[ch]], [(l1, r1)[ch]]],
-                        sample_rate=44100, bitrate_kbps=160)
-                    mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
-                assert np.allclose(left + right, mono[0] + mono[1],
-                                   rtol=1e-9, atol=1e-12), d
-
-                # spectral stats the oracle replays
-                n_lines = 0
-                sums = [0, 0, 0, 0, 0, 0]
-                for gr in range(2):
-                    g0, g1 = shell["granules"][gr]
-                    m = requantize(g0, 44100)
-                    s = requantize(g1, 44100)
-                    rzero = 2 * g1["big_values"]
-                    bstart = next(b for b in range(22)
-                                  if sfb[b] >= rzero)
-                    bound_line = sfb[bstart]
-                    for i in range(576):
-                        if i < bound_line:
-                            lv, rv = m[i], s[i]
-                        else:
-                            b = next(bb for bb in range(21, -1, -1)
-                                     if sfb[bb] <= i)
-                            p = g1["scalefacs"][min(b, 20)]
-                            if p == 7 or p == 6:
-                                lv, rv = m[i], 0.0
-                            else:
-                                ratio = math.tan(p * math.pi / 12)
-                                lv = m[i] * (ratio / (1 + ratio))
-                                rv = m[i] / (1 + ratio)
-                        ml, mr = micro6(lv), micro6(rv)
-                        if ml or mr:
-                            n_lines += 1
-                        sums[0] += ml
-                        sums[1] += abs(ml)
-                        sums[2] = max(sums[2], abs(ml))
-                        sums[3] += mr
-                        sums[4] += abs(mr)
-                        sums[5] = max(sums[5], abs(mr))
-                rows.append({
-                    "media_id": d,
-                    "n_lines": n_lines,
-                    "sum_l_micro": sums[0],
-                    "sum_abs_l_micro": sums[1],
-                    "max_abs_l_micro": sums[2],
-                    "sum_r_micro": sums[3],
-                    "sum_abs_r_micro": sums[4],
-                    "max_abs_r_micro": sums[5],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_lines", "sum_l_micro",
-                         "sum_abs_l_micro", "max_abs_l_micro",
-                         "sum_r_micro", "sum_abs_r_micro",
-                         "max_abs_r_micro"],
-            )
+        # spectral stats the oracle replays
+        n_lines = 0
+        sums = [0, 0, 0, 0, 0, 0]
+        for gr in range(2):
+            g0, g1 = shell["granules"][gr]
+            m = requantize(g0, 44100)
+            s = requantize(g1, 44100)
+            rzero = 2 * g1["big_values"]
+            bstart = next(b for b in range(22)
+                          if sfb[b] >= rzero)
+            bound_line = sfb[bstart]
+            for i in range(576):
+                if i < bound_line:
+                    lv, rv = m[i], s[i]
+                else:
+                    b = next(bb for bb in range(21, -1, -1)
+                             if sfb[bb] <= i)
+                    p = g1["scalefacs"][min(b, 20)]
+                    if p == 7 or p == 6:
+                        lv, rv = m[i], 0.0
+                    else:
+                        ratio = math.tan(p * math.pi / 12)
+                        lv = m[i] * (ratio / (1 + ratio))
+                        rv = m[i] / (1 + ratio)
+                ml, mr = micro6(lv), micro6(rv)
+                if ml or mr:
+                    n_lines += 1
+                sums[0] += ml
+                sums[1] += abs(ml)
+                sums[2] = max(sums[2], abs(ml))
+                sums[3] += mr
+                sums[4] += abs(mr)
+                sums[5] = max(sums[5], abs(mr))
+        yield {
+            "media_id": d,
+            "n_lines": n_lines,
+            "sum_l_micro": sums[0],
+            "sum_abs_l_micro": sums[1],
+            "max_abs_l_micro": sums[2],
+            "sum_r_micro": sums[3],
+            "sum_abs_r_micro": sums[4],
+            "max_abs_r_micro": sums[5],
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/32 of documents are decoded, so only those rows should
@@ -19337,8 +18150,8 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -19479,10 +18292,10 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
     requantization and the intensity split in SQL. One Arrow
     mapInPandas scan, zero shuffles."""
     import hashlib
-    import math
 
     import numpy as np
 
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         _joint_spectra,
         decode_mp3_pcm,
@@ -19490,119 +18303,104 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
         parse_mp3_frame,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        if d % 32 != 23:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
+        is_pos = [dig[((b * 3 + w) * 2 + 5) % 16] % 8
+                  for b in range(12) for w in range(3)]
 
-    def run(batches):
-        import pandas as pd
+        def granule(gr):
+            np_l = 60 + dig[7 + gr] % 36
+            np_r = 6 + dig[9 + gr] % 20
+            gg_l = 150 + dig[11 + gr] % 40
+            gg_r = 150 + dig[13 + gr] % 40
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 32 != 23:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
-                is_pos = [dig[((b * 3 + w) * 2 + 5) % 16] % 8
-                          for b in range(12) for w in range(3)]
+            def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
+                      sg_a, sg_b):
+                out = []
+                for i in range(np_pairs):
+                    x = ((dig[(i * mul_a + gr + off_a) % 16]
+                          + i) % 3) * (
+                        -1 if (dig[(i + sg_a) % 16] + i + gr)
+                        % 2 else 1)
+                    y = ((dig[(i * mul_b + gr + off_b) % 16]
+                          + 2 * i) % 3) * (
+                        -1 if (dig[(i + sg_b) % 16] + i + gr)
+                        % 2 else 1)
+                    out.append((x, y))
+                return out
 
-                def granule(gr):
-                    np_l = 60 + dig[7 + gr] % 36
-                    np_r = 6 + dig[9 + gr] % 20
-                    gg_l = 150 + dig[11 + gr] % 40
-                    gg_r = 150 + dig[13 + gr] % 40
+            base = {
+                "block_type": 2, "mixed_block_flag": 0,
+                "scalefac_compress": 13, "preflag": 0,
+                "scalefac_scale": 0,
+                "table_select": [5, 9],
+                "scfsi": 0, "region0_count": None,
+                "region1_count": None,
+                "count1table_select": 1, "quads": [],
+            }
+            gl = dict(base, global_gain=gg_l,
+                      subblock_gain=list(sg_l),
+                      scalefacs=[0] * 36,
+                      pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
+            gr_ = dict(base, global_gain=gg_r,
+                       subblock_gain=[0, 0, 0],
+                       scalefacs=list(is_pos),
+                       pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
+            return gl, gr_
 
-                    def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
-                              sg_a, sg_b):
-                        out = []
-                        for i in range(np_pairs):
-                            x = ((dig[(i * mul_a + gr + off_a) % 16]
-                                  + i) % 3) * (
-                                -1 if (dig[(i + sg_a) % 16] + i + gr)
-                                % 2 else 1)
-                            y = ((dig[(i * mul_b + gr + off_b) % 16]
-                                  + 2 * i) % 3) * (
-                                -1 if (dig[(i + sg_b) % 16] + i + gr)
-                                % 2 else 1)
-                            out.append((x, y))
-                        return out
+        (l0, r0), (l1, r1) = granule(0), granule(1)
+        buf = encode_mp3_frame([[l0, r0], [l1, r1]],
+                               sample_rate=44100,
+                               bitrate_kbps=320,
+                               intensity=True)
+        shell = parse_mp3_frame(buf)
+        assert shell["mode"] == 0b01, d
+        assert shell["mode_ext"] == 0b01, d
+        for gr in range(2):
+            for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
+                got = shell["granules"][gr][ch]
+                assert got["block_type"] == 2, d
+                assert got["pairs"] == g["pairs"], d
+                assert got["scalefacs"] == g["scalefacs"], d
+        left, right = decode_mp3_pcm([shell], channel=None)
+        mono = []
+        for ch in range(2):
+            mb = encode_mp3_frame(
+                [[(l0, r0)[ch]], [(l1, r1)[ch]]],
+                sample_rate=44100, bitrate_kbps=256)
+            mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
+        assert np.allclose(left + right, mono[0] + mono[1],
+                           rtol=1e-9, atol=1e-12), d
 
-                    base = {
-                        "block_type": 2, "mixed_block_flag": 0,
-                        "scalefac_compress": 13, "preflag": 0,
-                        "scalefac_scale": 0,
-                        "table_select": [5, 9],
-                        "scfsi": 0, "region0_count": None,
-                        "region1_count": None,
-                        "count1table_select": 1, "quads": [],
-                    }
-                    gl = dict(base, global_gain=gg_l,
-                              subblock_gain=list(sg_l),
-                              scalefacs=[0] * 36,
-                              pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
-                    gr_ = dict(base, global_gain=gg_r,
-                               subblock_gain=[0, 0, 0],
-                               scalefacs=list(is_pos),
-                               pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
-                    return gl, gr_
-
-                (l0, r0), (l1, r1) = granule(0), granule(1)
-                buf = encode_mp3_frame([[l0, r0], [l1, r1]],
-                                       sample_rate=44100,
-                                       bitrate_kbps=320,
-                                       intensity=True)
-                shell = parse_mp3_frame(buf)
-                assert shell["mode"] == 0b01, d
-                assert shell["mode_ext"] == 0b01, d
-                for gr in range(2):
-                    for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
-                        got = shell["granules"][gr][ch]
-                        assert got["block_type"] == 2, d
-                        assert got["pairs"] == g["pairs"], d
-                        assert got["scalefacs"] == g["scalefacs"], d
-                left, right = decode_mp3_pcm([shell], channel=None)
-                mono = []
-                for ch in range(2):
-                    mb = encode_mp3_frame(
-                        [[(l0, r0)[ch]], [(l1, r1)[ch]]],
-                        sample_rate=44100, bitrate_kbps=256)
-                    mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
-                assert np.allclose(left + right, mono[0] + mono[1],
-                                   rtol=1e-9, atol=1e-12), d
-
-                # hash the decoder's OWN post-intensity spectra
-                n_lines = 0
-                sums = [0, 0, 0, 0, 0, 0]
-                for gr in range(2):
-                    sl, sr = _joint_spectra(shell, gr)
-                    for i in range(576):
-                        ml, mr = micro6(sl[i]), micro6(sr[i])
-                        if ml or mr:
-                            n_lines += 1
-                        sums[0] += ml
-                        sums[1] += abs(ml)
-                        sums[2] = max(sums[2], abs(ml))
-                        sums[3] += mr
-                        sums[4] += abs(mr)
-                        sums[5] = max(sums[5], abs(mr))
-                rows.append({
-                    "media_id": d,
-                    "n_lines": n_lines,
-                    "sum_l_micro": sums[0],
-                    "sum_abs_l_micro": sums[1],
-                    "max_abs_l_micro": sums[2],
-                    "sum_r_micro": sums[3],
-                    "sum_abs_r_micro": sums[4],
-                    "max_abs_r_micro": sums[5],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_lines", "sum_l_micro",
-                         "sum_abs_l_micro", "max_abs_l_micro",
-                         "sum_r_micro", "sum_abs_r_micro",
-                         "max_abs_r_micro"],
-            )
+        # hash the decoder's OWN post-intensity spectra
+        n_lines = 0
+        sums = [0, 0, 0, 0, 0, 0]
+        for gr in range(2):
+            sl, sr = _joint_spectra(shell, gr)
+            for i in range(576):
+                ml, mr = micro6(sl[i]), micro6(sr[i])
+                if ml or mr:
+                    n_lines += 1
+                sums[0] += ml
+                sums[1] += abs(ml)
+                sums[2] = max(sums[2], abs(ml))
+                sums[3] += mr
+                sums[4] += abs(mr)
+                sums[5] = max(sums[5], abs(mr))
+        yield {
+            "media_id": d,
+            "n_lines": n_lines,
+            "sum_l_micro": sums[0],
+            "sum_abs_l_micro": sums[1],
+            "max_abs_l_micro": sums[2],
+            "sum_r_micro": sums[3],
+            "sum_abs_r_micro": sums[4],
+            "max_abs_r_micro": sums[5],
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/32 of documents are decoded, so only those rows should
@@ -19621,8 +18419,8 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -19778,10 +18576,10 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
     tables relationally. One Arrow mapInPandas scan, zero
     shuffles."""
     import hashlib
-    import math
 
     import numpy as np
 
+    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         _joint_spectra,
         decode_mp3_pcm,
@@ -19789,124 +18587,109 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
         parse_mp3_frame,
     )
 
-    def micro6(x: float) -> int:
-        return int(math.copysign(np.floor(abs(x) * 1e6 + 0.5), x))
+    def run(did, text):
+        d = int(did)
+        if d % 32 != 27:
+            return
+        dig = hashlib.md5((text or "").encode()).digest()
+        sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
+        is_long = [dig[(b * 5 + 3) % 16] % 8
+                   for b in range(8)]
+        is_short = [dig[(b * 3 + w + 6) % 16] % 8
+                    for b in range(3, 12) for w in range(3)]
 
-    def run(batches):
-        import pandas as pd
+        def granule(gr):
+            np_l = 70 + dig[7 + gr] % 40
+            np_r = 4 + dig[9 + gr] % 14
+            gg_l = 150 + dig[11 + gr] % 40
+            gg_r = 150 + dig[13 + gr] % 40
 
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(did)
-                if d % 32 != 27:
-                    continue
-                dig = hashlib.md5((text or "").encode()).digest()
-                sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
-                is_long = [dig[(b * 5 + 3) % 16] % 8
-                           for b in range(8)]
-                is_short = [dig[(b * 3 + w + 6) % 16] % 8
-                            for b in range(3, 12) for w in range(3)]
+            def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
+                      sg_a, sg_b):
+                out = []
+                for i in range(np_pairs):
+                    x = ((dig[(i * mul_a + gr + off_a) % 16]
+                          + i) % 3) * (
+                        -1 if (dig[(i + sg_a) % 16] + i + gr)
+                        % 2 else 1)
+                    y = ((dig[(i * mul_b + gr + off_b) % 16]
+                          + 2 * i) % 3) * (
+                        -1 if (dig[(i + sg_b) % 16] + i + gr)
+                        % 2 else 1)
+                    out.append((x, y))
+                return out
 
-                def granule(gr):
-                    np_l = 70 + dig[7 + gr] % 40
-                    np_r = 4 + dig[9 + gr] % 14
-                    gg_l = 150 + dig[11 + gr] % 40
-                    gg_r = 150 + dig[13 + gr] % 40
+            base = {
+                "block_type": 2, "mixed_block_flag": 1,
+                "scalefac_compress": 13, "preflag": 0,
+                "scalefac_scale": 0,
+                "table_select": [2, 3],
+                "scfsi": 0, "region0_count": None,
+                "region1_count": None,
+                "count1table_select": 1, "quads": [],
+            }
+            gl = dict(base, global_gain=gg_l,
+                      subblock_gain=list(sg_l),
+                      scalefacs=[0] * 35,
+                      pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
+            gr_ = dict(base, global_gain=gg_r,
+                       subblock_gain=[0, 0, 0],
+                       scalefacs=is_long + is_short,
+                       pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
+            # the right extent must stay inside the long
+            # region for the long-border shape this entry
+            # pins (np_r <= 17 -> 34 lines < 36)
+            assert 2 * len(gr_["pairs"]) < 36, d
+            return gl, gr_
 
-                    def pairs(np_pairs, mul_a, off_a, mul_b, off_b,
-                              sg_a, sg_b):
-                        out = []
-                        for i in range(np_pairs):
-                            x = ((dig[(i * mul_a + gr + off_a) % 16]
-                                  + i) % 3) * (
-                                -1 if (dig[(i + sg_a) % 16] + i + gr)
-                                % 2 else 1)
-                            y = ((dig[(i * mul_b + gr + off_b) % 16]
-                                  + 2 * i) % 3) * (
-                                -1 if (dig[(i + sg_b) % 16] + i + gr)
-                                % 2 else 1)
-                            out.append((x, y))
-                        return out
+        (l0, r0), (l1, r1) = granule(0), granule(1)
+        buf = encode_mp3_frame([[l0, r0], [l1, r1]],
+                               sample_rate=44100,
+                               bitrate_kbps=320,
+                               intensity=True)
+        shell = parse_mp3_frame(buf)
+        assert shell["mode"] == 0b01, d
+        assert shell["mode_ext"] == 0b01, d
+        for gr in range(2):
+            for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
+                got = shell["granules"][gr][ch]
+                assert got["mixed_block_flag"] == 1, d
+                assert got["pairs"] == g["pairs"], d
+                assert got["scalefacs"] == g["scalefacs"], d
+        left, right = decode_mp3_pcm([shell], channel=None)
+        mono = []
+        for ch in range(2):
+            mb = encode_mp3_frame(
+                [[(l0, r0)[ch]], [(l1, r1)[ch]]],
+                sample_rate=44100, bitrate_kbps=256)
+            mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
+        assert np.allclose(left + right, mono[0] + mono[1],
+                           rtol=1e-9, atol=1e-12), d
 
-                    base = {
-                        "block_type": 2, "mixed_block_flag": 1,
-                        "scalefac_compress": 13, "preflag": 0,
-                        "scalefac_scale": 0,
-                        "table_select": [2, 3],
-                        "scfsi": 0, "region0_count": None,
-                        "region1_count": None,
-                        "count1table_select": 1, "quads": [],
-                    }
-                    gl = dict(base, global_gain=gg_l,
-                              subblock_gain=list(sg_l),
-                              scalefacs=[0] * 35,
-                              pairs=pairs(np_l, 3, 4, 5, 6, 9, 12))
-                    gr_ = dict(base, global_gain=gg_r,
-                               subblock_gain=[0, 0, 0],
-                               scalefacs=is_long + is_short,
-                               pairs=pairs(np_r, 7, 3, 9, 5, 8, 11))
-                    # the right extent must stay inside the long
-                    # region for the long-border shape this entry
-                    # pins (np_r <= 17 -> 34 lines < 36)
-                    assert 2 * len(gr_["pairs"]) < 36, d
-                    return gl, gr_
-
-                (l0, r0), (l1, r1) = granule(0), granule(1)
-                buf = encode_mp3_frame([[l0, r0], [l1, r1]],
-                                       sample_rate=44100,
-                                       bitrate_kbps=320,
-                                       intensity=True)
-                shell = parse_mp3_frame(buf)
-                assert shell["mode"] == 0b01, d
-                assert shell["mode_ext"] == 0b01, d
-                for gr in range(2):
-                    for ch, g in ((0, (l0, l1)[gr]), (1, (r0, r1)[gr])):
-                        got = shell["granules"][gr][ch]
-                        assert got["mixed_block_flag"] == 1, d
-                        assert got["pairs"] == g["pairs"], d
-                        assert got["scalefacs"] == g["scalefacs"], d
-                left, right = decode_mp3_pcm([shell], channel=None)
-                mono = []
-                for ch in range(2):
-                    mb = encode_mp3_frame(
-                        [[(l0, r0)[ch]], [(l1, r1)[ch]]],
-                        sample_rate=44100, bitrate_kbps=256)
-                    mono.append(decode_mp3_pcm([parse_mp3_frame(mb)]))
-                assert np.allclose(left + right, mono[0] + mono[1],
-                                   rtol=1e-9, atol=1e-12), d
-
-                n_lines = 0
-                sums = [0, 0, 0, 0, 0, 0]
-                for gr in range(2):
-                    sl, sr = _joint_spectra(shell, gr)
-                    for i in range(576):
-                        ml, mr = micro6(sl[i]), micro6(sr[i])
-                        if ml or mr:
-                            n_lines += 1
-                        sums[0] += ml
-                        sums[1] += abs(ml)
-                        sums[2] = max(sums[2], abs(ml))
-                        sums[3] += mr
-                        sums[4] += abs(mr)
-                        sums[5] = max(sums[5], abs(mr))
-                rows.append({
-                    "media_id": d,
-                    "n_lines": n_lines,
-                    "sum_l_micro": sums[0],
-                    "sum_abs_l_micro": sums[1],
-                    "max_abs_l_micro": sums[2],
-                    "sum_r_micro": sums[3],
-                    "sum_abs_r_micro": sums[4],
-                    "max_abs_r_micro": sums[5],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_lines", "sum_l_micro",
-                         "sum_abs_l_micro", "max_abs_l_micro",
-                         "sum_r_micro", "sum_abs_r_micro",
-                         "max_abs_r_micro"],
-            )
+        n_lines = 0
+        sums = [0, 0, 0, 0, 0, 0]
+        for gr in range(2):
+            sl, sr = _joint_spectra(shell, gr)
+            for i in range(576):
+                ml, mr = micro6(sl[i]), micro6(sr[i])
+                if ml or mr:
+                    n_lines += 1
+                sums[0] += ml
+                sums[1] += abs(ml)
+                sums[2] = max(sums[2], abs(ml))
+                sums[3] += mr
+                sums[4] += abs(mr)
+                sums[5] = max(sums[5], abs(mr))
+        yield {
+            "media_id": d,
+            "n_lines": n_lines,
+            "sum_l_micro": sums[0],
+            "sum_abs_l_micro": sums[1],
+            "max_abs_l_micro": sums[2],
+            "sum_r_micro": sums[3],
+            "sum_abs_r_micro": sums[4],
+            "max_abs_r_micro": sums[5],
+        }
 
     # JVM-side pre-filter mirroring the Python-side sample gate below:
     # only 1/32 of documents are decoded, so only those rows should
@@ -19925,8 +18708,8 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(
-        run,
+    return map_rows(
+        docs, run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -19965,7 +18748,7 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s51_lzo_legacy_lz4_decode(spark, sf_dir):
-    """ORC LZO + LEGACY PARQUET LZ4 (round 11 — the last two
+    """ORC LZO + LEGACY PARQUET LZ4 (the last two
     non-BROTLI codec boundaries): the odd-key orders slice is written
     TWICE by Spark's native writers — as LZO ORC (aircompressor's raw
     LZO1X per chunk, decoded from the public lzo1x instruction
@@ -19978,8 +18761,6 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
     the engine's ORC codec matrix is COMPLETE and parquet lacks only
     BROTLI. One task per file, zero shuffles before the rollup."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -19987,11 +18768,7 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
     from cam_etl_spark.sources.parquet_meta import parse_footer
     from cam_etl_spark.sources.parquet_pages import decode_column_chunk
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_lzo_lz4_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = fixture_dir(sf_dir, "cam_etl_lzo_lz4_fixture")
     o = t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 2 == 1
     ).select(
@@ -19999,7 +18776,6 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
-    shutil.rmtree(base, ignore_errors=True)
     o.repartition(2).write.option("compression", "lzo").orc(
         os.path.join(base, "orc_lzo"))
     o.repartition(2).write.option("compression", "lz4").parquet(
@@ -20015,65 +18791,57 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
 
     cols = ["o_orderkey", "o_orderstatus", "cents"]
 
-    def run(batches):
-        import pandas as pd
-        import pyarrow.orc as paorc
-        import pyarrow.parquet as papq
+    import pyarrow.orc as paorc
+    import pyarrow.parquet as papq
 
-        for pdf in batches:
-            rows = []
-            for kind, path in zip(pdf["kind"], pdf["path"]):
-                raw = open(path, "rb").read()
-                if kind == "orc_lzo":
-                    tail = parse_tail(raw)
-                    assert tail["compression"] == "LZO", path
-                    got = {c: read_orc(raw)["columns"][c]
-                           for c in cols}
-                    ref = paorc.read_table(path).to_pydict()
-                else:
-                    m = parse_footer(raw)
-                    rep = {s["name"]: s["repetition"]
-                           for s in m["schema"]}
-                    got = {}
-                    for c in cols:
-                        vals = []
-                        for rg in m["row_groups"]:
-                            cc = next(x for x in rg["columns"]
-                                      if x["path"] == c)
-                            assert cc["codec"] == "LZ4", path
-                            vals.extend(decode_column_chunk(
-                                raw, cc, rg["num_rows"],
-                                optional=rep[c] == 1,
-                            ))
-                        got[c] = [
-                            v.decode("utf-8")
-                            if isinstance(v, bytes) else v
-                            for v in vals
-                        ]
-                    ref = papq.read_table(path).to_pydict()
-                for c in cols:
-                    assert got[c] == ref[c], (kind, c, path)
-                    checksum = (
-                        sum(len(v.encode("utf-8")) for v in got[c])
-                        if c == "o_orderstatus"
-                        else sum(got[c])
-                    )
-                    rows.append({
-                        "layer": kind, "col": c,
-                        "n_values": len(got[c]),
-                        "checksum": checksum,
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["layer", "col", "n_values", "checksum"],
+    def run(kind, path):
+        raw = open(path, "rb").read()
+        if kind == "orc_lzo":
+            tail = parse_tail(raw)
+            assert tail["compression"] == "LZO", path
+            got = {c: read_orc(raw)["columns"][c]
+                   for c in cols}
+            ref = paorc.read_table(path).to_pydict()
+        else:
+            m = parse_footer(raw)
+            rep = {s["name"]: s["repetition"]
+                   for s in m["schema"]}
+            got = {}
+            for c in cols:
+                vals = []
+                for rg in m["row_groups"]:
+                    cc = next(x for x in rg["columns"]
+                              if x["path"] == c)
+                    assert cc["codec"] == "LZ4", path
+                    vals.extend(decode_column_chunk(
+                        raw, cc, rg["num_rows"],
+                        optional=rep[c] == 1,
+                    ))
+                got[c] = [
+                    v.decode("utf-8")
+                    if isinstance(v, bytes) else v
+                    for v in vals
+                ]
+            ref = papq.read_table(path).to_pydict()
+        for c in cols:
+            assert got[c] == ref[c], (kind, c, path)
+            checksum = (
+                sum(len(v.encode("utf-8")) for v in got[c])
+                if c == "o_orderstatus"
+                else sum(got[c])
             )
+            yield {
+                "layer": kind, "col": c,
+                "n_values": len(got[c]),
+                "checksum": checksum,
+            }
 
     files = spark.createDataFrame(
         paths, "kind string, path string"
     ).repartition(len(paths))
     return (
-        files.mapInPandas(
-            run,
+        map_rows(
+            files, run,
             "layer string, col string, n_values long, checksum long",
         )
         .groupBy("layer", "col")
@@ -20259,26 +19027,19 @@ def s60_iceberg_v3_typed_defaults(spark, sf_dir):
     (pyarrow-written) file carries real values derived from md5(k),
     so a blanket coalesce, a wrong hex/uuid deserialization, or a
     nanos unit slip each break a different group row. Boundary after
-    this entry, further narrowed in round 13 (s70 adds
+    this entry, further narrowed by s70 (which adds
     variant/geometry initial-defaults): only v3 encryption-keys stay
     loud. At 100 TB: adding ANY of these typed columns touches
     kilobytes of JSON, zero data rewrite."""
     import glob
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_v3_typed_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_v3_typed")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_v3_typed_fixture", "orders_v3_typed")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -20333,21 +19094,7 @@ def s60_iceberg_v3_typed_defaults(spark, sf_dir):
     m1 = os.path.join(md, "m1.avro")
     I.write_manifest(
         m1,
-        [
-            {
-                "status": 1,
-                "snapshot_id": 1,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "parquet",
-                    "partition": {},
-                    "record_count": 1,
-                    "file_size_in_bytes": os.path.getsize(p),
-                },
-            }
-            for p in (fa, fb)
-        ],
+        [I.manifest_entry(p, snapshot_id=1, record_count=1) for p in (fa, fb)],
     )
     s1 = I.write_snapshot(table, 1, [m1])
     schema_fields = [
@@ -20453,7 +19200,6 @@ def s61_delta_variant_shredded(spark, sf_dir):
     import json as _json
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -20464,14 +19210,7 @@ def s61_delta_variant_shredded(spark, sf_dir):
         encode_variant,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_shred_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_shredded")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table)
+    table = fixture_dir(sf_dir, "cam_etl_delta_shred_fixture", "orders_shredded")
 
     src = t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 5 == 2
@@ -20569,9 +19308,7 @@ def s61_delta_variant_shredded(spark, sf_dir):
             "schemaString": _json.dumps(schema),
             "partitionColumns": [], "configuration": {},
         }},
-    ] + [{"add": {"path": p, "partitionValues": {}, "size": 1,
-                  "modificationTime": 0, "dataChange": True}}
-         for p in ("spark.parquet", "arrow.parquet")])
+    ] + [D.add_action(table, p, size=1) for p in ("spark.parquet", "arrow.parquet")])
     out, _snap, n_files = D.read_snapshot(spark, table)
     assert n_files == 2
     assert dict(out.dtypes)["v"] == "variant"
@@ -20614,7 +19351,7 @@ def s61_delta_variant_shredded(spark, sf_dir):
     },
 )
 def s62_geoparquet_scan(spark, sf_dir):
-    """GEOPARQUET SCAN (round 12, sources/geoparquet.py): customer
+    """GEOPARQUET SCAN (sources/geoparquet.py): customer
     points written as a REAL GeoParquet 1.1 dataset — pyarrow parquet
     with the spec's ``geo`` file metadata and a WKB geometry column,
     deliberately MIXING byte orders (even keys little-endian, odd
@@ -20629,9 +19366,7 @@ def s62_geoparquet_scan(spark, sf_dir):
     a mis-sliced double, or a dropped file each shifts zone counts."""
     import glob
     import os
-    import shutil
     import struct
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -20643,13 +19378,7 @@ def s62_geoparquet_scan(spark, sf_dir):
     )
     from cam_etl_spark.sources.parquet_meta import parse_footer
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_geoparquet_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_geoparquet_fixture")
 
     pts = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"),
@@ -20694,22 +19423,16 @@ def s62_geoparquet_scan(spark, sf_dir):
         [(r.path,) for r in written], "path string"
     ).repartition(len(written))
 
-    def validate(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                foot = parse_footer(open(path, "rb").read())
-                meta = geo_metadata(foot)
-                assert meta["primary_column"] == "geometry"
-                assert meta["columns"]["geometry"]["encoding"] == \
-                    "WKB"
-                rows.append({"path": path, "ok": True})
-            yield pd.DataFrame(rows, columns=["path", "ok"])
+    def validate(path):
+        foot = parse_footer(open(path, "rb").read())
+        meta = geo_metadata(foot)
+        assert meta["primary_column"] == "geometry"
+        assert meta["columns"]["geometry"]["encoding"] == \
+            "WKB"
+        yield {"path": path, "ok": True}
 
     assert all(r.ok for r in
-               files.mapInPandas(validate, "path string, ok boolean")
+               map_rows(files, validate, "path string, ok boolean")
                .collect())
 
     scan = spark.read.parquet(base)
@@ -20864,7 +19587,7 @@ def stream_dedup_within_horizon(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s63_delta_version_checksum(spark, sf_dir):
-    """DELTA VERSION CHECKSUM FILES (round 12, delta_log.py
+    """DELTA VERSION CHECKSUM FILES (delta_log.py
     _validate_version_checksum / write_version_checksum): PROTOCOL.md
     lets writers publish a %020d.crc JSON summary beside each commit;
     the replayer now validates the RECOMPUTED snapshot against it —
@@ -20877,24 +19600,14 @@ def s63_delta_version_checksum(spark, sf_dir):
     oracle replays. At 100 TB this is kilobytes of metadata guarding
     the whole scan plan — state corruption surfaces before any
     executor touches parquet."""
-    import glob
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import delta_log as D
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_crc_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_crc")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table)
+    table = fixture_dir(sf_dir, "cam_etl_delta_crc_fixture", "orders_crc")
 
     src = t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 7 == 3
@@ -20906,12 +19619,7 @@ def s63_delta_version_checksum(spark, sf_dir):
     )
 
     def one_file(df, name):
-        tmp = os.path.join(table, "_tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        p = os.path.join(table, name)
-        shutil.move(glob.glob(tmp + "/*.parquet")[0], p)
-        shutil.rmtree(tmp)
-        return p
+        return D.one_file(df, os.path.join(table, name))
 
     fa = one_file(src.filter(F.col("k") % 2 == 0), "even.parquet")
     fb = one_file(src.filter(F.col("k") % 2 == 1), "odd.parquet")
@@ -20921,10 +19629,7 @@ def s63_delta_version_checksum(spark, sf_dir):
     )
 
     def add(p):
-        return {"add": {"path": os.path.basename(p),
-                        "partitionValues": {},
-                        "size": os.path.getsize(p),
-                        "modificationTime": 0, "dataChange": True}}
+        return D.add_action(table, os.path.basename(p))
 
     D.write_commit(table, 0, [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
@@ -20947,7 +19652,7 @@ def s63_delta_version_checksum(spark, sf_dir):
     ])
     D.write_version_checksum(table, 0)
     D.write_commit(table, 1, [
-        {"remove": {"path": "odd.parquet", "dataChange": True}},
+        D.remove_action("odd.parquet"),
         add(fc),
     ])
     D.write_version_checksum(table, 1)
@@ -20982,7 +19687,7 @@ def s63_delta_version_checksum(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s64_avro_single_object_stream(spark, sf_dir):
-    """AVRO SINGLE-OBJECT ENCODING (round 12, sources/avro_io.py
+    """AVRO SINGLE-OBJECT ENCODING (sources/avro_io.py
     write_single_object / read_single_object / schema_fingerprint):
     the Kafka-style per-message framing — C3 01 marker + CRC-64-AVRO
     fingerprint of the schema's Parsing Canonical Form + binary body.
@@ -21053,26 +19758,19 @@ def s64_avro_single_object_stream(spark, sf_dir):
 
     registry = {fp1: ("v1", v1), fp2: ("v2", v2)}
 
-    def decode(batches):
-        import pandas as pd
+    def decode(raw):
+        raw = bytes(raw)
+        assert raw[:2] == b"\xc3\x01", raw[:2]
+        val, fp = A.read_single_object(
+            raw, {f: s for f, (_tag, s) in registry.items()})
+        yield {
+            "k": val["k"], "status": val["status"],
+            "cents": val["cents"],
+            "schema_tag": registry[fp][0],
+        }
 
-        for pdf in batches:
-            rows = []
-            for raw in pdf["msg"]:
-                raw = bytes(raw)
-                assert raw[:2] == b"\xc3\x01", raw[:2]
-                val, fp = A.read_single_object(
-                    raw, {f: s for f, (_tag, s) in registry.items()})
-                rows.append({
-                    "k": val["k"], "status": val["status"],
-                    "cents": val["cents"],
-                    "schema_tag": registry[fp][0],
-                })
-            yield pd.DataFrame(
-                rows, columns=["k", "status", "cents", "schema_tag"])
-
-    decoded = messages.mapInPandas(
-        decode, "k long, status string, cents long, schema_tag string"
+    decoded = map_rows(
+        messages, decode, "k long, status string, cents long, schema_tag string"
     )
     return decoded.groupBy("status", "schema_tag").agg(
         F.count("*").alias("n_rows"),
@@ -21103,7 +19801,7 @@ def s64_avro_single_object_stream(spark, sf_dir):
 )
 def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
     """ICEBERG TABLE STATISTICS — NDV THETA SKETCHES IN PUFFIN
-    (round 12, sources/theta_sketch.py + iceberg_meta.py
+    (sources/theta_sketch.py + iceberg_meta.py
     table_ndv_stats/write_puffin_blobs): the spec's
     ``apache-datasketches-theta-v1`` blobs, produced here by the
     REAL DataSketches Java library on Spark's classpath (the same
@@ -21119,19 +19817,12 @@ def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
     of Puffin, zero data reads."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_ndv_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_ndv")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_ndv_fixture", "orders_ndv")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -21172,13 +19863,7 @@ def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
            .select("bucket").distinct().collect()]
 
     m1 = os.path.join(md, "m1.avro")
-    I.write_manifest(m1, [{
-        "status": 1, "snapshot_id": 1,
-        "data_file": {"content": 0, "file_path": fa,
-                      "file_format": "parquet", "partition": {},
-                      "record_count": 1,
-                      "file_size_in_bytes": os.path.getsize(fa)},
-    }])
+    I.write_manifest(m1, [I.manifest_entry(fa, snapshot_id=1, record_count=1)])
     s1 = I.write_snapshot(table, 1, [m1])
 
     stats_path = os.path.join(md, "stats-1.puffin")
@@ -21237,7 +19922,7 @@ def s65_iceberg_puffin_ndv_stats(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s66_webdataset_tar_scan(spark, sf_dir):
-    """WEBDATASET TAR SHARDS (round 12, sources/archives.py): the
+    """WEBDATASET TAR SHARDS (sources/archives.py): the
     de-facto layout of multimodal training corpora — a tar shard per
     partition, members grouped by basename stem ({doc:08d}.txt +
     {doc:08d}.json per sample). Shards are written by the stdlib
@@ -21250,8 +19935,6 @@ def s66_webdataset_tar_scan(spark, sf_dir):
     driver involvement, zero temp-dir unpacking — the 100 TB shape
     is a shard-path DataFrame and per-task header parses."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -21261,13 +19944,7 @@ def s66_webdataset_tar_scan(spark, sf_dir):
         webdataset_samples,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_webdataset_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_webdataset_fixture")
 
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
@@ -21310,39 +19987,32 @@ def s66_webdataset_tar_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import io
-        import json
-        import tarfile
+    import io
+    import json
+    import tarfile
 
-        import pandas as pd
+    def scan(path):
+        buf = open(path, "rb").read()
+        ms = tar_members(buf)
+        ref = tarfile.open(fileobj=io.BytesIO(buf))
+        assert [(m["name"], m["size"]) for m in ms] == \
+            [(t.name, t.size) for t in ref.getmembers()], path
+        for key, fields in webdataset_samples(ms).items():
+            txt = tar_extract(buf, fields["txt"])
+            meta = json.loads(tar_extract(buf,
+                                          fields["json"]))
+            assert txt == ref.extractfile(
+                fields["txt"]["name"]).read(), key
+            text = txt.decode("utf-8")
+            assert meta["n_chars"] == len(text), key
+            yield {
+                "doc_id": meta["doc_id"],
+                "n_chars": len(text),
+                "n_bytes": len(txt),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                buf = open(path, "rb").read()
-                ms = tar_members(buf)
-                ref = tarfile.open(fileobj=io.BytesIO(buf))
-                assert [(m["name"], m["size"]) for m in ms] == \
-                    [(t.name, t.size) for t in ref.getmembers()], path
-                for key, fields in webdataset_samples(ms).items():
-                    txt = tar_extract(buf, fields["txt"])
-                    meta = json.loads(tar_extract(buf,
-                                                  fields["json"]))
-                    assert txt == ref.extractfile(
-                        fields["txt"]["name"]).read(), key
-                    text = txt.decode("utf-8")
-                    assert meta["n_chars"] == len(text), key
-                    rows.append({
-                        "doc_id": meta["doc_id"],
-                        "n_chars": len(text),
-                        "n_bytes": len(txt),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_chars", "n_bytes"])
-
-    samples = paths.mapInPandas(
-        scan, "doc_id long, n_chars long, n_bytes long")
+    samples = map_rows(
+        paths, scan, "doc_id long, n_chars long, n_bytes long")
     return samples.groupBy(
         (F.col("doc_id") % 7).alias("bucket")
     ).agg(
@@ -21369,7 +20039,7 @@ def s66_webdataset_tar_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s67_zip_deflate_scan(spark, sf_dir):
-    """ZIP MEMBER SCAN (round 12, sources/archives.py): crawl
+    """ZIP MEMBER SCAN (sources/archives.py): crawl
     deliveries ship as zip; each task walks the central directory
     from spec (EOCD -> PK\\x01\\x02 entries -> local headers),
     inflates DEFLATE members through the engine's OWN RFC-1951
@@ -21379,8 +20049,6 @@ def s67_zip_deflate_scan(spark, sf_dir):
     Small members alternate stored/deflate so both methods are on
     the path. The rollup is oracle-replayed relationally."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -21389,13 +20057,7 @@ def s67_zip_deflate_scan(spark, sf_dir):
         zip_extract,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_zip_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_zip_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 2 == 1
@@ -21434,34 +20096,28 @@ def s67_zip_deflate_scan(spark, sf_dir):
         [(r.path,) for r in archives], "path string"
     ).repartition(len(archives))
 
-    def scan(batches):
-        import io
-        import zipfile
+    import io
+    import zipfile
 
-        import pandas as pd
+    def scan(path):
+        buf = open(path, "rb").read()
+        entries = zip_central_directory(buf)
+        ref = zipfile.ZipFile(io.BytesIO(buf))
+        assert [e["name"] for e in entries] == \
+            ref.namelist(), path
+        assert any(e["method"] == "stored"
+                   for e in entries), path
+        assert any(e["method"] == "deflate"
+                   for e in entries), path
+        for e in entries:
+            data = zip_extract(buf, e)
+            assert data == ref.read(e["name"]), e["name"]
+            did = int(e["name"].rsplit("/", 1)[-1]
+                      .split(".")[0])
+            yield {"doc_id": did,
+                         "n_bytes": len(data)}
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                buf = open(path, "rb").read()
-                entries = zip_central_directory(buf)
-                ref = zipfile.ZipFile(io.BytesIO(buf))
-                assert [e["name"] for e in entries] == \
-                    ref.namelist(), path
-                assert any(e["method"] == "stored"
-                           for e in entries), path
-                assert any(e["method"] == "deflate"
-                           for e in entries), path
-                for e in entries:
-                    data = zip_extract(buf, e)
-                    assert data == ref.read(e["name"]), e["name"]
-                    did = int(e["name"].rsplit("/", 1)[-1]
-                              .split(".")[0])
-                    rows.append({"doc_id": did,
-                                 "n_bytes": len(data)})
-            yield pd.DataFrame(rows, columns=["doc_id", "n_bytes"])
-
-    members = paths.mapInPandas(scan, "doc_id long, n_bytes long")
+    members = map_rows(paths, scan, "doc_id long, n_bytes long")
     return members.groupBy(
         (F.col("doc_id") % 5).alias("bucket")
     ).agg(
@@ -21487,7 +20143,7 @@ def s67_zip_deflate_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s68_warc_response_scan(spark, sf_dir):
-    """WARC RESPONSE SCAN (round 12, sources/warc.py): the Common
+    """WARC RESPONSE SCAN (sources/warc.py): the Common
     Crawl pipeline shape — shards hold warcinfo + request + response
     records, ONE GZIP MEMBER PER RECORD (the CC convention; stdlib
     gzip is the independent member writer, the engine's own RFC-1952
@@ -21500,8 +20156,6 @@ def s68_warc_response_scan(spark, sf_dir):
     crawl-to-clean-text pipeline with no driver choke point. The
     oracle replays the byte rollup relationally."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -21513,13 +20167,7 @@ def s68_warc_response_scan(spark, sf_dir):
         write_warc_record,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_warc_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_warc_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 == 2
@@ -21564,35 +20212,29 @@ def s68_warc_response_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
+    def scan(path):
+        blob = open(path, "rb").read()
+        members = split_gzip_members(blob)
+        recs = [r for m in members
+                for r in parse_warc_records(m)]
+        types = [warc_header(r, "WARC-Type") for r in recs]
+        assert types[0] == "warcinfo", path
+        assert types.count("request") == \
+            types.count("response"), path
+        for r in recs:
+            if warc_header(r, "WARC-Type") != "response":
+                continue
+            resp = parse_http_response(r["payload"])
+            assert resp["status"] == 200
+            assert resp["headers"]["Content-Type"] \
+                .startswith("text/plain")
+            uri = warc_header(r, "WARC-Target-URI")
+            yield {
+                "doc_id": int(uri.rsplit("/", 1)[-1]),
+                "n_bytes": len(resp["body"]),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                blob = open(path, "rb").read()
-                members = split_gzip_members(blob)
-                recs = [r for m in members
-                        for r in parse_warc_records(m)]
-                types = [warc_header(r, "WARC-Type") for r in recs]
-                assert types[0] == "warcinfo", path
-                assert types.count("request") == \
-                    types.count("response"), path
-                for r in recs:
-                    if warc_header(r, "WARC-Type") != "response":
-                        continue
-                    resp = parse_http_response(r["payload"])
-                    assert resp["status"] == 200
-                    assert resp["headers"]["Content-Type"] \
-                        .startswith("text/plain")
-                    uri = warc_header(r, "WARC-Target-URI")
-                    rows.append({
-                        "doc_id": int(uri.rsplit("/", 1)[-1]),
-                        "n_bytes": len(resp["body"]),
-                    })
-            yield pd.DataFrame(rows, columns=["doc_id", "n_bytes"])
-
-    pages = paths.mapInPandas(scan, "doc_id long, n_bytes long")
+    pages = map_rows(paths, scan, "doc_id long, n_bytes long")
     return pages.groupBy(
         (F.col("doc_id") % 5).alias("bucket")
     ).agg(
@@ -21676,7 +20318,7 @@ def text_unicode_nfc(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s69_jsonl_zst_corpus_scan(spark, sf_dir):
-    """JSONL.ZST CORPUS SCAN (round 12): the Pile-style corpus
+    """JSONL.ZST CORPUS SCAN: the Pile-style corpus
     layout — newline-delimited JSON documents, zstd-compressed per
     shard — read end-to-end with engine parts only: pyarrow's zstd
     codec WRITES the shards (the independent real compressor), each
@@ -21687,18 +20329,10 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
     relationally from the documents table. At 100 TB: a shard-path
     DataFrame, one task per shard, no driver bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_jsonlzst_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_jsonlzst_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 3
@@ -21739,34 +20373,26 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import json
+    import json
+    from cam_etl_spark.multimodal.fastpath import decompress
 
-        import pandas as pd
+    def scan(path):
+        raw = decompress("zstd", open(path, "rb").read())
+        # split on '\n' ONLY: json.dumps(ensure_ascii=
+        # False) leaves U+2028/U+2029/U+0085 raw inside
+        # strings and splitlines() would cut records there
+        for line in raw.decode("utf-8").split("\n"):
+            if not line:
+                continue
+            doc = json.loads(line)
+            yield {
+                "doc_id": doc["doc_id"],
+                "text": doc["text"],
+                "lang": doc["meta"]["lang"],
+            }
 
-        from cam_etl_spark.multimodal.fastpath import decompress
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = decompress("zstd", open(path, "rb").read())
-                # split on '\n' ONLY: json.dumps(ensure_ascii=
-                # False) leaves U+2028/U+2029/U+0085 raw inside
-                # strings and splitlines() would cut records there
-                for line in raw.decode("utf-8").split("\n"):
-                    if not line:
-                        continue
-                    doc = json.loads(line)
-                    rows.append({
-                        "doc_id": doc["doc_id"],
-                        "text": doc["text"],
-                        "lang": doc["meta"]["lang"],
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string")
     # No separate `parsed.count()` consistency assert: it would run
     # the zstd-decode pipeline a second time. The rollup below IS the
     # consistency check — n_docs and the drop-sensitive sum_doc_id
@@ -21900,8 +20526,8 @@ def stream_stream_full_outer(spark, sf_dir):
     },
 )
 def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
-    """ICEBERG v3 VARIANT + GEOMETRY INITIAL-DEFAULTS (round-12 ask
-    #5 — the last two non-encryption v3 default types,
+    """ICEBERG v3 VARIANT + GEOMETRY INITIAL-DEFAULTS
+    (the last two non-encryption v3 default types,
     sources/iceberg_meta.py _default_expr): a three-file v3 table
     where the LEGACY file (key only) predates every typed column, a
     Spark-written file carries REAL shredded variant values, and a
@@ -21921,7 +20547,6 @@ def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
     import os
     import shutil
     import struct
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -21929,13 +20554,7 @@ def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
     from cam_etl_spark.sources.geoparquet import points_xy
     from cam_etl_spark.sources.variant_binary import encode_variant
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_v3_vgdefaults_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_v3_vg")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_v3_vgdefaults_fixture", "orders_v3_vg")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -21989,13 +20608,9 @@ def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
     }), fc)
 
     m1 = os.path.join(md, "m1.avro")
-    I.write_manifest(m1, [{
-        "status": 1, "snapshot_id": 1,
-        "data_file": {"content": 0, "file_path": p,
-                      "file_format": "parquet", "partition": {},
-                      "record_count": 1,
-                      "file_size_in_bytes": os.path.getsize(p)},
-    } for p in (fa, fb, fc)])
+    I.write_manifest(m1, [
+        I.manifest_entry(p, snapshot_id=1, record_count=1) for p in (fa, fb, fc)
+    ])
     s1 = I.write_snapshot(table, 1, [m1])
 
     import base64
@@ -22096,8 +20711,6 @@ def dedup_incremental_lsh(spark, sf_dir):
     measured 100% on this corpus at all test SFs, so the oracle is
     the exact prior×new all-pairs jaccard."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from cam_etl_spark.io import write_bucketed
     from cam_etl_spark.operators.dedup import (
@@ -22118,9 +20731,7 @@ def dedup_incremental_lsh(spark, sf_dir):
     # LOCATION would survive in spark-warehouse and block the next
     # run's saveAsTable — clean dir + DROP IF EXISTS makes the entry
     # re-runnable in any session
-    wh = _os.path.join(_tempfile.gettempdir(),
-                       "cam_etl_inc_lsh_fixture", sfx)
-    _shutil.rmtree(wh, ignore_errors=True)
+    wh = fixture_dir(sf_dir, "cam_etl_inc_lsh_fixture")
     for tbl in (idx_tbl, sets_tbl):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -22162,7 +20773,7 @@ def dedup_incremental_lsh(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def s71_iceberg_refs_time_travel(spark, sf_dir):
-    """ICEBERG SNAPSHOT REFERENCES (round 13, spec "Snapshot
+    """ICEBERG SNAPSHOT REFERENCES (spec "Snapshot
     References" — sources/iceberg_meta.py resolve_ref): named
     branch/tag time travel over a three-snapshot table. Snapshot 1
     adds file A, snapshot 2 adds B (A existing), snapshot 3 deletes
@@ -22178,19 +20789,12 @@ def s71_iceberg_refs_time_travel(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources import iceberg_meta as I
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_iceberg_refs_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_refs")
-    shutil.rmtree(table, ignore_errors=True)
+    table = fixture_dir(sf_dir, "cam_etl_iceberg_refs_fixture", "orders_refs")
     data = os.path.join(table, "data")
     md = os.path.join(table, "metadata")
     os.makedirs(data)
@@ -22210,15 +20814,9 @@ def s71_iceberg_refs_time_travel(spark, sf_dir):
         shutil.rmtree(tmp)
 
     def entry(name, status):
-        return {
-            "status": status, "snapshot_id": 1,
-            "data_file": {
-                "content": 0, "file_path": paths[name],
-                "file_format": "parquet", "partition": {},
-                "record_count": 1,
-                "file_size_in_bytes": os.path.getsize(paths[name]),
-            },
-        }
+        return I.manifest_entry(
+            paths[name], status=status, snapshot_id=1, record_count=1
+        )
 
     m1 = os.path.join(md, "m1.avro")
     I.write_manifest(m1, [entry("A", 1)])
@@ -22272,7 +20870,7 @@ def s71_iceberg_refs_time_travel(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s72_warc_wet_conversion_scan(spark, sf_dir):
-    """COMMON CRAWL WET (extracted-text) SCAN (round 13): the layout
+    """COMMON CRAWL WET (extracted-text) SCAN: the layout
     most LLM pipelines actually consume — WET files are WARC
     containers of ``conversion`` records (text/plain payloads, one
     gzip member per record) rather than raw ``response`` records.
@@ -22287,18 +20885,10 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
     shard paths DataFrame, one task per WET file, zero driver
     bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_wet_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_wet_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 7 == 1
@@ -22341,37 +20931,30 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
+    from cam_etl_spark.sources.warc import (
+        parse_warc_records,
+        split_gzip_members,
+        warc_header,
+    )
 
-        from cam_etl_spark.sources.warc import (
-            parse_warc_records,
-            split_gzip_members,
-            warc_header,
-        )
+    def scan(path):
+        for member in split_gzip_members(
+                open(path, "rb").read()):
+            (rec,) = parse_warc_records(member)
+            if warc_header(rec, "WARC-Type") != "conversion":
+                continue
+            uri = warc_header(rec, "WARC-Target-URI")
+            yield {
+                "doc_id": int(uri.rsplit("/", 1)[1]),
+                "n_bytes": len(rec["payload"]),
+                "lang": warc_header(
+                    rec,
+                    "WARC-Identified-Content-Language"),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                for member in split_gzip_members(
-                        open(path, "rb").read()):
-                    (rec,) = parse_warc_records(member)
-                    if warc_header(rec, "WARC-Type") != "conversion":
-                        continue
-                    uri = warc_header(rec, "WARC-Target-URI")
-                    rows.append({
-                        "doc_id": int(uri.rsplit("/", 1)[1]),
-                        "n_bytes": len(rec["payload"]),
-                        "lang": warc_header(
-                            rec,
-                            "WARC-Identified-Content-Language"),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bytes", "lang"])
-
-    parsed = paths.mapInPandas(scan,
-                               "doc_id long, n_bytes long, "
-                               "lang string")
+    parsed = map_rows(paths, scan,
+                      "doc_id long, n_bytes long, "
+                      "lang string")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_bytes").alias("sum_bytes"),
@@ -22738,8 +21321,8 @@ def multimodal_adpcm_wav_decode(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s73_sqlite_table_scan(spark, sf_dir):
-    """SQLITE DATABASE FILE SCAN (round 13,
-    sources/sqlite_file.py): many public datasets ship as
+    """SQLITE DATABASE FILE SCAN
+    (sources/sqlite_file.py): many public datasets ship as
     ``.sqlite`` files — each task opens ONE database's bytes and
     scans one table through the engine's from-spec b-tree reader
     (header gates, interior/leaf walk, serial types, overflow
@@ -22752,18 +21335,10 @@ def s73_sqlite_table_scan(spark, sf_dir):
     db-path DataFrame, one task per database file, zero driver
     bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_sqlite_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_sqlite_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 == 4
@@ -22802,25 +21377,18 @@ def s73_sqlite_table_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
+    from cam_etl_spark.sources.sqlite_file import read_table
 
-        from cam_etl_spark.sources.sqlite_file import read_table
+    def scan(path):
+        cols, data = read_table(open(path, "rb").read(),
+                                "docs")
+        assert cols == ["doc_id", "text", "lang"]
+        for doc_id, text, lang in data:
+            yield {"doc_id": doc_id, "text": text,
+                         "lang": lang}
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                cols, data = read_table(open(path, "rb").read(),
-                                        "docs")
-                assert cols == ["doc_id", "text", "lang"]
-                for doc_id, text, lang in data:
-                    rows.append({"doc_id": doc_id, "text": text,
-                                 "lang": lang})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("text").isNull(), 1).otherwise(0))
@@ -22847,8 +21415,8 @@ def s73_sqlite_table_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s74_bz2_xml_dump_scan(spark, sf_dir):
-    """WIKIPEDIA-STYLE .BZ2 XML DUMP SCAN (round 13,
-    multimodal/bzip2.py): the classic encyclopedia-dump layout —
+    """WIKIPEDIA-STYLE .BZ2 XML DUMP SCAN
+    (multimodal/bzip2.py): the classic encyclopedia-dump layout —
     an XML document of <page><id/><lang/><text/> records,
     bzip2-compressed per shard. The REAL libbzip2 (stdlib bz2, the
     independent compressor) writes the shards; each task decodes ITS
@@ -22860,18 +21428,10 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
     same decoder now also serves Avro ``bzip2`` blocks. At 100 TB:
     one task per dump shard, zero driver bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_bz2xml_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_bz2xml_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 6 == 5
@@ -22909,29 +21469,21 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import xml.etree.ElementTree as ET
+    import xml.etree.ElementTree as ET
+    from cam_etl_spark.multimodal.fastpath import decompress
 
-        import pandas as pd
+    def scan(path):
+        xml = decompress("bz2", open(path, "rb").read())
+        root = ET.fromstring(xml.decode("utf-8"))
+        for page in root.iter("page"):
+            yield {
+                "doc_id": int(page.findtext("id")),
+                "text": page.findtext("text") or "",
+                "lang": page.findtext("lang") or "",
+            }
 
-        from cam_etl_spark.multimodal.fastpath import decompress
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                xml = decompress("bz2", open(path, "rb").read())
-                root = ET.fromstring(xml.decode("utf-8"))
-                for page in root.iter("page"):
-                    rows.append({
-                        "doc_id": int(page.findtext("id")),
-                        "text": page.findtext("text") or "",
-                        "lang": page.findtext("lang") or "",
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_pages"),
         F.sum(F.octet_length("text")).alias("sum_chars"),
@@ -23112,7 +21664,7 @@ def text_gopher_quality_rules(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s75_jsonl_xz_corpus_scan(spark, sf_dir):
-    """JSONL.XZ CORPUS SCAN (round 13, multimodal/xz.py): the
+    """JSONL.XZ CORPUS SCAN (multimodal/xz.py): the
     RedPajama/archival-corpus layout — newline-delimited JSON
     documents, xz-compressed per shard. The REAL liblzma (stdlib
     lzma, the independent compressor) writes the shards; each task
@@ -23126,18 +21678,10 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
     use. At 100 TB: a shard-path DataFrame, one task per shard, no
     driver bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_jsonlxz_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_jsonlxz_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 8 == 6
@@ -23178,34 +21722,26 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import json
+    import json
+    from cam_etl_spark.multimodal.fastpath import decompress
 
-        import pandas as pd
+    def scan(path):
+        raw = decompress("xz", open(path, "rb").read())
+        # split on '\n' ONLY: json.dumps(ensure_ascii=
+        # False) leaves U+2028/U+2029/U+0085 raw inside
+        # strings and splitlines() would cut records there
+        for line in raw.decode("utf-8").split("\n"):
+            if not line:
+                continue
+            doc = json.loads(line)
+            yield {
+                "doc_id": doc["doc_id"],
+                "text": doc["text"],
+                "lang": doc["meta"]["lang"],
+            }
 
-        from cam_etl_spark.multimodal.fastpath import decompress
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = decompress("xz", open(path, "rb").read())
-                # split on '\n' ONLY: json.dumps(ensure_ascii=
-                # False) leaves U+2028/U+2029/U+0085 raw inside
-                # strings and splitlines() would cut records there
-                for line in raw.decode("utf-8").split("\n"):
-                    if not line:
-                        continue
-                    doc = json.loads(line)
-                    rows.append({
-                        "doc_id": doc["doc_id"],
-                        "text": doc["text"],
-                        "lang": doc["meta"]["lang"],
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.octet_length("text")).alias("sum_bytes"),
@@ -23236,7 +21772,7 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def s76_delta_in_commit_timestamps(spark, sf_dir):
-    """DELTA IN-COMMIT TIMESTAMPS (round 13, spec "In-Commit
+    """DELTA IN-COMMIT TIMESTAMPS (spec "In-Commit
     Timestamps" — delta_log.py resolve_timestamp): timestamp time
     travel that trusts the LOG, not the filesystem. A three-commit
     table enables delta.enableInCommitTimestamps; every commitInfo
@@ -23247,48 +21783,32 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
     resolve to versions 0/0/1/2 and each snapshot replays + scans
     natively; the oracle replays each version's logical content
     relationally. At 100 TB: resolution reads kilobytes of log."""
-    import glob
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import (
+        add_action,
+        one_file,
         read_snapshot,
+        remove_action,
         resolve_timestamp,
         write_commit,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_delta_ict_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    table = os.path.join(base, "orders_ict")
-    shutil.rmtree(table, ignore_errors=True)
-    os.makedirs(table)
+    table = fixture_dir(sf_dir, "cam_etl_delta_ict_fixture", "orders_ict")
 
     o = t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 17 == 8
     ).select(F.col("o_orderkey").alias("k"))
     paths = {}
     for name, grp in (("A", 0), ("B", 1), ("C", 2)):
-        tmp = os.path.join(table, f".tmp_{name}")
-        o.filter(F.col("k") % 3 == grp).coalesce(1) \
-            .write.mode("overwrite").parquet(tmp)
-        dest = os.path.join(table, f"{name}.parquet")
-        shutil.move(glob.glob(tmp + "/*.parquet")[0], dest)
-        shutil.rmtree(tmp)
+        one_file(o.filter(F.col("k") % 3 == grp),
+                 os.path.join(table, f"{name}.parquet"))
         paths[name] = f"{name}.parquet"
 
     def add(name):
-        return {"add": {
-            "path": paths[name], "partitionValues": {},
-            "size": os.path.getsize(
-                os.path.join(table, paths[name])),
-            "modificationTime": 0, "dataChange": True,
-        }}
+        return add_action(table, paths[name])
 
     t0 = 1_700_000_000_000
     write_commit(table, 0, [
@@ -23308,7 +21828,7 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
                         "operation": "WRITE"}},
     ])
     write_commit(table, 2, [
-        {"remove": {"path": paths["A"], "dataChange": True}},
+        remove_action(paths["A"]),
         add("C"),
         {"commitInfo": {"inCommitTimestamp": t0 + 120_000,
                         "operation": "DELETE"}},
@@ -23449,7 +21969,7 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
           "packing"],
 )
 def corpus_end_to_end(spark, sf_dir):
-    """THE END-TO-END TRAINING-DATA PIPELINE (round 14) — the
+    """THE END-TO-END TRAINING-DATA PIPELINE — the
     composition a corpus team actually ships, every stage an
     already-green operator, chained so the oracle verifies the WHOLE
     byte path in one hash:
@@ -23490,8 +22010,6 @@ def corpus_end_to_end(spark, sf_dir):
     similarities (≥0.83) is 1-(1-s²)⁸ ≥ 0.9999 and measured 100% at
     sf0.001/0.01/0.1."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from cam_etl_spark.functions.text import (
         html_main_text,
@@ -23511,9 +22029,7 @@ def corpus_end_to_end(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     sfx = _os.path.basename(_os.path.normpath(sf_dir)).replace(
         ".", "_")
-    base = _os.path.join(_tempfile.gettempdir(),
-                         "cam_etl_corpus_e2e_fixture", sfx)
-    _shutil.rmtree(base, ignore_errors=True)
+    base = fixture_dir(sf_dir, "cam_etl_corpus_e2e_fixture")
     _os.makedirs(_os.path.join(base, "shards"))
 
     # ---- crawl fixture: the NEW batch as full HTML pages, written
@@ -23584,26 +22100,19 @@ def corpus_end_to_end(spark, sf_dir):
     ).repartition(max(1, len(shards)))
 
     # ---- ingest: one task per shard, the ENGINE's zstd decoder
-    def scan(batches):
-        import json
+    import json
+    from cam_etl_spark.multimodal.fastpath import decompress
 
-        import pandas as pd
+    def scan(path):
+        raw = decompress("zstd", open(path, "rb").read())
+        for line in raw.decode("utf-8").split("\n"):
+            if not line:
+                continue
+            doc = json.loads(line)
+            yield {"doc_id": doc["doc_id"],
+                         "html": doc["html"]}
 
-        from cam_etl_spark.multimodal.fastpath import decompress
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                raw = decompress("zstd", open(path, "rb").read())
-                for line in raw.decode("utf-8").split("\n"):
-                    if not line:
-                        continue
-                    doc = json.loads(line)
-                    rows.append({"doc_id": doc["doc_id"],
-                                 "html": doc["html"]})
-            yield pd.DataFrame(rows, columns=["doc_id", "html"])
-
-    ingested = paths.mapInPandas(scan, "doc_id long, html string")
+    ingested = map_rows(paths, scan, "doc_id long, html string")
 
     # ---- extract + Gopher gate (same Arrow pass as the scan)
     recd = ingested.select(
@@ -23716,7 +22225,7 @@ def corpus_end_to_end(spark, sf_dir):
           "bucketing", "foreachBatch"],
 )
 def stream_dedup_incremental(spark, sf_dir):
-    """STREAMING INCREMENTAL DEDUP (round 14) — the production twin
+    """STREAMING INCREMENTAL DEDUP — the production twin
     of `dedup_incremental_lsh`: in a live pipeline the daily batch is
     a STREAM, so new documents arrive as micro-batches and each one
     dedups against the PERSISTED prior-corpus index inside
@@ -23734,7 +22243,6 @@ def stream_dedup_incremental(spark, sf_dir):
     with the daily-batch shape; an intra-day self-dedup would chain
     `streaming_band_index` in front)."""
     import os as _os
-    import shutil as _shutil
     import tempfile as _tempfile
 
     from cam_etl_spark.io import write_bucketed
@@ -23752,9 +22260,7 @@ def stream_dedup_incremental(spark, sf_dir):
         ".", "_")
     idx_tbl = f"stream_inc_lsh_index_{sfx}"
     sets_tbl = f"stream_inc_lsh_sets_{sfx}"
-    wh = _os.path.join(_tempfile.gettempdir(),
-                       "cam_etl_stream_inc_lsh_fixture", sfx)
-    _shutil.rmtree(wh, ignore_errors=True)
+    wh = fixture_dir(sf_dir, "cam_etl_stream_inc_lsh_fixture")
     for tbl in (idx_tbl, sets_tbl):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -23816,8 +22322,8 @@ def stream_dedup_incremental(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s77_sqlite_wal_scan(spark, sf_dir):
-    """SQLITE WAL-MODE DATABASE SCAN (round 14,
-    sources/sqlite_file.py apply_wal): live ``.sqlite`` datasets ship
+    """SQLITE WAL-MODE DATABASE SCAN
+    (sources/sqlite_file.py apply_wal): live ``.sqlite`` datasets ship
     with an uncheckpointed ``-wal`` sidecar — the main file alone is
     STALE. Each shard database is authored by the REAL SQLite
     (stdlib sqlite3, journal_mode=WAL): the base rows land
@@ -23833,18 +22339,10 @@ def s77_sqlite_wal_scan(spark, sf_dir):
     relationally) breaks the hash. At 100 TB: one task per database
     (+sidecar), zero driver bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_sqlite_wal_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_sqlite_wal_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 7 == 1
@@ -23909,30 +22407,23 @@ def s77_sqlite_wal_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
+    from cam_etl_spark.sources.sqlite_file import (
+        apply_wal,
+        read_table,
+    )
 
-        from cam_etl_spark.sources.sqlite_file import (
-            apply_wal,
-            read_table,
-        )
+    def scan(path):
+        img = apply_wal(
+            open(path, "rb").read(),
+            open(path + "-wal", "rb").read())
+        cols, data = read_table(img, "docs")
+        assert cols == ["doc_id", "text", "lang"]
+        for doc_id, text, lang in data:
+            yield {"doc_id": doc_id, "text": text,
+                         "lang": lang}
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                img = apply_wal(
-                    open(path, "rb").read(),
-                    open(path + "-wal", "rb").read())
-                cols, data = read_table(img, "docs")
-                assert cols == ["doc_id", "text", "lang"]
-                for doc_id, text, lang in data:
-                    rows.append({"doc_id": doc_id, "text": text,
-                                 "lang": lang})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.octet_length("text")).alias("sum_chars"),
@@ -24094,7 +22585,7 @@ def sample_importance_dsir(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s78_arrow_ipc_stream_scan(spark, sf_dir):
-    """ARROW IPC STREAM SCAN (round 14, sources/arrow_ipc.py): the
+    """ARROW IPC STREAM SCAN (sources/arrow_ipc.py): the
     Hugging Face `datasets` cache layout — documents as .arrow
     record-batch streams, one shard per task. The REAL Arrow
     (pyarrow, the independent writer) writes the shards; each task
@@ -24109,18 +22600,10 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
     shard-path DataFrame, one task per .arrow file, zero driver
     bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_arrow_ipc_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_arrow_ipc_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 11 == 3
@@ -24184,45 +22667,37 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
-        import pyarrow as pa
+    import pyarrow as pa
+    from cam_etl_spark.sources.arrow_ipc import read_stream
 
-        from cam_etl_spark.sources.arrow_ipc import read_stream
+    def scan(path):
+        buf = open(path, "rb").read()
+        fields, data = read_stream(buf)
+        assert [n for n, _ in fields] == \
+            ["doc_id", "text", "lang", "emb", "ts"]
+        assert fields[3][1] == "list<float32>"
+        assert fields[4][1] == "timestamp_us"
+        # in-task cross-check against the REAL Arrow
+        ref = pa.ipc.open_stream(buf).read_all()
+        assert [tuple(r) for r in data] == [
+            tuple(ref.column(n)[i].as_py()
+                  for n, _ in fields)
+            for i in range(ref.num_rows)
+        ], path
+        for doc_id, text, lang, emb, ts in data:
+            # every element is an exact half in f32, so 2×sum
+            # is an exact integer both engines agree on
+            epoch = __import__("datetime").datetime(
+                1970, 1, 1)
+            yield {
+                "doc_id": doc_id, "text": text,
+                "lang": lang,
+                "emb2": int(round(2 * sum(emb))),
+                "ts_sec": int((ts - epoch).total_seconds()),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                buf = open(path, "rb").read()
-                fields, data = read_stream(buf)
-                assert [n for n, _ in fields] == \
-                    ["doc_id", "text", "lang", "emb", "ts"]
-                assert fields[3][1] == "list<float32>"
-                assert fields[4][1] == "timestamp_us"
-                # in-task cross-check against the REAL Arrow
-                ref = pa.ipc.open_stream(buf).read_all()
-                assert [tuple(r) for r in data] == [
-                    tuple(ref.column(n)[i].as_py()
-                          for n, _ in fields)
-                    for i in range(ref.num_rows)
-                ], path
-                for doc_id, text, lang, emb, ts in data:
-                    # every element is an exact half in f32, so 2×sum
-                    # is an exact integer both engines agree on
-                    epoch = __import__("datetime").datetime(
-                        1970, 1, 1)
-                    rows.append({
-                        "doc_id": doc_id, "text": text,
-                        "lang": lang,
-                        "emb2": int(round(2 * sum(emb))),
-                        "ts_sec": int((ts - epoch).total_seconds()),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang", "emb2",
-                               "ts_sec"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string, emb2 long, "
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string, emb2 long, "
               "ts_sec long")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -24251,8 +22726,8 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
-    """ARROW IPC SINK ROUND-TRIP (round 14,
-    sources/arrow_ipc_write.py): the engine WRITES .arrow shards
+    """ARROW IPC SINK ROUND-TRIP
+    (sources/arrow_ipc_write.py): the engine WRITES .arrow shards
     with hand-built flatbuffers (no Arrow library in the write
     path) — the jsonl→arrow conversion a corpus team runs before
     handing data to trainers. Each task serializes ITS partition,
@@ -24264,18 +22739,10 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
     writer task per shard, one reader task per shard, zero driver
     bytes."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "cam_etl_arrow_sink_fixture",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = fixture_dir(sf_dir, "cam_etl_arrow_sink_fixture")
 
     docs = t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 9 == 2
@@ -24331,27 +22798,19 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
         [(r.path,) for r in shards], "path string"
     ).repartition(max(1, len(shards)))
 
-    def scan(batches):
-        import pandas as pd
+    from cam_etl_spark.sources.arrow_ipc import read_stream
 
-        from cam_etl_spark.sources.arrow_ipc import read_stream
+    def scan(path):
+        _fields, data = read_stream(open(path, "rb").read())
+        for doc_id, text, lang, score in data:
+            yield {
+                "doc_id": doc_id, "text": text,
+                "lang": lang,
+                "score2": int(round(2 * score)),
+            }
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                _fields, data = read_stream(open(path, "rb").read())
-                for doc_id, text, lang, score in data:
-                    rows.append({
-                        "doc_id": doc_id, "text": text,
-                        "lang": lang,
-                        "score2": int(round(2 * score)),
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "lang", "score2"])
-
-    parsed = paths.mapInPandas(
-        scan, "doc_id long, text string, lang string, score2 long")
+    parsed = map_rows(
+        paths, scan, "doc_id long, text string, lang string, score2 long")
     return parsed.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.octet_length("text")).alias("sum_bytes"),

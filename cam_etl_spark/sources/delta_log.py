@@ -160,6 +160,86 @@ def write_commit(table_dir: str, version: int, actions: list[dict]) -> str:
     return path
 
 
+def add_action(
+    table_dir: str,
+    path: str,
+    partition_values: dict | None = None,
+    *,
+    size: int | None = None,
+    mtime: int = 0,
+    data_change: bool = True,
+    **fields,
+) -> dict:
+    """An ``add`` action for data file ``path`` (relative to
+    ``table_dir``); ``size`` defaults to the file's size on disk and
+    ``fields`` (``stats``, ``deletionVector``) follow the required ones."""
+    if size is None:
+        size = os.path.getsize(os.path.join(table_dir, path))
+    return {
+        "add": {
+            "path": path,
+            "partitionValues": partition_values or {},
+            "size": size,
+            "modificationTime": mtime,
+            "dataChange": data_change,
+            **fields,
+        }
+    }
+
+
+def remove_action(
+    path: str, deletion_timestamp: int | None = None, *, data_change: bool = True
+) -> dict:
+    """A ``remove`` action for ``path``; the optional deletion
+    timestamp is omitted when None."""
+    r = {"path": path}
+    if deletion_timestamp is not None:
+        r["deletionTimestamp"] = deletion_timestamp
+    r["dataChange"] = data_change
+    return {"remove": r}
+
+
+def table_files(table_dir: str) -> list[str]:
+    """Sorted paths, relative to ``table_dir``, of every parquet file
+    under it outside ``_delta_log``."""
+    rel = []
+    for root, _dirs, names in os.walk(table_dir):
+        if "_delta_log" in root:
+            continue
+        rel.extend(
+            os.path.relpath(os.path.join(root, n), table_dir)
+            for n in names
+            if n.endswith(".parquet")
+        )
+    return sorted(rel)
+
+
+def write_files(table_dir: str, df, rel: str) -> list[str]:
+    """Write ``df`` as parquet into ``table_dir/rel`` (overwriting) and
+    return its part files' sorted paths relative to ``table_dir``."""
+    out = os.path.join(table_dir, rel)
+    df.write.parquet(out, mode="overwrite")
+    return [
+        os.path.join(rel, n) for n in sorted(os.listdir(out)) if n.endswith(".parquet")
+    ]
+
+
+def one_file(df, path: str) -> str:
+    """Write ``df`` as exactly one parquet file at ``path`` (a
+    ``coalesce(1)`` write into ``path.tmp``, whose single part is moved
+    into place); returns ``path``."""
+    import glob
+    import shutil
+
+    tmp = path + ".tmp"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = glob.glob(os.path.join(tmp, "*.parquet"))
+    assert len(part) == 1, part
+    shutil.move(part[0], path)
+    shutil.rmtree(tmp)
+    return path
+
+
 def write_checkpoint(table_dir: str, version: int, state: dict) -> str:
     """Write a single-file parquet checkpoint of a replayed ``state``
     (as returned by replay_log) plus `_last_checkpoint`. Uses pyarrow
@@ -476,9 +556,6 @@ def compact_files(spark, table_dir: str, group_size: int) -> dict:
     "n_after"}. At 100 TB compaction is the maintenance pass that
     keeps scan task counts bounded; each group rewrite is one
     distributed job and the log commit is kilobytes."""
-    import glob
-    import shutil
-
     snap = replay_log(table_dir)
     if column_mapping_mode(snap["metadata"]) != "none":
         raise NotImplementedError(
@@ -500,38 +577,15 @@ def compact_files(spark, table_dir: str, group_size: int) -> dict:
     ]
     adds = []
     for gi, grp in enumerate(groups):
-        tmp = os.path.join(table_dir, f"_compact_tmp_{version}_{gi}")
-        spark.read.parquet(
-            *[os.path.join(table_dir, f["path"]) for f in grp]
-        ).repartition(1).write.parquet(tmp, mode="overwrite")
-        part = glob.glob(os.path.join(tmp, "*.parquet"))
-        assert len(part) == 1, part
         rel = f"compacted-{version}-{gi}.parquet"
-        shutil.move(part[0], os.path.join(table_dir, rel))
-        shutil.rmtree(tmp)
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": os.path.getsize(
-                        os.path.join(table_dir, rel)
-                    ),
-                    "modificationTime": 0,
-                    "dataChange": False,
-                }
-            }
+        one_file(
+            spark.read.parquet(
+                *[os.path.join(table_dir, f["path"]) for f in grp]
+            ).repartition(1),
+            os.path.join(table_dir, rel),
         )
-    removes = [
-        {
-            "remove": {
-                "path": f["path"],
-                "deletionTimestamp": 0,
-                "dataChange": False,
-            }
-        }
-        for f in files
-    ]
+        adds.append(add_action(table_dir, rel, data_change=False))
+    removes = [remove_action(f["path"], 0, data_change=False) for f in files]
     write_commit(table_dir, version, removes + adds)
     return {
         "version": version,
@@ -674,22 +728,12 @@ def merge_into(
         "cdc",
     )
 
-    def sz(p):
-        return os.path.getsize(os.path.join(table_dir, p))
-
     actions = (
-        [
-            {"remove": {"path": p, "deletionTimestamp": 0,
-                        "dataChange": True}}
-            for p in touched
-        ]
+        [remove_action(p, 0) for p in touched]
+        + [add_action(table_dir, p) for p in new_data]
         + [
-            {"add": {"path": p, "partitionValues": {}, "size": sz(p),
-                     "modificationTime": 0, "dataChange": True}}
-            for p in new_data
-        ]
-        + [
-            {"cdc": {"path": p, "partitionValues": {}, "size": sz(p),
+            {"cdc": {"path": p, "partitionValues": {},
+                     "size": os.path.getsize(os.path.join(table_dir, p)),
                      "dataChange": False}}
             for p in cdc_files
         ]

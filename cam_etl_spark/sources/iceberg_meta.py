@@ -475,6 +475,38 @@ def decode_long_bound(raw: bytes) -> int:
 # ---------------------------------------------------------------------------
 
 
+def manifest_entry(
+    path: str,
+    partition: dict | None = None,
+    *,
+    status: int = 1,
+    snapshot_id: int | None = None,
+    sequence_number: int | None = None,
+    content: int = 0,
+    file_format: str | None = None,
+    record_count: int = 0,
+    **fields,
+) -> dict:
+    """One manifest entry for the file at ``path``: data (content 0,
+    parquet) or deletes (content 1/2, avro unless ``file_format`` says
+    otherwise). ``fields`` are further ``data_file`` fields (bounds,
+    ``equality_ids``); null sequence numbers and ids inherit, per spec."""
+    return {
+        "status": status,
+        "snapshot_id": snapshot_id,
+        "sequence_number": sequence_number,
+        "data_file": {
+            "content": content,
+            "file_path": path,
+            "file_format": file_format or ("avro" if content else "parquet"),
+            "partition": partition or {},
+            "record_count": record_count,
+            "file_size_in_bytes": os.path.getsize(path),
+            **fields,
+        },
+    }
+
+
 def write_manifest(path: str, entries: list[dict]) -> int:
     """Write one manifest Avro file; returns its byte length.
     Optional fields (sequence_number, bounds) default to null."""
@@ -1626,27 +1658,15 @@ def merge_upsert_mor(
         [{key: k} for k in keys],
     )
 
-    def entry(path, content=0, eq_ids=None):
-        return {
-            "status": 1,
-            "snapshot_id": None,
-            "sequence_number": seq,
-            "data_file": {
-                "content": content,
-                "file_path": path,
-                "file_format": "avro" if content else "parquet",
-                "partition": {},
-                "record_count": 0,
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": eq_ids,
-            },
-        }
-
     m_data = os.path.join(md, f"m-mor-{new_snapshot_id}.avro")
-    write_manifest(m_data, [entry(p) for p in new_files])
+    write_manifest(
+        m_data, [manifest_entry(p, sequence_number=seq) for p in new_files]
+    )
     m_del = os.path.join(md, f"m-mordel-{new_snapshot_id}.avro")
     write_manifest(
-        m_del, [entry(eqd, content=2, eq_ids=[key_field_id])]
+        m_del,
+        [manifest_entry(eqd, sequence_number=seq, content=2,
+                        equality_ids=[key_field_id])],
     )
     # carry every existing manifest forward, add the new pair
     cur = {s["snapshot-id"]: s for s in meta["snapshots"]}[

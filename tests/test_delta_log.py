@@ -19,20 +19,12 @@ META = {
 
 
 def _add(path, p="a", size=10, stats=None):
-    return {
-        "add": {
-            "path": path,
-            "partitionValues": {"p": p},
-            "size": size,
-            "modificationTime": 1,
-            "dataChange": True,
-            **({"stats": stats} if stats else {}),
-        }
-    }
+    extra = {"stats": stats} if stats else {}
+    return D.add_action("", path, {"p": p}, size=size, mtime=1, **extra)
 
 
 def _rm(path):
-    return {"remove": {"path": path, "deletionTimestamp": 2, "dataChange": True}}
+    return D.remove_action(path, 2)
 
 
 def _table(tmp_path, commits):
@@ -44,6 +36,16 @@ def _table(tmp_path, commits):
 
 
 def test_add_remove_readd_lifecycle(tmp_path):
+    assert _add("f1") == {"add": {
+        "path": "f1", "partitionValues": {"p": "a"}, "size": 10,
+        "modificationTime": 1, "dataChange": True,
+    }}
+    assert _rm("f1") == {
+        "remove": {"path": "f1", "deletionTimestamp": 2, "dataChange": True}
+    }
+    assert D.remove_action("f1") == {"remove": {"path": "f1", "dataChange": True}}
+    (tmp_path / "g.parquet").write_bytes(b"x" * 7)
+    assert D.add_action(str(tmp_path), "g.parquet")["add"]["size"] == 7
     d = _table(
         tmp_path,
         [

@@ -373,7 +373,11 @@ def test_read_snapshot_end_to_end(tmp_path, spark):
             if n.endswith(".parquet"):
                 full = os.path.join(root, n)
                 pval = full.split("p=")[1].split("/")[0]
-                entries.append(_entry(full, 1, {"p": pval}))
+                entries.append(I.manifest_entry(full, {"p": pval}))
+    e = entries[0]
+    assert e["status"] == 1 and e["sequence_number"] is None
+    assert e["data_file"]["file_format"] == "parquet"
+    assert e["data_file"]["file_size_in_bytes"] == os.path.getsize(e["data_file"]["file_path"])
     md = os.path.join(d, "metadata")
     m1 = os.path.join(md, "m1.avro")
     os.makedirs(md, exist_ok=True)

@@ -1,6 +1,7 @@
 """The layered profiler (tools/profile.py) and the one session builder it
 shares with the product."""
 
+import ast
 import os
 import re
 import subprocess
@@ -81,6 +82,37 @@ def test_session_builder_only_in_session_module():
                     if builder.search(fh.read()):
                         found.append(os.path.relpath(path, ROOT))
     assert found == [os.path.join("cam_etl_spark", "session.py")]
+
+
+def _package_sources():
+    pkg = os.path.join(ROOT, "cam_etl_spark")
+    for dirpath, dirnames, filenames in os.walk(pkg):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        for f in sorted(filenames):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path, encoding="utf-8") as fh:
+                    yield os.path.relpath(path, pkg), fh.read()
+
+
+def test_fixture_mechanisms_defined_once():
+    """Each catalog fixture mechanism has one definition: ``micro6``
+    once, the scratch directory only in ``catalog.fixture_dir``, and
+    Delta ``add`` / Iceberg ``data_file`` dicts only in ``sources/``."""
+    micro6, tmp, actions = [], [], []
+    for rel, text in _package_sources():
+        micro6 += [rel] * len(re.findall(r"\bdef micro6\(", text))
+        if rel.startswith("plans" + os.sep):
+            for fn in ast.parse(text).body:
+                n = ast.unparse(fn).count("tempfile.gettempdir()")
+                tmp += [(rel, getattr(fn, "name", None))] * n
+        if not rel.startswith("sources" + os.sep) and re.search(
+            r'"add": \{|"data_file": \{', text
+        ):
+            actions.append(rel)
+    assert micro6 == [os.path.join("multimodal", "__init__.py")]
+    assert tmp == [(os.path.join("plans", "catalog.py"), "fixture_dir")]
+    assert actions == []
 
 
 @pytest.mark.parametrize(

@@ -1,13 +1,16 @@
 """Local mirror of the driver's DuckDB-oracle comparison.
 
 Runs every catalog query on Spark and its oracle on DuckDB at sf0.01,
-compares row count + sorted-column value multiset. Usage:
+compares row count + sorted-column value multiset. Each PASS line ends
+with a 12-hex md5 of the Spark schema and that multiset, so two
+checkouts can be compared line for line. Usage:
 
     python tools/check_correctness.py [query_name ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -53,6 +56,14 @@ def multiset(rows, cols):
     for r in rows:
         out.append("\x1f".join(norm_cell(r[i]) for i in order))
     return sorted(out)
+
+
+def digest(schema, rows, cols):
+    """12-hex md5 of ``schema.simpleString()`` and the sorted multiset."""
+    h = hashlib.md5(schema.simpleString().encode())
+    for line in multiset(rows, cols):
+        h.update(b"\n" + line.encode())
+    return h.hexdigest()[:12]
 
 
 def main():
@@ -114,7 +125,8 @@ def main():
             print(f"FAIL  {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
             n_fail += 1
         else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            dg = digest(sdf.schema, srows, scols)
+            print(f"PASS  {name}: {len(srows)} rows {dg} [{time.time()-t0:.1f}s]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only of {len(names)}")
     return 1 if n_fail else 0
