@@ -88,6 +88,7 @@ from __future__ import annotations
 
 import math
 
+from cam_etl_spark.multimodal import micro6
 from cam_etl_spark.multimodal.mpegaudio import (
     _BitReader,
     _BitWriter,
@@ -1453,3 +1454,32 @@ def decode_mp3_pcm(shells: list[dict], channel: int | None = 0):
                 blocks[ci].extend(samples)
     outs = [_polyphase_synthesis(b) for b in blocks]
     return tuple(outs) if channel is None else outs[0]
+
+
+def stereo_spectrum_stats(media_id: int, lines) -> dict:
+    """Stats row of a decoded stereo spectrum: ``lines`` yields the
+    (left, right) value of each spectral line. Values count in exact
+    integer micro-units (``micro6``); ``n_lines`` counts the lines where
+    either channel is nonzero."""
+    n_lines = 0
+    sums = [0, 0, 0, 0, 0, 0]
+    for lv, rv in lines:
+        ml, mr = micro6(lv), micro6(rv)
+        if ml or mr:
+            n_lines += 1
+        sums[0] += ml
+        sums[1] += abs(ml)
+        sums[2] = max(sums[2], abs(ml))
+        sums[3] += mr
+        sums[4] += abs(mr)
+        sums[5] = max(sums[5], abs(mr))
+    return {
+        "media_id": media_id,
+        "n_lines": n_lines,
+        "sum_l_micro": sums[0],
+        "sum_abs_l_micro": sums[1],
+        "max_abs_l_micro": sums[2],
+        "sum_r_micro": sums[3],
+        "sum_abs_r_micro": sums[4],
+        "max_abs_r_micro": sums[5],
+    }

@@ -9,18 +9,26 @@ BOTH engines so accumulation-order differences can't flip the hash.
 The ``tags`` list names the SURVEY §2 operator IDs each query demonstrates;
 the docstring of each builder cites the reference behavior it models.
 
-Two fixture mechanisms have one definition here:
+Four fixture mechanisms have one definition here:
 
 - ``map_rows(df, fn, schema)`` is the Arrow batch loop of a per-row
   decoder: ``fn(*row)`` yields the output rows of one input row as dicts.
 - ``fixture_dir(sf_dir, name, *sub)`` is an entry's emptied scratch
-  directory under the system temp dir, one per scale.
+  directory under the system temp dir, one per scale, so a second run
+  reuses the first run's directory instead of adding one.
+- ``shard_files(df, base, name, write)`` writes one file per non-empty
+  partition of ``df`` (the reference's one-batch-per-part-file writer)
+  and returns the shard paths as a frame with one partition per file.
+- ``sampled_docs(spark, sf_dir, every, at)`` is the JVM-side sample gate
+  of a codec decode: the ``(doc_id, text)`` rows with
+  ``doc_id % every == at``, spread to cluster width.
 
 Code that runs on a Python worker must never live in, or pull in,
 ``cam_etl_spark.plans``: importing the package registers every query
-(~0.25 s per worker). ``map_rows`` nests its batch loop so cloudpickle
-ships it by value, and worker-side helpers such as ``micro6`` live in
-the modules the decoders already import (``cam_etl_spark.multimodal``).
+(~0.25 s per worker). ``map_rows`` and ``shard_files`` nest their batch
+loops so cloudpickle ships them by value, and worker-side helpers such
+as ``micro6`` live in the modules the decoders already import
+(``cam_etl_spark.multimodal``).
 """
 
 from __future__ import annotations
@@ -158,9 +166,62 @@ def map_rows(df, fn, schema):
 
         for pdf in batches:
             rows = [out for row in zip(*(pdf[c] for c in pdf.columns)) for out in fn(*row)]
-            yield pd.DataFrame(rows, columns=cols)
+            # column by column: a missing key is None, which Arrow reads
+            # as null for every type (a NaN breaks array/struct columns)
+            yield pd.DataFrame({c: [r.get(c) for r in rows] for c in cols}, columns=cols)
 
     return df.mapInPandas(run, schema)
+
+
+def shard_files(df, base, name, write):
+    """One file per non-empty partition of ``df``: each partition's rows,
+    sorted by the first column, go to ``write(pdf, path)`` with ``path``
+    = ``base/name.format(min key)`` (e.g. ``"shard-{:08d}.tar"``). Runs
+    the write job and returns the paths as a ``path string`` frame with
+    one partition per file, so each file is read back by its own task.
+    (Strictly one file per Arrow batch: a partition of more than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows writes several.)
+
+    As in ``map_rows``, the batch loop is nested so cloudpickle ships it
+    by value; ``write`` must not reach ``cam_etl_spark.plans``."""
+    key = df.columns[0]
+
+    def run(batches):
+        import os
+
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            pdf = pdf.sort_values(key)
+            path = os.path.join(base, name.format(int(pdf[key].min())))
+            write(pdf, path)
+            yield pd.DataFrame({"path": [path]})
+
+    paths = df.mapInPandas(run, "path string").collect()
+    return df.sparkSession.createDataFrame(paths, "path string").repartition(
+        max(1, len(paths))
+    )
+
+
+def sampled_docs(spark, sf_dir, every, at):
+    """The ``(doc_id, text)`` rows of ``documents`` with
+    ``doc_id % every == at``: the sample gate of a codec decode.
+
+    The filter runs JVM-side, so only the sampled rows cross the Arrow
+    boundary and the decoder needs no gate of its own. The repartition
+    spreads the surviving rows across the cluster before the CPU-heavy
+    per-document decode: a small or single-split input otherwise runs
+    the whole Python decode on one core (1 scan partition at sf0.1).
+    ``defaultParallelism`` keeps it scale-adaptive, and the shuffled
+    payload is only the sampled 1/``every`` of the corpus."""
+    return (
+        t(spark, sf_dir, "documents")
+        .filter((F.col("doc_id") % every) == at)
+        .select("doc_id", "text")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
 
 
 def fixture_dir(sf_dir, name, *sub):

@@ -23,10 +23,13 @@ from cam_etl_spark.plans.catalog import (
     lon_sql,
     map_rows,
     register,
+    sampled_docs,
+    shard_files,
     t,
     widen,
     widen_table,
 )
+from cam_etl_spark.streaming.transforms import file_stream, run_available_now, run_to_count
 
 #: ISO 11172-3 Table 3-B.3 half-prototype numerators (x 65536) as a
 #: SQL list literal — shared VERBATIM by every oracle that replays the
@@ -1205,7 +1208,7 @@ def multimodal_mixed_dispatch(spark, sf_dir):
     from cam_etl_spark.multimodal.jpeg import encode_jpeg_gray_blocks
     from cam_etl_spark.multimodal.mpegaudio import encode_layer1_frame
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         k = d % 9
@@ -1273,7 +1276,7 @@ def multimodal_mixed_dispatch(spark, sf_dir):
             "sample_rate": m.get("sample_rate"),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, fmt string, width int, height int, "
@@ -1410,13 +1413,11 @@ def s14_partition_backfill(spark, sf_dir):
     seven). The final table must show exactly one doubled partition and
     seven untouched ones — the oracle. Also proves partition pruning on
     the re-read: the day filter reaches PartitionFilters, not a scan."""
-    import tempfile
-
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         (F.col("o_orderkey") % 8).alias("day_part"),
     )
-    work = tempfile.mkdtemp(prefix="backfill_q_")
+    work = fixture_dir(sf_dir, "cam_etl_backfill_fixture")
     path = work + "/days"
     o.write.partitionBy("day_part").mode("overwrite").parquet(path)
     # corrected re-run for day 3 only (prices doubled), dynamic overwrite
@@ -1474,7 +1475,7 @@ def multimodal_flac_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.flac import decode_flac, encode_flac
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
@@ -1493,7 +1494,7 @@ def multimodal_flac_decode(spark, sf_dir):
             "max_s": int(got.max()),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, n_samples long, sum_samples long, min_s long, max_s long",
@@ -1550,7 +1551,7 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.flac import decode_flac, encode_flac
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         dig = np.frombuffer(seed, dtype=np.uint8).astype(np.int64)
@@ -1583,7 +1584,7 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
             "max_right": int(right.max()),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, n_samples long, sample_rate long, "
@@ -1700,7 +1701,7 @@ def multimodal_mpeg_audio_decode(spark, sf_dir):
         encode_layer2_frame,
     )
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         dig = hashlib.md5((text or "").encode()).digest()
         if d % 2 == 0:  # Layer I
@@ -1763,7 +1764,7 @@ def multimodal_mpeg_audio_decode(spark, sf_dir):
             "max_abs_micro": max(abs(v) for v in vals),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, layer long, n_active_sb long, n_active_samples long, "
@@ -2766,7 +2767,6 @@ def stream_upsert_jdbc(spark, sf_dir):
     parquet source — a row lost or doubled anywhere in the
     stage→MERGE→read-back cycle hash-fails."""
     import hashlib
-    import tempfile
 
     from cam_etl_spark.streaming.sinks import upsert_jdbc_sink
 
@@ -2799,13 +2799,8 @@ def stream_upsert_jdbc(spark, sf_dir):
         F.unix_timestamp("ts").alias("TS_SEC"),
         (F.unix_timestamp("ts") * F.lit(100_000_000) + F.col("event_id")).alias("SEQ"),
     )
-    work = tempfile.mkdtemp(prefix="upsert_jdbc_q_")
-    src.repartition(4).write.mode("overwrite").parquet(work + "/in")
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_upsert_jdbc_fixture")
+    stream = file_stream(src, work + "/in", per_trigger=2, files=4)
     q = upsert_jdbc_sink(
         stream, key_cols=["USER_ID"], seq_col="SEQ",
         url=url, table=table, checkpoint=work + "/ckpt", driver=drv,
@@ -2848,20 +2843,13 @@ def stream_upsert_snapshot(spark, sf_dir):
     batch last-row-per-key window. This IS executed as a real streaming
     query (not a batch stand-in): the merge path runs once per micro-batch
     against the previous snapshot."""
-    import tempfile
-
     from cam_etl_spark.streaming.sinks import read_upsert_snapshot, upsert_parquet_sink
 
     src = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_timestamp("ts").alias("ts_sec")
     )
-    work = tempfile.mkdtemp(prefix="upsert_q_")
-    src.repartition(4).write.mode("overwrite").parquet(work + "/in")
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_upsert_fixture")
+    stream = file_stream(src, work + "/in", per_trigger=2, files=4)
     q = upsert_parquet_sink(
         stream, key_cols=["user_id"], seq_col="ts_sec",
         base_path=work + "/out", checkpoint=work + "/ckpt",
@@ -2980,38 +2968,16 @@ def stream_stream_join(spark, sf_dir):
     store, bounded by the watermark + time-range condition. The watermark
     exceeds the dataset's disorder so no pair is late-dropped and the
     result equals the batch interval join — which is the oracle."""
-    import tempfile
-
     from cam_etl_spark.streaming.transforms import interval_stream_join
 
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts", "value")
-    work = tempfile.mkdtemp(prefix="ssjoin_q_")
-    clicks_b = e.filter(F.col("event_type") == "click")
-    views_b = e.filter(F.col("event_type") == "view")
-    clicks_b.repartition(4).write.mode("overwrite").parquet(work + "/clicks")
-    views_b.repartition(4).write.mode("overwrite").parquet(work + "/views")
-
-    cs = (
-        spark.readStream.schema(clicks_b.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/clicks")
-    )
-    vs = (
-        spark.readStream.schema(views_b.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/views")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_ssjoin_fixture")
+    cs = file_stream(e.filter(F.col("event_type") == "click"), work + "/clicks",
+                     per_trigger=2, files=4)
+    vs = file_stream(e.filter(F.col("event_type") == "view"), work + "/views",
+                     per_trigger=2, files=4)
     j = interval_stream_join(cs, vs, lookback="6 hours", watermark="90 days")
-    q = (
-        j.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
+    out = run_available_now(j, work)
     return out.select(
         "click_id",
         "view_id",
@@ -3043,8 +3009,6 @@ def s9_graph_partition_prune(spark, sf_dir):
     PartitionFilters in the plan); the oracle is the nation-side
     relational form alone, so any partition-column mixup or cross-graph
     leak fails on rows, not just on performance."""
-    import tempfile
-
     from cam_etl_spark.quads import fan_out_sql, quad_sql
 
     c = t(spark, sf_dir, "customer")
@@ -3061,7 +3025,7 @@ def s9_graph_partition_prune(spark, sf_dir):
                  "https://schema.org/name", "n_name", "literal",
                  graph="urn:example:graph:nations"),
     )
-    work = tempfile.mkdtemp(prefix="s9prune_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s9prune_fixture")
     cq.unionByName(nq).write.mode("overwrite").partitionBy("graph").parquet(work)
     back = spark.read.parquet(work).filter(
         F.col("graph") == "urn:example:graph:nations"
@@ -3091,8 +3055,6 @@ def s5_vocab_source_lookup(spark, sf_dir):
     IRI construction relationally; any defect in the snapshot writer,
     parser, label ranking, casefolding, or the strict join hash-fails
     (or aborts, for unresolved codes)."""
-    import tempfile
-
     from cam_etl_spark.operators.vocab import lookup_concept
     from cam_etl_spark.quads import fan_out_sql, quad_sql, write_nquads
     from cam_etl_spark.sources.vocab import skos_lookup_df
@@ -3109,7 +3071,7 @@ def s5_vocab_source_lookup(spark, sf_dir):
         quad_sql(iri, skos + "altLabel", "lower(p_brand)", "literal", graph=g),
         quad_sql(iri, skos + "inScheme", f"'{scheme}'", "iri", graph=g),
     )
-    work = tempfile.mkdtemp(prefix="s5vocab_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s5vocab_fixture")
     write_nquads(vocab_quads, work)
     lookup = skos_lookup_df(spark, work, scheme=scheme)
     resolved = lookup_concept(p, lookup, "p_brand", strict=True, validate_now=False)
@@ -3159,12 +3121,10 @@ def s7_nquads_sink_roundtrip(spark, sf_dir):
     oracle — so a term-escaping, formatting, or parser bug anywhere in
     the sink path hash-fails on real data, including names with
     punctuation."""
-    import tempfile
-
     from cam_etl_spark.quads import read_nquads, write_nquads
 
     quads = _customer_quads(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="s7nq_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s7nq_fixture")
     write_nquads(quads, work)
     back = read_nquads(spark, work)
     return back.select("subject", "predicate", "object_value", "object_kind", "graph")
@@ -3189,12 +3149,10 @@ def s3_csv_stringly_scan(spark, sf_dir):
     ingest — and then cast bronze→silver. The scrub must restore the
     exact original names and the text→typed casts must reproduce the
     parquet values, so the oracle is simply the original table."""
-    import tempfile
-
     from cam_etl_spark.io import read_csv_stringly
 
     c = t(spark, sf_dir, "customer")
-    work = tempfile.mkdtemp(prefix="s3csv_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s3csv_fixture")
     dirty = c.select(
         "c_custkey",
         F.concat(
@@ -3251,8 +3209,6 @@ def s4_shapefile_scan(spark, sf_dir):
     engines, and DBF width-10 truncation+strip is mirrored with
     substr+trim. Fixture build is a driver-side collect of the formula
     inputs only — the READ path under test is fully distributed."""
-    import tempfile
-
     from cam_etl_spark.sources.shapefile import (
         read_shapefile,
         shp_point,
@@ -3266,7 +3222,7 @@ def s4_shapefile_scan(spark, sf_dir):
         .select("p_partkey", "p_brand", "p_type")
         .collect()
     )
-    work = tempfile.mkdtemp(prefix="s4shp_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s4shp_fixture")
     fields = [("PKEY", 10), ("BRAND", 10), ("PTYPE", 10)]
     shards: dict[int, tuple[list, list]] = {i: ([], []) for i in range(4)}
     for r in sorted(rows, key=lambda r: r["p_partkey"]):
@@ -3327,8 +3283,6 @@ def s4_shapefile_datasource(spark, sf_dir):
     fixture formulas (and thus the same oracle family) as
     s4_shapefile_scan, but ONE file read through 6 planned splits
     instead of many files through binaryFile."""
-    import tempfile
-
     from cam_etl_spark.sources.shapefile import (
         register_shapefile_source,
         shp_point,
@@ -3342,7 +3296,7 @@ def s4_shapefile_datasource(spark, sf_dir):
         .select("p_partkey", "p_brand")
         .collect()
     )
-    work = tempfile.mkdtemp(prefix="s4ds_q_")
+    work = fixture_dir(sf_dir, "cam_etl_s4ds_fixture")
     fields = [("PKEY", 10), ("BRAND", 10)]
     shapes, attrs = [], []
     for r in sorted(rows, key=lambda r: r["p_partkey"]):
@@ -3469,51 +3423,27 @@ def stream_stream_left_outer(spark, sf_dir):
     filtered from the result, which must then equal the batch left
     interval join — the oracle."""
     import datetime
-    import tempfile
 
     from cam_etl_spark.streaming.transforms import interval_stream_join
 
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts", "value")
-    work = tempfile.mkdtemp(prefix="ssljoin_q_")
-    clicks_b = e.filter(F.col("event_type") == "click")
-    views_b = e.filter(F.col("event_type") == "view")
-    clicks_b.repartition(4).write.mode("overwrite").parquet(work + "/clicks")
-    views_b.repartition(4).write.mode("overwrite").parquet(work + "/views")
-
-    def run():
-        cs = (
-            spark.readStream.schema(clicks_b.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(work + "/clicks")
-        )
-        vs = (
-            spark.readStream.schema(views_b.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(work + "/views")
-        )
-        j = interval_stream_join(
-            cs, vs, lookback="6 hours", watermark="90 days", how="left_outer"
-        )
-        q = (
-            j.writeStream.format("parquet")
-            .option("path", work + "/out")
-            .option("checkpointLocation", work + "/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run()
+    work = fixture_dir(sf_dir, "cam_etl_ssljoin_fixture")
+    cs = file_stream(e.filter(F.col("event_type") == "click"), work + "/clicks",
+                     per_trigger=2, files=4)
+    vs = file_stream(e.filter(F.col("event_type") == "view"), work + "/views",
+                     per_trigger=2, files=4)
+    j = interval_stream_join(
+        cs, vs, lookback="6 hours", watermark="90 days", how="left_outer"
+    )
+    run_available_now(j, work)
     mx = e.agg(F.max("ts").alias("mx")).collect()[0]["mx"]
     sentinel_ts = mx + datetime.timedelta(days=91)
     for side in ("clicks", "views"):
         spark.createDataFrame(
-            [(-1, -1, "sentinel", sentinel_ts, 0.0)], clicks_b.schema
+            [(-1, -1, "sentinel", sentinel_ts, 0.0)], e.schema
         ).write.mode("append").parquet(work + "/" + side)
-    run()  # resume from the checkpoint: sentinel flushes pending state
-
-    out = spark.read.parquet(work + "/out").filter(F.col("click_id") >= 0)
+    # resume from the checkpoint: the sentinel flushes pending state
+    out = run_available_now(j, work).filter(F.col("click_id") >= 0)
     return out.select(
         "click_id",
         "view_id",
@@ -4379,35 +4309,20 @@ def stream_dedup_watermark(spark, sf_dir):
     oracle. Duplicates are written as SEPARATE files so maxFilesPerTrigger
     delivers them in later micro-batches: the dedup is genuinely
     cross-batch, not within-batch distinct."""
-    import tempfile
-
     from cam_etl_spark.streaming.stateful import stream_dedup
 
     e = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
-    work = tempfile.mkdtemp(prefix="sdedup_q_")
-    e.repartition(4).write.mode("overwrite").parquet(work + "/in")
+    work = fixture_dir(sf_dir, "cam_etl_sdedup_fixture")
+    src = file_stream(e, work + "/in", per_trigger=2, files=4)
     # duplicate tail arrives later (separate files appended to the dir)
     e.filter(F.col("event_id") % 3 == 0).repartition(2).write.mode("append").parquet(
         work + "/in"
     )
-    src = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
+    out = run_available_now(
+        stream_dedup(src, id_cols=["event_id"], watermark="90 days"), work
     )
-    deduped = stream_dedup(src, id_cols=["event_id"], watermark="90 days")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
     return out.select(
         "event_id",
         "user_id",
@@ -4540,8 +4455,8 @@ def dedup_cdc_chunks(spark, sf_dir):
     tags=["streaming", "session-window", "state-timeout"],
 )
 def stream_session_timeout_finalize(spark, sf_dir):
-    """TIMEOUT-DRIVEN session finalization (round 11,
-    streaming/stateful.py sessionize_event_timeout —
+    """TIMEOUT-DRIVEN session finalization
+    (streaming/stateful.py sessionize_event_timeout —
     GroupStateTimeout.EventTimeTimeout, the timer mechanism of the
     arbitrary-stateful API): sessions close from the DATA path when a
     later event arrives past the 10-minute gap, and from the
@@ -4555,14 +4470,12 @@ def stream_session_timeout_finalize(spark, sf_dir):
     the oracle — while the sentinel's own session provably stays
     open. State per key is one open-session tuple: at 100 TB the
     store holds only keys active inside the watermark horizon."""
-    import tempfile
-
     from cam_etl_spark.streaming.stateful import (
         sessionize_event_timeout,
     )
 
     e = t(spark, sf_dir, "events").select("user_id", "ts", "value")
-    work = tempfile.mkdtemp(prefix="sess_to_")
+    work = fixture_dir(sf_dir, "cam_etl_sess_to_fixture")
     e.coalesce(1).write.mode("overwrite").parquet(work + "/in")
     sentinel_ts = e.agg(
         F.timestamp_millis(
@@ -4574,21 +4487,8 @@ def stream_session_timeout_finalize(spark, sf_dir):
         F.lit(0.0).alias("value"),
     )
     sentinel.coalesce(1).write.mode("append").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(work + "/in")
-    )
-    q = (
-        sessionize_event_timeout(src).writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
+    src = file_stream(e, work + "/in", per_trigger=1)
+    out = run_available_now(sessionize_event_timeout(src), work)
     assert out.filter("user_id = -1").count() == 0  # still open
     return out.select(
         "user_id", "start_ms", "end_ms", "n_events",
@@ -4639,8 +4539,6 @@ def stream_dedup_minhash(spark, sf_dir):
     arrival order), so the result equals batch dedup_minhash_lsh and the
     oracle is the same EXACT all-pairs jaccard set — asserting 100%
     banding recall on this corpus, cross-batch state included."""
-    import tempfile
-
     from cam_etl_spark.operators.dedup import (
         _verify_jaccard,
         banded_from_sets,
@@ -4651,25 +4549,10 @@ def stream_dedup_minhash(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     sets = shingle_sets(d, "text", "doc_id", 3)
     banded = banded_from_sets(sets, bands=8, rows_per_band=2)
-    work = tempfile.mkdtemp(prefix="sminhash_q_")
-    banded.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(banded.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
-    q = (
-        streaming_band_index(src)
-        .writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    work = fixture_dir(sf_dir, "cam_etl_sminhash_fixture")
+    src = file_stream(banded, work + "/in", per_trigger=2, files=6)
     cands = (
-        spark.read.parquet(work + "/out")
+        run_available_now(streaming_band_index(src), work)
         .filter(~F.col("overflow"))
         .select("id_a", "id_b")
         .distinct()
@@ -4699,13 +4582,10 @@ def stream_custom_source(spark, sf_dir):
     n EXACTLY once however the batches landed — which is what the
     per-user aggregate oracle checks. Exactly-once across custom-source
     offset tracking, not just file sources."""
-    import tempfile
-    import time
-
     from cam_etl_spark.sources.counterstream import register_counter_stream
 
     register_counter_stream(spark)
-    work = tempfile.mkdtemp(prefix="cstream_q_")
+    work = fixture_dir(sf_dir, "cam_etl_cstream_fixture")
     src = (
         spark.readStream.format("counterstream")
         .option("max_rows", "2000")
@@ -4713,34 +4593,13 @@ def stream_custom_source(spark, sf_dir):
         .option("num_partitions", "4")
         .load()
     )
-    q = (
-        src.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    deadline = time.time() + 180
-    while time.time() < deadline:
-        try:
-            if spark.read.parquet(work + "/out").count() >= 2000:
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
-    # Fail LOUDLY on an incomplete run: a lapsed deadline (slow machine)
-    # must not degrade into a partial aggregate the oracle flags as an
-    # opaque value mismatch. Exactly-once means exactly 2000 distinct n.
+    out = run_to_count(src, work, 2000)
+    # exactly-once means exactly 2000 distinct n, not just 2000 rows
     got = out.select("n").distinct().count()
-    if got != 2000 or out.count() != 2000:
+    if got != 2000:
         raise RuntimeError(
             f"stream_custom_source: sink holds {got} distinct n of 2000 "
-            f"({out.count()} rows) — stream did not run to completion "
-            "or emitted duplicates"
+            "— the stream emitted duplicates"
         )
     return out.groupBy((F.col("n") % 50).alias("user_id")).agg(
         F.count("*").alias("n_events"),
@@ -4771,33 +4630,16 @@ def stream_static_enrich_join(spark, sf_dir):
     rows append to the sink; the final batch rollup must equal the plain
     batch join — the oracle. At scale the static side is the broadcast
     dim and the stream never shuffles for the join."""
-    import tempfile
-
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    work = tempfile.mkdtemp(prefix="ssj_q_")
-    o.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_ssj_fixture")
+    src = file_stream(o, work + "/in", per_trigger=2, files=6)
     enriched = src.join(
         F.broadcast(c), src["o_custkey"] == c["c_custkey"], "inner"
     ).select("o_orderkey", "c_mktsegment", "o_orderstatus", "o_totalprice")
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
-    return out.groupBy(
+    return run_available_now(enriched, work).groupBy(
         F.col("c_mktsegment").alias("segment"),
         F.col("o_orderstatus").alias("status"),
     ).agg(
@@ -4826,18 +4668,11 @@ def stream_stateful_running_total(spark, sf_dir):
     invisible in the result by construction, so the check is deterministic
     regardless of file-to-trigger assignment. State is one (long, double)
     pair per key — bounded by cardinality, not stream length."""
-    import tempfile
-
     from cam_etl_spark.streaming.stateful import running_totals_stateful
 
     e = t(spark, sf_dir, "events").select("user_id", "value")
-    work = tempfile.mkdtemp(prefix="srun_q_")
-    e.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_srun_fixture")
+    src = file_stream(e, work + "/in", per_trigger=2, files=6)
     totals = running_totals_stateful(src)
 
     def sink(df, batch_id):
@@ -5331,7 +5166,7 @@ def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int
 
     import numpy as np
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         buf = encoder(d % wmod + 1, d % hmod + 1, seed)
@@ -5347,7 +5182,7 @@ def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int
             "mean_b": float(mean[2]),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     feats = map_rows(
         d, run,
         "media_id long, width int, height int, n_pixels long, "
@@ -5513,7 +5348,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import encode_jpeg_gray_blocks, jpeg_gray_pixels
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         buf = encode_jpeg_gray_blocks(d % 5 + 1, d % 3 + 1, seed)
@@ -5526,7 +5361,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
             "mean_gray": float(px.astype(np.float64).mean()),
         }
 
-    d = widen_table(spark, sf_dir, "documents")
+    d = widen_table(spark, sf_dir, "documents", "doc_id", "text")
     feats = map_rows(
         d, run,
         "media_id long, width int, height int, n_pixels long, mean_gray double",
@@ -5573,7 +5408,7 @@ def multimodal_jpeg_progressive_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         wb, hb = d % 6 + 1, d % 5 + 1
@@ -5591,7 +5426,7 @@ def multimodal_jpeg_progressive_decode(spark, sf_dir):
             "mean_gray": float(px.mean()),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     feats = map_rows(
         d, run,
         "media_id long, width int, height int, n_pixels long, mean_gray double",
@@ -5653,7 +5488,7 @@ def multimodal_jpeg_progressive_refine(spark, sf_dir):
         jpeg_gray_coeffs,
     )
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         wb, hb = d % 6 + 1, d % 5 + 1
@@ -5678,7 +5513,7 @@ def multimodal_jpeg_progressive_refine(spark, sf_dir):
             "sum_coef": int(got.sum()),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, width int, height int, "
@@ -5728,7 +5563,7 @@ def multimodal_jpeg420_decode(spark, sf_dir):
 
     from cam_etl_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         wb, hb = d % 3 + 1, d % 2 + 1
@@ -5750,7 +5585,7 @@ def multimodal_jpeg420_decode(spark, sf_dir):
             "mean_b": float(px[..., 2].mean()),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     feats = map_rows(
         d, run,
         "media_id long, width int, height int, n_pixels long, "
@@ -5817,7 +5652,7 @@ def multimodal_resize_real(spark, sf_dir):
     from cam_etl_spark.multimodal import resize_media_real
     from cam_etl_spark.multimodal.codecs import encode_bmp, encode_png
 
-    def gen(did, text, *_):
+    def gen(did, text):
         d = int(did)
         seed = hashlib.md5((text or "").encode()).digest()
         if d % 2 == 0:
@@ -5826,7 +5661,7 @@ def multimodal_resize_real(spark, sf_dir):
             buf = encode_png(d % 13 + 1, d % 11 + 1, seed)
         yield {"media_id": d, "payload": buf}
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     media = map_rows(d, gen, "media_id long, payload binary")
     out = resize_media_real(media, target_w=4, target_h=3)
     return out.select(
@@ -6028,7 +5863,6 @@ def s15_nquads_datasource_sink(spark, sf_dir):
     or duplicated partition fails loudly)."""
     import json
     import os
-    import tempfile
 
     from cam_etl_spark.quads import fan_out_sql, quad_sql, read_nquads
     from cam_etl_spark.sources.nquads_sink import register_nquads_sink
@@ -6057,7 +5891,7 @@ def s15_nquads_datasource_sink(spark, sf_dir):
         quad_sql(subj, "https://example.org/def/node",
                  "format_string('b%s', n_nationkey)", "bnode", graph=G),
     )
-    work = tempfile.mkdtemp(prefix="nqsink_q_")
+    work = fixture_dir(sf_dir, "cam_etl_nqsink_fixture")
     path = os.path.join(work, "out")
     quads.write.format("nquads_sink").mode("overwrite").save(path)
     with open(os.path.join(path, "_MANIFEST.json")) as f:
@@ -6264,7 +6098,7 @@ def multimodal_mpeg_stereo_decode(spark, sf_dir):
         encode_layer2_frame,
     )
 
-    def run(did, text, *_):
+    def run(did, text):
         d = int(did)
         dig = hashlib.md5((text or "").encode()).digest()
         if d % 2 == 0:  # Layer I stereo
@@ -6361,7 +6195,7 @@ def multimodal_mpeg_stereo_decode(spark, sf_dir):
             "max_abs_micro": max(abs(v) for v in all_micro),
         }
 
-    d = t(spark, sf_dir, "documents")
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return map_rows(
         d, run,
         "media_id long, layer long, n_active_sb long, n_active_samples long, "
@@ -8337,16 +8171,9 @@ def stream_state_store_reader(spark, sf_dir):
     exercised in-batch (operator name + partition count sanity). At
     scale this is how you audit or migrate terabytes of checkpoint
     state without replaying the stream."""
-    import tempfile
-
     e = t(spark, sf_dir, "events").select("user_id", "value")
-    work = tempfile.mkdtemp(prefix="ssread_q_")
-    e.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_ssread_fixture")
+    src = file_stream(e, work + "/in", per_trigger=2, files=6)
     agg = src.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
@@ -8487,7 +8314,6 @@ def s16_cow_bucketed_upsert(spark, sf_dir):
     partition-pruned base read, one bucket-local anti-join, atomic
     per-directory replacement."""
     import os
-    import tempfile
 
     from cam_etl_spark.operators.cow import upsert_bucketed, write_bucketed
 
@@ -8497,7 +8323,7 @@ def s16_cow_bucketed_upsert(spark, sf_dir):
         F.col("o_totalprice").alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    work = tempfile.mkdtemp(prefix="cow_q_")
+    work = fixture_dir(sf_dir, "cam_etl_cow_fixture")
     path = work + "/table"
     write_bucketed(o.repartition(8), path, "o_orderkey", N_BUCKETS)
 
@@ -10322,8 +10148,6 @@ def s20_xml_roundtrip(spark, sf_dir):
     never one giant document (a single-root XML document is
     unsplittable; bare un-rooted fragment streams parse only their
     first element — measured, hence the native writer)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     o = t(spark, sf_dir, "orders").select(
@@ -10334,7 +10158,7 @@ def s20_xml_roundtrip(spark, sf_dir):
         F.col("o_orderstatus").alias("status"),
         F.col("o_orderpriority").alias("prio"),
     )
-    out_dir = tempfile.mkdtemp(prefix="xml_rt_")
+    out_dir = fixture_dir(sf_dir, "cam_etl_xml_rt_fixture")
     (
         o.write.mode("overwrite")
         .format("xml")
@@ -14170,8 +13994,6 @@ def stream_iceberg_tail(spark, sf_dir):
     union of all three snapshots' adds; exactly-once across custom
     offset tracking."""
     import os
-    import tempfile
-    import time
 
     from pyspark.sql import functions as F
 
@@ -14242,7 +14064,7 @@ def stream_iceberg_tail(spark, sf_dir):
         expected += sl.count()
     write_table_metadata(table, 1, snaps, 303, ["o_orderstatus"])
 
-    work = tempfile.mkdtemp(prefix="icebergtail_q_")
+    work = fixture_dir(sf_dir, "cam_etl_icebergtail_fixture", "stream")
     src = (
         spark.readStream.format("icebergtail")
         .option("path", table)
@@ -14253,30 +14075,7 @@ def stream_iceberg_tail(spark, sf_dir):
         .option("columns", "o_orderkey,cents,o_orderstatus")
         .load()
     )
-    q = (
-        src.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    deadline = time.time() + 180
-    while time.time() < deadline:
-        try:
-            if spark.read.parquet(work + "/out").count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination(30)
-    got = spark.read.parquet(work + "/out")
-    n_got = got.count()
-    if n_got != expected:
-        raise AssertionError(
-            f"icebergtail: incomplete stream ({n_got} != {expected})"
-        )
+    got = run_to_count(src, work, expected)
     return got.groupBy(
         F.col("o_orderstatus").alias("status")
     ).agg(
@@ -14340,8 +14139,6 @@ def stream_delta_cdf(spark, sf_dir):
     downstream aggregate or index stays consistent under rewrites —
     an append-only tail cannot give you that."""
     import os
-    import tempfile
-    import time
 
     from pyspark.sql import functions as F
 
@@ -14427,7 +14224,7 @@ def stream_delta_cdf(spark, sf_dir):
     n_upd = touched.count()
     expected = n_orders + 2 * n_upd + n_orders + v3_df.count()
 
-    work = tempfile.mkdtemp(prefix="deltacdf_q_")
+    work = fixture_dir(sf_dir, "cam_etl_deltacdf_fixture", "stream")
     src = (
         spark.readStream.format("deltacdf")
         .option("path", table)
@@ -14439,30 +14236,7 @@ def stream_delta_cdf(spark, sf_dir):
         .option("columns", "k,cents,_change_type,_commit_version")
         .load()
     )
-    q = (
-        src.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    deadline = time.time() + 180
-    while time.time() < deadline:
-        try:
-            if spark.read.parquet(work + "/out").count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination(30)
-    got = spark.read.parquet(work + "/out")
-    n_got = got.count()
-    if n_got != expected:
-        raise AssertionError(
-            f"deltacdf: incomplete stream ({n_got} != {expected})"
-        )
+    got = run_to_count(src, work, expected)
     assert got.filter(F.col("_commit_version") == 2).count() == 0, (
         "compaction must be silent in the change feed"
     )
@@ -14516,9 +14290,6 @@ def stream_delta_tail(spark, sf_dir):
     all three commits' adds — the oracle replays it relationally.
     Exactly-once across custom-source offset tracking; the loud
     completion check refuses partial runs."""
-    import tempfile
-    import time
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.delta_log import add_action, table_files, write_commit
@@ -14560,7 +14331,7 @@ def stream_delta_tail(spark, sf_dir):
         seen = now
         expected += sl.count()
 
-    work = tempfile.mkdtemp(prefix="deltatail_q_")
+    work = fixture_dir(sf_dir, "cam_etl_deltatail_fixture", "stream")
     src = (
         spark.readStream.format("deltatail")
         .option("path", table)
@@ -14568,31 +14339,7 @@ def stream_delta_tail(spark, sf_dir):
         .option("columns", "o_orderkey,cents,o_orderstatus")
         .load()
     )
-    q = (
-        src.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    deadline = time.time() + 180
-    while time.time() < deadline:
-        try:
-            if spark.read.parquet(work + "/out").count() >= expected:
-                break
-        except Exception:
-            pass
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
-    got = out.count()
-    if got != expected:
-        raise RuntimeError(
-            f"stream_delta_tail: sink holds {got} rows of {expected} — "
-            "tail did not drain all commits exactly once"
-        )
+    out = run_to_count(src, work, expected)
     return out.groupBy(
         F.col("o_orderstatus").alias("status")
     ).agg(
@@ -14817,8 +14564,6 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
 
     def run(did, text):
         d = int(did)
-        if d % 16 != 0:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         # subband samples S[s][k], replayed verbatim in SQL
         vals = [
@@ -14845,25 +14590,8 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
             "max_abs_micro": max(abs(v) for v in m),
         }
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/16 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 16) == 0)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 16, 0), run,
         "media_id long, n_samples long, sum_pcm_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -14971,8 +14699,8 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
     plan=WIDENED_DECODE_PLAN,
 )
 def multimodal_mp3_bigvalues_decode(spark, sf_dir):
-    """MP3 BIG-VALUES HUFFMAN DECODE (multimodal/mp3.py) — the
-    round-9 ask, landed for the vendored table family: digest-derived
+    """MP3 BIG-VALUES HUFFMAN DECODE (multimodal/mp3.py) for the
+    vendored table family: digest-derived
     signed (x, y) pairs are Huffman-coded into spec-compliant frames
     with NONZERO big_values in BOTH a long-block granule (spec region
     partitioning: region0_count/region1_count over the vendored
@@ -15019,8 +14747,6 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
             rows = []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 d = int(did)
-                if d % 4 != 1:
-                    continue
                 dig = hashlib.md5((text or "").encode()).digest()
                 tl = [1 + dig[0] % 3, 1 + dig[1] % 3, 1 + dig[2] % 3]
                 r0c, r1c = dig[3] % 7, dig[4] % 6
@@ -15102,23 +14828,7 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
             out.append((x, y))
         return out
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/4 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 4) == 1)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = sampled_docs(spark, sf_dir, 4, 1)
     return docs.mapInPandas(
         run,
         "media_id long, n_pairs_long long, n_pairs_short long, "
@@ -16482,8 +16192,6 @@ def multimodal_mp3_full_decode(spark, sf_dir):
 
     def run(did, text):
         d = int(did)
-        if d % 32 != 2:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         np_pairs = 60 + dig[1] % 120
         grans = []
@@ -16544,25 +16252,8 @@ def multimodal_mp3_full_decode(spark, sf_dir):
             "max_abs_micro": max(abs(v) for v in m),
         }
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/32 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 32) == 2)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 32, 2), run,
         "media_id long, n_samples long, sum_pcm_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -16948,8 +16639,6 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
 
     def run(did, text):
         d = int(did)
-        if d % 8 != 3:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         tl = [5 + dig[0] % 8, 5 + dig[1] % 8, 5 + dig[2] % 8]
         r0c, r1c = dig[3] % 7, dig[4] % 6
@@ -17020,25 +16709,8 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
             "sum_quads": sum(qvals),
         }
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/8 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 8) == 3)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 8, 3), run,
         "media_id long, n_pairs long, sum_signed long, "
         "sum_abs long, max_abs long, sum_tid long, "
         "n_quad_vals long, sum_quads long",
@@ -17128,8 +16800,8 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
-    """MP3 M-S JOINT STEREO (round-10 boundary removal,
-    multimodal/mp3.py decode_mp3_pcm + parse_mp3_frame mode
+    """MP3 M-S JOINT STEREO
+    (multimodal/mp3.py decode_mp3_pcm + parse_mp3_frame mode
     handling): the (M±S)/sqrt(2) butterfly of §2.4.3.4.9.3 applied
     to REQUANTIZED spectra — channel 0 carries mid, channel 1 side,
     header mode 0b01 with mode_extension 0b10 (M-S on, intensity
@@ -17157,14 +16829,13 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
         encode_mp3_frame,
         parse_mp3_frame,
         requantize,
+        stereo_spectrum_stats,
     )
 
     sqrt2 = math.sqrt(2.0)
 
     def run(did, text):
         d = int(did)
-        if d % 32 != 7:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
 
         def granule(gr, ch):
@@ -17228,56 +16899,17 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
 
         # spectral-domain stats the oracle replays: the
         # butterfly on requantized spectra, integer micro
-        n_lines = 0
-        sums = [0, 0, 0, 0, 0, 0]
-        for gr in range(2):
-            xm = requantize(shell["granules"][gr][0], 44100)
-            xs = requantize(shell["granules"][gr][1], 44100)
-            for a, b in zip(xm, xs):
-                lv = (a + b) / sqrt2
-                rv = (a - b) / sqrt2
-                ml = int(math.copysign(
-                    np.floor(abs(lv) * 1e6 + 0.5), lv))
-                mr = int(math.copysign(
-                    np.floor(abs(rv) * 1e6 + 0.5), rv))
-                if ml or mr:
-                    n_lines += 1
-                sums[0] += ml
-                sums[1] += abs(ml)
-                sums[2] = max(sums[2], abs(ml))
-                sums[3] += mr
-                sums[4] += abs(mr)
-                sums[5] = max(sums[5], abs(mr))
-        yield {
-            "media_id": d,
-            "n_lines": n_lines,
-            "sum_l_micro": sums[0],
-            "sum_abs_l_micro": sums[1],
-            "max_abs_l_micro": sums[2],
-            "sum_r_micro": sums[3],
-            "sum_abs_r_micro": sums[4],
-            "max_abs_r_micro": sums[5],
-        }
+        def butterfly():
+            for gr in range(2):
+                xm = requantize(shell["granules"][gr][0], 44100)
+                xs = requantize(shell["granules"][gr][1], 44100)
+                for a, b in zip(xm, xs):
+                    yield (a + b) / sqrt2, (a - b) / sqrt2
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/32 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 32) == 7)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+        yield stereo_spectrum_stats(d, butterfly())
+
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 32, 7), run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -17483,8 +17115,7 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mpeg2_l2_decode(spark, sf_dir):
-    """MPEG-2 LSF LAYER II (round-10 boundary removal,
-    multimodal/mpegaudio.py): ISO 13818-3 half-rate audio, whose
+    """MPEG-2 LSF LAYER II (multimodal/mpegaudio.py): ISO 13818-3 half-rate audio, whose
     Layer II differs from MPEG-1 ONLY in the bitrate table and the
     single vendored Table B.1 allocation table (sblimit 30, nbal
     4/3/2 over subbands 0-3/4-10/11-29, every class ladder starting
@@ -17507,8 +17138,6 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
 
     def run(did, text):
         d = int(did)
-        if d % 16 != 9:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         alloc, scfsi, scf, codes = [], [], [], []
         for sb in range(30):
@@ -17547,25 +17176,8 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
             "max_abs_micro": max(abs(v) for v in micros),
         }
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/16 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 16) == 9)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 16, 9), run,
         "media_id long, n_active_sb long, n_active_samples long, "
         "sum_val_micro long, max_abs_micro long",
     )
@@ -17769,8 +17381,8 @@ def s50_orc_zstd_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_mixed_block_decode(spark, sf_dir):
-    """MP3 MIXED-BLOCK REQUANTIZATION (round-10 boundary removal,
-    multimodal/mp3.py requantize/reorder_short/alias_reduce/
+    """MP3 MIXED-BLOCK REQUANTIZATION
+    (multimodal/mp3.py requantize/reorder_short/alias_reduce/
     imdct_granule): block_type 2 with mixed_block_flag — lines 0-35
     decode as LONG (long scalefactor bands 0-7, the normal window on
     the two lowest subbands, alias reduction only at their one seam)
@@ -17796,8 +17408,6 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
 
     def run(did, text):
         d = int(did)
-        if d % 16 != 11:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         gg = 160 + dig[13] % 40
         sfs = dig[15] % 2
@@ -17856,25 +17466,8 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
             "max_abs_micro": max(abs(m) for m in micros),
         }
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/16 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 16) == 11)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 16, 11), run,
         "media_id long, n_lines long, sum_xr_micro long, "
         "sum_abs_micro long, max_abs_micro long",
     )
@@ -17987,8 +17580,8 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
-    """MP3 LONG-BLOCK INTENSITY STEREO (round-10 boundary removal,
-    multimodal/mp3.py decode_mp3_pcm + mode_extension bit 0): in the
+    """MP3 LONG-BLOCK INTENSITY STEREO
+    (multimodal/mp3.py decode_mp3_pcm + mode_extension bit 0): in the
     scalefactor bands at/above the right channel's zero part, the
     right channel's scalefactors are intensity POSITIONS and both
     output channels are rebuilt from the left spectrum with the
@@ -18008,21 +17601,19 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
 
     import numpy as np
 
-    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         SFB_LONG,
         decode_mp3_pcm,
         encode_mp3_frame,
         parse_mp3_frame,
         requantize,
+        stereo_spectrum_stats,
     )
 
     sfb = SFB_LONG[44100]
 
     def run(did, text):
         d = int(did)
-        if d % 32 != 15:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
 
         def granule(gr):
@@ -18090,68 +17681,32 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
                            rtol=1e-9, atol=1e-12), d
 
         # spectral stats the oracle replays
-        n_lines = 0
-        sums = [0, 0, 0, 0, 0, 0]
-        for gr in range(2):
-            g0, g1 = shell["granules"][gr]
-            m = requantize(g0, 44100)
-            s = requantize(g1, 44100)
-            rzero = 2 * g1["big_values"]
-            bstart = next(b for b in range(22)
-                          if sfb[b] >= rzero)
-            bound_line = sfb[bstart]
-            for i in range(576):
-                if i < bound_line:
-                    lv, rv = m[i], s[i]
-                else:
+        def spectrum():
+            for gr in range(2):
+                g0, g1 = shell["granules"][gr]
+                m = requantize(g0, 44100)
+                s = requantize(g1, 44100)
+                rzero = 2 * g1["big_values"]
+                bstart = next(b for b in range(22)
+                              if sfb[b] >= rzero)
+                bound_line = sfb[bstart]
+                for i in range(576):
+                    if i < bound_line:
+                        yield m[i], s[i]
+                        continue
                     b = next(bb for bb in range(21, -1, -1)
                              if sfb[bb] <= i)
                     p = g1["scalefacs"][min(b, 20)]
                     if p == 7 or p == 6:
-                        lv, rv = m[i], 0.0
+                        yield m[i], 0.0
                     else:
                         ratio = math.tan(p * math.pi / 12)
-                        lv = m[i] * (ratio / (1 + ratio))
-                        rv = m[i] / (1 + ratio)
-                ml, mr = micro6(lv), micro6(rv)
-                if ml or mr:
-                    n_lines += 1
-                sums[0] += ml
-                sums[1] += abs(ml)
-                sums[2] = max(sums[2], abs(ml))
-                sums[3] += mr
-                sums[4] += abs(mr)
-                sums[5] = max(sums[5], abs(mr))
-        yield {
-            "media_id": d,
-            "n_lines": n_lines,
-            "sum_l_micro": sums[0],
-            "sum_abs_l_micro": sums[1],
-            "max_abs_l_micro": sums[2],
-            "sum_r_micro": sums[3],
-            "sum_abs_r_micro": sums[4],
-            "max_abs_r_micro": sums[5],
-        }
+                        yield m[i] * (ratio / (1 + ratio)), m[i] / (1 + ratio)
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/32 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 32) == 15)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+        yield stereo_spectrum_stats(d, spectrum())
+
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 32, 15), run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -18274,8 +17829,8 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_short_decode(spark, sf_dir):
-    """MP3 SHORT-BLOCK INTENSITY STEREO (round-11 boundary removal,
-    multimodal/mp3.py _joint_spectra): on block_type-2 granules the
+    """MP3 SHORT-BLOCK INTENSITY STEREO (multimodal/mp3.py
+    _joint_spectra): on block_type-2 granules the
     stereo/intensity border is determined PER WINDOW by scanning the
     right channel's decoded values from the top short band down;
     bands above a window's border split the left spectrum with
@@ -18295,18 +17850,16 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
 
     import numpy as np
 
-    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         _joint_spectra,
         decode_mp3_pcm,
         encode_mp3_frame,
         parse_mp3_frame,
+        stereo_spectrum_stats,
     )
 
     def run(did, text):
         d = int(did)
-        if d % 32 != 23:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
         is_pos = [dig[((b * 3 + w) * 2 + 5) % 16] % 8
@@ -18377,50 +17930,11 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
                            rtol=1e-9, atol=1e-12), d
 
         # hash the decoder's OWN post-intensity spectra
-        n_lines = 0
-        sums = [0, 0, 0, 0, 0, 0]
-        for gr in range(2):
-            sl, sr = _joint_spectra(shell, gr)
-            for i in range(576):
-                ml, mr = micro6(sl[i]), micro6(sr[i])
-                if ml or mr:
-                    n_lines += 1
-                sums[0] += ml
-                sums[1] += abs(ml)
-                sums[2] = max(sums[2], abs(ml))
-                sums[3] += mr
-                sums[4] += abs(mr)
-                sums[5] = max(sums[5], abs(mr))
-        yield {
-            "media_id": d,
-            "n_lines": n_lines,
-            "sum_l_micro": sums[0],
-            "sum_abs_l_micro": sums[1],
-            "max_abs_l_micro": sums[2],
-            "sum_r_micro": sums[3],
-            "sum_abs_r_micro": sums[4],
-            "max_abs_r_micro": sums[5],
-        }
+        yield stereo_spectrum_stats(d, (
+            lr for gr in range(2) for lr in zip(*_joint_spectra(shell, gr))))
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/32 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 32) == 23)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 32, 23), run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -18560,8 +18074,8 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
-    """MP3 MIXED-BLOCK INTENSITY STEREO (round-11 boundary removal,
-    multimodal/mp3.py _joint_spectra): when the right channel's
+    """MP3 MIXED-BLOCK INTENSITY STEREO (multimodal/mp3.py
+    _joint_spectra): when the right channel's
     short part is entirely zero in all three windows, the
     stereo/intensity border falls inside the mixed block's LONG
     region — scanned from the top long line down, intensity from the
@@ -18579,18 +18093,16 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
 
     import numpy as np
 
-    from cam_etl_spark.multimodal import micro6
     from cam_etl_spark.multimodal.mp3 import (
         _joint_spectra,
         decode_mp3_pcm,
         encode_mp3_frame,
         parse_mp3_frame,
+        stereo_spectrum_stats,
     )
 
     def run(did, text):
         d = int(did)
-        if d % 32 != 27:
-            return
         dig = hashlib.md5((text or "").encode()).digest()
         sg_l = [dig[3] % 3, dig[4] % 3, dig[5] % 3]
         is_long = [dig[(b * 5 + 3) % 16] % 8
@@ -18666,50 +18178,11 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
         assert np.allclose(left + right, mono[0] + mono[1],
                            rtol=1e-9, atol=1e-12), d
 
-        n_lines = 0
-        sums = [0, 0, 0, 0, 0, 0]
-        for gr in range(2):
-            sl, sr = _joint_spectra(shell, gr)
-            for i in range(576):
-                ml, mr = micro6(sl[i]), micro6(sr[i])
-                if ml or mr:
-                    n_lines += 1
-                sums[0] += ml
-                sums[1] += abs(ml)
-                sums[2] = max(sums[2], abs(ml))
-                sums[3] += mr
-                sums[4] += abs(mr)
-                sums[5] = max(sums[5], abs(mr))
-        yield {
-            "media_id": d,
-            "n_lines": n_lines,
-            "sum_l_micro": sums[0],
-            "sum_abs_l_micro": sums[1],
-            "max_abs_l_micro": sums[2],
-            "sum_r_micro": sums[3],
-            "sum_abs_r_micro": sums[4],
-            "max_abs_r_micro": sums[5],
-        }
+        yield stereo_spectrum_stats(d, (
+            lr for gr in range(2) for lr in zip(*_joint_spectra(shell, gr))))
 
-    # JVM-side pre-filter mirroring the Python-side sample gate below:
-    # only 1/32 of documents are decoded, so only those rows should
-    # cross the Arrow boundary (guide §4.1 — pass only what the
-    # function needs). The in-function check stays as a guard; results
-    # are identical because skipped rows emitted nothing anyway. The
-    # repartition spreads the surviving rows across the cluster before the
-    # CPU-heavy per-document decode (guide §2.5 input skew: a small/
-    # single-split input otherwise serializes the whole Python decode on
-    # one core — measured 1 scan partition at sf0.1); defaultParallelism
-    # keeps it scale-adaptive, and the shuffled payload is only the
-    # sampled 1/N of the corpus.
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % 32) == 27)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     return map_rows(
-        docs, run,
+        sampled_docs(spark, sf_dir, 32, 27), run,
         "media_id long, n_lines long, sum_l_micro long, "
         "sum_abs_l_micro long, max_abs_l_micro long, "
         "sum_r_micro long, sum_abs_r_micro long, "
@@ -19364,8 +18837,6 @@ def s62_geoparquet_scan(spark, sf_dir):
     point-in-rect join assigns zones. The oracle replays the zone
     rollup from the relational coordinates — a wrong endian branch,
     a mis-sliced double, or a dropped file each shifts zone counts."""
-    import glob
-    import os
     import struct
 
     from pyspark.sql import functions as F
@@ -19389,51 +18860,37 @@ def s62_geoparquet_scan(spark, sf_dir):
     geo_json = geo_file_metadata_json(
         "geometry", bbox=[138.0, -29.0, 154.0, -10.0])
 
-    def write_part(batches):
-        import pandas as pd
+    def write_part(pdf, path):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("custkey")
-            wkb = [
-                struct.pack("<BIdd", 1, 1, x, y) if k % 2 == 0
-                else struct.pack(">BIdd", 0, 1, x, y)
-                for k, x, y in zip(pdf["custkey"], pdf["x"],
-                                   pdf["y"])
-            ]
-            tab = pa.table({
-                "custkey": pa.array(pdf["custkey"], pa.int64()),
-                "geometry": pa.array(wkb, pa.binary()),
-            })
-            tab = tab.replace_schema_metadata({b"geo": geo_json})
-            path = os.path.join(
-                base, f"part-{int(pdf['custkey'].min())}.parquet")
-            pq.write_table(tab, path)
-            yield pd.DataFrame({"path": [path], "n": [len(pdf)]})
+        wkb = [
+            struct.pack("<BIdd", 1, 1, x, y) if k % 2 == 0
+            else struct.pack(">BIdd", 0, 1, x, y)
+            for k, x, y in zip(pdf["custkey"], pdf["x"],
+                               pdf["y"])
+        ]
+        tab = pa.table({
+            "custkey": pa.array(pdf["custkey"], pa.int64()),
+            "geometry": pa.array(wkb, pa.binary()),
+        })
+        tab = tab.replace_schema_metadata({b"geo": geo_json})
+        pq.write_table(tab, path)
 
-    written = pts.mapInPandas(write_part, "path string, n long") \
-        .collect()
-    assert sum(r.n for r in written) == pts.count()
+    files = shard_files(pts, base, "part-{}.parquet", write_part)
 
-    # per-file geo-contract validation through the from-spec footer
-    files = spark.createDataFrame(
-        [(r.path,) for r in written], "path string"
-    ).repartition(len(written))
-
+    # per-file geo-contract validation through the from-spec footer,
+    # and every written row is in some file's footer
     def validate(path):
         foot = parse_footer(open(path, "rb").read())
         meta = geo_metadata(foot)
         assert meta["primary_column"] == "geometry"
         assert meta["columns"]["geometry"]["encoding"] == \
             "WKB"
-        yield {"path": path, "ok": True}
+        yield {"n": foot["num_rows"]}
 
-    assert all(r.ok for r in
-               map_rows(files, validate, "path string, ok boolean")
-               .collect())
+    counts = map_rows(files, validate, "n long").collect()
+    assert sum(r.n for r in counts) == pts.count()
 
     scan = spark.read.parquet(base)
     decoded = points_xy(scan, "geometry").drop("geometry")
@@ -19462,8 +18919,8 @@ def s62_geoparquet_scan(spark, sf_dir):
     tags=["streaming", "U2", "dedup-exact", "watermark"],
 )
 def stream_dedup_within_horizon(spark, sf_dir):
-    """dropDuplicatesWithinWatermark (round 12,
-    streaming/stateful.py stream_dedup_within_watermark): dedup on
+    """dropDuplicatesWithinWatermark
+    (streaming/stateful.py stream_dedup_within_watermark): dedup on
     the BUSINESS KEY ONLY with state bounded by the watermark
     horizon — plain dropDuplicates on a key-only set grows state
     with corpus size forever; this is the bounded-state form a
@@ -19480,8 +18937,6 @@ def stream_dedup_within_horizon(spark, sf_dir):
     2 emits for %5 keys and 1 for everything else; a suppression
     failure (B leaking) or an eviction failure (D suppressed) each
     flips counts."""
-    import tempfile
-
     from cam_etl_spark.streaming.stateful import (
         stream_dedup_within_watermark,
     )
@@ -19497,7 +18952,7 @@ def stream_dedup_within_horizon(spark, sf_dir):
     import glob as _glob
     import os as _os
 
-    work = tempfile.mkdtemp(prefix="sdedup_wwm_")
+    work = fixture_dir(sf_dir, "cam_etl_sdedup_wwm_fixture")
 
     _stamped: set = set()
 
@@ -19542,24 +18997,11 @@ def stream_dedup_within_horizon(spark, sf_dir):
     ).coalesce(1).write.mode("append").parquet(work + "/in")
     _stamp(4)
 
-    src = (
-        spark.readStream.schema("event_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(work + "/in")
-    )
     deduped = stream_dedup_within_watermark(
-        src, id_cols=["event_id"], watermark="2 days"
+        file_stream(e, work + "/in", per_trigger=1),
+        id_cols=["event_id"], watermark="2 days"
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", work + "/out")
-        .option("checkpointLocation", work + "/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(work + "/out")
+    out = run_available_now(deduped, work)
     return (
         out.filter(F.col("event_id") >= 0)
         .groupBy("event_id")
@@ -19934,8 +19376,6 @@ def s66_webdataset_tar_scan(spark, sf_dir):
     and emits per-sample stats the oracle replays relationally. Zero
     driver involvement, zero temp-dir unpacking — the 100 TB shape
     is a shard-path DataFrame and per-task header parses."""
-    import os
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.archives import (
@@ -19950,42 +19390,30 @@ def s66_webdataset_tar_scan(spark, sf_dir):
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
     ).repartition(4, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import io
         import json
         import tarfile
 
-        import pandas as pd
+        bio = io.BytesIO()
+        tf = tarfile.open(fileobj=bio, mode="w",
+                          format=tarfile.PAX_FORMAT)
+        for did, text in zip(pdf["doc_id"], pdf["text"]):
+            for ext, payload in (
+                ("txt", str(text).encode("utf-8")),
+                ("json", json.dumps(
+                    {"doc_id": int(did),
+                     "n_chars": len(str(text))}).encode()),
+            ):
+                ti = tarfile.TarInfo(f"{int(did):08d}.{ext}")
+                ti.size = len(payload)
+                ti.mtime = 1_700_000_000
+                tf.addfile(ti, io.BytesIO(payload))
+        tf.close()
+        with open(path, "wb") as fh:
+            fh.write(bio.getvalue())
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            bio = io.BytesIO()
-            tf = tarfile.open(fileobj=bio, mode="w",
-                              format=tarfile.PAX_FORMAT)
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                for ext, payload in (
-                    ("txt", str(text).encode("utf-8")),
-                    ("json", json.dumps(
-                        {"doc_id": int(did),
-                         "n_chars": len(str(text))}).encode()),
-                ):
-                    ti = tarfile.TarInfo(f"{int(did):08d}.{ext}")
-                    ti.size = len(payload)
-                    ti.mtime = 1_700_000_000
-                    tf.addfile(ti, io.BytesIO(payload))
-            tf.close()
-            path = os.path.join(
-                base, f"shard-{int(pdf['doc_id'].min()):08d}.tar")
-            with open(path, "wb") as fh:
-                fh.write(bio.getvalue())
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_shards, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.tar", write_shard)
 
     import io
     import json
@@ -20048,8 +19476,6 @@ def s67_zip_deflate_scan(spark, sf_dir):
     real independent implementation — it also WROTE the fixtures).
     Small members alternate stored/deflate so both methods are on
     the path. The rollup is oracle-replayed relationally."""
-    import os
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.archives import (
@@ -20065,36 +19491,23 @@ def s67_zip_deflate_scan(spark, sf_dir):
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
     ).repartition(3, F.col("doc_id"))
 
-    def write_archives(batches):
+    def write_archive(pdf, path):
         import io
         import zipfile
 
-        import pandas as pd
+        bio = io.BytesIO()
+        zf = zipfile.ZipFile(bio, "w")
+        for did, text in zip(pdf["doc_id"], pdf["text"]):
+            method = (zipfile.ZIP_STORED if did % 3 == 0
+                      else zipfile.ZIP_DEFLATED)
+            zf.writestr(f"docs/{int(did):08d}.txt",
+                        str(text).encode("utf-8"),
+                        compress_type=method)
+        zf.close()
+        with open(path, "wb") as fh:
+            fh.write(bio.getvalue())
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            bio = io.BytesIO()
-            zf = zipfile.ZipFile(bio, "w")
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                method = (zipfile.ZIP_STORED if did % 3 == 0
-                          else zipfile.ZIP_DEFLATED)
-                zf.writestr(f"docs/{int(did):08d}.txt",
-                            str(text).encode("utf-8"),
-                            compress_type=method)
-            zf.close()
-            path = os.path.join(
-                base, f"batch-{int(pdf['doc_id'].min()):08d}.zip")
-            with open(path, "wb") as fh:
-                fh.write(bio.getvalue())
-            yield pd.DataFrame({"path": [path]})
-
-    archives = docs.mapInPandas(write_archives,
-                                "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in archives], "path string"
-    ).repartition(len(archives))
+    paths = shard_files(docs, base, "batch-{:08d}.zip", write_archive)
 
     import io
     import zipfile
@@ -20155,8 +19568,6 @@ def s68_warc_response_scan(spark, sf_dir):
     luck). Each task handles its own shard end-to-end — the
     crawl-to-clean-text pipeline with no driver choke point. The
     oracle replays the byte rollup relationally."""
-    import os
-
     from pyspark.sql import functions as F
 
     from cam_etl_spark.sources.warc import (
@@ -20175,42 +19586,29 @@ def s68_warc_response_scan(spark, sf_dir):
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import gzip as _gzip
 
-        import pandas as pd
+        recs = [write_warc_record(
+            "warcinfo", b"software: cam-etl-spark-fixture\r\n")]
+        for did, text in zip(pdf["doc_id"], pdf["text"]):
+            uri = f"http://example.org/doc/{int(did)}"
+            recs.append(write_warc_record(
+                "request",
+                (f"GET /doc/{int(did)} HTTP/1.1\r\n"
+                 "Host: example.org\r\n\r\n").encode(),
+                {"WARC-Target-URI": uri}))
+            body = str(text).encode("utf-8")
+            http = (b"HTTP/1.1 200 OK\r\n"
+                    b"Content-Type: text/plain; charset=utf-8"
+                    b"\r\n\r\n" + body)
+            recs.append(write_warc_record(
+                "response", http, {"WARC-Target-URI": uri}))
+        with open(path, "wb") as fh:
+            for r in recs:  # one gzip member per record
+                fh.write(_gzip.compress(r))
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            recs = [write_warc_record(
-                "warcinfo", b"software: cam-etl-spark-fixture\r\n")]
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                uri = f"http://example.org/doc/{int(did)}"
-                recs.append(write_warc_record(
-                    "request",
-                    (f"GET /doc/{int(did)} HTTP/1.1\r\n"
-                     "Host: example.org\r\n\r\n").encode(),
-                    {"WARC-Target-URI": uri}))
-                body = str(text).encode("utf-8")
-                http = (b"HTTP/1.1 200 OK\r\n"
-                        b"Content-Type: text/plain; charset=utf-8"
-                        b"\r\n\r\n" + body)
-                recs.append(write_warc_record(
-                    "response", http, {"WARC-Target-URI": uri}))
-            path = os.path.join(
-                base,
-                f"crawl-{int(pdf['doc_id'].min()):08d}.warc.gz")
-            with open(path, "wb") as fh:
-                for r in recs:  # one gzip member per record
-                    fh.write(_gzip.compress(r))
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_shards, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "crawl-{:08d}.warc.gz", write_shard)
 
     def scan(path):
         blob = open(path, "rb").read()
@@ -20328,8 +19726,6 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
     the Python parse inside the task. The oracle replays the rollup
     relationally from the documents table. At 100 TB: a shard-path
     DataFrame, one task per shard, no driver bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_jsonlzst_fixture")
@@ -20342,36 +19738,23 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import json
 
-        import pandas as pd
         import pyarrow as pa
 
+        lines = "".join(
+            json.dumps({"doc_id": int(d), "text": str(tx),
+                        "meta": {"lang": str(lg)}},
+                       ensure_ascii=False) + "\n"
+            for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
+                                 pdf["lang"])
+        ).encode("utf-8")
         codec = pa.Codec("zstd", compression_level=9)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            lines = "".join(
-                json.dumps({"doc_id": int(d), "text": str(tx),
-                            "meta": {"lang": str(lg)}},
-                           ensure_ascii=False) + "\n"
-                for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
-                                     pdf["lang"])
-            ).encode("utf-8")
-            path = os.path.join(
-                base, f"shard-{int(pdf['doc_id'].min()):08d}"
-                ".jsonl.zst")
-            with open(path, "wb") as fh:
-                fh.write(codec.compress(lines, asbytes=True))
-            yield pd.DataFrame({"path": [path], "n": [len(pdf)]})
+        with open(path, "wb") as fh:
+            fh.write(codec.compress(lines, asbytes=True))
 
-    shards = docs.mapInPandas(write_shards,
-                              "path string, n long").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.jsonl.zst", write_shard)
 
     import json
     from cam_etl_spark.multimodal.fastpath import decompress
@@ -20424,8 +19807,8 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
     tags=["streaming", "J6", "temporal", "outer-join"],
 )
 def stream_stream_full_outer(spark, sf_dir):
-    """REAL stream-stream FULL OUTER join (round 12 — completes the
-    streaming join matrix beside inner and left_outer): unmatched
+    """REAL stream-stream FULL OUTER join (the streaming join matrix
+    beside inner and left_outer): unmatched
     CLICKS null-fill the view side AND unmatched VIEWS null-fill the
     click side, each emitted only when the global watermark proves no
     partner can still arrive. Same sentinel-and-resume pattern as the
@@ -20434,48 +19817,28 @@ def stream_stream_full_outer(spark, sf_dir):
     state stores); the flushed result must equal the batch FULL
     interval join — the oracle."""
     import datetime
-    import tempfile
 
     from cam_etl_spark.streaming.transforms import interval_stream_join
 
     e = t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value")
-    work = tempfile.mkdtemp(prefix="ssfjoin_q_")
-    clicks_b = e.filter(F.col("event_type") == "click")
-    views_b = e.filter(F.col("event_type") == "view")
-    clicks_b.repartition(4).write.mode("overwrite").parquet(
-        work + "/clicks")
-    views_b.repartition(4).write.mode("overwrite").parquet(
-        work + "/views")
-
-    def run():
-        cs = (spark.readStream.schema(clicks_b.schema)
-              .option("maxFilesPerTrigger", "2")
-              .parquet(work + "/clicks"))
-        vs = (spark.readStream.schema(views_b.schema)
-              .option("maxFilesPerTrigger", "2")
-              .parquet(work + "/views"))
-        j = interval_stream_join(
-            cs, vs, lookback="6 hours", watermark="90 days",
-            how="full_outer")
-        q = (j.writeStream.format("parquet")
-             .option("path", work + "/out")
-             .option("checkpointLocation", work + "/ckpt")
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
-    run()
+    work = fixture_dir(sf_dir, "cam_etl_ssfjoin_fixture")
+    cs = file_stream(e.filter(F.col("event_type") == "click"),
+                     work + "/clicks", per_trigger=2, files=4)
+    vs = file_stream(e.filter(F.col("event_type") == "view"),
+                     work + "/views", per_trigger=2, files=4)
+    j = interval_stream_join(
+        cs, vs, lookback="6 hours", watermark="90 days",
+        how="full_outer")
+    run_available_now(j, work)
     mx = e.agg(F.max("ts").alias("mx")).collect()[0]["mx"]
     sentinel_ts = mx + datetime.timedelta(days=91)
     for side in ("clicks", "views"):
         spark.createDataFrame(
-            [(-1, -1, "sentinel", sentinel_ts, 0.0)], clicks_b.schema
+            [(-1, -1, "sentinel", sentinel_ts, 0.0)], e.schema
         ).write.mode("append").parquet(work + "/" + side)
-    run()  # resume: the sentinels flush BOTH pending state stores
-
-    out = spark.read.parquet(work + "/out").filter(
+    # resume: the sentinels flush BOTH pending state stores
+    out = run_available_now(j, work).filter(
         (F.col("click_id").isNull() | (F.col("click_id") >= 0))
         & (F.col("view_id").isNull() | (F.col("view_id") >= 0))
     )
@@ -20884,8 +20247,6 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
     mis-split member, or header slip breaks the hash. At 100 TB:
     shard paths DataFrame, one task per WET file, zero driver
     bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_wet_fixture")
@@ -20898,38 +20259,25 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import gzip
-
-        import pandas as pd
 
         from cam_etl_spark.sources.warc import write_warc_record
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            members = [gzip.compress(write_warc_record(
-                "warcinfo", b"software: cam-etl-wet-fixture\r\n"))]
-            for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
-                                 pdf["lang"]):
-                members.append(gzip.compress(write_warc_record(
-                    "conversion", str(tx).encode("utf-8"),
-                    {"WARC-Target-URI":
-                         f"https://example.org/doc/{int(d)}",
-                     "Content-Type": "text/plain",
-                     "WARC-Identified-Content-Language": str(lg)})))
-            path = os.path.join(
-                base,
-                f"shard-{int(pdf['doc_id'].min()):08d}.warc.wet.gz")
-            with open(path, "wb") as fh:
-                fh.write(b"".join(members))
-            yield pd.DataFrame({"path": [path]})
+        members = [gzip.compress(write_warc_record(
+            "warcinfo", b"software: cam-etl-wet-fixture\r\n"))]
+        for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
+                             pdf["lang"]):
+            members.append(gzip.compress(write_warc_record(
+                "conversion", str(tx).encode("utf-8"),
+                {"WARC-Target-URI":
+                     f"https://example.org/doc/{int(d)}",
+                 "Content-Type": "text/plain",
+                 "WARC-Identified-Content-Language": str(lg)})))
+        with open(path, "wb") as fh:
+            fh.write(b"".join(members))
 
-    shards = docs.mapInPandas(write_shards, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.warc.wet.gz", write_shard)
 
     from cam_etl_spark.sources.warc import (
         parse_warc_records,
@@ -21334,8 +20682,6 @@ def s73_sqlite_table_scan(spark, sf_dir):
     byte, or a rowid-alias miss breaks the hash. At 100 TB: a
     db-path DataFrame, one task per database file, zero driver
     bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_sqlite_fixture")
@@ -21347,35 +20693,23 @@ def s73_sqlite_table_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_dbs(batches):
+    def write_db(pdf, path):
         import sqlite3
 
-        import pandas as pd
+        con = sqlite3.connect(path)
+        con.execute("PRAGMA page_size=512")
+        con.execute(
+            "CREATE TABLE docs (doc_id INTEGER PRIMARY KEY, "
+            "text TEXT, lang TEXT)")
+        con.executemany(
+            "INSERT INTO docs VALUES (?,?,?)",
+            [(int(d), None if tx is None else str(tx), str(lg))
+             for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
+                                  pdf["lang"])])
+        con.commit()
+        con.close()
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            path = os.path.join(
-                base, f"shard-{int(pdf['doc_id'].min()):08d}.sqlite")
-            con = sqlite3.connect(path)
-            con.execute("PRAGMA page_size=512")
-            con.execute(
-                "CREATE TABLE docs (doc_id INTEGER PRIMARY KEY, "
-                "text TEXT, lang TEXT)")
-            con.executemany(
-                "INSERT INTO docs VALUES (?,?,?)",
-                [(int(d), None if tx is None else str(tx), str(lg))
-                 for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
-                                      pdf["lang"])])
-            con.commit()
-            con.close()
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_dbs, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.sqlite", write_db)
 
     from cam_etl_spark.sources.sqlite_file import read_table
 
@@ -21427,8 +20761,6 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
     page, a BWT slip, or an entity-escape bug breaks the hash. The
     same decoder now also serves Avro ``bzip2`` blocks. At 100 TB:
     one task per dump shard, zero driver bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_bz2xml_fixture")
@@ -21441,33 +20773,21 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import bz2
         from xml.sax.saxutils import escape
 
-        import pandas as pd
+        pages = "".join(
+            f"<page><id>{int(d)}</id><lang>{escape(str(lg))}"
+            f"</lang><text>{escape(str(tx))}</text></page>"
+            for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
+                                 pdf["lang"])
+        )
+        xml = f"<mediawiki>{pages}</mediawiki>".encode("utf-8")
+        with open(path, "wb") as fh:
+            fh.write(bz2.compress(xml, 9))
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            pages = "".join(
-                f"<page><id>{int(d)}</id><lang>{escape(str(lg))}"
-                f"</lang><text>{escape(str(tx))}</text></page>"
-                for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
-                                     pdf["lang"])
-            )
-            xml = f"<mediawiki>{pages}</mediawiki>".encode("utf-8")
-            path = os.path.join(
-                base, f"dump-{int(pdf['doc_id'].min()):08d}.xml.bz2")
-            with open(path, "wb") as fh:
-                fh.write(bz2.compress(xml, 9))
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_shards, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "dump-{:08d}.xml.bz2", write_shard)
 
     import xml.etree.ElementTree as ET
     from cam_etl_spark.multimodal.fastpath import decompress
@@ -21677,8 +20997,6 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
     decoder set for every general-purpose codec the lake formats
     use. At 100 TB: a shard-path DataFrame, one task per shard, no
     driver bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_jsonlxz_fixture")
@@ -21691,36 +21009,23 @@ def s75_jsonl_xz_corpus_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import json
         import lzma
 
-        import pandas as pd
+        lines = "".join(
+            json.dumps({"doc_id": int(d), "text": str(tx),
+                        "meta": {"lang": str(lg)}},
+                       ensure_ascii=False) + "\n"
+            for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
+                                 pdf["lang"])
+        ).encode("utf-8")
+        with open(path, "wb") as fh:
+            fh.write(lzma.compress(lines,
+                                   format=lzma.FORMAT_XZ,
+                                   preset=6))
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            lines = "".join(
-                json.dumps({"doc_id": int(d), "text": str(tx),
-                            "meta": {"lang": str(lg)}},
-                           ensure_ascii=False) + "\n"
-                for d, tx, lg in zip(pdf["doc_id"], pdf["text"],
-                                     pdf["lang"])
-            ).encode("utf-8")
-            path = os.path.join(
-                base, f"shard-{int(pdf['doc_id'].min()):08d}"
-                ".jsonl.xz")
-            with open(path, "wb") as fh:
-                fh.write(lzma.compress(lines,
-                                       format=lzma.FORMAT_XZ,
-                                       preset=6))
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_shards, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.jsonl.xz", write_shard)
 
     import json
     from cam_etl_spark.multimodal.fastpath import decompress
@@ -22070,34 +21375,22 @@ def corpus_end_to_end(spark, sf_dir):
 
     shard_dir = _os.path.join(base, "shards")
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import json
 
-        import pandas as pd
         import pyarrow as pa
 
+        lines = "".join(
+            json.dumps({"doc_id": int(i), "html": str(h)},
+                       ensure_ascii=False) + "\n"
+            for i, h in zip(pdf["doc_id"], pdf["html"])
+        ).encode("utf-8")
         codec = pa.Codec("zstd", compression_level=9)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            lines = "".join(
-                json.dumps({"doc_id": int(i), "html": str(h)},
-                           ensure_ascii=False) + "\n"
-                for i, h in zip(pdf["doc_id"], pdf["html"])
-            ).encode("utf-8")
-            path = _os.path.join(
-                shard_dir,
-                f"shard-{int(pdf['doc_id'].min()):08d}.jsonl.zst")
-            with open(path, "wb") as fh:
-                fh.write(codec.compress(lines, asbytes=True))
-            yield pd.DataFrame({"path": [path]})
+        with open(path, "wb") as fh:
+            fh.write(codec.compress(lines, asbytes=True))
 
-    shards = new_pages.mapInPandas(write_shards,
-                                   "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(
+        new_pages, shard_dir, "shard-{:08d}.jsonl.zst", write_shard)
 
     # ---- ingest: one task per shard, the ENGINE's zstd decoder
     import json
@@ -22243,7 +21536,6 @@ def stream_dedup_incremental(spark, sf_dir):
     with the daily-batch shape; an intra-day self-dedup would chain
     `streaming_band_index` in front)."""
     import os as _os
-    import tempfile as _tempfile
 
     from cam_etl_spark.io import write_bucketed
     from cam_etl_spark.operators.dedup import (
@@ -22275,13 +21567,8 @@ def stream_dedup_incremental(spark, sf_dir):
 
     # ---- the stream: new docs arrive as a multi-file source, three
     # micro-batches; each batch joins through the bucketed index
-    work = _tempfile.mkdtemp(prefix="sdedup_inc_q_")
-    new.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_stream_inc_lsh_fixture", "stream")
+    src = file_stream(new, work + "/in", per_trigger=2, files=6)
 
     def on_batch(batch_df, batch_id):
         s = batch_df.sparkSession
@@ -22352,60 +21639,47 @@ def s77_sqlite_wal_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_dbs(batches):
+    def write_db(pdf, path):
         import sqlite3
 
-        import pandas as pd
+        tmp = os.path.join(
+            base,
+            f"tmp-{int(pdf['doc_id'].min()):08d}.sqlite")
+        con = sqlite3.connect(tmp)
+        con.execute("PRAGMA page_size=512")
+        con.execute("PRAGMA journal_mode=WAL")
+        con.execute("PRAGMA wal_autocheckpoint=0")
+        con.execute(
+            "CREATE TABLE docs (doc_id INTEGER PRIMARY KEY, "
+            "text TEXT, lang TEXT)")
+        con.executemany(
+            "INSERT INTO docs VALUES (?,?,?)",
+            [(int(d), "PLACEHOLDER", str(lg))
+             for d, lg in zip(pdf["doc_id"], pdf["lang"])])
+        con.commit()
+        # base state folds into the main file; everything after
+        # this lives ONLY in the -wal sidecar
+        con.execute("PRAGMA wal_checkpoint(TRUNCATE)")
+        con.executemany(
+            "UPDATE docs SET text = ? WHERE doc_id = ?",
+            [(str(tx), int(d))
+             for d, tx in zip(pdf["doc_id"], pdf["text"])])
+        con.commit()
+        con.execute("DELETE FROM docs WHERE doc_id % 10 = 3")
+        con.commit()
+        # copy while the connection is open: close would
+        # auto-checkpoint and fold the WAL away
+        for src_p, dst_p in ((tmp, path),
+                             (tmp + "-wal", path + "-wal")):
+            with open(src_p, "rb") as fh:
+                with open(dst_p, "wb") as out:
+                    out.write(fh.read())
+        con.close()
+        for leftover in (tmp, tmp + "-wal", tmp + "-shm"):
+            if os.path.exists(leftover):
+                os.unlink(leftover)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            tmp = os.path.join(
-                base,
-                f"tmp-{int(pdf['doc_id'].min()):08d}.sqlite")
-            path = os.path.join(
-                base,
-                f"shard-{int(pdf['doc_id'].min()):08d}.sqlite")
-            con = sqlite3.connect(tmp)
-            con.execute("PRAGMA page_size=512")
-            con.execute("PRAGMA journal_mode=WAL")
-            con.execute("PRAGMA wal_autocheckpoint=0")
-            con.execute(
-                "CREATE TABLE docs (doc_id INTEGER PRIMARY KEY, "
-                "text TEXT, lang TEXT)")
-            con.executemany(
-                "INSERT INTO docs VALUES (?,?,?)",
-                [(int(d), "PLACEHOLDER", str(lg))
-                 for d, lg in zip(pdf["doc_id"], pdf["lang"])])
-            con.commit()
-            # base state folds into the main file; everything after
-            # this lives ONLY in the -wal sidecar
-            con.execute("PRAGMA wal_checkpoint(TRUNCATE)")
-            con.executemany(
-                "UPDATE docs SET text = ? WHERE doc_id = ?",
-                [(str(tx), int(d))
-                 for d, tx in zip(pdf["doc_id"], pdf["text"])])
-            con.commit()
-            con.execute("DELETE FROM docs WHERE doc_id % 10 = 3")
-            con.commit()
-            # copy while the connection is open: close would
-            # auto-checkpoint and fold the WAL away
-            for src_p, dst_p in ((tmp, path),
-                                 (tmp + "-wal", path + "-wal")):
-                with open(src_p, "rb") as fh:
-                    with open(dst_p, "wb") as out:
-                        out.write(fh.read())
-            con.close()
-            for leftover in (tmp, tmp + "-wal", tmp + "-shm"):
-                if os.path.exists(leftover):
-                    os.unlink(leftover)
-            yield pd.DataFrame({"path": [path]})
-
-    shards = docs.mapInPandas(write_dbs, "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.sqlite", write_db)
 
     from cam_etl_spark.sources.sqlite_file import (
         apply_wal,
@@ -22599,8 +21873,6 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
     (max_chunksize) exercise batch concatenation. At 100 TB: a
     shard-path DataFrame, one task per .arrow file, zero driver
     bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_arrow_ipc_fixture")
@@ -22613,59 +21885,46 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
         F.coalesce("lang", F.lit("")).alias("lang"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
+    def write_shard(pdf, path):
         import datetime as _dt
 
-        import pandas as pd
         import pyarrow as pa
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            tbl = pa.table({
-                "doc_id": pa.array(pdf["doc_id"], pa.int64()),
-                "text": pa.array(pdf["text"], pa.string()),
-                # dictionary-encoded (the HF ClassLabel shape) so
-                # the DictionaryBatch path is on the scan
-                "lang": pa.array(pdf["lang"],
-                                 pa.string()).dictionary_encode(),
-                # list<float32> embedding column (the HF layout for
-                # tokens/embeddings): values chosen exact in f32
-                # (halves) so the rollup replays relationally
-                "emb": pa.array(
-                    [[d % 7 + 0.5, (d % 11) * 1.5, float(len(tx.encode("utf-8")))]
-                     for d, tx in zip(pdf["doc_id"], pdf["text"])],
-                    pa.list_(pa.float32())),
-                # timestamp_us column: the flatbuffers Timestamp
-                # walk is hash-gated through the epoch-seconds
-                # rollup (seconds = 3*doc_id+1, replayed exactly)
-                "ts": pa.array(
-                    [_dt.datetime(1970, 1, 1)
-                     + _dt.timedelta(seconds=int(d) * 3 + 1)
-                     for d in pdf["doc_id"]],
-                    pa.timestamp("us")),
-            })
-            path = os.path.join(
-                base,
-                f"shard-{int(pdf['doc_id'].min()):08d}.arrow")
-            sink = pa.BufferOutputStream()
-            # ZSTD body compression: pyarrow compresses, the scan
-            # inflates through the engine's own RFC-8878 decoder
-            with pa.ipc.new_stream(
-                    sink, tbl.schema,
-                    options=pa.ipc.IpcWriteOptions(
-                        compression="zstd")) as w:
-                w.write_table(tbl, max_chunksize=7)
-            with open(path, "wb") as fh:
-                fh.write(sink.getvalue().to_pybytes())
-            yield pd.DataFrame({"path": [path]})
+        tbl = pa.table({
+            "doc_id": pa.array(pdf["doc_id"], pa.int64()),
+            "text": pa.array(pdf["text"], pa.string()),
+            # dictionary-encoded (the HF ClassLabel shape) so
+            # the DictionaryBatch path is on the scan
+            "lang": pa.array(pdf["lang"],
+                             pa.string()).dictionary_encode(),
+            # list<float32> embedding column (the HF layout for
+            # tokens/embeddings): values chosen exact in f32
+            # (halves) so the rollup replays relationally
+            "emb": pa.array(
+                [[d % 7 + 0.5, (d % 11) * 1.5, float(len(tx.encode("utf-8")))]
+                 for d, tx in zip(pdf["doc_id"], pdf["text"])],
+                pa.list_(pa.float32())),
+            # timestamp_us column: the flatbuffers Timestamp
+            # walk is hash-gated through the epoch-seconds
+            # rollup (seconds = 3*doc_id+1, replayed exactly)
+            "ts": pa.array(
+                [_dt.datetime(1970, 1, 1)
+                 + _dt.timedelta(seconds=int(d) * 3 + 1)
+                 for d in pdf["doc_id"]],
+                pa.timestamp("us")),
+        })
+        sink = pa.BufferOutputStream()
+        # ZSTD body compression: pyarrow compresses, the scan
+        # inflates through the engine's own RFC-8878 decoder
+        with pa.ipc.new_stream(
+                sink, tbl.schema,
+                options=pa.ipc.IpcWriteOptions(
+                    compression="zstd")) as w:
+            w.write_table(tbl, max_chunksize=7)
+        with open(path, "wb") as fh:
+            fh.write(sink.getvalue().to_pybytes())
 
-    shards = docs.mapInPandas(write_shards,
-                              "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+    paths = shard_files(docs, base, "shard-{:08d}.arrow", write_shard)
 
     import pyarrow as pa
     from cam_etl_spark.sources.arrow_ipc import read_stream
@@ -22738,8 +21997,6 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
     fails pyarrow's verifier or breaks the hash. At 100 TB: one
     writer task per shard, one reader task per shard, zero driver
     bytes."""
-    import os
-
     from pyspark.sql import functions as F
 
     base = fixture_dir(sf_dir, "cam_etl_arrow_sink_fixture")
@@ -22754,8 +22011,7 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
         ((F.col("doc_id") % 13) + 0.5).alias("score"),
     ).repartition(3, F.col("doc_id"))
 
-    def write_shards(batches):
-        import pandas as pd
+    def write_shard(pdf, path):
         import pyarrow as pa
 
         from cam_etl_spark.sources.arrow_ipc_write import (
@@ -22764,39 +22020,28 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
 
         fields = [("doc_id", "int64"), ("text", "utf8"),
                   ("lang", "utf8"), ("score", "float64")]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("doc_id")
-            cols = [
-                [int(v) for v in pdf["doc_id"]],
-                [str(v) for v in pdf["text"]],
-                [str(v) for v in pdf["lang"]],
-                [float(v) for v in pdf["score"]],
-            ]
-            # two batches per shard: multi-batch framing on the sink
-            half = max(1, len(pdf) // 2)
-            buf = write_stream(
-                fields,
-                [[c[:half] for c in cols], [c[half:] for c in cols]])
-            # in-task referee: the REAL Arrow reads the engine bytes
-            ref = pa.ipc.open_stream(buf).read_all()
-            assert ref.num_rows == len(pdf)
-            assert ref.column("doc_id").to_pylist() == cols[0]
-            assert ref.column("text").to_pylist() == cols[1]
-            assert ref.column("score").to_pylist() == cols[3]
-            path = os.path.join(
-                base,
-                f"shard-{int(pdf['doc_id'].min()):08d}.arrow")
-            with open(path, "wb") as fh:
-                fh.write(buf)
-            yield pd.DataFrame({"path": [path]})
 
-    shards = docs.mapInPandas(write_shards,
-                              "path string").collect()
-    paths = spark.createDataFrame(
-        [(r.path,) for r in shards], "path string"
-    ).repartition(max(1, len(shards)))
+        cols = [
+            [int(v) for v in pdf["doc_id"]],
+            [str(v) for v in pdf["text"]],
+            [str(v) for v in pdf["lang"]],
+            [float(v) for v in pdf["score"]],
+        ]
+        # two batches per shard: multi-batch framing on the sink
+        half = max(1, len(pdf) // 2)
+        buf = write_stream(
+            fields,
+            [[c[:half] for c in cols], [c[half:] for c in cols]])
+        # in-task referee: the REAL Arrow reads the engine bytes
+        ref = pa.ipc.open_stream(buf).read_all()
+        assert ref.num_rows == len(pdf)
+        assert ref.column("doc_id").to_pylist() == cols[0]
+        assert ref.column("text").to_pylist() == cols[1]
+        assert ref.column("score").to_pylist() == cols[3]
+        with open(path, "wb") as fh:
+            fh.write(buf)
+
+    paths = shard_files(docs, base, "shard-{:08d}.arrow", write_shard)
 
     from cam_etl_spark.sources.arrow_ipc import read_stream
 

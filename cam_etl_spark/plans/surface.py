@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from cam_etl_spark.plans.catalog import (
     CHECKPOINT_PLAN,
     PIPELINE_PLAN,
+    fixture_dir,
     lat_sql,
     lon_sql,
     register,
@@ -20,6 +21,7 @@ from cam_etl_spark.plans.catalog import (
     widen_table,
 )
 from cam_etl_spark.quads import dedup_quads, fan_out_sql, quad_sql
+from cam_etl_spark.streaming.transforms import file_stream
 
 _G = "urn:example:graph:customers"
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -1416,21 +1418,14 @@ def stream_heavy_hitters(spark, sf_dir):
     text_heavy_hitters: the exact threshold query over the histogram the
     sketch never materializes. State: ≤ 64 (term, count) pairs per group,
     bounded by the sketch parameter, not the stream."""
-    import tempfile
-
     from cam_etl_spark.operators.sampling import hash_bucket
     from cam_etl_spark.streaming.stateful import (
         streaming_heavy_hitter_candidates,
     )
 
     d = t(spark, sf_dir, "documents").select("text")
-    work = tempfile.mkdtemp(prefix="shh_q_")
-    d.repartition(6).write.mode("overwrite").parquet(work + "/in")
-    src = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(work + "/in")
-    )
+    work = fixture_dir(sf_dir, "cam_etl_shh_fixture")
+    src = file_stream(d, work + "/in", per_trigger=2, files=6)
     toks_s = (
         src.select(
             F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("term")

@@ -7,6 +7,11 @@ against static reference tables) is expressed as a pure DataFrame→DataFrame
 function, so the same function applies to a batch DF and a ``readStream``
 DF (stream-static joins, stateless projections). Windowed aggregation with
 watermarks covers late data.
+
+The stream harness has one definition here: ``file_stream`` (a frame as
+a multi-file parquet stream), ``run_available_now`` (an ``availableNow``
+parquet sink, read back) and ``run_to_count`` (a custom-source stream run
+until it stops advancing, its row count checked).
 """
 
 from __future__ import annotations
@@ -83,28 +88,65 @@ def stream_static_enrich(stream_df: DataFrame, static_dim: DataFrame, on: str, h
     return stream_df.join(F.broadcast(static_dim), on, how)
 
 
-def run_stream_over_directory(
-    spark,
-    input_dir: str,
-    schema,
-    transform,
-    output_path: str,
-    checkpoint: str,
-):
-    """File-source streaming harness: readStream over a directory of files →
-    transform → parquet sink with checkpointing. Used by tests to prove the
-    batch transforms are stream-safe."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    out = transform(src)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+def file_stream(df: DataFrame, path: str, per_trigger: int, files: int | None = None) -> DataFrame:
+    """A parquet file stream over ``path`` with ``df``'s schema that takes
+    ``per_trigger`` files per micro-batch. With ``files``, ``df`` is first
+    written to ``path`` as that many files; without it, ``path`` already
+    holds the input. Files added before the query starts are part of its
+    input, ordered by modification time."""
+    if files is not None:
+        df.repartition(files).write.mode("overwrite").parquet(path)
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", str(per_trigger))
+        .parquet(path)
     )
-    return q
+
+
+def _parquet_sink(stream: DataFrame, work: str):
+    return (
+        stream.writeStream.format("parquet")
+        .option("path", work + "/out")
+        .option("checkpointLocation", work + "/ckpt")
+        .outputMode("append")
+    )
+
+
+def _read_sink(stream: DataFrame, work: str) -> DataFrame:
+    # the stream's schema: no footer-inference job, and a run that
+    # emitted no rows reads back as an empty frame instead of failing
+    return stream.sparkSession.read.schema(stream.schema).parquet(work + "/out")
+
+
+def run_available_now(stream: DataFrame, work: str) -> DataFrame:
+    """Run ``stream`` over all of its available input (``availableNow``)
+    into a parquet sink at ``work/out`` with its checkpoint at
+    ``work/ckpt``, and return the sink read back as a batch frame. A
+    second run with the same ``work`` resumes from the checkpoint."""
+    q = _parquet_sink(stream, work).trigger(availableNow=True).start()
+    q.awaitTermination()
+    return _read_sink(stream, work)
+
+
+def run_to_count(stream: DataFrame, work: str, n_rows: int) -> DataFrame:
+    """Run a custom-source ``stream`` whose source stops advancing into a
+    parquet sink at ``work/out`` until a trigger finds no new data, and
+    return the sink read back as a batch frame, which must hold exactly
+    ``n_rows`` rows. A query that fails raises its error at once
+    (``processAllAvailable`` re-raises it), not after a deadline."""
+    q = _parquet_sink(stream, work).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = _read_sink(stream, work)
+    got = out.count()
+    if got != n_rows:
+        raise RuntimeError(
+            f"stream sink holds {got} rows of {n_rows}: the stream did not "
+            "deliver every row exactly once"
+        )
+    return out
 
 
 def interval_stream_join(

@@ -97,15 +97,22 @@ def _package_sources():
 
 def test_fixture_mechanisms_defined_once():
     """Each catalog fixture mechanism has one definition: ``micro6``
-    once, the scratch directory only in ``catalog.fixture_dir``, and
-    Delta ``add`` / Iceberg ``data_file`` dicts only in ``sources/``."""
-    micro6, tmp, actions = [], [], []
+    once, the scratch directory only in ``catalog.fixture_dir``, Delta
+    ``add`` / Iceberg ``data_file`` dicts only in ``sources/``, the
+    stream source and sinks only in ``streaming/transforms.py`` and the
+    shard path frame only in ``catalog.shard_files``."""
+    micro6, tmp, actions, retyped = [], [], [], []
+    harness = re.compile(
+        r'mkdtemp|"maxFilesPerTrigger"|processingTime|time\.sleep\('
+        r"|createDataFrame\(\s*\[\(r\.path,\)"
+    )
     for rel, text in _package_sources():
         micro6 += [rel] * len(re.findall(r"\bdef micro6\(", text))
         if rel.startswith("plans" + os.sep):
             for fn in ast.parse(text).body:
                 n = ast.unparse(fn).count("tempfile.gettempdir()")
                 tmp += [(rel, getattr(fn, "name", None))] * n
+            retyped += [(rel, m.group()) for m in harness.finditer(text)]
         if not rel.startswith("sources" + os.sep) and re.search(
             r'"add": \{|"data_file": \{', text
         ):
@@ -113,6 +120,7 @@ def test_fixture_mechanisms_defined_once():
     assert micro6 == [os.path.join("multimodal", "__init__.py")]
     assert tmp == [(os.path.join("plans", "catalog.py"), "fixture_dir")]
     assert actions == []
+    assert retyped == []
 
 
 @pytest.mark.parametrize(
