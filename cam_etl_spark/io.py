@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TESTDATA_TABLES = (
@@ -127,6 +127,21 @@ def unpersist_checkpoint(df: DataFrame) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass
+
+
+def checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus the values of ``metrics``
+    (name -> aggregate Column over its rows), in ONE SQL execution: the
+    aggregates are observed metrics of the checkpoint's own jobs, so an
+    iterative operator's convergence test or global scalar needs no probe
+    action of its own. Only an EAGER checkpoint fills them: a lazy one's
+    execution ends before its rows are computed, and the metrics read 0.
+    Each call observes through a fresh ``Observation`` (one may be used
+    once). When the plan raises, the checkpoint raises and the metrics are
+    never waited for."""
+    obs = Observation()
+    out = df.observe(obs, *(c.alias(k) for k, c in metrics.items())).localCheckpoint(eager=True)
+    return out, obs.get
 
 
 def local_values_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:

@@ -23,9 +23,10 @@ min + join), edge count never grows above the input edge count + node count,
 and rounds are O(log n) so the whole loop is ~30-60 shuffles even at
 billions of nodes. Per-round ``localCheckpoint(eager=True)`` truncates the
 iterative lineage (the loop would otherwise build an exponentially nested
-plan), and the convergence probe rides on the already-materialized frame
-(count + hash-sum, no extra scan of the input). Duplicate mass, not corpus
-size, drives cost: nodes with no near-dup pair never enter the edge set.
+plan) and observes the convergence signature (count + hash-xor) on the
+same pass (``io.checkpoint_observed``): one SQL execution per round.
+Duplicate mass, not corpus size, drives cost: nodes with no near-dup pair
+never enter the edge set.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cam_etl_spark.io import unpersist_checkpoint
+from cam_etl_spark.io import checkpoint_observed, unpersist_checkpoint
 
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -80,20 +81,18 @@ def connected_components(
         # each smaller neighbor to m = min(N(u)); (v, m) keeps v ≥ m, and the
         # u-row (u, m) keeps u > m — canonical orientation is preserved.
         mins2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        e_next = (
+        # order-independent edge-set signature, observed by the round's
+        # checkpoint; bit_xor cannot overflow (ANSI mode makes sum() raise
+        # on long overflow)
+        e_next, sig = checkpoint_observed(
             ls.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
+            .dropDuplicates(),
+            n=F.count("*"),
+            h=F.bit_xor(F.xxhash64("u", "v")),
         )
-        # order-independent edge-set signature; bit_xor cannot overflow
-        # (ANSI mode makes sum() raise on long overflow)
-        sig = e_next.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
         # e_next is materialized — the previous round's checkpoint blocks
         # are dead; free them instead of waiting for a JVM GC
         unpersist_checkpoint(e)
@@ -184,10 +183,11 @@ def pagerank(
 
     Scale shape: per iteration ONE shuffle keyed on dst (the contribs
     groupBy); out-degrees and ranks join back onto the edge list as
-    broadcast or shuffle joins Catalyst picks by size; N and the
-    dangling mass are 1-row broadcast aggregates (no driver collect).
-    ``localCheckpoint`` truncates the growing lineage each round, same as
-    connected_components above. Ranks are rounded to 10 decimals per
+    broadcast or shuffle joins Catalyst picks by size. N and the dangling
+    mass are global scalars observed by the eager checkpoints the loop
+    takes anyway (``io.checkpoint_observed``) and enter the next plan as
+    literals: no 1-row aggregate is broadcast and cross-joined into any
+    round, and no probe action runs. Ranks are rounded to 10 decimals per
     iteration IN BOTH ENGINES so float noise cannot accumulate across
     iterations and flip the final 6-decimal rounding.
     """
@@ -203,61 +203,52 @@ def pagerank(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nn = nodes.agg(F.count("*").cast("double").alias("n"))
     outdeg = e.groupBy("src").agg(F.count("*").cast("double").alias("od"))
-    # The rank table CARRIES the static per-node columns (out-degree and
-    # N) across iterations: one node table with (node, od, n) built and
-    # materialized once, so each iteration needs NO outdeg join (pr/od
-    # reads the carried column), NO anti-join for the dangling mass (a
-    # filter on od IS NULL over the checkpointed ranks), and a single
-    # 1-row broadcast (dang) instead of two (dang + nn). Same sums over
-    # the same doubles — only the join bookkeeping is gone; measured
-    # ~8 fewer micro-stages per iteration on a graph whose per-stage
-    # compute is trivial next to local-mode job overhead.
-    ranks = (
-        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "node", "od", "n", F.round(F.lit(1.0) / F.col("n"), 10).alias("pr")
-        )
-        .localCheckpoint(eager=True)
+    # The rank table CARRIES the static out-degree across iterations, so
+    # each iteration needs NO outdeg join (pr/od reads the carried column)
+    # and the dangling mass is the pr sum over rows whose od IS NULL.
+    table, seen = checkpoint_observed(
+        nodes.join(outdeg, nodes["node"] == outdeg["src"], "left").select("node", "od"),
+        n=F.count("*"),
+        dangling=F.count_if(F.col("od").isNull()),
     )
+    # an empty graph has no rows to rank; N = 1 keeps the folded literal
+    # division defined
+    n = F.lit(float(max(seen["n"], 1)))
+    pr0 = F.round(F.lit(1.0) / n, 10)
+    ranks = table.select("node", "od", pr0.alias("pr"))
+    dang = F.lit(float(seen["dangling"])) * pr0
     # the live checkpoint each round supersedes — freed (unpersist) as
     # soon as the next round's eager checkpoint has materialized, so the
     # block manager holds at most two rank snapshots however many
     # iterations (or repeated runs) execute. The LAST checkpoint is never
     # freed: the returned plan reads it.
-    ckpt = ranks
+    ckpt = table
     for it in range(n_iter):
-        dang = ranks.filter(F.col("od").isNull()).agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dang")
-        )
         contribs = (
             e.join(ranks, e["src"] == ranks["node"])
             .groupBy("dst")
             .agg(F.sum(F.col("pr") / F.col("od")).alias("c"))
         )
-        ranks = (
-            ranks.join(contribs, ranks["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "od",
-                "n",
-                F.round(
-                    (1.0 - damping) / F.col("n")
-                    + damping
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dang") / F.col("n")),
-                    10,
-                ).alias("pr"),
-            )
+        ranks = ranks.join(contribs, ranks["node"] == contribs["dst"], "left").select(
+            "node",
+            "od",
+            F.round(
+                (1.0 - damping) / n
+                + damping * (F.coalesce(F.col("c"), F.lit(0.0)) + dang / n),
+                10,
+            ).alias("pr"),
         )
         # Truncate lineage between iterations, but NOT after the last:
         # the caller's action computes the final iteration anyway, so a
         # trailing eager checkpoint would run the whole last round once
         # at construction time just to have the action re-read it.
         if it < n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks, seen = checkpoint_observed(
+                ranks,
+                dang=F.coalesce(F.sum(F.when(F.col("od").isNull(), F.col("pr"))), F.lit(0.0)),
+            )
+            dang = F.lit(seen["dang"])
             unpersist_checkpoint(ckpt)
             ckpt = ranks
     return ranks.select("node", F.round("pr", 6).alias("pagerank"))

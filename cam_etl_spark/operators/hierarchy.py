@@ -5,8 +5,10 @@ Postgres ``WITH RECURSIVE`` (/root/reference/etl-notes.md:663-722). Spark
 SQL has no recursive CTE, so the engine runs an iterative frontier loop:
 repeatedly self-join the frontier onto the parent edge until fixpoint.
 Each iteration is one shuffle on the join key; depth is bounded by the
-longest chain (site hierarchies are shallow), and localCheckpoint/persist
-keeps lineage from growing unboundedly.
+longest chain (site hierarchies are shallow), and each round's eager
+localCheckpoint keeps lineage from growing unboundedly while observing the
+round's fixpoint signal (``io.checkpoint_observed``): one SQL execution
+per round.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cam_etl_spark.io import unpersist_checkpoint
+from cam_etl_spark.io import checkpoint_observed, unpersist_checkpoint
 
 
 def resolve_roots(
@@ -33,10 +35,10 @@ def resolve_roots(
     halving the round count halves jobs, barriers, and driver overhead).
     Each row carries ``settled``, which implies its ancestor is a root:
     roots start settled and a joined row takes its hop's flag. The
-    fixpoint test is a filter over the checkpointed result — stop when no
-    row is unsettled — so the loop never stops early, and stops no later
-    than waiting for a round in which no pointer moves (one round sooner
-    on a tree of depth 3). Deterministic; cycles never settle and are cut
+    fixpoint test is the count of unsettled rows, observed by the round's
+    checkpoint — stop when it is 0 — so the loop never stops early, and
+    stops no later than waiting for a round in which no pointer moves (one
+    round sooner on a tree of depth 3). Deterministic; cycles never settle and are cut
     by max_iterations.
     """
     nodes = edges.select(
@@ -69,25 +71,21 @@ def resolve_roots(
             F.col("settled").alias("h_settled"),
         )
         prev = state
-        state = (
-            state.join(hop, state.anc == hop.h_id)
-            .select(
+        # One execution per round: the eager checkpoint truncates lineage
+        # and observes the fixpoint signal on the same pass.
+        state, seen = checkpoint_observed(
+            state.join(hop, state.anc == hop.h_id).select(
                 "id",
                 F.col("h_anc").alias("anc"),
                 (F.col("depth") + F.col("h_depth")).alias("depth"),
                 F.col("h_settled").alias("settled"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            unsettled=F.count_if(~F.col("settled")),
         )
-        # One action does double duty: count() computes EVERY partition,
-        # which materializes the lazy checkpoint (truncating lineage) AND
-        # yields the fixpoint signal. (Under AQE the lazy localCheckpoint
-        # call is itself an execution that runs the join's shuffle stages.)
-        done = state.filter(~F.col("settled")).count() == 0
         # the new checkpoint is materialized now — the previous round's
         # blocks are dead (first round: prev is no checkpoint, no-op)
         unpersist_checkpoint(prev)
-        if done:
+        if seen["unsettled"] == 0:
             break
     return state.select("id", F.col("anc").alias("root_id"), "depth")
 
@@ -113,15 +111,14 @@ def descendants_closure(
     closure = base
     frontier = base
     for _ in range(max_iterations):
-        nxt = (
+        # as in resolve_roots: the checkpoint observes the fixpoint test
+        nxt, seen = checkpoint_observed(
             frontier.join(edge, frontier.ancestor_id == edge.e_child)
             .select("id", F.col("e_parent").alias("ancestor_id"), (F.col("distance") + 1).alias("distance"))
-            .join(closure.select("id", "ancestor_id"), ["id", "ancestor_id"], "left_anti")
-            .localCheckpoint(eager=False)
+            .join(closure.select("id", "ancestor_id"), ["id", "ancestor_id"], "left_anti"),
+            rows=F.count("*"),
         )
-        # as in resolve_roots: count() materializes the lazy checkpoint and
-        # is the fixpoint test
-        if nxt.count() == 0:
+        if seen["rows"] == 0:
             break
         closure = closure.unionByName(nxt)
         frontier = nxt

@@ -2577,9 +2577,8 @@ def graph_pagerank(spark, sf_dir):
     over the same deterministic bipartite graph as
     graph_connected_components (customers → synthetic order hubs; hubs
     are all dangling, so the dangling term is genuinely exercised).
-    operators/graph.pagerank: one dst-keyed shuffle per iteration,
-    1-row broadcast aggregates for N and dangling mass, localCheckpoint
-    lineage truncation. Oracle: the identical recurrence unrolled as one
+    operators/graph.pagerank: one dst-keyed shuffle per iteration, N and
+    dangling mass observed by the localCheckpoints that truncate lineage. Oracle: the identical recurrence unrolled as one
     CTE triple per iteration."""
     from cam_etl_spark.operators.graph import pagerank
 

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "cam_etl_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -44,6 +46,13 @@ def get_spark(app_name: str = "cam_etl_spark", shuffle_partitions: int | None = 
         # queries x several codegen units each) evicts and re-JITs every
         # pass. Purely a JVM-compile cache — plans and results unchanged.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # Python workers fork from worker_daemon, which imports PySpark
+        # from site-packages instead of pyspark.zip and the spark-core jar
+        # (docs/SCALE.md §Python-worker tasks). The package root on the
+        # workers' PYTHONPATH makes the module importable whatever the
+        # driver's working directory.
+        .config("spark.python.daemon.module", "cam_etl_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # NOTE: runtime bloom-filter pushdown is ON here — it is Spark 4's
         # DEFAULT (spark.sql.optimizer.runtime.bloomFilter.enabled=true,
         # creation-side threshold 10 MB). The round-2 "hang" attributed to

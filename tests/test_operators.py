@@ -219,6 +219,7 @@ def test_embedding_blocked_default_blocks_match_eight(spark, sf_dir):
     """The one-wave default block count changes the tiling, not the pairs."""
     from cam_etl_spark.io import load_table
     from cam_etl_spark.operators.dedup import embedding_near_pairs_blocked
+    from cam_etl_spark.operators.similarity import one_wave_blocks
 
     e = load_table(spark, sf_dir, "embeddings")
 
@@ -228,6 +229,10 @@ def test_embedding_blocked_default_blocks_match_eight(spark, sf_dir):
 
     default = pairs()
     assert default == pairs(n_blocks=8) and len(default) > 0
+    # no item count reaches the rule: the tiles still fit one wave of cores
+    b = one_wave_blocks(spark.sparkContext.defaultParallelism)
+    tiles = embedding_near_pairs_blocked(e, threshold=0.40).rdd.getNumPartitions()
+    assert tiles == b * (b + 1) // 2 <= spark.sparkContext.defaultParallelism
 
 
 def _sql_executions(spark) -> int:
@@ -251,9 +256,9 @@ def test_hierarchy_roots_and_closure(spark):
     before = _sql_executions(spark)
     resolved = resolve_roots(edges)
     # every row is settled after two doubling rounds (depth <= 3); a round
-    # is two executions: the lazy checkpoint, which under AQE runs the
-    # join's shuffle stages, and the count that materializes it
-    assert _sql_executions(spark) - before == 2 * 2
+    # is one execution: the eager checkpoint, which observes the
+    # unsettled count on its own pass
+    assert _sql_executions(spark) - before == 2 * 1
     roots = {r["id"]: (r["root_id"], r["depth"]) for r in resolved.collect()}
     assert roots["d"] == ("a", 3) and roots["a"] == ("a", 0) and roots["f"] == ("e", 1)
 
@@ -271,6 +276,55 @@ def test_hierarchy_roots_and_closure(spark):
     closure = {(r["id"], r["ancestor_id"], r["distance"]) for r in descendants_closure(edges).collect()}
     assert ("d", "a", 3) in closure and ("c", "a", 2) in closure and ("b", "a", 1) in closure
     assert len([c for c in closure if c[0] == "d"]) == 3
+
+
+def test_observed_checkpoint_raises_instead_of_blocking(spark):
+    """A round whose plan raises makes the loop raise at once: the eager
+    checkpoint fails, so its observed metrics are never waited for."""
+    import threading
+    import time
+
+    from cam_etl_spark.io import checkpoint_observed
+    from cam_etl_spark.operators.graph import pagerank
+    from cam_etl_spark.operators.hierarchy import resolve_roots
+
+    bad = F.when(F.col("id") == 2, F.raise_error(F.lit("bad row"))).otherwise(F.col("id") + 1)
+    calls = {
+        "checkpoint_observed": lambda: checkpoint_observed(
+            spark.range(4).select(bad.alias("x")), n=F.count("*")
+        )[1]["n"],
+        "resolve_roots": lambda: resolve_roots(spark.range(4).select("id", bad.alias("parent_id"))),
+        "pagerank": lambda: pagerank(spark.range(4).select(F.col("id").alias("src"), bad.alias("dst"))),
+    }
+    for name, call in calls.items():
+        raised = []
+
+        def run():
+            try:
+                call()
+            except Exception as e:  # noqa: BLE001 - the error is the result
+                raised.append(e)
+
+        t0 = time.monotonic()
+        worker = threading.Thread(target=run, daemon=True)
+        worker.start()
+        worker.join(timeout=120)
+        assert not worker.is_alive(), f"{name} blocked"
+        assert raised and "bad row" in str(raised[0]), name
+        assert time.monotonic() - t0 < 60, name
+
+
+def test_observed_loops_on_empty_input(spark):
+    """The loops whose scalars ride on their checkpoints return no rows on
+    empty input (pagerank's N = 0 must not reach a folded 1/N)."""
+    from cam_etl_spark.operators.graph import connected_components, pagerank
+    from cam_etl_spark.operators.hierarchy import descendants_closure, resolve_roots
+
+    edges = spark.createDataFrame([(1, 2)], "src long, dst long").filter("src < 0")
+    tree = spark.createDataFrame([("a", None)], "id string, parent_id string").filter("id = 'z'")
+    assert pagerank(edges).collect() == [] and pagerank(edges, n_iter=1).collect() == []
+    assert connected_components(edges).collect() == []
+    assert resolve_roots(tree).collect() == [] and descendants_closure(tree).collect() == []
 
 
 def test_history_sequencing(spark):
@@ -934,18 +988,21 @@ def test_tfidf_cosine_pairs_identity_and_pruning(spark):
 
 
 def test_one_wave_blocks_rule():
-    """B(B+1)/2 tiles fit in one wave of cores; the ~1500-items-per-block
-    floor and the 64-block cap still hold."""
+    """With an item count, B = ceil(n/1500) clamped to 1..64, whatever the
+    cores; without one, B(B+1)/2 tiles fit in one wave of cores, capped
+    at 64."""
     from cam_etl_spark.operators.similarity import one_wave_blocks
 
     assert [one_wave_blocks(c) for c in (1, 4, 8, 32)] == [1, 2, 3, 7]  # 1/3/6/28 tiles
-    assert one_wave_blocks(4, 1500) == 2 and one_wave_blocks(4, 4501) == 4
-    assert one_wave_blocks(4, 10**9) == 64 and one_wave_blocks(10**6) == 64
+    assert one_wave_blocks(10**6) == 64
+    assert [one_wave_blocks(4, n) for n in (0, 1, 500, 1500, 1501, 4501, 6000)] == [1, 1, 1, 1, 2, 4, 4]
+    assert one_wave_blocks(32, 600) == 1 and one_wave_blocks(1, 4501) == 4
+    assert one_wave_blocks(4, 10**9) == 64
 
 
 def test_tfidf_dense_tiles_fit_one_wave(spark):
-    """On a corpus whose 30-word vocabulary takes the dense path, the tile
-    stage has at most defaultParallelism tasks and returns the same rows
+    """On a 600-document corpus whose 30-word vocabulary takes the dense
+    path, the tile stage runs exactly one task and returns the same rows
     as 8 blocks and as the sparse postings join."""
     import random
 
@@ -962,7 +1019,7 @@ def test_tfidf_dense_tiles_fit_one_wave(spark):
         return sorted(tuple(r) for r in out.collect())
 
     auto = tfidf_cosine_pairs(df, threshold=0.9)
-    assert auto.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert auto.rdd.getNumPartitions() == 1
     got = rows(auto)
     assert len(got) > 0
     assert got == rows(tfidf_cosine_pairs(df, threshold=0.9, n_blocks=8))

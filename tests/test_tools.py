@@ -2,6 +2,7 @@
 shares with the product."""
 
 import ast
+import json
 import os
 import re
 import subprocess
@@ -141,3 +142,95 @@ def test_tool_scripts_import_stdlib_profile(tool):
     )
     proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True)
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_check_correctness_names_a_lost_session(sf_dir):
+    """When the Spark JVM dies mid-run the tool prints one SESSION LOST
+    line with the exit code and the queries not run, and exits non-zero,
+    instead of one connection-error FAIL per remaining query."""
+    tools = os.path.join(ROOT, "tools")
+    code = (
+        "import runpy, sys, types\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "from pyspark import SparkContext\n"
+        "from cam_etl_spark.plans import QUERIES\n"
+        "def kill(spark, sf):\n"
+        "    proc = SparkContext._gateway.proc  # this process's own JVM only\n"
+        "    proc.kill()\n"
+        "    proc.wait()\n"
+        "    return spark.range(1)\n"
+        "def one(spark, sf):\n"
+        "    return spark.range(1)\n"
+        "for n, fn in (('stub_kill', kill), ('stub_a', one), ('stub_b', one)):\n"
+        "    QUERIES[n] = types.SimpleNamespace(spark=fn, oracle=None)\n"
+        "sys.argv = ['check_correctness.py', 'stub_a', 'stub_kill', 'stub_a', 'stub_b']\n"
+        f"runpy.run_path({os.path.join(tools, 'check_correctness.py')!r}, run_name='__main__')\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2",
+               SPARK_GRAFT_SF_DIR=sf_dir)
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                          env=env, timeout=600)
+    lines = proc.stdout.splitlines()
+    assert proc.returncode == 2, (proc.stdout[-2000:], proc.stderr[-2000:])
+    assert lines[0].startswith("ROWS  stub_a: 1 rows"), lines
+    assert lines[1:] == [
+        "SESSION LOST at stub_kill (2 of 4): Spark JVM exited with code -9;"
+        " 2 queries not run (0 pass, 0 fail before it)"
+    ]
+
+
+def test_worker_daemon_imports_pyspark_without_archives(tmp_path):
+    """A driver started outside the checkout runs its Python tasks on the
+    package's worker daemon, whose workers import nothing from a zip or
+    jar."""
+    code = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {ROOT!r})\n"
+        "from cam_etl_spark.session import get_spark\n"
+        "spark = get_spark('daemon_test', shuffle_partitions=2)\n"
+        "def paths(batches):\n"
+        "    import sys\n"
+        "    import pandas as pd\n"
+        "    for _ in batches:\n"
+        "        pass\n"
+        "    yield pd.DataFrame({'p': [json.dumps(sys.path)]})\n"
+        "rows = spark.range(0, 2, 1, 2).mapInPandas(paths, 'p string').collect()\n"
+        "print(json.dumps([spark.conf.get('spark.python.daemon.module')]"
+        " + [json.loads(r.p) for r in rows]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                          env=env, cwd=tmp_path, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    module, *worker_paths = json.loads(proc.stdout.splitlines()[-1])
+    assert module == "cam_etl_spark.worker_daemon"
+    assert len(worker_paths) == 2
+    for path in worker_paths:
+        assert ROOT in path
+        # (the interpreter's own python3XX.zip entry names no file here)
+        archives = [p for p in path if p.endswith((".zip", ".jar")) and os.path.exists(p)]
+        assert not archives, path
+
+
+def test_worker_daemon_keeps_archives_on_version_mismatch(tmp_path):
+    import zipfile
+
+    import pyspark
+
+    from cam_etl_spark.worker_daemon import zip_free_path
+
+    plain = [p for p in sys.path if not p.endswith((".zip", ".jar"))]
+    jar = str(tmp_path / "spark-core.jar")
+
+    def archive(version):
+        path = tmp_path / version / "pyspark.zip"
+        path.parent.mkdir()
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr("pyspark/version.py", f"__version__: str = {version!r}\n")
+        return str(path)
+
+    same = [archive(pyspark.__version__), jar] + plain
+    assert zip_free_path(same) == plain
+    other = [archive("0.0.0"), jar] + plain
+    assert zip_free_path(other) == other

@@ -3,7 +3,9 @@
 Runs every catalog query on Spark and its oracle on DuckDB at sf0.01,
 compares row count + sorted-column value multiset. Each PASS line ends
 with a 12-hex md5 of the Spark schema and that multiset, so two
-checkouts can be compared line for line. Usage:
+checkouts can be compared line for line. If the Spark JVM exits mid-run
+(e.g. OOM-killed), one ``SESSION LOST`` line names the query and the
+exit code, and the run stops with status 2. Usage:
 
     python tools/check_correctness.py [query_name ...]
 """
@@ -66,6 +68,15 @@ def digest(schema, rows, cols):
     return h.hexdigest()[:12]
 
 
+def jvm_exit_code():
+    """Exit code of the Spark JVM this process launched; None while it runs
+    (or when the session did not launch one)."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    return None if proc is None else proc.poll()
+
+
 def main():
     from cam_etl_spark.plans import QUERIES
     from cam_etl_spark.session import get_spark
@@ -77,7 +88,7 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
 
     n_pass = n_fail = n_rowsonly = 0
-    for name in names:
+    for i, name in enumerate(names, 1):
         q = QUERIES[name]
         t0 = time.time()
         try:
@@ -85,6 +96,15 @@ def main():
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:
+            code = jvm_exit_code()
+            if code is not None:
+                # every later query would fail on the dead gateway
+                print(
+                    f"SESSION LOST at {name} ({i} of {len(names)}): Spark JVM exited "
+                    f"with code {code}; {len(names) - i} queries not run "
+                    f"({n_pass} pass, {n_fail} fail before it)"
+                )
+                return 2
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             n_fail += 1
             continue
