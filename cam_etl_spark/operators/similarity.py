@@ -523,11 +523,11 @@ def tfidf_cosine_pairs(
       shuffle of |pairs|x|terms| rows (measured 42 s for 224 M rows at
       sf0.1). Instead the vocabulary is broadcast as a dense index and
       the docs are hashed into ``n_blocks`` blocks (default:
-      ``one_wave_blocks`` of the document count); each of the B(B+1)/2
-      block tiles is one mapInPandas task (the
-      embedding_near_pairs_blocked layout), scored
-      by ``_pair_sums`` with either a merge of the two term-sorted
-      postings lists or, on overlap-heavy tiles, one BLAS ``A @ B.T``.
+      ``one_wave_blocks`` of the cores and the document count); each of
+      the B(B+1)/2 block tiles is one mapInPandas task (the
+      embedding_near_pairs_blocked layout), scored by ``_pair_sums``
+      with either a merge of the two term-sorted postings lists or, on
+      overlap-heavy tiles, one BLAS ``A @ B.T``.
       Per-task memory is two blocks; rounding is HALF-UP to 4 decimals
       exactly like the SQL twin, so both strategies return identical
       rows.
@@ -640,25 +640,26 @@ def tfidf_cosine_pairs(
     )
 
 
-def one_wave_blocks(cores: int, n_items: int | None = None) -> int:
+def one_wave_blocks(cores: int, n_items: int = 0) -> int:
     """Block count B for a blocked all-pairs scorer whose B(B+1)/2 tiles
-    each run as one mapInPandas task.
+    each run as one mapInPandas task: the largest B whose tiles fit in
+    one wave of ``cores`` tasks, raised to ceil(n_items/1500) so a tile's
+    similarity matrix stays small (~1500² doubles ≈ 18 MB), capped at 64;
+    but a known count of at most 1500 items is one tile.
 
     Each Python task has a fixed setup cost (docs/SCALE.md §Python-worker
     tasks) that dwarfs a small tile's scoring: 6-10 ms per tile at 500
-    documents. So when the item count is known, B is sized by the work:
-    ceil(n_items/1500), clamped to 1..64 — one tile below 1500 items, and
-    a tile's similarity matrix stays about 1500² doubles (~18 MB) above;
+    documents, so splitting items that fit one tile only multiplies that
+    cost. Above 1500 items a wave of tiles spreads real work over the
+    cores. The 1500-item floor keeps what the old size rule measured:
     with fixed blocks on a ×10 corpus the tile time grew 62×/decade,
-    ~linear when block size is held constant. Without a count, B is the
-    largest block count whose tiles fit in one wave of ``cores`` tasks,
-    capped at 64."""
-    if n_items is not None:
-        return min(64, max(1, -(-int(n_items) // 1500)))
+    ~linear when block size is held constant."""
+    if 0 < n_items <= 1500:
+        return 1
     b = 1
     while (b + 1) * (b + 2) // 2 <= cores:
         b += 1
-    return min(64, b)
+    return min(64, max(b, -(-int(n_items) // 1500)))
 
 
 def _band_sql(min_df: int, max_df_frac: float, n_docs: int) -> str:

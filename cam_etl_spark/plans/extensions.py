@@ -2578,8 +2578,9 @@ def graph_pagerank(spark, sf_dir):
     graph_connected_components (customers → synthetic order hubs; hubs
     are all dangling, so the dangling term is genuinely exercised).
     operators/graph.pagerank: one dst-keyed shuffle per iteration, N and
-    dangling mass observed by the localCheckpoints that truncate lineage. Oracle: the identical recurrence unrolled as one
-    CTE triple per iteration."""
+    dangling mass observed by the localCheckpoints that truncate
+    lineage. Oracle: the identical recurrence unrolled as one CTE triple
+    per iteration."""
     from cam_etl_spark.operators.graph import pagerank
 
     o = t(spark, sf_dir, "orders")

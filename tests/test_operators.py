@@ -988,16 +988,15 @@ def test_tfidf_cosine_pairs_identity_and_pruning(spark):
 
 
 def test_one_wave_blocks_rule():
-    """With an item count, B = ceil(n/1500) clamped to 1..64, whatever the
-    cores; without one, B(B+1)/2 tiles fit in one wave of cores, capped
-    at 64."""
+    """B(B+1)/2 tiles fit in one wave of cores, raised to ceil(n/1500) and
+    capped at 64; a known count of at most 1500 items is one tile."""
     from cam_etl_spark.operators.similarity import one_wave_blocks
 
     assert [one_wave_blocks(c) for c in (1, 4, 8, 32)] == [1, 2, 3, 7]  # 1/3/6/28 tiles
     assert one_wave_blocks(10**6) == 64
-    assert [one_wave_blocks(4, n) for n in (0, 1, 500, 1500, 1501, 4501, 6000)] == [1, 1, 1, 1, 2, 4, 4]
-    assert one_wave_blocks(32, 600) == 1 and one_wave_blocks(1, 4501) == 4
-    assert one_wave_blocks(4, 10**9) == 64
+    assert [one_wave_blocks(4, n) for n in (1, 500, 1500, 1501, 4501, 6000)] == [1, 1, 1, 2, 4, 4]
+    assert [one_wave_blocks(32, n) for n in (600, 1500, 1501, 4501, 12000)] == [1, 1, 7, 7, 8]
+    assert one_wave_blocks(1, 4501) == 4 and one_wave_blocks(4, 10**9) == 64
 
 
 def test_tfidf_dense_tiles_fit_one_wave(spark):
