@@ -200,9 +200,14 @@ def shard_files(df, base, name, write):
             yield pd.DataFrame({"path": [path]})
 
     paths = df.mapInPandas(run, "path string").collect()
-    return df.sparkSession.createDataFrame(paths, "path string").repartition(
-        max(1, len(paths))
-    )
+    return task_per_item(df.sparkSession, paths, "path string")
+
+
+def task_per_item(spark, items, ddl):
+    """The rows ``items`` as a frame of schema ``ddl`` with one partition
+    per row, so each row (a file, a table, a column) runs in its own
+    task."""
+    return spark.createDataFrame(items, ddl).repartition(max(1, len(items)))
 
 
 def sampled_docs(spark, sf_dir, every, at):

@@ -26,48 +26,57 @@ from cam_etl_spark.plans.catalog import (
     sampled_docs,
     shard_files,
     t,
+    task_per_item,
     widen,
     widen_table,
 )
+from cam_etl_spark.plans.oracle_sql import (
+    CENTS,
+    CHECKPOINT_PHASES,
+    COSINE_TOP5,
+    CUSTOMER_QUADS,
+    DHASH_NEAR_PAIRS,
+    HIERARCHY_ROOTS,
+    JACCARD_FILTER,
+    L2_NB_357,
+    L2_STEPS,
+    LANG_DOC_STATS,
+    LATEST_EVENT_PER_USER,
+    LSH_RECALL_OK,
+    MD5_BYTES,
+    MICRO_TOTALS,
+    MP3_REGION_BOUNDS,
+    MP3_STEREO_STATS,
+    MP3_STEREO_VALUES,
+    MPEG_AGG_COLS,
+    NEAR_DUP_COMPONENTS,
+    ORDERS_SEVENTH_DELETED,
+    ORDER_BUCKET_STATS,
+    ORDER_CENTS,
+    ORDER_COLUMN_CHECKSUMS,
+    ORDER_FEED_BY_STATUS,
+    ORDER_STATUS_CENTS,
+    ORDER_UPSERT,
+    PART_SHAPES,
+    PCM_STATS,
+    REPEATED_SPAN_ISLANDS,
+    SCFSI_EFF,
+    SEGDIST,
+    SHINGLE_SET,
+    TABLE_3B3_SQL,
+    TERMS,
+    TK,
+    TOKS,
+    click_view_join,
+    digest_image_oracle,
+    doc_sample,
+    int16_sample,
+    l1_micro,
+    l2_micro,
+    md5_digest,
+    near_dup_pairs,
+)
 from cam_etl_spark.streaming.transforms import file_stream, run_available_now, run_to_count
-
-#: ISO 11172-3 Table 3-B.3 half-prototype numerators (x 65536) as a
-#: SQL list literal — shared VERBATIM by every oracle that replays the
-#: synthesis window (multimodal_mpeg_pcm_synthesis,
-#: multimodal_mp3_full_decode), so a future coefficient correction
-#: cannot fork the two; each registered SQL still embeds the full
-#: literal, preserving the single-wrong-coefficient-breaks-the-hash
-#: property. Canonical table + provenance:
-#: multimodal/mpegaudio._TABLE_3B3_HALF — pinned numerically equal in
-#: tests/test_mpegaudio_synthesis.py::test_sql_window_literal_matches_table.
-_TABLE_3B3_SQL = """([0,-1,-1,-1,-1,-1,-1,-2,-2,-2,
-                 -2,-3,-3,-4,-4,-5,-5,-6,-7,-7,
-                 -8,-9,-10,-11,-13,-14,-16,-17,-19,-21,
-                 -24,-26,-29,-31,-35,-38,-41,-45,-49,-53,
-                 -58,-63,-68,-73,-79,-85,-91,-97,-104,-111,
-                 -117,-125,-132,-139,-147,-154,-161,-169,-176,-183,
-                 -190,-196,-202,-208,-213,-218,-222,-225,-227,-228,
-                 -228,-227,-224,-221,-215,-208,-200,-189,-177,-163,
-                 -146,-127,-106,-83,-57,-29,2,36,72,111,
-                 153,197,244,294,347,401,459,519,581,645,
-                 711,779,848,919,991,1064,1137,1210,1283,1356,
-                 1428,1498,1567,1634,1698,1759,1817,1870,1919,1962,
-                 2001,2032,2057,2075,2085,2087,2080,2063,2037,2000,
-                 1952,1893,1822,1739,1644,1535,1414,1280,1131,970,
-                 794,605,402,185,-45,-288,-545,-814,-1095,-1388,
-                 -1692,-2006,-2330,-2663,-3004,-3351,-3705,-4063,-4425,-4788,
-                 -5153,-5517,-5879,-6237,-6589,-6935,-7271,-7597,-7910,-8209,
-                 -8491,-8755,-8998,-9219,-9416,-9585,-9727,-9838,-9916,-9959,
-                 -9966,-9935,-9863,-9750,-9592,-9389,-9139,-8840,-8492,-8092,
-                 -7640,-7134,-6574,-5959,-5288,-4561,-3776,-2935,-2037,-1082,
-                 -70,998,2122,3300,4533,5818,7154,8540,9975,11455,
-                 12980,14548,16155,17799,19478,21189,22929,24694,26482,28289,
-                 30112,31947,33791,35640,37489,39336,41176,43006,44821,46617,
-                 48390,50137,51853,53534,55178,56778,58333,59838,61289,62684,
-                 64019,65290,66494,67629,68692,69679,70590,71420,72169,72835,
-                 73415,73908,74313,74630,74856,74992,75038
-                ])"""
-
 
 # ---------------------------------------------------------------------------
 # Spatial joins (SURVEY J9, J10/W2, F15)
@@ -300,16 +309,7 @@ def j9_point_in_polygon_grid(spark, sf_dir):
 
 @register(
     "j12_hierarchy_roots",
-    """
-    WITH RECURSIVE r(id, root_id, depth) AS (
-      SELECT c_custkey, c_custkey, 0 FROM customer WHERE c_custkey < 8
-      UNION ALL
-      SELECT c.c_custkey, r.root_id, r.depth + 1
-      FROM customer c JOIN r ON (c.c_custkey // 8) = r.id
-      WHERE c.c_custkey >= 8
-    )
-    SELECT id, root_id, depth FROM r
-    """,
+    HIERARCHY_ROOTS,
     tags=["J12"],
     bench=True,
     plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 0)},
@@ -360,27 +360,8 @@ def _customer_quads(spark, sf_dir):
 
 @register(
     "t1_quad_fanout",
-    """
-    WITH quads AS (
-      SELECT concat('https://example.org/customer/', c_custkey) AS subject,
-             'http://www.w3.org/1999/02/22-rdf-syntax-ns#type' AS predicate,
-             'https://schema.org/Person' AS object_value,
-             'iri' AS object_kind
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://schema.org/name', c_name, 'literal'
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://example.org/def/nation',
-             concat('https://example.org/nation/', c_nationkey), 'iri'
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://schema.org/creditScore', round(c_acctbal, 2)::varchar, 'literal'
-      FROM customer WHERE c_acctbal > 0
-    )
+    f"""
+    WITH {CUSTOMER_QUADS}
     SELECT predicate, count(*) AS n_quads,
            count(DISTINCT subject) AS n_subjects
     FROM quads GROUP BY 1
@@ -431,28 +412,8 @@ def dedup_exact(spark, sf_dir):
 
 @register(
     "dedup_substring_spans",
-    r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-                         x -> x <> '') AS tk
-      FROM documents),
-    grams AS (
-      SELECT doc_id, i AS pos, md5(array_to_string(tk[i+1 : i+5], ' ')) AS gk
-      FROM toks, unnest(range(len(tk) - 5 + 1)) AS u(i)
-      WHERE len(tk) >= 5),
-    dup AS (SELECT gk FROM grams GROUP BY gk HAVING count(*) >= 2),
-    hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gk)),
-    lagged AS (
-      SELECT doc_id, pos,
-             lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-      FROM hits),
-    isl AS (
-      SELECT doc_id, pos,
-             sum(CASE WHEN prev IS NULL OR pos - prev > 5 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY pos
-                     ROWS UNBOUNDED PRECEDING) AS island
-      FROM lagged)
+    f"""
+    WITH {REPEATED_SPAN_ISLANDS}
     SELECT doc_id, min(pos)::bigint AS span_start,
            (max(pos) + 5)::bigint AS span_end,
            (max(pos) + 5 - min(pos))::bigint AS span_tokens
@@ -484,28 +445,8 @@ def dedup_substring_spans(spark, sf_dir):
 
 @register(
     "dedup_substring_removal",
-    r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-                         x -> x <> '') AS tk
-      FROM documents),
-    grams AS (
-      SELECT doc_id, i AS pos, md5(array_to_string(tk[i+1 : i+5], ' ')) AS gk
-      FROM toks, unnest(range(len(tk) - 5 + 1)) AS u(i)
-      WHERE len(tk) >= 5),
-    dup AS (SELECT gk FROM grams GROUP BY gk HAVING count(*) >= 2),
-    hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gk)),
-    lagged AS (
-      SELECT doc_id, pos,
-             lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-      FROM hits),
-    isl AS (
-      SELECT doc_id, pos,
-             sum(CASE WHEN prev IS NULL OR pos - prev > 5 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY pos
-                     ROWS UNBOUNDED PRECEDING) AS island
-      FROM lagged),
+    f"""
+    WITH {REPEATED_SPAN_ISLANDS},
     spans AS (
       SELECT doc_id, min(pos) AS s, max(pos) + 5 AS e
       FROM isl GROUP BY doc_id, island),
@@ -558,32 +499,7 @@ def dedup_substring_removal(spark, sf_dir):
 
 @register(
     "dedup_ngram_jaccard",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5
-    """,
+    near_dup_pairs(),
     tags=["dedup-jaccard"],
     bench=True,
     plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 5), "BroadcastHashJoin": (4, None)},
@@ -603,32 +519,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 @register(
     "dedup_minhash_lsh",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5
-    """,
+    near_dup_pairs(),
     tags=["dedup-minhash"],
     bench=True,
     plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 0), "BroadcastHashJoin": (3, None)},
@@ -707,28 +598,7 @@ def dedup_simhash(spark, sf_dir):
 
 @register(
     "ann_cosine_topk",
-    """
-    WITH pairs AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             q.embedding AS qe, c.embedding AS ce
-      FROM embeddings q CROSS JOIN embeddings c
-      WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * ce[i+1]::double))
-             / (sqrt(list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * qe[i+1]::double)))
-                * sqrt(list_sum(list_transform(range(len(ce)),
-                      i -> ce[i+1]::double * ce[i+1]::double)))) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(cosine, 6) DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
+    COSINE_TOP5,
     tags=["ann", "similarity"],
     bench=True,
     plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 1)},
@@ -746,10 +616,7 @@ def ann_cosine_topk(spark, sf_dir):
 
 @register(
     "ann_lsh_buckets",
-    """
-    SELECT vec_id AS query_id, 5 AS n_exact, TRUE AS recall_ok
-    FROM embeddings WHERE vec_id < 10
-    """,
+    LSH_RECALL_OK,
     tags=["ann", "similarity-lsh"],
 )
 def ann_lsh_buckets(spark, sf_dir):
@@ -1439,20 +1306,12 @@ def s14_partition_backfill(spark, sf_dir):
 
 @register(
     "multimodal_flac_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id, (doc_id % 300) + 1 AS ns,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='(doc_id % 300) + 1 AS ns')},
     sig AS (
       SELECT doc_id, ns,
              list_transform(range(ns),
-               j -> CASE WHEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] >= 32768
-                         THEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] - 65536
-                         ELSE d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] END) AS s
+               j -> {int16_sample('((2*j) % 16) + 1', '((2*j+1) % 16) + 1')}) AS s
       FROM dg)
     SELECT doc_id AS media_id, ns::bigint AS n_samples,
            list_sum(s)::bigint AS sum_samples,
@@ -1503,24 +1362,14 @@ def multimodal_flac_decode(spark, sf_dir):
 
 @register(
     "multimodal_flac_lpc_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id, (doc_id % 350) + 8 AS ns,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='(doc_id % 350) + 8 AS ns')},
     sig AS (
       SELECT doc_id, ns,
              list_transform(range(ns),
-               j -> CASE WHEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] >= 32768
-                         THEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] - 65536
-                         ELSE d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] END) AS lch,
+               j -> {int16_sample('((2*j) % 16) + 1', '((2*j+1) % 16) + 1')}) AS lch,
              list_transform(range(ns),
-               j -> CASE WHEN d[((2*j+5) % 16) + 1] + 256 * d[((2*j+11) % 16) + 1] >= 32768
-                         THEN d[((2*j+5) % 16) + 1] + 256 * d[((2*j+11) % 16) + 1] - 65536
-                         ELSE d[((2*j+5) % 16) + 1] + 256 * d[((2*j+11) % 16) + 1] END) AS rch
+               j -> {int16_sample('((2*j+5) % 16) + 1', '((2*j+11) % 16) + 1')}) AS rch
       FROM dg)
     SELECT doc_id AS media_id, ns::bigint AS n_samples,
            (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 44100
@@ -1594,14 +1443,8 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_audio_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     -- Layer I (even doc_id): alloc in 0..7 per subband, nb = alloc+1 bits
     l1sb AS (
       SELECT doc_id, d, sb,
@@ -1636,14 +1479,8 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
       FROM dg, range(27) t(sb) WHERE doc_id % 2 = 1),
     l2cls AS (
       SELECT *,
-             (CASE WHEN sb < 3
-                   THEN [3,7,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767,65535]
-                   WHEN sb < 11
-                   THEN [3,5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,65535]
-                   WHEN sb < 23 THEN [3,5,7,9,15,31,65535]
-                   ELSE [3,5,65535] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {L2_STEPS},
+             {SCFSI_EFF}
       FROM l2sb WHERE a > 0),
     l2nb AS (
       SELECT *, (CASE steps WHEN 3 THEN 2 WHEN 5 THEN 3 WHEN 7 THEN 3
@@ -1655,11 +1492,7 @@ def multimodal_flac_lpc_decode(spark, sf_dir):
       FROM l2cls),
     l2s AS (
       SELECT doc_id, sb,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11 + doc_id) % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('(d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11 + doc_id) % steps')}
       FROM l2nb, range(36) u(i)),
     l2agg AS (
       SELECT doc_id, 2 AS layer,
@@ -1985,11 +1818,10 @@ def spatial_zorder_cluster(spark, sf_dir):
 
 @register(
     "rag_chunk_windows",
-    r"""
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-                         x -> x <> '') AS tk
+             {TK}
       FROM documents),
     sized AS (
       SELECT doc_id, tk, len(tk) AS n,
@@ -2593,38 +2425,9 @@ def graph_pagerank(spark, sf_dir):
 
 @register(
     "dedup_clusters",
-    """
+    f"""
     WITH RECURSIVE
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5),
-    und AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    walk(node, lab) AS (
-      SELECT a, a FROM und
-      UNION
-      SELECT u.b, w.lab FROM walk w JOIN und u ON w.node = u.a),
-    comp AS (SELECT node, min(lab) AS component FROM walk GROUP BY 1)
+    {NEAR_DUP_COMPONENTS}
     SELECT d.doc_id AS id,
            coalesce(c.component, d.doc_id) AS cluster_id,
            CASE WHEN coalesce(c.component, d.doc_id) = d.doc_id
@@ -2739,16 +2542,7 @@ def pack_sequences(spark, sf_dir):
 
 @register(
     "stream_upsert_jdbc",
-    """
-    SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-           floor(epoch(ts))::bigint AS ts_sec
-    FROM (SELECT user_id, event_id, event_type, ts,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY floor(epoch(ts))::bigint DESC,
-                                             event_id DESC) AS rn
-          FROM events)
-    WHERE rn = 1
-    """,
+    LATEST_EVENT_PER_USER,
     tags=["streaming", "upsert", "jdbc", "S1"],
 )
 def stream_upsert_jdbc(spark, sf_dir):
@@ -2822,16 +2616,7 @@ def stream_upsert_jdbc(spark, sf_dir):
 
 @register(
     "stream_upsert_snapshot",
-    """
-    SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-           floor(epoch(ts))::bigint AS ts_sec
-    FROM (SELECT user_id, event_id, event_type, ts,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY floor(epoch(ts))::bigint DESC,
-                                             event_id DESC) AS rn
-          FROM events)
-    WHERE rn = 1
-    """,
+    LATEST_EVENT_PER_USER,
     tags=["streaming", "upsert", "S11"],
 )
 def stream_upsert_snapshot(spark, sf_dir):
@@ -2898,11 +2683,10 @@ def fuzzy_levenshtein_join_q(spark, sf_dir):
 
 @register(
     "similarity_tfidf_pairs",
-    """
+    f"""
     WITH toks AS (
         SELECT doc_id, tt.term
-        FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tt(term)
-        WHERE tt.term <> ''
+        {TERMS}
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
     stats AS (SELECT count(DISTINCT doc_id) AS n_docs FROM toks),
@@ -2946,19 +2730,7 @@ def similarity_tfidf_pairs_q(spark, sf_dir):
 
 @register(
     "stream_stream_join",
-    """
-    WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-               FROM events WHERE event_type = 'click'),
-         v AS (SELECT event_id AS view_id, user_id, ts AS view_ts, value
-               FROM events WHERE event_type = 'view')
-    SELECT c.click_id, v.view_id, c.user_id AS user_id,
-           strftime(c.click_ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts,
-           strftime(v.view_ts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts,
-           round(v.value, 4) AS view_value
-    FROM c JOIN v
-      ON c.user_id = v.user_id
-     AND v.view_ts BETWEEN c.click_ts - INTERVAL 6 HOUR AND c.click_ts
-    """,
+    click_view_join('JOIN'),
     tags=["streaming", "J1", "temporal"],
 )
 def stream_stream_join(spark, sf_dir):
@@ -3084,27 +2856,8 @@ def s5_vocab_source_lookup(spark, sf_dir):
 
 @register(
     "s7_nquads_sink_roundtrip",
-    """
-    WITH quads AS (
-      SELECT concat('https://example.org/customer/', c_custkey) AS subject,
-             'http://www.w3.org/1999/02/22-rdf-syntax-ns#type' AS predicate,
-             'https://schema.org/Person' AS object_value,
-             'iri' AS object_kind
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://schema.org/name', c_name, 'literal'
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://example.org/def/nation',
-             concat('https://example.org/nation/', c_nationkey), 'iri'
-      FROM customer
-      UNION ALL
-      SELECT concat('https://example.org/customer/', c_custkey),
-             'https://schema.org/creditScore', round(c_acctbal, 2)::varchar, 'literal'
-      FROM customer WHERE c_acctbal > 0
-    )
+    f"""
+    WITH {CUSTOMER_QUADS}
     SELECT DISTINCT subject, predicate, object_value, object_kind,
            'urn:example:graph:customers' AS graph
     FROM quads
@@ -3174,23 +2927,8 @@ def s3_csv_stringly_scan(spark, sf_dir):
 
 @register(
     "s4_shapefile_scan",
-    """
-    WITH src AS (
-      SELECT p_partkey AS pk, p_brand, p_type
-      FROM part WHERE p_partkey % 5 = 0),
-    geo AS (
-      SELECT pk, p_brand, p_type,
-             ((pk % 1440)::DOUBLE * 0.25 - 180) AS x,
-             ((pk % 680)::DOUBLE * 0.25 - 85) AS y
-      FROM src)
-    SELECT pk,
-           CASE WHEN pk % 2 = 0 THEN 'point' ELSE 'polyline' END AS shape_type,
-           CASE WHEN pk % 2 = 0
-                THEN 'POINT (' || x::VARCHAR || ' ' || y::VARCHAR || ')'
-                ELSE 'LINESTRING (' || x::VARCHAR || ' ' || y::VARCHAR || ', '
-                     || (x + 1.5)::VARCHAR || ' ' || (y + 0.75)::VARCHAR || ')'
-           END AS wkt,
-           trim(substr(p_brand, 1, 10)) AS brand,
+    f"""
+    WITH {PART_SHAPES},
            trim(substr(p_type, 1, 10)) AS ptype
     FROM geo
     """,
@@ -3252,23 +2990,8 @@ def s4_shapefile_scan(spark, sf_dir):
 
 @register(
     "s4_shapefile_datasource",
-    """
-    WITH src AS (
-      SELECT p_partkey AS pk, p_brand, p_type
-      FROM part WHERE p_partkey % 5 = 0),
-    geo AS (
-      SELECT pk, p_brand, p_type,
-             ((pk % 1440)::DOUBLE * 0.25 - 180) AS x,
-             ((pk % 680)::DOUBLE * 0.25 - 85) AS y
-      FROM src)
-    SELECT pk,
-           CASE WHEN pk % 2 = 0 THEN 'point' ELSE 'polyline' END AS shape_type,
-           CASE WHEN pk % 2 = 0
-                THEN 'POINT (' || x::VARCHAR || ' ' || y::VARCHAR || ')'
-                ELSE 'LINESTRING (' || x::VARCHAR || ' ' || y::VARCHAR || ', '
-                     || (x + 1.5)::VARCHAR || ' ' || (y + 0.75)::VARCHAR || ')'
-           END AS wkt,
-           trim(substr(p_brand, 1, 10)) AS brand
+    f"""
+    WITH {PART_SHAPES}
     FROM geo
     """,
     tags=["S4", "shapefile", "sources", "datasource-api"],
@@ -3394,19 +3117,7 @@ def temporal_event_funnel(spark, sf_dir):
 
 @register(
     "stream_stream_left_outer",
-    """
-    WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-               FROM events WHERE event_type = 'click'),
-         v AS (SELECT event_id AS view_id, user_id, ts AS view_ts, value
-               FROM events WHERE event_type = 'view')
-    SELECT c.click_id, v.view_id, c.user_id AS user_id,
-           strftime(c.click_ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts,
-           strftime(v.view_ts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts,
-           round(v.value, 4) AS view_value
-    FROM c LEFT JOIN v
-      ON c.user_id = v.user_id
-     AND v.view_ts BETWEEN c.click_ts - INTERVAL 6 HOUR AND c.click_ts
-    """,
+    click_view_join('LEFT JOIN'),
     tags=["streaming", "J2", "temporal", "outer-join"],
 )
 def stream_stream_left_outer(spark, sf_dir):
@@ -3456,16 +3167,11 @@ def stream_stream_left_outer(spark, sf_dir):
 
 @register(
     "decontaminate_splits",
-    r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-      FROM documents),
+    f"""
+    WITH {TOKS},
     shl AS (
       SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
+             {SHINGLE_SET} AS shingles
       FROM toks),
     sh AS (SELECT DISTINCT doc_id, s
            FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
@@ -3478,9 +3184,7 @@ def stream_stream_left_outer(spark, sf_dir):
       SELECT id_a, id_b,
              round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
       FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5),
+      {JACCARD_FILTER}),
     sp AS (
       SELECT doc_id,
              CASE WHEN ('0x' || substr(md5(doc_id::varchar), 1, 15))::bigint % 100 < 80 THEN 'train'
@@ -3938,22 +3642,14 @@ def cluster_kmeans_lloyd(spark, sf_dir):
 
 @register(
     "multimodal_signal_stats",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     audio AS (
       SELECT doc_id,
              ((doc_id % 100) + 1) * (((doc_id // 2) % 2) + 1) AS ns,
              list_transform(
                range(((doc_id % 100) + 1) * (((doc_id // 2) % 2) + 1)),
-               j -> CASE WHEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] >= 32768
-                         THEN d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] - 65536
-                         ELSE d[((2*j) % 16) + 1] + 256 * d[((2*j+1) % 16) + 1] END) AS s
+               j -> {int16_sample('((2*j) % 16) + 1', '((2*j+1) % 16) + 1')}) AS s
       FROM dg WHERE doc_id % 2 = 1),
     image AS (
       SELECT doc_id, (doc_id % 31) + 1 AS w, (doc_id % 17) + 1 AS hh,
@@ -4198,38 +3894,9 @@ def text_bigram_perplexity(spark, sf_dir):
 
 @register(
     "dedup_keep_best_quality",
-    """
+    f"""
     WITH RECURSIVE
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5),
-    und AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    walk(node, lab) AS (
-      SELECT a, a FROM und
-      UNION
-      SELECT u.b, w.lab FROM walk w JOIN und u ON w.node = u.a),
-    comp AS (SELECT node, min(lab) AS component FROM walk GROUP BY 1),
+    {NEAR_DUP_COMPONENTS},
     members AS (
       SELECT d.doc_id AS id, d.n_chars AS quality,
              coalesce(c.component, d.doc_id) AS cluster_id
@@ -4381,9 +4048,9 @@ def stream_dedup_watermark(spark, sf_dir):
     tags=["dedup", "chunk-level", "content-defined", "cdc"],
 )
 def dedup_cdc_chunks(spark, sf_dir):
-    """CONTENT-DEFINED chunk dedup (round 11,
-    operators/dedup.py cdc_chunks) — the shift-robust counterpart of
-    `dedup_chunk_level`'s fixed 20-token chunks: a boundary cuts
+    """CONTENT-DEFINED chunk dedup (operators/dedup.py cdc_chunks) —
+    the shift-robust counterpart of `dedup_chunk_level`'s fixed
+    20-token chunks: a boundary cuts
     after token i whenever the first 32 bits (high-order — hex
     digits 1-8) of the 3-token-window md5 divide by 16 (avg
     ~16-token chunks). Because the cut decision is
@@ -4498,32 +4165,7 @@ def stream_session_timeout_finalize(spark, sf_dir):
 
 @register(
     "stream_dedup_minhash",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5
-    """,
+    near_dup_pairs(),
     tags=["streaming", "stateful", "dedup-minhash", "applyInPandasWithState"],
 )
 def stream_dedup_minhash(spark, sf_dir):
@@ -4701,19 +4343,6 @@ def stream_stateful_running_total(spark, sf_dir):
     )
 
 
-_SEGDIST = """
-    CASE WHEN ((({bx}) - ({ax})) ^ 2 + (({by}) - ({ay})) ^ 2) = 0
-         THEN sqrt((({px}) - ({ax})) ^ 2 + (({py}) - ({ay})) ^ 2)
-         ELSE sqrt(
-           (({px}) - (({ax}) + least(1.0, greatest(0.0,
-              ((({px}) - ({ax})) * (({bx}) - ({ax})) + (({py}) - ({ay})) * (({by}) - ({ay})))
-              / ((({bx}) - ({ax})) ^ 2 + (({by}) - ({ay})) ^ 2))) * (({bx}) - ({ax})))) ^ 2
-           + (({py}) - (({ay}) + least(1.0, greatest(0.0,
-              ((({px}) - ({ax})) * (({bx}) - ({ax})) + (({py}) - ({ay})) * (({by}) - ({ay})))
-              / ((({bx}) - ({ax})) ^ 2 + (({by}) - ({ay})) ^ 2))) * (({by}) - ({ay})))) ^ 2)
-    END"""
-
-
 @register(
     "j10_nearest_road_segment",
     f"""
@@ -4740,8 +4369,8 @@ _SEGDIST = """
     scored AS (
       SELECT p.query_id, r.target_id,
              least(
-               {_SEGDIST.format(px='p.px', py='p.py', ax='r.ax', ay='r.ay', bx='r.bx', by='r.by')},
-               {_SEGDIST.format(px='p.px', py='p.py', ax='r.bx', ay='r.by', bx='r.cx', by='r.cy')}
+               {SEGDIST.format(px='p.px', py='p.py', ax='r.ax', ay='r.ay', bx='r.bx', by='r.by')},
+               {SEGDIST.format(px='p.px', py='p.py', ax='r.bx', ay='r.by', bx='r.cx', by='r.cy')}
              ) AS dist
       FROM pts p CROSS JOIN roads3 r),
     ranked AS (
@@ -5062,18 +4691,10 @@ def u3_intersect_except(spark, sf_dir):
 
 @register(
     "multimodal_frame_sample_real",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 15) + 1 AS w, (doc_id % 9) + 1 AS hh,
+    f"""
+    WITH {md5_digest(cols='w, hh, n, rsize', base_cols='''(doc_id % 15) + 1 AS w, (doc_id % 9) + 1 AS hh,
              (doc_id % 7) + 2 AS n,
-             ((((doc_id % 15) + 1) * 24 + 31) // 32) * 4 AS rsize
-      FROM documents),
-    dg AS (
-      SELECT doc_id, w, hh, n, rsize,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+             ((((doc_id % 15) + 1) * 24 + 31) // 32) * 4 AS rsize''')},
     frames AS (
       SELECT doc_id, w, hh, n, rsize, d,
              unnest(list_transform(range(least(4, n)),
@@ -5124,33 +4745,6 @@ def multimodal_frame_sample_real(spark, sf_dir):
     )
 
 
-def _digest_image_oracle(wmod: int, hmod: int) -> str:
-    """DuckDB twin of _digest_image_decode for a given dimension pair:
-    pixel byte j of the row-major RGB array is the text-md5 digest at
-    j mod 16, so per-channel means are pure digest arithmetic."""
-    return f"""
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % {wmod}) + 1 AS w, (doc_id % {hmod}) + 1 AS hh
-      FROM documents),
-    dg AS (
-      SELECT doc_id, w, hh,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base)
-    SELECT doc_id AS media_id,
-           w::int AS width, hh::int AS height,
-           (w * hh)::bigint AS n_pixels,
-           round(list_sum(list_transform(range(w*hh),
-               i -> d[(3*i) % 16 + 1]))::double / (w*hh), 6) AS mean_r,
-           round(list_sum(list_transform(range(w*hh),
-               i -> d[(3*i + 1) % 16 + 1]))::double / (w*hh), 6) AS mean_g,
-           round(list_sum(list_transform(range(w*hh),
-               i -> d[(3*i + 2) % 16 + 1]))::double / (w*hh), 6) AS mean_b
-    FROM dg
-    """
-
-
 def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int):
     """Shared scaffold of the lib-free image decode queries (PNG/GIF/TIFF):
     every document becomes an image whose pixel bytes tile its text-md5
@@ -5160,7 +4754,7 @@ def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int
     (meta, (n,3) uint8 RGB)`` select the codec; (wmod, hmod) give each
     format a distinct dimension distribution so a dispatch mix-up between
     codecs cannot produce matching output. The oracle twin
-    (_digest_image_oracle) replays the same arithmetic in SQL, so a wrong
+    (digest_image_oracle) replays the same arithmetic in SQL, so a wrong
     inflate/unfilter/LZW/strip-reassembly step hash-fails."""
     import hashlib
 
@@ -5198,17 +4792,9 @@ def _digest_image_decode(spark, sf_dir, encoder, pixels_fn, wmod: int, hmod: int
 
 @register(
     "multimodal_gif_frame_sample",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 12) + 1 AS w, (doc_id % 8) + 1 AS hh,
-             (doc_id % 6) + 2 AS n
-      FROM documents),
-    dg AS (
-      SELECT doc_id, w, hh, n,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='w, hh, n', base_cols='''(doc_id % 12) + 1 AS w, (doc_id % 8) + 1 AS hh,
+             (doc_id % 6) + 2 AS n''')},
     frames AS (
       SELECT doc_id, w, hh, n, d,
              unnest(list_transform(range(least(4, n)),
@@ -5258,7 +4844,7 @@ def multimodal_gif_frame_sample(spark, sf_dir):
 
 @register(
     "multimodal_png_decode",
-    _digest_image_oracle(13, 11),
+    digest_image_oracle(13, 11),
     tags=["multimodal", "decode", "png"],
 )
 def multimodal_png_decode(spark, sf_dir):
@@ -5266,7 +4852,7 @@ def multimodal_png_decode(spark, sf_dir):
     chunks and the compression is zlib — Python STDLIB. The decoder
     re-walks the chunks, CRC-checks them, INFLATES the IDAT stream, and
     reverses scanline filtering (all five spec filter types). Scaffold +
-    oracle: _digest_image_decode/_digest_image_oracle."""
+    oracle: _digest_image_decode/digest_image_oracle."""
     from cam_etl_spark.multimodal.codecs import encode_png, png_pixels
 
     return _digest_image_decode(spark, sf_dir, encode_png, png_pixels, 13, 11)
@@ -5274,7 +4860,7 @@ def multimodal_png_decode(spark, sf_dir):
 
 @register(
     "multimodal_gif_decode",
-    _digest_image_oracle(14, 9),
+    digest_image_oracle(14, 9),
     tags=["multimodal", "decode", "gif"],
 )
 def multimodal_gif_decode(spark, sf_dir):
@@ -5283,7 +4869,7 @@ def multimodal_gif_decode(spark, sf_dir):
     codes, dictionary growth, clear resets, the KwKwK case); the decoder
     re-walks the blocks, decompresses the index stream, and maps indices
     through the color table. Scaffold + oracle: _digest_image_decode/
-    _digest_image_oracle."""
+    digest_image_oracle."""
     from cam_etl_spark.multimodal.codecs import encode_gif, gif_pixels
 
     return _digest_image_decode(spark, sf_dir, encode_gif, gif_pixels, 14, 9)
@@ -5291,14 +4877,14 @@ def multimodal_gif_decode(spark, sf_dir):
 
 @register(
     "multimodal_tiff_decode",
-    _digest_image_oracle(17, 7),
+    digest_image_oracle(17, 7),
     tags=["multimodal", "decode", "tiff"],
 )
 def multimodal_tiff_decode(spark, sf_dir):
     """REAL baseline-TIFF decode with NO codec library: header + IFD tag
     walk + MULTI-STRIP reassembly (rows_per_strip=2, so every image taller
     than 2 rows exercises the out-of-line offset/byte-count arrays).
-    Scaffold + oracle: _digest_image_decode/_digest_image_oracle."""
+    Scaffold + oracle: _digest_image_decode/digest_image_oracle."""
     from cam_etl_spark.multimodal.codecs import encode_tiff, tiff_pixels
 
     def enc(w, h, seed):
@@ -5309,16 +4895,8 @@ def multimodal_tiff_decode(spark, sf_dir):
 
 @register(
     "multimodal_jpeg_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 5) + 1 AS wb, (doc_id % 3) + 1 AS hb
-      FROM documents),
-    dg AS (
-      SELECT doc_id, wb, hb,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base)
+    f"""
+    WITH {md5_digest(cols='wb, hb', base_cols='(doc_id % 5) + 1 AS wb, (doc_id % 3) + 1 AS hb')}
     SELECT doc_id AS media_id,
            (wb * 8)::int AS width, (hb * 8)::int AS height,
            (wb * hb * 64)::bigint AS n_pixels,
@@ -5374,16 +4952,8 @@ def multimodal_jpeg_decode(spark, sf_dir):
 
 @register(
     "multimodal_jpeg_progressive_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 6) + 1 AS wb, (doc_id % 5) + 1 AS hb
-      FROM documents),
-    dg AS (
-      SELECT doc_id, wb, hb,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base)
+    f"""
+    WITH {md5_digest(cols='wb, hb', base_cols='(doc_id % 6) + 1 AS wb, (doc_id % 5) + 1 AS hb')}
     SELECT doc_id AS media_id,
            (wb * 8)::int AS width, (hb * 8)::int AS height,
            (wb * hb * 64)::bigint AS n_pixels,
@@ -5439,16 +5009,8 @@ def multimodal_jpeg_progressive_decode(spark, sf_dir):
 
 @register(
     "multimodal_jpeg_progressive_refine",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 6) + 1 AS wb, (doc_id % 5) + 1 AS hb
-      FROM documents),
-    dg AS (
-      SELECT doc_id, wb, hb,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='wb, hb', base_cols='(doc_id % 6) + 1 AS wb, (doc_id % 5) + 1 AS hb')},
     cells AS (
       SELECT doc_id, wb, hb,
              CASE WHEN k = 0 THEN d[(b % 16) + 1] - 128
@@ -5523,16 +5085,8 @@ def multimodal_jpeg_progressive_refine(spark, sf_dir):
 
 @register(
     "multimodal_jpeg420_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h,
-             (doc_id % 3) + 1 AS wb, (doc_id % 2) + 1 AS hb
-      FROM documents),
-    dg AS (
-      SELECT doc_id, wb, hb,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base)
+    f"""
+    WITH {md5_digest(cols='wb, hb', base_cols='(doc_id % 3) + 1 AS wb, (doc_id % 2) + 1 AS hb')}
     SELECT doc_id AS media_id,
            (wb * 16)::int AS width, (hb * 16)::int AS height,
            (wb * hb * 256)::bigint AS n_pixels,
@@ -5994,14 +5548,8 @@ def a13_theil_sen_arrow(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_stereo_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     l1sb AS (
       SELECT doc_id, d, sb, ch,
              d[((sb*7 + ch*3 + 1) % 16) + 1] % 6 AS a,
@@ -6034,14 +5582,8 @@ def a13_theil_sen_arrow(spark, sf_dir):
       FROM dg, range(27) t(sb), range(2) c(ch) WHERE doc_id % 2 = 1),
     l2cls AS (
       SELECT *,
-             (CASE WHEN sb < 3
-                   THEN [3,7,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767,65535]
-                   WHEN sb < 11
-                   THEN [3,5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,65535]
-                   WHEN sb < 23 THEN [3,5,7,9,15,31,65535]
-                   ELSE [3,5,65535] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {L2_STEPS},
+             {SCFSI_EFF}
       FROM l2sb WHERE a > 0),
     l2nb AS (
       SELECT *, (CASE steps WHEN 3 THEN 2 WHEN 5 THEN 3 WHEN 7 THEN 3
@@ -6053,12 +5595,8 @@ def a13_theil_sen_arrow(spark, sf_dir):
       FROM l2cls),
     l2s AS (
       SELECT doc_id, sb, ch,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + ch*5 + 1) % 16) + 1] * 29 + i*11 + ch*17 + doc_id)
-                       % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + ch*5 + 1) % 16) + 1] * 29 + i*11 + ch*17 + doc_id)
+                       % steps''')}
       FROM l2nb, range(36) u(i)),
     l2agg AS (
       SELECT doc_id, 2 AS layer,
@@ -6205,16 +5743,7 @@ def multimodal_mpeg_stereo_decode(spark, sf_dir):
 
 @register(
     "j17_recursive_cte_native",
-    """
-    WITH RECURSIVE r(id, root_id, depth) AS (
-      SELECT c_custkey, c_custkey, 0 FROM customer WHERE c_custkey < 8
-      UNION ALL
-      SELECT c.c_custkey, r.root_id, r.depth + 1
-      FROM customer c JOIN r ON (c.c_custkey // 8) = r.id
-      WHERE c.c_custkey >= 8
-    )
-    SELECT id, root_id, depth FROM r
-    """,
+    HIERARCHY_ROOTS,
     tags=["J12", "recursive-cte", "spark4"],
 )
 def j17_recursive_cte_native(spark, sf_dir):
@@ -6412,14 +5941,8 @@ def p10_parameterized_sql(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_intensity_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              CASE doc_id % 3 WHEN 0 THEN 'l1_joint'
@@ -6451,26 +5974,13 @@ def p10_parameterized_sql(spark, sf_dir):
     act AS (SELECT * FROM al WHERE a > 0),
     l1s AS (
       SELECT doc_id, sb, ch,
-             CAST(round((2.0 * pow(2.0, -l1scf/3.0)
-                   * ((1::BIGINT << (a + 1))
-                      / (((1::BIGINT << (a + 1)) - 1)::DOUBLE))
-                   * (((d[((sb + j*5 + ce*9) % 16) + 1] * 31 + j*7 + ce*13
-                        + doc_id)
-                       % ((1::BIGINT << (a + 1)) - 1))
-                      / ((1::BIGINT << a)::DOUBLE)
-                      - 1.0 + pow(2.0, -a::DOUBLE))) * 1000000.0)
-                  AS BIGINT) AS micro
+             {l1_micro('''d[((sb + j*5 + ce*9) % 16) + 1] * 31 + j*7 + ce*13
+                        + doc_id''')}
       FROM act, range(12) u(j) WHERE layer = 1),
     l2cls AS (
       SELECT *,
-             (CASE WHEN sb < 3
-                   THEN [3,7,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767,65535]
-                   WHEN sb < 11
-                   THEN [3,5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,65535]
-                   WHEN sb < 23 THEN [3,5,7,9,15,31,65535]
-                   ELSE [3,5,65535] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {L2_STEPS},
+             {SCFSI_EFF}
       FROM act WHERE layer = 2),
     l2nb AS (
       SELECT *, (CASE steps WHEN 3 THEN 2 ELSE 3 END) AS nb,
@@ -6478,12 +5988,8 @@ def p10_parameterized_sql(spark, sf_dir):
       FROM l2cls),
     l2s AS (
       SELECT doc_id, sb, ch,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + ce*5 + 1) % 16) + 1] * 29 + i*11
-                        + ce*17 + doc_id) % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + ce*5 + 1) % 16) + 1] * 29 + i*11
+                        + ce*17 + doc_id) % steps''')}
       FROM l2nb, range(36) u(i)),
     s AS (SELECT * FROM l1s UNION ALL SELECT * FROM l2s),
     agg AS (
@@ -6662,14 +6168,8 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_l2_lowrate_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              CASE doc_id % 3 WHEN 0 THEN 'b' WHEN 1 THEN 'c' ELSE 'd' END AS tb,
@@ -6703,8 +6203,7 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
                 CASE WHEN sb < 2
                      THEN [5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767]
                      ELSE [5,7,9,15,31,63,127] END END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {SCFSI_EFF}
       FROM al WHERE a > 0),
     nbx AS (
       SELECT *, (CASE steps WHEN 3 THEN 2 WHEN 5 THEN 3 WHEN 7 THEN 3
@@ -6714,27 +6213,17 @@ def multimodal_mpeg_intensity_decode(spark, sf_dir):
       FROM cls),
     smp AS (
       SELECT doc_id, sb,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11 + doc_id)
-                       % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11 + doc_id)
+                       % steps''')}
       FROM nbx, range(36) u(i)),
     agg AS (
       SELECT doc_id, count(DISTINCT sb) AS n_active_sb,
-             count(*) AS n_active_samples,
-             sum(micro)::BIGINT AS sum_micro,
-             max(abs(micro))::BIGINT AS max_abs_micro
+             {MICRO_TOTALS}
       FROM smp GROUP BY doc_id)
     SELECT c.doc_id AS media_id, c.tb AS table_id,
            c.sbl::BIGINT AS sblimit, c.rate::BIGINT AS sample_rate,
            c.kbps::BIGINT AS bitrate_kbps,
-           coalesce(a.n_active_sb, 0)::BIGINT AS n_active_sb,
-           coalesce(a.n_active_samples, 0)::BIGINT AS n_active_samples,
-           coalesce(a.sum_micro, 0)::BIGINT AS sum_micro,
-           coalesce(a.max_abs_micro, 0)::BIGINT AS max_abs_micro
-    FROM cfg c LEFT JOIN agg a ON c.doc_id = a.doc_id
+           {MPEG_AGG_COLS}
     """,
     tags=["multimodal", "decode", "mpeg", "audio", "layer2",
           "allocation-tables"],
@@ -6834,14 +6323,8 @@ def multimodal_mpeg_l2_lowrate_decode(spark, sf_dir):
 
 @register(
     "multimodal_flac_multichannel_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id, (doc_id % 240) + 4 AS ns, 3 + doc_id % 6 AS nch,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='(doc_id % 240) + 4 AS ns, 3 + doc_id % 6 AS nch')},
     chs AS (
       SELECT doc_id, ns, nch, c,
              list_transform(range(ns),
@@ -6927,14 +6410,8 @@ def multimodal_flac_multichannel_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_441_padding_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              CASE doc_id % 2 WHEN 0 THEN 1 ELSE 2 END AS layer,
@@ -6963,52 +6440,33 @@ def multimodal_flac_multichannel_decode(spark, sf_dir):
     act AS (SELECT * FROM al WHERE a > 0),
     l1s AS (
       SELECT doc_id, sb, f,
-             CAST(round((2.0 * pow(2.0, -l1scf/3.0)
-                   * ((1::BIGINT << (a + 1))
-                      / (((1::BIGINT << (a + 1)) - 1)::DOUBLE))
-                   * (((d[((sb + j*5 + f*3) % 16) + 1] * 31 + j*7 + f*19
-                        + doc_id)
-                       % ((1::BIGINT << (a + 1)) - 1))
-                      / ((1::BIGINT << a)::DOUBLE)
-                      - 1.0 + pow(2.0, -a::DOUBLE))) * 1000000.0)
-                  AS BIGINT) AS micro
+             {l1_micro('''d[((sb + j*5 + f*3) % 16) + 1] * 31 + j*7 + f*19
+                        + doc_id''')}
       FROM act, range(12) u(j) WHERE layer = 1),
     l2cls AS (
       SELECT *,
              (CASE WHEN sb < 3 THEN [3,7] ELSE [3,5] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {SCFSI_EFF}
       FROM act WHERE layer = 2),
     l2nb AS (
-      SELECT *, (CASE steps WHEN 3 THEN 2 ELSE 3 END) AS nb,
-             (CASE steps WHEN 7 THEN 0.25 ELSE 0.5 END) AS dd
+      SELECT *, {L2_NB_357}
       FROM l2cls),
     l2s AS (
       SELECT doc_id, sb, f,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + f*3 + 1) % 16) + 1] * 29 + i*11
-                        + f*13 + doc_id) % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + f*3 + 1) % 16) + 1] * 29 + i*11
+                        + f*13 + doc_id) % steps''')}
       FROM l2nb, range(36) u(i)),
     s AS (SELECT * FROM l1s UNION ALL SELECT * FROM l2s),
     agg AS (
       SELECT doc_id,
              count(DISTINCT f*100 + sb) AS n_active_sb,
-             count(*) AS n_active_samples,
-             sum(micro)::BIGINT AS sum_micro,
-             max(abs(micro))::BIGINT AS max_abs_micro
+             {MICRO_TOTALS}
       FROM s GROUP BY doc_id)
     SELECT c.doc_id AS media_id, c.layer::BIGINT AS layer,
            44100::BIGINT AS sample_rate, c.kbps::BIGINT AS bitrate_kbps,
            2::BIGINT AS n_frames, c.n_padded::BIGINT AS n_padded,
            c.stream_bytes::BIGINT AS stream_bytes,
-           coalesce(a.n_active_sb, 0)::BIGINT AS n_active_sb,
-           coalesce(a.n_active_samples, 0)::BIGINT AS n_active_samples,
-           coalesce(a.sum_micro, 0)::BIGINT AS sum_micro,
-           coalesce(a.max_abs_micro, 0)::BIGINT AS max_abs_micro
-    FROM cfg c LEFT JOIN agg a ON c.doc_id = a.doc_id
+           {MPEG_AGG_COLS}
     """,
     tags=["multimodal", "decode", "mpeg", "audio", "padding", "44100"],
 )
@@ -7131,14 +6589,8 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_crc_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              CASE doc_id % 2 WHEN 0 THEN 1 ELSE 2 END AS layer,
@@ -7162,25 +6614,12 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
     act AS (SELECT * FROM al WHERE a > 0),
     l1s AS (
       SELECT doc_id, sb,
-             CAST(round((2.0 * pow(2.0, -l1scf/3.0)
-                   * ((1::BIGINT << (a + 1))
-                      / (((1::BIGINT << (a + 1)) - 1)::DOUBLE))
-                   * (((d[((sb + j*3 + 4) % 16) + 1] * 23 + j*5 + doc_id)
-                       % ((1::BIGINT << (a + 1)) - 1))
-                      / ((1::BIGINT << a)::DOUBLE)
-                      - 1.0 + pow(2.0, -a::DOUBLE))) * 1000000.0)
-                  AS BIGINT) AS micro
+             {l1_micro('d[((sb + j*3 + 4) % 16) + 1] * 23 + j*5 + doc_id')}
       FROM act, range(12) u(j) WHERE layer = 1),
     l2cls AS (
       SELECT *,
-             (CASE WHEN sb < 3
-                   THEN [3,7,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767,65535]
-                   WHEN sb < 11
-                   THEN [3,5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,65535]
-                   WHEN sb < 23 THEN [3,5,7,9,15,31,65535]
-                   ELSE [3,5,65535] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {L2_STEPS},
+             {SCFSI_EFF}
       FROM act WHERE layer = 2),
     l2nb AS (
       SELECT *, (CASE steps WHEN 3 THEN 2 WHEN 5 THEN 3 WHEN 7 THEN 3
@@ -7190,27 +6629,17 @@ def multimodal_mpeg_441_padding_decode(spark, sf_dir):
       FROM l2cls),
     l2s AS (
       SELECT doc_id, sb,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*5 + 3) % 16) + 1] * 27 + i*7 + doc_id)
-                       % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*5 + 3) % 16) + 1] * 27 + i*7 + doc_id)
+                       % steps''')}
       FROM l2nb, range(36) u(i)),
     s AS (SELECT * FROM l1s UNION ALL SELECT * FROM l2s),
     agg AS (
       SELECT doc_id, count(DISTINCT sb) AS n_active_sb,
-             count(*) AS n_active_samples,
-             sum(micro)::BIGINT AS sum_micro,
-             max(abs(micro))::BIGINT AS max_abs_micro
+             {MICRO_TOTALS}
       FROM s GROUP BY doc_id)
     SELECT c.doc_id AS media_id, c.layer::BIGINT AS layer,
            1::BIGINT AS protected,
-           coalesce(a.n_active_sb, 0)::BIGINT AS n_active_sb,
-           coalesce(a.n_active_samples, 0)::BIGINT AS n_active_samples,
-           coalesce(a.sum_micro, 0)::BIGINT AS sum_micro,
-           coalesce(a.max_abs_micro, 0)::BIGINT AS max_abs_micro
-    FROM cfg c LEFT JOIN agg a ON c.doc_id = a.doc_id
+           {MPEG_AGG_COLS}
     """,
     tags=["multimodal", "decode", "mpeg", "audio", "crc"],
 )
@@ -7322,14 +6751,8 @@ def multimodal_mpeg_crc_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_freeformat_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              ((doc_id // 2) % 2) + ((doc_id // 4) % 2) AS n_padded,
@@ -7350,43 +6773,26 @@ def multimodal_mpeg_crc_decode(spark, sf_dir):
       FROM sbf),
     cls AS (
       SELECT *,
-             (CASE WHEN sb < 3
-                   THEN [3,7,15,31,63,127,255,511,1023,2047,4095,8191,16383,32767,65535]
-                   WHEN sb < 11
-                   THEN [3,5,7,9,15,31,63,127,255,511,1023,2047,4095,8191,65535]
-                   WHEN sb < 23 THEN [3,5,7,9,15,31,65535]
-                   ELSE [3,5,65535] END)[a] AS steps,
-             (CASE scfsi WHEN 0 THEN [s0,s1,s2] WHEN 1 THEN [s0,s0,s2]
-                         WHEN 2 THEN [s0,s0,s0] ELSE [s0,s1,s1] END) AS eff
+             {L2_STEPS},
+             {SCFSI_EFF}
       FROM al WHERE a > 0),
     nbx AS (
-      SELECT *, (CASE steps WHEN 3 THEN 2 ELSE 3 END) AS nb,
-             (CASE steps WHEN 7 THEN 0.25 ELSE 0.5 END) AS dd
+      SELECT *, {L2_NB_357}
       FROM cls),
     smp AS (
       SELECT doc_id, sb, f,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + f*9 + 1) % 16) + 1] * 29 + i*11
-                        + f*17 + doc_id) % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + f*9 + 1) % 16) + 1] * 29 + i*11
+                        + f*17 + doc_id) % steps''')}
       FROM nbx, range(36) u(i)),
     agg AS (
       SELECT doc_id, count(DISTINCT f*100 + sb) AS n_active_sb,
-             count(*) AS n_active_samples,
-             sum(micro)::BIGINT AS sum_micro,
-             max(abs(micro))::BIGINT AS max_abs_micro
+             {MICRO_TOTALS}
       FROM smp GROUP BY doc_id)
     SELECT c.doc_id AS media_id, 3::BIGINT AS n_frames,
            0::BIGINT AS bitrate_kbps, 'a' AS table_id,
            c.n_padded::BIGINT AS n_padded,
            c.stream_bytes::BIGINT AS stream_bytes,
-           coalesce(a.n_active_sb, 0)::BIGINT AS n_active_sb,
-           coalesce(a.n_active_samples, 0)::BIGINT AS n_active_samples,
-           coalesce(a.sum_micro, 0)::BIGINT AS sum_micro,
-           coalesce(a.max_abs_micro, 0)::BIGINT AS max_abs_micro
-    FROM cfg c LEFT JOIN agg a ON c.doc_id = a.doc_id
+           {MPEG_AGG_COLS}
     """,
     tags=["multimodal", "decode", "mpeg", "audio", "free-format"],
 )
@@ -7491,14 +6897,8 @@ def multimodal_mpeg_freeformat_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg2_lsf_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              [22050, 24000, 16000][(doc_id % 3) + 1] AS rate,
@@ -7672,13 +7072,12 @@ def multimodal_mpeg2_lsf_decode(spark, sf_dir):
 
 @register(
     "multimodal_image_dhash_neardup",
-    """
+    f"""
     WITH dg AS (
       SELECT doc_id, md5((doc_id // 2)::VARCHAR) AS h FROM documents),
     db AS (
       SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
+             {MD5_BYTES}
       FROM dg),
     px AS (
       SELECT doc_id, x, y,
@@ -7702,26 +7101,7 @@ def multimodal_mpeg2_lsf_decode(spark, sf_dir):
       SELECT doc_id, (r*8 + c) // 16 AS i,
              sum(bit * (1::BIGINT << ((r*8 + c) % 16)))::BIGINT AS band
       FROM bits GROUP BY doc_id, (r*8 + c) // 16),
-    allb AS (
-      SELECT doc_id, list(band ORDER BY i) AS bl FROM bands
-      GROUP BY doc_id),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_l, b.doc_id AS doc_r
-      FROM bands a
-      JOIN bands b ON a.i = b.i AND a.band = b.band
-                  AND a.doc_id < b.doc_id)
-    SELECT c.doc_l, c.doc_r,
-           (bit_count(xor(la.bl[1], lb.bl[1]))
-            + bit_count(xor(la.bl[2], lb.bl[2]))
-            + bit_count(xor(la.bl[3], lb.bl[3]))
-            + bit_count(xor(la.bl[4], lb.bl[4])))::BIGINT AS hamming
-    FROM cand c
-    JOIN allb la ON c.doc_l = la.doc_id
-    JOIN allb lb ON c.doc_r = lb.doc_id
-    WHERE (bit_count(xor(la.bl[1], lb.bl[1]))
-           + bit_count(xor(la.bl[2], lb.bl[2]))
-           + bit_count(xor(la.bl[3], lb.bl[3]))
-           + bit_count(xor(la.bl[4], lb.bl[4]))) <= 12
+    {DHASH_NEAR_PAIRS}
     """,
     tags=["multimodal", "dedup", "image", "dhash", "lsh"],
     plan={"CartesianProduct": (0, 0), "HashAggregate": (0, 0)},
@@ -7786,14 +7166,13 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
 
 @register(
     "multimodal_audio_fingerprint_neardup",
-    """
+    f"""
     WITH dg AS (
       SELECT doc_id, md5('aud' || (doc_id // 2)::VARCHAR) AS h
       FROM documents),
     db AS (
       SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
+             {MD5_BYTES}
       FROM dg),
     sm AS (
       SELECT doc_id, t,
@@ -7818,26 +7197,7 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
       SELECT doc_id, b // 16 AS i,
              sum(bit * (1::BIGINT << (b % 16)))::BIGINT AS band
       FROM bits GROUP BY doc_id, b // 16),
-    allb AS (
-      SELECT doc_id, list(band ORDER BY i) AS bl FROM bands
-      GROUP BY doc_id),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_l, b.doc_id AS doc_r
-      FROM bands a
-      JOIN bands b ON a.i = b.i AND a.band = b.band
-                  AND a.doc_id < b.doc_id)
-    SELECT c.doc_l, c.doc_r,
-           (bit_count(xor(la.bl[1], lb.bl[1]))
-            + bit_count(xor(la.bl[2], lb.bl[2]))
-            + bit_count(xor(la.bl[3], lb.bl[3]))
-            + bit_count(xor(la.bl[4], lb.bl[4])))::BIGINT AS hamming
-    FROM cand c
-    JOIN allb la ON c.doc_l = la.doc_id
-    JOIN allb lb ON c.doc_r = lb.doc_id
-    WHERE (bit_count(xor(la.bl[1], lb.bl[1]))
-           + bit_count(xor(la.bl[2], lb.bl[2]))
-           + bit_count(xor(la.bl[3], lb.bl[3]))
-           + bit_count(xor(la.bl[4], lb.bl[4]))) <= 12
+    {DHASH_NEAR_PAIRS}
     """,
     tags=["multimodal", "dedup", "audio", "fingerprint", "lsh"],
     plan={"CartesianProduct": (0, 0), "HashAggregate": (0, 0)},
@@ -7909,14 +7269,13 @@ def multimodal_audio_fingerprint_neardup(spark, sf_dir):
 
 @register(
     "multimodal_video_dhash_neardup",
-    """
+    f"""
     WITH dg AS (
       SELECT doc_id, md5('vid' || (doc_id // 2)::VARCHAR) AS h
       FROM documents),
     db AS (
       SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
+             {MD5_BYTES}
       FROM dg),
     px AS (
       SELECT doc_id, f, x, y,
@@ -8431,14 +7790,8 @@ def sample_weighted_poisson(spark, sf_dir):
 
 @register(
     "multimodal_audio_decimate",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id, (doc_id % 200) + 16 AS ns,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(cols='(doc_id % 200) + 16 AS ns')},
     sig AS (
       SELECT doc_id, ns, (ns + 1) // 2 AS n_out,
              list_transform(range(ns),
@@ -8525,14 +7878,8 @@ def multimodal_audio_decimate(spark, sf_dir):
 
 @register(
     "multimodal_mp3_sideinfo_parse",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d, 1 + doc_id % 2 AS nch,
              CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS protected
@@ -8657,11 +8004,10 @@ def multimodal_mp3_sideinfo_parse(spark, sf_dir):
     -> NotImplementedError; corrupted protected side info ->
     'crc_check mismatch' BEFORE any field parse), and the recovered
     codes aggregate against this closed-form digest-arithmetic SQL
-    replay. (Boundary as of round 8; rounds 10-11 removed most of
-    it — big-values tables 0-12, count1 A, the full IMDCT/synthesis
-    chain to PCM, M-S/intensity stereo and mixed blocks all decode
-    now; tables 13/15 and ESC/linbits 16-31 remain.) One Arrow
-    mapInPandas scan, zero shuffles."""
+    replay. (Big-values tables 0-12, count1 A, the full IMDCT/synthesis
+    chain to PCM, M-S/intensity stereo and mixed blocks decode in the
+    other Layer III entries; tables 13/15 and ESC/linbits 16-31 are
+    not decoded.) One Arrow mapInPandas scan, zero shuffles."""
     import hashlib
 
     from cam_etl_spark.multimodal.mp3 import (
@@ -8845,14 +8191,8 @@ def multimodal_mp3_sideinfo_parse(spark, sf_dir):
 
 @register(
     "multimodal_h264_sps_parse",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d,
              [66, 77, 100][(doc_id % 3) + 1] AS profile_idc,
@@ -9363,10 +8703,10 @@ def a14_regression_aggregates(spark, sf_dir):
 
 @register(
     "temporal_ohlc_downsample",
-    """
+    f"""
     WITH o AS (
       SELECT date_trunc('month', o_orderdate)::DATE AS bucket,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+             {CENTS} AS cents,
              date_diff('day', DATE '1992-01-01', o_orderdate)::BIGINT
                * 10000000 + o_orderkey AS seq
       FROM orders)
@@ -9773,9 +9113,7 @@ def s17_parquet_footer_scan(spark, sf_dir):
                 rows, columns=["tbl", "col_path", "n_values"]
             )
 
-    files = spark.createDataFrame(
-        [(t,) for t in tables], "tbl string"
-    ).repartition(len(tables))
+    files = task_per_item(spark, [(t,) for t in tables], "tbl string")
     return files.mapInPandas(
         run, "tbl string, col_path string, n_values long"
     )
@@ -9783,7 +9121,7 @@ def s17_parquet_footer_scan(spark, sf_dir):
 
 @register(
     "s18_parquet_page_decode",
-    """
+    f"""
     SELECT 'documents' AS tbl, 'doc_id' AS col_path,
            count(*)::BIGINT AS n_values,
            (count(*) - count(doc_id))::BIGINT AS n_nulls,
@@ -9806,7 +9144,7 @@ def s17_parquet_footer_scan(spark, sf_dir):
            sum(strlen(o_orderstatus))::BIGINT FROM orders
     UNION ALL SELECT 'orders', 'o_totalprice', count(*),
            count(*) - count(o_totalprice),
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT FROM orders
+           sum({CENTS})::BIGINT FROM orders
     UNION ALL SELECT 'orders', 'o_orderdate', count(*),
            count(*) - count(o_orderdate),
            sum(epoch_us(o_orderdate) % 1000000000)::BIGINT FROM orders
@@ -9985,9 +9323,7 @@ def s18_parquet_page_decode(spark, sf_dir):
                          "checksum"],
             )
 
-    files = spark.createDataFrame(
-        pairs, "tbl string, col_path string"
-    ).repartition(len(pairs))
+    files = task_per_item(spark, pairs, "tbl string, col_path string")
     return files.mapInPandas(
         run,
         "tbl string, col_path string, n_values long, n_nulls long, "
@@ -9997,15 +9333,7 @@ def s18_parquet_page_decode(spark, sf_dir):
 
 @register(
     "s19_parquet_write_roundtrip",
-    """
-    SELECT (o_orderkey % 8)::BIGINT AS bucket,
-           count(*)::BIGINT AS n_rows,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-             AS sum_cents,
-           sum(strlen(o_orderpriority))::BIGINT AS sum_prio_len
-    FROM orders GROUP BY bucket
-    """,
+    ORDER_BUCKET_STATS,
     tags=["S7", "parquet", "writer", "thrift", "roundtrip"],
 )
 def s19_parquet_write_roundtrip(spark, sf_dir):
@@ -10123,11 +9451,11 @@ def s19_parquet_write_roundtrip(spark, sf_dir):
 
 @register(
     "s20_xml_roundtrip",
-    """
+    f"""
     SELECT o_orderstatus AS status,
            count(*)::BIGINT AS n_orders,
            sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents,
            sum(strlen(o_orderpriority))::BIGINT AS sum_prio_len
     FROM orders GROUP BY status
@@ -10182,14 +9510,8 @@ def s20_xml_roundtrip(spark, sf_dir):
 
 @register(
     "multimodal_g711_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     cfg AS (
       SELECT doc_id, d, 64 + doc_id % 64 AS n,
              CASE doc_id % 2 WHEN 0 THEN 'ulaw' ELSE 'alaw' END AS law
@@ -10380,11 +9702,11 @@ def w8_range_interval_window(spark, sf_dir):
 
 @register(
     "s21_avro_roundtrip",
-    """
+    f"""
     SELECT (o_orderkey % 6)::BIGINT AS bucket,
            count(*)::BIGINT AS n_rows,
            sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents,
            sum(strlen(o_orderpriority))::BIGINT AS sum_prio_len,
            sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)::BIGINT
@@ -10502,7 +9824,7 @@ def s21_avro_roundtrip(spark, sf_dir):
 
 @register(
     "s22_delta_log_scan",
-    """
+    f"""
     WITH v1 AS (
       SELECT * FROM orders
       WHERE o_orderstatus <> 'O' OR o_orderkey % 2 = 0
@@ -10510,18 +9832,18 @@ def s21_avro_roundtrip(spark, sf_dir):
     SELECT 0::BIGINT AS version, o_orderstatus AS status,
            count(*)::BIGINT AS n_orders,
            sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents
     FROM orders GROUP BY status
     UNION ALL
     SELECT 1::BIGINT, o_orderstatus, count(*)::BIGINT,
            sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
     FROM v1 GROUP BY o_orderstatus
     UNION ALL
     SELECT 2::BIGINT, o_orderstatus, count(*)::BIGINT,
            sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
     FROM v1 WHERE o_orderstatus = 'F' GROUP BY o_orderstatus
     """,
     tags=["S1", "delta", "lake", "time-travel", "pruning"],
@@ -10798,9 +10120,7 @@ def s23_orc_stripe_decode(spark, sf_dir):
                 "checksum": checksum,
             }
 
-    files = spark.createDataFrame(
-        pairs, "tbl string, path string"
-    ).repartition(len(pairs))
+    files = task_per_item(spark, pairs, "tbl string, path string")
     partials = map_rows(
         files, run,
         "tbl string, col string, n_values long, n_nulls long, "
@@ -10920,14 +10240,8 @@ def temporal_pattern_match(spark, sf_dir):
 
 @register(
     "multimodal_mp3_reservoir_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h FROM documents),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest()},
     gcfg AS (
       SELECT doc_id, d, f, gr,
              d[((f*5 + gr*3 + 1) % 16) + 1] % 16 AS sfc,
@@ -11131,7 +10445,7 @@ def multimodal_mp3_reservoir_decode(spark, sf_dir):
 
 @register(
     "s24_iceberg_snapshot_scan",
-    """
+    f"""
     WITH v2 AS (
       SELECT * FROM orders
       WHERE o_orderstatus <> 'O' OR o_orderkey % 2 = 0
@@ -11139,18 +10453,18 @@ def multimodal_mp3_reservoir_decode(spark, sf_dir):
     SELECT 1::BIGINT AS snap, o_orderstatus AS status,
            count(*)::BIGINT AS n_orders,
            sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents
     FROM orders GROUP BY status
     UNION ALL
     SELECT 2::BIGINT, o_orderstatus, count(*)::BIGINT,
            sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
     FROM v2 GROUP BY o_orderstatus
     UNION ALL
     SELECT 3::BIGINT, o_orderstatus, count(*)::BIGINT,
            sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
     FROM v2 WHERE o_orderstatus = 'P' GROUP BY o_orderstatus
     """,
     tags=["S1", "iceberg", "lake", "time-travel", "pruning", "avro"],
@@ -11262,21 +10576,7 @@ def s24_iceberg_snapshot_scan(spark, sf_dir):
 
 @register(
     "s27_iceberg_position_deletes",
-    """
-    WITH b AS (
-      SELECT o_orderkey, (o_orderkey % 4)::BIGINT AS bucket,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-    )
-    SELECT 1::BIGINT AS snap, bucket, count(*)::BIGINT AS n_orders,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum(cents)::BIGINT AS sum_cents
-    FROM b GROUP BY bucket
-    UNION ALL
-    SELECT 2::BIGINT, bucket, count(*)::BIGINT,
-           sum(o_orderkey)::BIGINT, sum(cents)::BIGINT
-    FROM b WHERE o_orderkey % 7 <> 0 GROUP BY bucket
-    """,
+    ORDERS_SEVENTH_DELETED,
     tags=["S1", "iceberg", "lake", "merge-on-read", "deletes", "avro"],
 )
 def s27_iceberg_position_deletes(spark, sf_dir):
@@ -11404,10 +10704,10 @@ def s27_iceberg_position_deletes(spark, sf_dir):
 
 @register(
     "s32_delta_change_feed",
-    """
+    f"""
     WITH b AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS c0
+             {CENTS} AS c0
       FROM orders
     ), v1 AS (
       SELECT k, c0,
@@ -11545,10 +10845,10 @@ def s32_delta_change_feed(spark, sf_dir):
 
 @register(
     "s33_iceberg_equality_deletes",
-    """
+    f"""
     WITH b AS (
       SELECT o_orderkey AS k, (o_orderkey % 4)::BIGINT AS bucket,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+             {CENTS} AS cents
       FROM orders
     )
     SELECT 1::BIGINT AS snap, bucket, count(*)::BIGINT AS n_orders,
@@ -11708,11 +11008,9 @@ def s33_iceberg_equality_deletes(spark, sf_dir):
 
 @register(
     "s34_iceberg_bucket_transform",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     ), pick AS (SELECT k FROM b ORDER BY k LIMIT 5)
     SELECT 1::BIGINT AS mode, count(*)::BIGINT AS n_orders,
            sum(k)::BIGINT AS sum_key, sum(cents)::BIGINT AS sum_cents
@@ -11843,11 +11141,9 @@ def s34_iceberg_bucket_transform(spark, sf_dir):
 
 @register(
     "s35_delta_optimize_compaction",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     ), app AS (
       SELECT k + 1000000000 AS k, cents + 5 AS cents
       FROM b WHERE k % 11 = 0
@@ -11989,11 +11285,11 @@ def s35_delta_optimize_compaction(spark, sf_dir):
 
 @register(
     "s36_iceberg_manifest_pruning",
-    """
+    f"""
     WITH m AS (SELECT max(o_orderkey) AS mx FROM orders),
          b AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+             {CENTS} AS cents,
              (o_orderkey * 8) // (mx + 1) AS kr
       FROM orders, m
     )
@@ -12131,10 +11427,9 @@ def s36_iceberg_manifest_pruning(spark, sf_dir):
 
 @register(
     "s37_iceberg_expire_snapshots",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+      {ORDER_STATUS_CENTS}
       FROM orders
     ), cur AS (
       SELECT * FROM b WHERE NOT (status = 'O' AND k % 3 = 0)
@@ -12279,11 +11574,9 @@ def s37_iceberg_expire_snapshots(spark, sf_dir):
 
 @register(
     "s38_delta_vacuum",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     )
     SELECT 'snap_v1' AS mode, count(*)::BIGINT AS n,
            sum(k)::BIGINT AS sum_key, sum(cents)::BIGINT AS sum_cents
@@ -12374,11 +11667,9 @@ def s38_delta_vacuum(spark, sf_dir):
 
 @register(
     "s39_iceberg_incremental_scan",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     )
     SELECT 'incr' AS mode, 4::BIGINT AS n_files,
            count(*)::BIGINT AS n, sum(k)::BIGINT AS sum_key,
@@ -12496,11 +11787,9 @@ def s39_iceberg_incremental_scan(spark, sf_dir):
 
 @register(
     "s40_delta_schema_evolution",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     ), app AS (
       SELECT k + 1000000000 AS k, cents, 7::BIGINT AS flag
       FROM b WHERE k % 6 = 0
@@ -12635,23 +11924,8 @@ def s40_delta_schema_evolution(spark, sf_dir):
 
 @register(
     "s41_delta_merge_upsert",
-    """
-    WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-    ), m AS (SELECT max(k) AS mx FROM b),
-    upd AS (SELECT k FROM b, m WHERE k % 10 = 0 AND k <= mx // 4),
-    ins AS (
-      SELECT k + 2000000000 AS k, cents + 9 AS cents
-      FROM b WHERE k % 97 = 0
-    ), v1 AS (
-      SELECT k,
-             CASE WHEN k IN (SELECT k FROM upd)
-                  THEN cents + 100 ELSE cents END AS cents
-      FROM b
-      UNION ALL SELECT * FROM ins
-    )
+    f"""
+    WITH {ORDER_UPSERT}
     SELECT 'snap' AS mode, count(*)::BIGINT AS n,
            sum(k)::BIGINT AS sum_key, sum(cents)::BIGINT AS sum_cents
     FROM v1
@@ -12801,23 +12075,8 @@ def s41_delta_merge_upsert(spark, sf_dir):
 
 @register(
     "s42_iceberg_merge_on_read_upsert",
-    """
-    WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-    ), m AS (SELECT max(k) AS mx FROM b),
-    upd AS (SELECT k FROM b, m WHERE k % 10 = 0 AND k <= mx // 4),
-    ins AS (
-      SELECT k + 2000000000 AS k, cents + 9 AS cents
-      FROM b WHERE k % 97 = 0
-    ), v1 AS (
-      SELECT k,
-             CASE WHEN k IN (SELECT k FROM upd)
-                  THEN cents + 100 ELSE cents END AS cents
-      FROM b
-      UNION ALL SELECT * FROM ins
-    )
+    f"""
+    WITH {ORDER_UPSERT}
     SELECT 'base' AS mode, count(*)::BIGINT AS n,
            sum(k)::BIGINT AS sum_key, sum(cents)::BIGINT AS sum_cents
     FROM b
@@ -13158,10 +12417,10 @@ def data_budget_select(spark, sf_dir):
 
 @register(
     "s31_iceberg_metrics_pruning",
-    """
+    f"""
     WITH m AS (SELECT max(o_orderkey) AS mx FROM orders),
          b AS (SELECT o_orderkey,
-                      (round(o_totalprice * 100, 0))::BIGINT AS cents
+                      {CENTS} AS cents
                FROM orders)
     SELECT 1::BIGINT AS mode, 4::BIGINT AS n_files,
            count(*)::BIGINT AS n_rows,
@@ -13281,21 +12540,7 @@ def s31_iceberg_metrics_pruning(spark, sf_dir):
 
 @register(
     "s28_delta_deletion_vectors",
-    """
-    WITH b AS (
-      SELECT o_orderkey, (o_orderkey % 4)::BIGINT AS bucket,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-    )
-    SELECT 1::BIGINT AS snap, bucket, count(*)::BIGINT AS n_orders,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum(cents)::BIGINT AS sum_cents
-    FROM b GROUP BY bucket
-    UNION ALL
-    SELECT 2::BIGINT, bucket, count(*)::BIGINT,
-           sum(o_orderkey)::BIGINT, sum(cents)::BIGINT
-    FROM b WHERE o_orderkey % 7 <> 0 GROUP BY bucket
-    """,
+    ORDERS_SEVENTH_DELETED,
     tags=["S1", "delta", "lake", "merge-on-read", "deletes", "roaring"],
 )
 def s28_delta_deletion_vectors(spark, sf_dir):
@@ -13467,11 +12712,11 @@ def s28_delta_deletion_vectors(spark, sf_dir):
 
 @register(
     "s29_delta_column_mapping",
-    """
+    f"""
     WITH b AS (
       SELECT o_orderkey, o_custkey,
              (o_orderkey % 4)::BIGINT AS bucket,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+             {CENTS} AS cents
       FROM orders
     )
     SELECT 1::BIGINT AS snap, bucket, count(*)::BIGINT AS n_orders,
@@ -13623,10 +12868,10 @@ def s29_delta_column_mapping(spark, sf_dir):
 
 @register(
     "s30_avro_logical_types",
-    """
+    f"""
     SELECT (o_orderkey % 8)::BIGINT AS bucket,
            count(*)::BIGINT AS n_rows,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents,
            min(o_orderkey % 3000)::BIGINT AS min_day,
            max(o_orderkey % 3000)::BIGINT AS max_day,
@@ -13748,15 +12993,7 @@ def s30_avro_logical_types(spark, sf_dir):
 
 @register(
     "s25_orc_write_roundtrip",
-    """
-    SELECT (o_orderkey % 8)::BIGINT AS bucket,
-           count(*)::BIGINT AS n_rows,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-             AS sum_cents,
-           sum(strlen(o_orderpriority))::BIGINT AS sum_prio_len
-    FROM orders GROUP BY bucket
-    """,
+    ORDER_BUCKET_STATS,
     tags=["S7", "orc", "writer", "rlev2", "roundtrip"],
 )
 def s25_orc_write_roundtrip(spark, sf_dir):
@@ -13888,12 +13125,12 @@ def a15_listagg_ordered(spark, sf_dir):
 
 @register(
     "f26_try_arithmetic",
-    """
+    f"""
     SELECT (o_orderkey % 3)::BIGINT AS grp,
            count(*)::BIGINT AS n_rows,
            sum(CASE WHEN o_orderkey % 3 = 0 THEN 1 ELSE 0 END)::BIGINT
              AS n_null_div,
-           sum(floor((round(o_totalprice * 100, 0))::BIGINT
+           sum(floor({CENTS}
                      / nullif(o_orderkey % 3, 0))::BIGINT)::BIGINT
              AS sum_div,
            sum(CASE WHEN o_orderkey > 0 THEN 1 ELSE 0 END)::BIGINT
@@ -13955,25 +13192,7 @@ def f26_try_arithmetic(spark, sf_dir):
 
 @register(
     "stream_iceberg_tail",
-    """
-    WITH feed AS (
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-      UNION ALL
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT
-      FROM orders WHERE o_orderstatus = 'O' AND o_orderkey % 2 = 0
-      UNION ALL
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT
-      FROM orders WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0
-    )
-    SELECT o_orderstatus AS status, count(*)::BIGINT AS n_rows,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum(cents)::BIGINT AS sum_cents
-    FROM feed GROUP BY status
-    """,
+    ORDER_FEED_BY_STATUS,
     tags=["streaming", "iceberg", "datasource-api", "incremental"],
 )
 def stream_iceberg_tail(spark, sf_dir):
@@ -14087,11 +13306,9 @@ def stream_iceberg_tail(spark, sf_dir):
 
 @register(
     "stream_delta_cdf",
-    """
+    f"""
     WITH b AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
+      {ORDER_CENTS}
     ), v1 AS (
       SELECT k,
              CASE WHEN k % 10 = 0 THEN cents + 11 ELSE cents END AS cents
@@ -14252,25 +13469,7 @@ def stream_delta_cdf(spark, sf_dir):
 
 @register(
     "stream_delta_tail",
-    """
-    WITH feed AS (
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders
-      UNION ALL
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT
-      FROM orders WHERE o_orderstatus = 'O' AND o_orderkey % 2 = 0
-      UNION ALL
-      SELECT o_orderkey, o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT
-      FROM orders WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0
-    )
-    SELECT o_orderstatus AS status, count(*)::BIGINT AS n_rows,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum(cents)::BIGINT AS sum_cents
-    FROM feed GROUP BY status
-    """,
+    ORDER_FEED_BY_STATUS,
     tags=["streaming", "delta", "datasource-api", "incremental"],
 )
 def stream_delta_tail(spark, sf_dir):
@@ -14351,11 +13550,11 @@ def stream_delta_tail(spark, sf_dir):
 
 @register(
     "s26_avro_schema_evolution",
-    """
+    f"""
     SELECT (o_orderkey % 6)::BIGINT AS bucket,
            count(*)::BIGINT AS n_rows,
            sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
+           sum({CENTS})::BIGINT
              AS sum_cents,
            sum(strlen(o_orderpriority))::BIGINT AS sum_prio_len,
            count(*)::BIGINT AS n_quality_default
@@ -14469,15 +13668,8 @@ def s26_avro_schema_evolution(spark, sf_dir):
 
 @register(
     "multimodal_mpeg_pcm_synthesis",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 16 = 0),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 16 = 0')},
     -- digest-derived subband samples: 36 blocks x 32 subbands per doc
     sb AS MATERIALIZED (
       SELECT doc_id,
@@ -14498,12 +13690,12 @@ def s26_avro_schema_evolution(spark, sf_dir):
       SELECT ri.range AS i,
              (CASE WHEN ((ri.range // 64) % 2) = 1
                    THEN -1.0 ELSE 1.0 END)
-             * __TABLE_3B3_SQL__[CASE WHEN ri.range <= 256
+             * {TABLE_3B3_SQL}[CASE WHEN ri.range <= 256
                         THEN ri.range + 1 ELSE 513 - ri.range END]
              / 65536.0 AS dv
       FROM range(512) ri),
-    -- windowed 16-tap sum: out_t[j] = sum_q D[64q+j]   * v_{t-2q}[j]
-    --                              + D[64q+32+j] * v_{t-2q-1}[32+j]
+    -- windowed 16-tap sum: out_t[j] = sum_q D[64q+j]   * v_{{t-2q}}[j]
+    --                              + D[64q+32+j] * v_{{t-2q-1}}[32+j]
     outp AS MATERIALIZED (
       SELECT b.doc_id, rt.range AS tt, rj.range AS j,
              sum(d1.dv * coalesce(v1.vv, 0)
@@ -14520,15 +13712,8 @@ def s26_avro_schema_evolution(spark, sf_dir):
                     AND v2.s = rt.range - 2*rq.range - 1
                     AND v2.i = 32 + rj.range
       GROUP BY b.doc_id, rt.range, rj.range),
-    micro AS (
-      SELECT doc_id, round(pcm * 1000000.0)::BIGINT AS m FROM outp)
-    SELECT doc_id AS media_id,
-           count(*)::BIGINT AS n_samples,
-           sum(m)::BIGINT AS sum_pcm_micro,
-           sum(abs(m))::BIGINT AS sum_abs_micro,
-           max(abs(m))::BIGINT AS max_abs_micro
-    FROM micro GROUP BY doc_id
-    """.replace("__TABLE_3B3_SQL__", _TABLE_3B3_SQL),
+    {PCM_STATS}
+    """,
     tags=["multimodal", "mpeg", "audio", "synthesis", "pcm",
           "table-3-b-3"],
     plan=WIDENED_DECODE_PLAN,
@@ -14599,15 +13784,8 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
 
 @register(
     "multimodal_mp3_bigvalues_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 4 = 1),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 4 = 1')},
     params AS (
       SELECT doc_id, d,
              [1 + d[1] % 3, 1 + d[2] % 3, 1 + d[3] % 3] AS tl,
@@ -14617,15 +13795,7 @@ def multimodal_mpeg_pcm_synthesis(spark, sf_dir):
              10 + d[9] % 40 AS np_short
       FROM dg),
     -- Table B.8 long sfb boundaries (44.1 kHz) -> region sample bounds
-    bounds AS (
-      SELECT *,
-             ([0,4,8,12,16,20,24,30,36,44,52,62,74,90,110,134,162,
-               196,238,288,342,418,576])[least(r0c + 1, 22) + 1]
-               AS r1raw,
-             ([0,4,8,12,16,20,24,30,36,44,52,62,74,90,110,134,162,
-               196,238,288,342,418,576])[least(r0c + r1c + 2, 22) + 1]
-               AS r2raw
-      FROM params),
+    {MP3_REGION_BOUNDS},
     longp AS (
       SELECT doc_id, i.range AS i,
              CASE WHEN 2*i.range < least(r1raw, 2*np_long) THEN tl[1]
@@ -14839,7 +14009,7 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
 
 @register(
     "s44_delta_v2_checkpoint",
-    """
+    f"""
     WITH latestc AS (
       SELECT * FROM orders
       UNION ALL
@@ -14850,19 +14020,7 @@ def multimodal_mp3_bigvalues_decode(spark, sf_dir):
       UNION ALL
       SELECT * FROM orders
       WHERE o_orderstatus = 'F' AND o_orderkey % 5 = 0)
-    SELECT 'latest' AS phase, o_orderstatus AS status,
-           count(*)::BIGINT AS n_orders,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-             AS sum_cents
-    FROM latestc GROUP BY status
-    UNION ALL
-    SELECT 'v1', o_orderstatus, count(*)::BIGINT,
-           sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-    FROM v1c GROUP BY o_orderstatus
-    UNION ALL
-    SELECT 'layout', '_', 3::BIGINT, 1::BIGINT, 5::BIGINT
+    {CHECKPOINT_PHASES}
     """,
     tags=["S1", "delta", "lake", "v2-checkpoint", "sidecar"],
     plan={"Exchange hashpartitioning": (0, 2), "CartesianProduct": (0, 0)},
@@ -14996,15 +14154,15 @@ def s44_delta_v2_checkpoint(spark, sf_dir):
 
 @register(
     "s45_iceberg_schema_evolution",
-    """
+    f"""
     WITH legacy AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS amount,
+             {CENTS} AS amount,
              NULL::VARCHAR AS status
       FROM orders),
     modern AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS amount,
+             {CENTS} AS amount,
              o_orderstatus AS status
       FROM orders WHERE o_orderkey % 3 = 0),
     u AS (SELECT * FROM legacy UNION ALL SELECT * FROM modern)
@@ -15107,16 +14265,14 @@ def s45_iceberg_schema_evolution(spark, sf_dir):
 
 @register(
     "s58_parquet_page_index_prune",
-    """
+    f"""
     WITH ranges AS (
       SELECT r.range AS range_id,
              1 + r.range * 997 AS lo,
              1 + r.range * 997 + 400 AS hi
       FROM range(8) r),
     src AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders),
+      {ORDER_CENTS}),
     j AS (
       SELECT g.range_id, s.k, s.cents
       FROM ranges g JOIN src s ON s.k BETWEEN g.lo AND g.hi)
@@ -15344,7 +14500,7 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
                     "sum_cents": hit[1] if hit else 0,
                 }
 
-    files = spark.createDataFrame(paths, "path string").repartition(4)
+    files = task_per_item(spark, paths, "path string")
     return (
         map_rows(
             files, run, "probe long, n_rows long, sum_cents long"
@@ -15359,10 +14515,9 @@ def s57_parquet_bloom_point_lookup(spark, sf_dir):
 
 @register(
     "s56_delta_variant_type",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+      {ORDER_STATUS_CENTS}
       FROM orders WHERE o_orderkey % 4 = 1)
     SELECT status,
            count(*)::BIGINT AS n_rows,
@@ -15448,11 +14603,9 @@ def s56_delta_variant_type(spark, sf_dir):
 
 @register(
     "s55_iceberg_v3_deletion_vectors",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders),
+      {ORDER_CENTS}),
     ranked AS (
       SELECT k, cents, k % 2 AS par,
              row_number() OVER (PARTITION BY k % 2 ORDER BY k) - 1
@@ -15472,20 +14625,19 @@ def s56_delta_variant_type(spark, sf_dir):
           "deletion-vectors", "puffin"],
 )
 def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
-    """ICEBERG v3 DELETION VECTORS (round-11 boundary removal,
-    sources/iceberg_meta.py): position deletes as puffin
-    ``deletion-vector-v1`` blobs — the Delta-interop framing (4-byte
-    BE length, RoaringBitmapArray with magic 1681511377, 4-byte BE
-    CRC-32), addressed from the manifest by referenced_data_file +
-    content_offset/content_size_in_bytes (spec fields 143-145).
-    Two sorted data files (even / odd order keys), one DV each
-    deleting positions %% 7 == 3 / %% 5 == 2; read_snapshot decodes
-    the blobs EXECUTOR-side (one task per vector) and anti-joins on
-    (file, `_metadata.row_index`) exactly like v2 position deletes.
+    """ICEBERG v3 DELETION VECTORS (sources/iceberg_meta.py): position
+    deletes as puffin ``deletion-vector-v1`` blobs — the Delta-interop
+    framing (4-byte BE length, RoaringBitmapArray with magic 1681511377,
+    4-byte BE CRC-32), addressed from the manifest by
+    referenced_data_file + content_offset/content_size_in_bytes (spec
+    fields 143-145). Two sorted data files (even / odd order keys), one
+    DV each deleting positions %% 7 == 3 / %% 5 == 2; read_snapshot
+    decodes the blobs EXECUTOR-side (one task per vector) and anti-joins
+    on (file, `_metadata.row_index`) exactly like v2 position deletes.
     The oracle replays the position arithmetic relationally via
     row_number. At 100 TB a DV is a kilobyte bitmap per data file —
-    deletes never rewrite data, and the scan stays a pruned
-    vectorized parquet read plus one anti-join."""
+    deletes never rewrite data, and the scan stays a pruned vectorized
+    parquet read plus one anti-join."""
     import os
 
     from pyspark.sql import functions as F
@@ -15553,10 +14705,9 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
 
 @register(
     "s54_orc_union_decode",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+      {ORDER_STATUS_CENTS},
              o_totalprice AS price
       FROM orders)
     SELECT 0::BIGINT AS tag, count(*)::BIGINT AS n_values,
@@ -15575,19 +14726,18 @@ def s55_iceberg_v3_deletion_vectors(spark, sf_dir):
     plan=ONE_ROLLUP_PLAN,
 )
 def s54_orc_union_decode(spark, sf_dir):
-    """ORC UNION COLUMNS (round-11 boundary removal,
-    sources/orc_read.py): the spec's union encoding — a Byte-RLE TAG
-    stream (one byte per present value, the child-type index) with
-    each child column holding only its own values in row order. Every
-    task packs its orders slice into a REAL union ORC file via the
-    Apache ORC C++ writer (pyarrow), decodes it back with the
-    engine's from-spec reader, asserts tag-exact and value-exact
-    agreement against pyarrow's own read-back (the (tag, value)
-    pairs additionally preserve the branch identity pyarrow's pylist
-    drops), and emits per-branch checksums the oracle replays
-    relationally: tag = key %% 3 selecting long cents / string
-    status / double price. One Arrow scan, zero shuffles before the
-    three-row rollup."""
+    """ORC UNION COLUMNS (sources/orc_read.py): the spec's union
+    encoding — a Byte-RLE TAG stream (one byte per present value, the
+    child-type index) with each child column holding only its own values
+    in row order. Every task packs its orders slice into a REAL union
+    ORC file via the Apache ORC C++ writer (pyarrow), decodes it back
+    with the engine's from-spec reader, asserts tag-exact and
+    value-exact agreement against pyarrow's own read-back (the (tag,
+    value) pairs additionally preserve the branch identity pyarrow's
+    pylist drops), and emits per-branch checksums the oracle replays
+    relationally: tag = key %% 3 selecting long cents / string status /
+    double price. One Arrow scan, zero shuffles before the three-row
+    rollup."""
     import math
 
     from pyspark.sql import functions as F
@@ -15669,15 +14819,15 @@ def s54_orc_union_decode(spark, sf_dir):
 
 @register(
     "s53_delta_type_widening",
-    """
+    f"""
     WITH narrow AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+             {CENTS} AS cents,
              (o_orderdate::DATE - DATE '1970-01-01')::BIGINT AS dday
       FROM orders),
     wide AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+             {CENTS} AS cents,
              (o_orderdate::DATE - DATE '1970-01-01')::BIGINT AS dday
       FROM orders WHERE o_orderkey % 3 = 0),
     u AS (SELECT * FROM narrow UNION ALL SELECT * FROM wide)
@@ -15692,8 +14842,8 @@ def s54_orc_union_decode(spark, sf_dir):
           "reader-features"],
 )
 def s53_delta_type_widening(spark, sf_dir):
-    """DELTA typeWidening READER FEATURE (round-11 boundary removal,
-    sources/delta_log.py SUPPORTED_READER_FEATURES): file A was
+    """DELTA typeWidening READER FEATURE (sources/delta_log.py
+    SUPPORTED_READER_FEATURES): file A was
     written while cents was INT and odate was DATE; the table then
     widened cents -> long and odate -> timestamp_ntz — a
     metadata-only change (PROTOCOL.md "Type Widening",
@@ -15784,15 +14934,15 @@ def s53_delta_type_widening(spark, sf_dir):
 
 @register(
     "s52_iceberg_v3_row_defaults",
-    """
+    f"""
     WITH legacy AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS amount,
+             {CENTS} AS amount,
              'NEW' AS status
       FROM orders),
     modern AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS amount,
+             {CENTS} AS amount,
              CASE WHEN o_orderstatus = 'P' THEN NULL
                   ELSE o_orderstatus END AS status
       FROM orders WHERE o_orderkey % 3 = 0),
@@ -15894,32 +15044,13 @@ def s52_iceberg_v3_row_defaults(spark, sf_dir):
 
 @register(
     "s46_orc_rle_v1_decode",
-    """
-    WITH src AS (
-      SELECT o_orderkey,
-             o_orderkey % 997 AS v_small,
-             o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders)
-    SELECT 'cents' AS col, count(cents)::BIGINT AS n_values,
-           sum(cents)::BIGINT AS checksum FROM src
-    UNION ALL
-    SELECT 'o_orderkey', count(o_orderkey)::BIGINT,
-           sum(o_orderkey)::BIGINT FROM src
-    UNION ALL
-    SELECT 'o_orderstatus', count(o_orderstatus)::BIGINT,
-           sum(strlen(o_orderstatus))::BIGINT FROM src
-    UNION ALL
-    SELECT 'v_small', count(v_small)::BIGINT,
-           sum(v_small)::BIGINT FROM src
-    """,
+    ORDER_COLUMN_CHECKSUMS,
     tags=["S1", "orc", "lake", "rle-v1", "hive-011"],
     plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s46_orc_rle_v1_decode(spark, sf_dir):
-    """ORC RLE v1 DECODE (round-10 boundary removal,
-    sources/orc_read.py rle_v1) — the 0.11 FILE FORMAT that
-    pre-hive-0.12 writers emit: orders is written by Spark's native
+    """ORC RLE v1 DECODE (sources/orc_read.py rle_v1) — the 0.11 FILE
+    FORMAT that pre-hive-0.12 writers emit: orders is written by Spark's native
     Java ORC writer in `orc.write.format=0.11` mode (rotating ZLIB /
     SNAPPY), which uses integer RLE VERSION 1 (equal-delta runs +
     literal varints) and the v1 DIRECT/DICTIONARY string encodings.
@@ -15987,9 +15118,7 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
             yield {"col": col, "n_values": len(vals),
              "checksum": checksum}
 
-    files = spark.createDataFrame(pairs, "path string").repartition(
-        len(pairs)
-    )
+    files = task_per_item(spark, pairs, "path string")
     partials = map_rows(
         files, run, "col string, n_values long, checksum long"
     )
@@ -16005,15 +15134,8 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_full_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 32 = 2),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 32 = 2')},
     params AS (
       SELECT doc_id, d, g.range AS gr,
              60 + d[2] % 120 AS np,
@@ -16121,7 +15243,7 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
       SELECT ri.range AS i,
              (CASE WHEN ((ri.range // 64) % 2) = 1
                    THEN -1.0 ELSE 1.0 END)
-             * __TABLE_3B3_SQL__[CASE WHEN ri.range <= 256
+             * {TABLE_3B3_SQL}[CASE WHEN ri.range <= 256
                         THEN ri.range + 1 ELSE 513 - ri.range END]
              / 65536.0 AS dv
       FROM range(512) ri),
@@ -16142,15 +15264,8 @@ def s46_orc_rle_v1_decode(spark, sf_dir):
                        AND v2.tt = rt.range - 2*rq.range - 1
                        AND v2.i = 32 + rj.range
       GROUP BY b.doc_id, rt.range, rj.range),
-    micro AS (
-      SELECT doc_id, round(pcm * 1000000.0)::BIGINT AS m FROM outp)
-    SELECT doc_id AS media_id,
-           count(*)::BIGINT AS n_samples,
-           sum(m)::BIGINT AS sum_pcm_micro,
-           sum(abs(m))::BIGINT AS sum_abs_micro,
-           max(abs(m))::BIGINT AS max_abs_micro
-    FROM micro GROUP BY doc_id
-    """.replace("__TABLE_3B3_SQL__", _TABLE_3B3_SQL),
+    {PCM_STATS}
+    """,
     tags=["multimodal", "mp3", "pcm", "imdct", "full-decode",
           "layer3"],
     bench=True,
@@ -16261,10 +15376,10 @@ def multimodal_mp3_full_decode(spark, sf_dir):
 
 @register(
     "s47_delta_id_column_mapping",
-    """
+    f"""
     WITH u AS (
       SELECT o_orderkey AS k,
-             (round(o_totalprice * 100, 0))::BIGINT AS amount,
+             {CENTS} AS amount,
              o_orderstatus AS status
       FROM orders)
     SELECT status, count(*)::BIGINT AS n_rows,
@@ -16276,8 +15391,8 @@ def multimodal_mp3_full_decode(spark, sf_dir):
     plan={"Exchange hashpartitioning": (0, 1), "CartesianProduct": (0, 0)},
 )
 def s47_delta_id_column_mapping(spark, sf_dir):
-    """DELTA COLUMN MAPPING MODE "id" (round-10 boundary removal,
-    sources/delta_log.py column_mapping_id_schema): the protocol's
+    """DELTA COLUMN MAPPING MODE "id" (sources/delta_log.py
+    column_mapping_id_schema): the protocol's
     parquet FIELD-ID resolution — data files written before and after
     a rename carry DIFFERENT physical column names but the same
     parquet field ids, and the scan matches by id, never by name.
@@ -16369,7 +15484,7 @@ def s47_delta_id_column_mapping(spark, sf_dir):
 
 @register(
     "s49_delta_multipart_checkpoint",
-    """
+    f"""
     WITH latestc AS (
       SELECT * FROM orders
       UNION ALL
@@ -16380,19 +15495,7 @@ def s47_delta_id_column_mapping(spark, sf_dir):
       UNION ALL
       SELECT * FROM orders
       WHERE o_orderstatus = 'F' AND o_orderkey % 7 = 0)
-    SELECT 'latest' AS phase, o_orderstatus AS status,
-           count(*)::BIGINT AS n_orders,
-           sum(o_orderkey)::BIGINT AS sum_key,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-             AS sum_cents
-    FROM latestc GROUP BY status
-    UNION ALL
-    SELECT 'v1', o_orderstatus, count(*)::BIGINT,
-           sum(o_orderkey)::BIGINT,
-           sum((round(o_totalprice * 100, 0))::BIGINT)::BIGINT
-    FROM v1c GROUP BY o_orderstatus
-    UNION ALL
-    SELECT 'layout', '_', 3::BIGINT, 1::BIGINT, 5::BIGINT
+    {CHECKPOINT_PHASES}
     """,
     tags=["S1", "delta", "lake", "multipart-checkpoint"],
 )
@@ -16533,30 +15636,15 @@ def s49_delta_multipart_checkpoint(spark, sf_dir):
 
 @register(
     "multimodal_mp3_tables5_12_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 8 = 3),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 8 = 3')},
     params AS (
       SELECT doc_id, d,
              [5 + d[1] % 8, 5 + d[2] % 8, 5 + d[3] % 8] AS tl,
              d[4] % 7 AS r0c, d[5] % 6 AS r1c,
              10 + d[6] % 50 AS np
       FROM dg),
-    bounds AS (
-      SELECT *,
-             ([0,4,8,12,16,20,24,30,36,44,52,62,74,90,110,134,162,
-               196,238,288,342,418,576])[least(r0c + 1, 22) + 1]
-               AS r1raw,
-             ([0,4,8,12,16,20,24,30,36,44,52,62,74,90,110,134,162,
-               196,238,288,342,418,576])[least(r0c + r1c + 2, 22) + 1]
-               AS r2raw
-      FROM params),
+    {MP3_REGION_BOUNDS},
     pt AS (
       SELECT doc_id, i.range AS i,
              CASE WHEN 2*i.range < least(r1raw, 2*np) THEN tl[1]
@@ -16719,15 +15807,8 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_ms_stereo_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 32 = 7),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 32 = 7')},
     params AS (
       SELECT doc_id, d, g.range AS gr, c.range AS ch,
              20 + d[8 + 2*g.range + c.range] % 40 AS np,
@@ -16785,16 +15866,7 @@ def multimodal_mp3_tables5_12_decode(spark, sf_dir):
       FROM (SELECT * FROM xr WHERE ch = 0) m
       JOIN (SELECT * FROM xr WHERE ch = 1) s
         ON s.doc_id = m.doc_id AND s.gr = m.gr AND s.l = m.l)
-    SELECT doc_id AS media_id,
-           count(*) FILTER (WHERE ml <> 0 OR mr <> 0)::BIGINT
-             AS n_lines,
-           sum(ml)::BIGINT AS sum_l_micro,
-           sum(abs(ml))::BIGINT AS sum_abs_l_micro,
-           max(abs(ml))::BIGINT AS max_abs_l_micro,
-           sum(mr)::BIGINT AS sum_r_micro,
-           sum(abs(mr))::BIGINT AS sum_abs_r_micro,
-           max(abs(mr))::BIGINT AS max_abs_r_micro
-    FROM lr GROUP BY doc_id
+    {MP3_STEREO_STATS}
     """,
     tags=["multimodal", "mp3", "stereo", "m-s", "joint-stereo"],
     plan=SCAN_ONLY_PLAN,
@@ -16919,11 +15991,11 @@ def multimodal_mp3_ms_stereo_decode(spark, sf_dir):
 
 @register(
     "s48_orc_lz4_timezone_decode",
-    """
+    f"""
     WITH src AS (
       SELECT o_orderkey,
              o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+             {CENTS} AS cents,
              o_orderdate::TIMESTAMP
                + ((o_orderkey % 86400) || ' seconds')::INTERVAL AS ts
       FROM orders)
@@ -17038,9 +16110,7 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
             yield {"col": col, "n_values": len(vals),
              "checksum": checksum}
 
-    files = spark.createDataFrame(paths, "path string").repartition(
-        len(paths)
-    )
+    files = task_per_item(spark, paths, "path string")
     return (
         map_rows(
             files, run, "col string, n_values long, checksum long"
@@ -17055,15 +16125,8 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
 
 @register(
     "multimodal_mpeg2_l2_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 16 = 9),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 16 = 9')},
     -- 13818-3 Table B.1: sblimit 30, class ladders starting at the
     -- grouped 3-step class everywhere (fixture caps sb<4 at class 7)
     sbp AS (
@@ -17097,12 +16160,8 @@ def s48_orc_lz4_timezone_decode(spark, sf_dir):
       FROM cls),
     samp AS (
       SELECT doc_id, sb,
-             CAST(round((2.0 * pow(2.0, -(eff[i // 12 + 1])/3.0)
-                   * ((1::BIGINT << nb) / (steps::DOUBLE))
-                   * (((d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11
-                        + doc_id) % steps)
-                      / ((1::BIGINT << (nb - 1))::DOUBLE)
-                      - 1.0 + dd)) * 1000000.0) AS BIGINT) AS micro
+             {l2_micro('''(d[((sb + i*7 + 1) % 16) + 1] * 29 + i*11
+                        + doc_id) % steps''')}
       FROM nbs, range(36) u(i))
     SELECT doc_id AS media_id,
            count(DISTINCT sb)::BIGINT AS n_active_sb,
@@ -17185,25 +16244,7 @@ def multimodal_mpeg2_l2_decode(spark, sf_dir):
 
 @register(
     "s50_orc_zstd_decode",
-    """
-    WITH src AS (
-      SELECT o_orderkey,
-             o_orderkey % 997 AS v_small,
-             o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
-      FROM orders)
-    SELECT 'cents' AS col, count(cents)::BIGINT AS n_values,
-           sum(cents)::BIGINT AS checksum FROM src
-    UNION ALL
-    SELECT 'o_orderkey', count(o_orderkey)::BIGINT,
-           sum(o_orderkey)::BIGINT FROM src
-    UNION ALL
-    SELECT 'o_orderstatus', count(o_orderstatus)::BIGINT,
-           sum(strlen(o_orderstatus))::BIGINT FROM src
-    UNION ALL
-    SELECT 'v_small', count(v_small)::BIGINT,
-           sum(v_small)::BIGINT FROM src
-    """,
+    ORDER_COLUMN_CHECKSUMS,
     tags=["S1", "orc", "lake", "zstd", "rfc8878"],
     plan=ONE_ROLLUP_PLAN,
 )
@@ -17266,9 +16307,7 @@ def s50_orc_zstd_decode(spark, sf_dir):
             yield {"col": col, "n_values": len(vals),
              "checksum": checksum}
 
-    files = spark.createDataFrame(paths, "path string").repartition(
-        len(paths)
-    )
+    files = task_per_item(spark, paths, "path string")
     return (
         map_rows(
             files, run, "col string, n_values long, checksum long"
@@ -17283,15 +16322,8 @@ def s50_orc_zstd_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_mixed_block_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 16 = 11),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 16 = 11')},
     params AS (
       SELECT doc_id, d,
              160 + d[14] % 40 AS gg,
@@ -17475,15 +16507,8 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_intensity_stereo_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 32 = 15),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 32 = 15')},
     params AS (
       SELECT doc_id, d, g.range AS gr,
              40 + d[8 + g.range] % 40 AS np_l,
@@ -17508,28 +16533,7 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
       FROM params, range(576) l),
     vals AS (
       SELECT *,
-             CASE WHEN l >= 2*np_l THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*3 + gr + 4) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 9) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*5 + gr + 6) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 12) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vl,
-             CASE WHEN l >= 2*np_r THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*7 + gr + 3) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 8) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*9 + gr + 5) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 11) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vr,
+             {MP3_STEREO_VALUES},
              d[((least(b, 20)*7 + 5) % 16) + 1] % 8 AS is_pos
       FROM lines),
     xr AS (
@@ -17565,16 +16569,7 @@ def multimodal_mp3_mixed_block_decode(spark, sf_dir):
                ELSE m / (1.0 + tan(is_pos * pi() / 12.0))
              END)::BIGINT AS mr
       FROM xr)
-    SELECT doc_id AS media_id,
-           count(*) FILTER (WHERE ml <> 0 OR mr <> 0)::BIGINT
-             AS n_lines,
-           sum(ml)::BIGINT AS sum_l_micro,
-           sum(abs(ml))::BIGINT AS sum_abs_l_micro,
-           max(abs(ml))::BIGINT AS max_abs_l_micro,
-           sum(mr)::BIGINT AS sum_r_micro,
-           sum(abs(mr))::BIGINT AS sum_abs_r_micro,
-           max(abs(mr))::BIGINT AS max_abs_r_micro
-    FROM lr GROUP BY doc_id
+    {MP3_STEREO_STATS}
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "joint-stereo"],
     plan=SCAN_ONLY_PLAN,
@@ -17716,15 +16711,8 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_intensity_short_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 32 = 23),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 32 = 23')},
     params AS (
       SELECT doc_id, d, g.range AS gr,
              60 + d[8 + g.range] % 36 AS np_l,
@@ -17750,28 +16738,7 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
       FROM lines),
     vals AS (
       SELECT *,
-             CASE WHEN l >= 2*np_l THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*3 + gr + 4) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 9) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*5 + gr + 6) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 12) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vl,
-             CASE WHEN l >= 2*np_r THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*7 + gr + 3) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 8) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*9 + gr + 5) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 11) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vr,
+             {MP3_STEREO_VALUES},
              d[(((least(b, 11)*3 + win)*2 + 5) % 16) + 1] % 8 AS ip
       FROM geom),
     -- the PER-WINDOW stereo/intensity border: the highest short
@@ -17813,16 +16780,7 @@ def multimodal_mp3_intensity_stereo_decode(spark, sf_dir):
                ELSE m / (1.0 + tan(ip * pi() / 12.0))
              END)::BIGINT AS mr
       FROM xr)
-    SELECT doc_id AS media_id,
-           count(*) FILTER (WHERE ml <> 0 OR mr <> 0)::BIGINT
-             AS n_lines,
-           sum(ml)::BIGINT AS sum_l_micro,
-           sum(abs(ml))::BIGINT AS sum_abs_l_micro,
-           max(abs(ml))::BIGINT AS max_abs_l_micro,
-           sum(mr)::BIGINT AS sum_r_micro,
-           sum(abs(mr))::BIGINT AS sum_abs_r_micro,
-           max(abs(mr))::BIGINT AS max_abs_r_micro
-    FROM lr GROUP BY doc_id
+    {MP3_STEREO_STATS}
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "short-block",
           "joint-stereo"],
@@ -17944,15 +16902,8 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
 
 @register(
     "multimodal_mp3_intensity_mixed_decode",
-    """
-    WITH base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 32 = 27),
-    dg AS (
-      SELECT doc_id,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    f"""
+    WITH {md5_digest(where='doc_id % 32 = 27')},
     params AS (
       SELECT doc_id, d, g.range AS gr,
              70 + d[8 + g.range] % 40 AS np_l,
@@ -17987,28 +16938,7 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
       FROM lines),
     vals AS (
       SELECT *,
-             CASE WHEN l >= 2*np_l THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*3 + gr + 4) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 9) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*5 + gr + 6) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 12) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vl,
-             CASE WHEN l >= 2*np_r THEN 0 ELSE
-               (CASE WHEN l % 2 = 0
-                 THEN ((d[(((l//2)*7 + gr + 3) % 16) + 1] + l//2) % 3)
-                    * (CASE WHEN (d[(((l//2) + 8) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END)
-                 ELSE ((d[(((l//2)*9 + gr + 5) % 16) + 1]
-                        + 2*(l//2)) % 3)
-                    * (CASE WHEN (d[(((l//2) + 11) % 16) + 1]
-                                  + l//2 + gr) % 2 = 1
-                       THEN -1 ELSE 1 END) END) END AS vr,
+             {MP3_STEREO_VALUES},
              CASE WHEN l < 36 THEN
                d[((b*5 + 3) % 16) + 1] % 8
              ELSE
@@ -18058,16 +16988,7 @@ def multimodal_mp3_intensity_short_decode(spark, sf_dir):
                ELSE m / (1.0 + tan(ip * pi() / 12.0))
              END)::BIGINT AS mr
       FROM xr)
-    SELECT doc_id AS media_id,
-           count(*) FILTER (WHERE ml <> 0 OR mr <> 0)::BIGINT
-             AS n_lines,
-           sum(ml)::BIGINT AS sum_l_micro,
-           sum(abs(ml))::BIGINT AS sum_abs_l_micro,
-           max(abs(ml))::BIGINT AS max_abs_l_micro,
-           sum(mr)::BIGINT AS sum_r_micro,
-           sum(abs(mr))::BIGINT AS sum_abs_r_micro,
-           max(abs(mr))::BIGINT AS max_abs_r_micro
-    FROM lr GROUP BY doc_id
+    {MP3_STEREO_STATS}
     """,
     tags=["multimodal", "mp3", "stereo", "intensity", "mixed-block",
           "joint-stereo"],
@@ -18192,11 +17113,11 @@ def multimodal_mp3_intensity_mixed_decode(spark, sf_dir):
 
 @register(
     "s51_lzo_legacy_lz4_decode",
-    """
+    f"""
     WITH src AS (
       SELECT o_orderkey,
              o_orderstatus,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+             {CENTS} AS cents
       FROM orders WHERE o_orderkey % 2 = 1)
     SELECT 'orc_lzo' AS layer, 'cents' AS col,
            count(cents)::BIGINT AS n_values,
@@ -18309,9 +17230,7 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
                 "checksum": checksum,
             }
 
-    files = spark.createDataFrame(
-        paths, "kind string, path string"
-    ).repartition(len(paths))
+    files = task_per_item(spark, paths, "kind string, path string")
     return (
         map_rows(
             files, run,
@@ -18343,8 +17262,8 @@ def s51_lzo_legacy_lz4_decode(spark, sf_dir):
     plan={"Exchange hashpartitioning": (0, 2), "Join": (0, 0), "CartesianProduct": (0, 0)},
 )
 def s59_parquet_brotli_decode(spark, sf_dir):
-    """Parquet BROTLI DECODE (round-11 ask #2 — the LAST parquet page
-    codec boundary, docs/SCALE.md). Each task writes its partition of
+    """Parquet BROTLI DECODE (the last parquet page codec,
+    docs/SCALE.md). Each task writes its partition of
     the documents table as a REAL BROTLI parquet file with pyarrow
     (the independent reference writer; the container's pyarrow has the
     brotli codec, which is exactly the external cross-check standard
@@ -18484,8 +17403,8 @@ def s59_parquet_brotli_decode(spark, sf_dir):
     },
 )
 def s60_iceberg_v3_typed_defaults(spark, sf_dir):
-    """ICEBERG v3 TYPED DEFAULTS + v3-only TYPES (round-11 ask #3,
-    sources/iceberg_meta.py _default_expr/_spark_type): the
+    """ICEBERG v3 TYPED DEFAULTS + v3-only TYPES
+    (sources/iceberg_meta.py _default_expr/_spark_type): the
     mechanical half of v3 completion. The schema carries
     initial-defaults for every non-scalar-literal single-value
     serialization the spec defines — decimal(9,2) (decimal string),
@@ -18616,10 +17535,9 @@ def s60_iceberg_v3_typed_defaults(spark, sf_dir):
 
 @register(
     "s61_delta_variant_shredded",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+      {ORDER_STATUS_CENTS}
       FROM orders WHERE o_orderkey % 5 = 2),
     v AS (
       SELECT k,
@@ -18645,8 +17563,8 @@ def s60_iceberg_v3_typed_defaults(spark, sf_dir):
     },
 )
 def s61_delta_variant_shredded(spark, sf_dir):
-    """DELTA variantShredding READER FEATURE (round-11 ask #4,
-    sources/delta_log.py + sources/variant_binary.py): the shredded
+    """DELTA variantShredding READER FEATURE (sources/delta_log.py +
+    sources/variant_binary.py): the shredded
     variant physical layout (VariantShredding.md — per-field
     typed_value/value groups beside the metadata binary) read
     through a real Delta log declaring readerFeatures
@@ -19011,10 +17929,9 @@ def stream_dedup_within_horizon(spark, sf_dir):
 
 @register(
     "s63_delta_version_checksum",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents
+      {ORDER_STATUS_CENTS}
       FROM orders WHERE o_orderkey % 7 = 3),
     kept AS (
       SELECT * FROM src WHERE k % 2 = 0
@@ -19114,10 +18031,9 @@ def s63_delta_version_checksum(spark, sf_dir):
 
 @register(
     "s64_avro_single_object_stream",
-    """
+    f"""
     WITH src AS (
-      SELECT o_orderkey AS k, o_orderstatus AS status,
-             (round(o_totalprice * 100, 0))::BIGINT AS cents,
+      {ORDER_STATUS_CENTS},
              CASE WHEN o_orderkey % 2 = 0 THEN 'v1' ELSE 'v2' END
                  AS schema_tag
       FROM orders WHERE o_orderkey % 9 = 4)
@@ -19662,17 +18578,16 @@ def s68_warc_response_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def text_unicode_nfc(spark, sf_dir):
-    """UNICODE NFC NORMALIZATION (round 12, functions/text.py
-    nfc_normalize): canonical composition before fingerprinting —
-    'e'+COMBINING ACUTE and the precomposed 'é' are the same text
-    but different bytes, so un-normalized corpora leak duplicates
-    past exact dedup and split tokenizer vocab entries. Every doc
-    gets a decomposed tail appended ('cafe'+U+0301 composes to
-    'café'; U+00B0+U+0301 has NO precomposed form and must survive
-    unchanged — composition is selective, not blanket), the Arrow
-    kernel normalizes, and the rollup counts changed docs and byte
-    deltas. The oracle replays through DuckDB's independent
-    nfc_normalize."""
+    """UNICODE NFC NORMALIZATION (functions/text.py nfc_normalize):
+    canonical composition before fingerprinting — 'e'+COMBINING ACUTE
+    and the precomposed 'é' are the same text but different bytes, so
+    un-normalized corpora leak duplicates past exact dedup and split
+    tokenizer vocab entries. Every doc gets a decomposed tail appended
+    ('cafe'+U+0301 composes to 'café'; U+00B0+U+0301 has NO precomposed
+    form and must survive unchanged — composition is selective, not
+    blanket), the Arrow kernel normalizes, and the rollup counts changed
+    docs and byte deltas. The oracle replays through DuckDB's
+    independent nfc_normalize."""
     from pyspark.sql import functions as F
 
     from cam_etl_spark.functions.text import nfc_normalize
@@ -19702,14 +18617,9 @@ def text_unicode_nfc(spark, sf_dir):
 
 @register(
     "s69_jsonl_zst_corpus_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 5 = 3)
-    SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(strlen(text))::BIGINT AS sum_bytes,
-           sum(doc_id)::BIGINT AS sum_doc_id
+    f"""
+    WITH {doc_sample('doc_id % 5 = 3')}
+    {LANG_DOC_STATS}
     FROM src GROUP BY lang
     """,
     tags=["S4", "jsonl", "zstd", "corpus", "the-pile"],
@@ -19790,20 +18700,7 @@ def s69_jsonl_zst_corpus_scan(spark, sf_dir):
 
 @register(
     "stream_stream_full_outer",
-    """
-    WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-               FROM events WHERE event_type = 'click'),
-         v AS (SELECT event_id AS view_id, user_id, ts AS view_ts, value
-               FROM events WHERE event_type = 'view')
-    SELECT c.click_id, v.view_id,
-           coalesce(c.user_id, v.user_id) AS user_id,
-           strftime(c.click_ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts,
-           strftime(v.view_ts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts,
-           round(v.value, 4) AS view_value
-    FROM c FULL JOIN v
-      ON c.user_id = v.user_id
-     AND v.view_ts BETWEEN c.click_ts - INTERVAL 6 HOUR AND c.click_ts
-    """,
+    click_view_join('FULL JOIN'),
     tags=["streaming", "J6", "temporal", "outer-join"],
 )
 def stream_stream_full_outer(spark, sf_dir):
@@ -20027,33 +18924,7 @@ def s70_iceberg_v3_variant_geometry_defaults(spark, sf_dir):
 
 @register(
     "dedup_incremental_lsh",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s
-      WHERE a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5
-    """,
+    near_dup_pairs('a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0'),
     tags=["dedup-minhash", "incremental", "S16", "bucketing"],
 )
 def dedup_incremental_lsh(spark, sf_dir):
@@ -20219,14 +19090,9 @@ def s71_iceberg_refs_time_travel(spark, sf_dir):
 
 @register(
     "s72_warc_wet_conversion_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 7 = 1)
-    SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(strlen(text))::BIGINT AS sum_bytes,
-           sum(doc_id)::BIGINT AS sum_doc_id
+    f"""
+    WITH {doc_sample('doc_id % 7 = 1')}
+    {LANG_DOC_STATS}
     FROM src GROUP BY lang
     """,
     tags=["S4", "warc", "wet", "corpus", "common-crawl"],
@@ -20312,11 +19178,8 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
 
 @register(
     "text_html_extract",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 3 = 2),
+    f"""
+    WITH {doc_sample('doc_id % 3 = 2')},
     rec AS (
       SELECT lang,
              trim(regexp_replace(text || ' &<>A', '\\s+', ' ', 'g'))
@@ -20332,20 +19195,19 @@ def s72_warc_wet_conversion_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def text_html_extract(spark, sf_dir):
-    """HTML MAIN-TEXT EXTRACTION (round 13,
-    functions/text.py html_main_text): the web-corpus front door —
-    recover prose from HTML pages, dropping navigation/boilerplate
-    (outside <p>), <script>/<style> subtrees (including a
-    '1 < 2' inside script text, the case that breaks regex tag
-    strippers), and decoding entity/character references
-    (&amp;&lt;&gt;&#65;). The fixture wraps each document's text in
-    a full HTML page NATIVELY (escape + concat, no Python), extracts
-    with the Arrow-vectorized stdlib-HTMLParser kernel, and the
-    oracle replays the EXACT recovered strings relationally
+    """HTML MAIN-TEXT EXTRACTION (functions/text.py html_main_text): the
+    web-corpus front door — recover prose from HTML pages, dropping
+    navigation/boilerplate (outside <p>), <script>/<style> subtrees
+    (including a '1 < 2' inside script text, the case that breaks regex
+    tag strippers), and decoding entity/character references
+    (&amp;&lt;&gt;&#65;). The fixture wraps each document's text in a
+    full HTML page NATIVELY (escape + concat, no Python), extracts with
+    the Arrow-vectorized stdlib-HTMLParser kernel, and the oracle
+    replays the EXACT recovered strings relationally
     (whitespace-collapsed text + the decoded ' &<>A' suffix) with a
     per-row md5 checksum — one wrong byte in any document breaks the
-    hash. At 100 TB: one Arrow pass over the page scan, zero
-    shuffles before the rollup."""
+    hash. At 100 TB: one Arrow pass over the page scan, zero shuffles
+    before the rollup."""
     from pyspark.sql import functions as F
 
     from cam_etl_spark.functions.ids import portable_hash60
@@ -20455,8 +19317,8 @@ def text_html_extract(spark, sf_dir):
     plan={"Exchange hashpartitioning": (0, 2), "Join": (0, 0), "CartesianProduct": (0, 0)},
 )
 def text_url_normalize_dedup(spark, sf_dir):
-    """URL CANONICALIZATION + URL-LEVEL DEDUP (round 13,
-    functions/text.py canonical_url): the crawl-pipeline step BEFORE
+    """URL CANONICALIZATION + URL-LEVEL DEDUP (functions/text.py
+    canonical_url): the crawl-pipeline step BEFORE
     any content downloads — scheme/host case, scheme-aware default
     ports, fragments, tracking params (utm_*/fbclid/gclid),
     unsorted query strings, and trailing slashes all collapse so
@@ -20520,14 +19382,7 @@ def _adpcm_oracle() -> str:
 
     steps = ",".join(map(str, STEP_TABLE))
     return f"""
-    WITH RECURSIVE base AS (
-      SELECT doc_id, md5(coalesce(text, '')) AS h
-      FROM documents WHERE doc_id % 4 = 1),
-    dg AS (
-      SELECT doc_id, 64 + 2 * (doc_id % 32) AS n,
-             list_transform(range(16),
-                            k -> ('0x' || substr(h, 2*k + 1, 2))::bigint) AS d
-      FROM base),
+    WITH RECURSIVE {md5_digest(where='doc_id % 4 = 1', cols='64 + 2 * (doc_id % 32) AS n')},
     init AS (
       SELECT doc_id, n, d,
              CASE WHEN d[1] + 256 * d[2] >= 32768
@@ -20588,7 +19443,7 @@ def _adpcm_oracle() -> str:
     plan=SCAN_ONLY_PLAN,
 )
 def multimodal_adpcm_wav_decode(spark, sf_dir):
-    """IMA ADPCM WAV DECODE (round 13, multimodal/adpcm.py): the
+    """IMA ADPCM WAV DECODE (multimodal/adpcm.py): the
     4-bit adaptive-delta codec of telephony-era audio corpora,
     through the full container path — each document mints a
     deterministic nibble stream + initial (samp0, index) state from
@@ -20735,11 +19590,8 @@ def s73_sqlite_table_scan(spark, sf_dir):
 
 @register(
     "s74_bz2_xml_dump_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 6 = 5)
+    f"""
+    WITH {doc_sample('doc_id % 6 = 5')}
     SELECT lang, count(*)::BIGINT AS n_pages,
            sum(strlen(text))::BIGINT AS sum_chars,
            sum(doc_id)::BIGINT AS sum_page_id
@@ -20813,11 +19665,8 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
 
 @register(
     "text_gopher_quality_rules",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 2 = 1),
+    f"""
+    WITH {doc_sample('doc_id % 2 = 1')},
     feat AS (
       SELECT doc_id, lang,
              len(list_filter(string_split_regex(trim(text), '\\s+'),
@@ -20875,7 +19724,7 @@ def s74_bz2_xml_dump_scan(spark, sf_dir):
     plan=ROLLUP_PLAN,
 )
 def text_gopher_quality_rules(spark, sf_dir):
-    """GOPHER-RULE QUALITY FILTERING (round 13 — the published
+    """GOPHER-RULE QUALITY FILTERING (the published
     Gopher/MassiveText heuristics, Rae et al. 2021 §A.1.1, as the
     canonical pre-training document filter): word-count bounds
     [50, 100k], mean word length [3, 10], symbol-to-word ratio
@@ -20970,14 +19819,9 @@ def text_gopher_quality_rules(spark, sf_dir):
 
 @register(
     "s75_jsonl_xz_corpus_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 8 = 6)
-    SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(strlen(text))::BIGINT AS sum_bytes,
-           sum(doc_id)::BIGINT AS sum_doc_id
+    f"""
+    WITH {doc_sample('doc_id % 8 = 6')}
+    {LANG_DOC_STATS}
     FROM src GROUP BY lang
     """,
     tags=["S4", "jsonl", "xz", "lzma", "corpus"],
@@ -21165,7 +20009,7 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
 
 @register(
     "corpus_end_to_end",
-    r"""
+    fr"""
     WITH newb AS (
       SELECT doc_id, coalesce(text, '') AS text
       FROM documents WHERE doc_id % 5 = 0),
@@ -21215,17 +20059,11 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
       FROM gate),
     shl AS (
       SELECT doc_id, 0 AS side,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS sh
+             {SHINGLE_SET} AS sh
       FROM ptoks
       UNION ALL
       SELECT doc_id, 1,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END
+             {SHINGLE_SET}
       FROM ntoks),
     sh AS (
       SELECT DISTINCT doc_id, side, s
@@ -21244,9 +20082,9 @@ def s76_delta_in_commit_timestamps(spark, sf_dir):
     survivors AS (
       SELECT g.doc_id,
              regexp_replace(regexp_replace(regexp_replace(g.r,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-                 '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g') AS redacted
+                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'),
+                 '\b\d{{1,3}}\.\d{{1,3}}\.\d{{1,3}}\.\d{{1,3}}\b', '<IP>', 'g'),
+                 '\b\d{{3}}[-. ]\d{{3}}[-. ]\d{{4}}\b', '<PHONE>', 'g') AS redacted
       FROM gate g
       WHERE g.doc_id NOT IN (SELECT doc_id FROM dropped)),
     toks AS (
@@ -21487,33 +20325,7 @@ def corpus_end_to_end(spark, sf_dir):
 
 @register(
     "stream_dedup_incremental",
-    """
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
-      FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toks),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s
-      WHERE a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(n_inter::double / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5
-    """,
+    near_dup_pairs('a.doc_id % 5 <> 0 AND b.doc_id % 5 = 0'),
     tags=["streaming", "dedup-minhash", "incremental", "S16",
           "bucketing", "foreachBatch"],
 )
@@ -21595,11 +20407,8 @@ def stream_dedup_incremental(spark, sf_dir):
 
 @register(
     "s77_sqlite_wal_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 7 = 1 AND doc_id % 10 <> 3)
+    f"""
+    WITH {doc_sample('doc_id % 7 = 1 AND doc_id % 10 <> 3')}
     SELECT lang, count(*)::BIGINT AS n_docs,
            sum(strlen(text))::BIGINT AS sum_chars,
            sum(doc_id)::BIGINT AS sum_doc_id
@@ -21760,7 +20569,7 @@ def s77_sqlite_wal_scan(spark, sf_dir):
     },
 )
 def sample_importance_dsir(spark, sf_dir):
-    """DSIR-STYLE IMPORTANCE RESAMPLING (round 14 — Xie et al. 2023,
+    """DSIR-STYLE IMPORTANCE RESAMPLING (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"):
     select raw-pool documents that look like a TARGET seed set. The
     published recipe: hash unigrams+bigrams into B buckets (here
@@ -21841,14 +20650,9 @@ def sample_importance_dsir(spark, sf_dir):
 
 @register(
     "s78_arrow_ipc_stream_scan",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 11 = 3)
-    SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(strlen(text))::BIGINT AS sum_bytes,
-           sum(doc_id)::BIGINT AS sum_doc_id,
+    f"""
+    WITH {doc_sample('doc_id % 11 = 3')}
+    {LANG_DOC_STATS},
            sum((2 * ((doc_id % 7 + 0.5) + (doc_id % 11) * 1.5
                      + strlen(text)))::BIGINT)::BIGINT AS sum_emb2,
            sum(doc_id * 3 + 1)::BIGINT AS sum_ts_sec
@@ -21969,14 +20773,9 @@ def s78_arrow_ipc_stream_scan(spark, sf_dir):
 
 @register(
     "s79_arrow_ipc_sink_roundtrip",
-    """
-    WITH src AS (
-      SELECT doc_id, coalesce(text, '') AS text,
-             coalesce(lang, '') AS lang
-      FROM documents WHERE doc_id % 9 = 2)
-    SELECT lang, count(*)::BIGINT AS n_docs,
-           sum(strlen(text))::BIGINT AS sum_bytes,
-           sum(doc_id)::BIGINT AS sum_doc_id,
+    f"""
+    WITH {doc_sample('doc_id % 9 = 2')}
+    {LANG_DOC_STATS},
            sum((2 * (doc_id % 13 + 0.5))::BIGINT)::BIGINT
              AS sum_score2
     FROM src GROUP BY lang
@@ -22105,7 +20904,7 @@ def s79_arrow_ipc_sink_roundtrip(spark, sf_dir):
     },
 )
 def text_line_dedup_c4(spark, sf_dir):
-    """C4-STYLE GLOBAL LINE DEDUP (round 14 — Raffel et al. 2020's
+    """C4-STYLE GLOBAL LINE DEDUP (Raffel et al. 2020's
     famous preprocessing: repeated spans are removed ACROSS the
     whole dataset, keeping only the first occurrence): boilerplate
     lines (cookie banners, nav text, license headers) recur across

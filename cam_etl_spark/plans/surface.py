@@ -20,6 +20,17 @@ from cam_etl_spark.plans.catalog import (
     widen,
     widen_table,
 )
+from cam_etl_spark.plans.oracle_sql import (
+    ADDRESS_SITES,
+    COSINE,
+    COSINE_RANKED,
+    COSINE_TOP5,
+    HEAVY_HITTERS,
+    JACCARD_FILTER,
+    LSH_RECALL_OK,
+    TERMS,
+    shingle_inter,
+)
 from cam_etl_spark.quads import dedup_quads, fan_out_sql, quad_sql
 from cam_etl_spark.streaming.transforms import file_stream
 
@@ -410,10 +421,7 @@ def stream_session_window(spark, sf_dir):
 
 @register(
     "ann_ivf_topk",
-    """
-    SELECT vec_id AS query_id, 5 AS n_exact, TRUE AS recall_ok
-    FROM embeddings WHERE vec_id < 10
-    """,
+    LSH_RECALL_OK,
     tags=["ann", "similarity-ivf"],
     bench=True,
     plan={**CHECKPOINT_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (2, None)},
@@ -435,7 +443,7 @@ def ann_ivf_topk(spark, sf_dir):
     # ONE materialization of the widened corpus serves all four consumers
     # (brute side, query filter, centroid draw, ivf assignment) — the
     # un-checkpointed plan re-read and re-widened the parquet scan 4x
-    # (plans/r15: 4 "Scan parquet" -> 1). Query-level only: this entry is
+    # (4 "Scan parquet" -> 1). Query-level only: this entry is
     # the exact-vs-IVF recall harness, which inherently runs BOTH paths
     # over the same corpus in one build; the serving-shape answer at
     # 100 TB remains ann_ivf_bucketed_serve (pay the corpus shuffle once
@@ -447,7 +455,7 @@ def ann_ivf_topk(spark, sf_dir):
     # approx is bounded by construction (<= k rows per query, <= 10
     # queries) — broadcast the semi join instead of letting size
     # estimates pick a sort-merge join (2 exchanges + 2 sorts on two
-    # ~50-row frames in the r14 plan).
+    # ~50-row frames).
     hits = exact.join(F.broadcast(approx), ["query_id", "neighbor_id"], "left_semi")
     return (
         hits.groupBy("query_id")
@@ -462,28 +470,7 @@ def ann_ivf_topk(spark, sf_dir):
 
 @register(
     "ann_ivf_exact_probe",
-    """
-    WITH pairs AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             q.embedding AS qe, c.embedding AS ce
-      FROM embeddings q CROSS JOIN embeddings c
-      WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * ce[i+1]::double))
-             / (sqrt(list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * qe[i+1]::double)))
-                * sqrt(list_sum(list_transform(range(len(ce)),
-                      i -> ce[i+1]::double * ce[i+1]::double)))) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(cosine, 6) DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
-    """,
+    COSINE_TOP5,
     tags=["ann", "similarity-ivf"],
 )
 def ann_ivf_exact_probe(spark, sf_dir):
@@ -503,7 +490,7 @@ def ann_ivf_exact_probe(spark, sf_dir):
 
 @register(
     "ann_ivf_bucketed_serve",
-    """
+    f"""
     WITH q AS (
       SELECT vec_id, embedding, 'a' AS batch FROM embeddings WHERE vec_id % 37 = 0
       UNION ALL
@@ -515,12 +502,7 @@ def ann_ivf_exact_probe(spark, sf_dir):
       WHERE q.vec_id <> c.vec_id),
     scored AS (
       SELECT batch, query_id, neighbor_id,
-             list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * ce[i+1]::double))
-             / (sqrt(list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * qe[i+1]::double)))
-                * sqrt(list_sum(list_transform(range(len(ce)),
-                      i -> ce[i+1]::double * ce[i+1]::double)))) AS cosine
+             {COSINE}
       FROM pairs),
     ranked AS (
       SELECT batch, query_id, neighbor_id, round(cosine, 6) AS cosine,
@@ -956,7 +938,7 @@ def s2_mega_subquery_planned(spark, sf_dir):
     three dimension tables and plans the join order, instead of one
     single-threaded server-side join). Shares the pushed variant's
     oracle: both green = pushed-vs-planned equivalence proven on a live
-    DB, the round-5 S2 ask."""
+    DB."""
     from cam_etl_spark.io import jdbc_scan_options
 
     url, n = _derby_mega_db(spark, sf_dir, "planned")
@@ -1163,7 +1145,7 @@ def multimodal_frame_sample(spark, sf_dir):
 
 @register(
     "multimodal_features_ann",
-    """
+    f"""
     WITH feat AS (
       SELECT doc_id AS media_id,
              list_transform(range(16),
@@ -1175,20 +1157,7 @@ def multimodal_frame_sample(spark, sf_dir):
              q.emb AS qe, c.emb AS ce
       FROM feat q CROSS JOIN feat c
       WHERE q.media_id < 5 AND q.media_id <> c.media_id),
-    scored AS (
-      SELECT query_id, neighbor_id,
-             list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * ce[i+1]::double))
-             / (sqrt(list_sum(list_transform(range(len(qe)),
-                      i -> qe[i+1]::double * qe[i+1]::double)))
-                * sqrt(list_sum(list_transform(range(len(ce)),
-                      i -> ce[i+1]::double * ce[i+1]::double)))) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT query_id, neighbor_id, round(cosine, 6) AS cosine,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY round(cosine, 6) DESC, neighbor_id) AS rank
-      FROM scored)
+    {COSINE_RANKED}
     SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 3
     """,
     tags=["multimodal", "feature-extract", "ann"],
@@ -1352,18 +1321,7 @@ def text_bpe_apply(spark, sf_dir):
 
 @register(
     "text_heavy_hitters",
-    """
-    WITH toks AS (
-        SELECT tt.term
-        FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tt(term)
-        WHERE tt.term <> ''
-    ),
-    tf AS (SELECT term, count(*)::BIGINT AS freq FROM toks GROUP BY 1),
-    tot AS (SELECT count(*)::BIGINT AS total FROM toks)
-    SELECT term, freq
-    FROM tf CROSS JOIN tot
-    WHERE freq * 41 > total
-    """,
+    HEAVY_HITTERS,
     tags=["sketch", "heavy-hitters", "misra-gries", "text-analysis"],
     bench=True,
     plan={**PIPELINE_PLAN, "Exchange hashpartitioning": (0, 2), "BroadcastHashJoin": (1, None)},
@@ -1379,7 +1337,7 @@ def text_heavy_hitters(spark, sf_dir):
     when the vocabulary doesn't fit a groupBy."""
     from cam_etl_spark.operators.sketch import heavy_hitters
 
-    # NOT widened, deliberately (measured r14): the result is
+    # NOT widened, deliberately (measured): the result is
     # partition-independent (MG union ⊇ true heavy hitters under any
     # partitioning; the recount filters by the exact threshold), but
     # both passes consume `docs`, so a widen exchange ships the full
@@ -1392,18 +1350,7 @@ def text_heavy_hitters(spark, sf_dir):
 
 @register(
     "stream_heavy_hitters",
-    """
-    WITH toks AS (
-        SELECT tt.term
-        FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tt(term)
-        WHERE tt.term <> ''
-    ),
-    tf AS (SELECT term, count(*)::BIGINT AS freq FROM toks GROUP BY 1),
-    tot AS (SELECT count(*)::BIGINT AS total FROM toks)
-    SELECT term, freq
-    FROM tf CROSS JOIN tot
-    WHERE freq * 41 > total
-    """,
+    HEAVY_HITTERS,
     tags=["streaming", "stateful", "sketch", "heavy-hitters", "misra-gries"],
 )
 def stream_heavy_hitters(spark, sf_dir):
@@ -1690,18 +1637,8 @@ def _etl_code_sql(col, codes, null_code):
 
 @register(
     "etl_end_to_end_counts",
-    """
-    WITH addresses AS (
-      SELECT o_orderkey::varchar AS addr_id,
-             o_custkey::varchar AS site_id,
-             (o_orderkey % 100)::varchar AS road_id,
-             CASE WHEN o_orderstatus = 'P' THEN 'H'
-                  WHEN o_orderstatus = 'F' THEN 'C' ELSE 'A' END AS st,
-             CASE WHEN o_orderkey % 3 = 0 THEN (o_orderkey % 50 + 1)::varchar END AS unit_no,
-             (o_orderkey % 300 + 1)::varchar AS street_no_first,
-             CASE WHEN o_orderkey % 5 = 0 THEN (o_orderkey % 300 + 3)::varchar END AS street_no_last
-      FROM orders),
-    sites AS (SELECT c_custkey::varchar AS site_id, c_nationkey::varchar AS parcel_id FROM customer),
+    f"""
+    WITH {ADDRESS_SITES},
     parcels AS (SELECT n_nationkey::varchar AS parcel_id, n_nationkey::varchar AS lot_no,
                        'SP' || n_regionkey::varchar AS plan_no FROM nation),
     roadsb AS (SELECT s_suppkey::varchar AS road_id,
@@ -1995,18 +1932,8 @@ def etl_end_to_end_counts(spark, sf_dir):
 
 @register(
     "cam_address_labels",
-    """
-    WITH addresses AS (
-      SELECT o_orderkey::varchar AS addr_id,
-             o_custkey::varchar AS site_id,
-             (o_orderkey % 100)::varchar AS road_id,
-             CASE WHEN o_orderstatus = 'P' THEN 'H'
-                  WHEN o_orderstatus = 'F' THEN 'C' ELSE 'A' END AS st,
-             CASE WHEN o_orderkey % 3 = 0 THEN (o_orderkey % 50 + 1)::varchar END AS unit_no,
-             (o_orderkey % 300 + 1)::varchar AS street_no_first,
-             CASE WHEN o_orderkey % 5 = 0 THEN (o_orderkey % 300 + 3)::varchar END AS street_no_last
-      FROM orders),
-    sites AS (SELECT c_custkey::varchar AS site_id, c_nationkey::varchar AS parcel_id FROM customer),
+    f"""
+    WITH {ADDRESS_SITES},
     parcels AS (SELECT n_nationkey::varchar AS parcel_id FROM nation),
     roads AS (SELECT s_suppkey::varchar AS road_id,
                      replace(s_name, 'Supplier#', 'Road ') AS road_name,
@@ -2755,7 +2682,7 @@ def j10_knn_haversine(spark, sf_dir):
 
 @register(
     "clean_corpus_pipeline",
-    """
+    f"""
     WITH fp AS (
       SELECT doc_id, md5(trim(regexp_replace(regexp_replace(lower(text),
                  '[[:punct:]]', '', 'g'), '\\s+', ' ', 'g'))) AS fingerprint
@@ -2765,27 +2692,11 @@ def j10_knn_haversine(spark, sf_dir):
     toksw AS (
       SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
       FROM documents),
-    shl AS (
-      SELECT doc_id,
-             CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                  ELSE list_distinct(list_transform(range(len(w) - 2),
-                         i -> concat(w[i+1], ' ', w[i+2], ' ', w[i+3])))
-             END AS shingles
-      FROM toksw),
-    sh AS (
-      SELECT DISTINCT doc_id, s
-      FROM (SELECT doc_id, unnest(shingles) AS s FROM shl)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    {shingle_inter('toksw')},
     near_pairs AS (
       SELECT id_a, id_b
       FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE n_inter::double / (sa.n + sb.n - n_inter) >= 0.5),
+      {JACCARD_FILTER}),
     survivors AS (
       SELECT e.doc_id FROM exact_keep e
       WHERE e.doc_id NOT IN (SELECT id_b FROM near_pairs)),
@@ -2885,11 +2796,10 @@ def a11_approx_aggregates(spark, sf_dir):
 
 @register(
     "surface_bm25_ranking",
-    """
+    f"""
     WITH toks AS (
         SELECT doc_id, tt.term
-        FROM documents, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS tt(term)
-        WHERE tt.term <> ''
+        {TERMS}
     ),
     dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
     stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),

@@ -162,7 +162,7 @@ def test_sql_window_literal_matches_table():
     otherwise fork silently."""
     import re
 
-    from cam_etl_spark.plans.extensions import _TABLE_3B3_SQL
+    from cam_etl_spark.plans.oracle_sql import TABLE_3B3_SQL
 
-    nums = [int(x) for x in re.findall(r"-?\d+", _TABLE_3B3_SQL)]
+    nums = [int(x) for x in re.findall(r"-?\d+", TABLE_3B3_SQL)]
     assert tuple(nums) == _TABLE_3B3_HALF

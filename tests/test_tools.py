@@ -101,11 +101,12 @@ def test_fixture_mechanisms_defined_once():
     once, the scratch directory only in ``catalog.fixture_dir``, Delta
     ``add`` / Iceberg ``data_file`` dicts only in ``sources/``, the
     stream source and sinks only in ``streaming/transforms.py`` and the
-    shard path frame only in ``catalog.shard_files``."""
+    one-task-per-item frame only in ``catalog.task_per_item``."""
     micro6, tmp, actions, retyped = [], [], [], []
     harness = re.compile(
         r'mkdtemp|"maxFilesPerTrigger"|processingTime|time\.sleep\('
         r"|createDataFrame\(\s*\[\(r\.path,\)"
+        r"|createDataFrame\((?:[^()]|\([^()]*\))*\)\s*\.repartition\(\s*len\("
     )
     for rel, text in _package_sources():
         micro6 += [rel] * len(re.findall(r"\bdef micro6\(", text))
@@ -122,6 +123,80 @@ def test_fixture_mechanisms_defined_once():
     assert tmp == [(os.path.join("plans", "catalog.py"), "fixture_dir")]
     assert actions == []
     assert retyped == []
+
+
+def test_oracle_fragments_only_in_oracles():
+    """An oracle shares no code with the Spark builder it checks: names
+    from ``plans/oracle_sql.py`` appear only in ``register(...)``
+    arguments and in the module-level oracle helpers those arguments
+    use, never in a registered builder or another package module, and
+    the fragment module imports nothing from the package."""
+    mod = "cam_etl_spark.plans.oracle_sql"
+
+    def is_register(node):
+        return isinstance(node, ast.Call) and getattr(node.func, "id", None) == "register"
+
+    leaks = []
+    for rel, text in _package_sources():
+        tree = ast.parse(text)
+        if rel == os.path.join("plans", "oracle_sql.py"):
+            leaks += [
+                (rel, node.module)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom) and "cam_etl_spark" in (node.module or "")
+            ]
+            leaks += [
+                (rel, a.name)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Import)
+                for a in node.names
+                if "cam_etl_spark" in a.name
+            ]
+            continue
+        imported = {
+            a.asname or a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module == mod
+            for a in node.names
+        }
+        imported |= {
+            a.asname or a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Import)
+            for a in node.names
+            if a.name == mod
+        }
+        if not imported:
+            continue
+        if rel not in (os.path.join("plans", "extensions.py"), os.path.join("plans", "surface.py")):
+            leaks.append((rel, "imports oracle_sql"))
+            continue
+        oracle_args = [
+            arg for node in ast.walk(tree) if is_register(node) for arg in node.args[1:]
+        ]
+        helpers = {
+            n.id for arg in oracle_args for n in ast.walk(arg) if isinstance(n, ast.Name)
+        }
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(stmt, ast.FunctionDef) and stmt.name in helpers:
+                continue
+            if isinstance(stmt, ast.Assign) and any(
+                getattr(t, "id", None) in helpers for t in stmt.targets
+            ):
+                continue
+            if isinstance(stmt, ast.FunctionDef):
+                allowed = [d for d in stmt.decorator_list if is_register(d)]
+            else:
+                allowed = []
+            inside = {id(n) for d in allowed for n in ast.walk(d)}
+            leaks += [
+                (rel, getattr(stmt, "name", stmt.lineno), n.id)
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and n.id in imported and id(n) not in inside
+            ]
+    assert leaks == []
 
 
 @pytest.mark.parametrize(
